@@ -11,18 +11,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .config import DEMO_CONFIG, field_config_df
+from .config import DEMO_CONFIG
 from .functions import textsql as X
 from .operators import dedup, similarity
 from .operators.assembly import assemble_text, pages_view, words_view
-from .operators.consolidate import (
-    consolidate_fields,
-    doc_confidence,
-    value_consolidation,
-)
+from .operators.consolidate import value_consolidation
 from .operators.enrich import stub_predictions
-from .operators.entities import extract_mentions
 from .operators.frontend import html_to_words
+from .operators.fused import (
+    document_fields,
+    document_mentions,
+    extract_documents,
+)
 from .operators.labels import merge_annotation_boxes, word_single_labels
 from .operators.multimodal import (
     decode_metadata,
@@ -53,9 +53,14 @@ def _enriched_words(spark, sf_dir) -> DataFrame:
     return stub_predictions(words_view(_doc_words(spark, sf_dir)))
 
 
+def _documents(spark, sf_dir) -> DataFrame:
+    """The pipeline's per-document kernel over the bridge words."""
+    return extract_documents(_doc_words(spark, sf_dir), DEMO_CONFIG,
+                             model="sql-stub")
+
+
 def _mentions(spark, sf_dir) -> DataFrame:
-    cfg = field_config_df(spark, DEMO_CONFIG)
-    return extract_mentions(_enriched_words(spark, sf_dir), cfg)
+    return document_mentions(_documents(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -86,18 +91,8 @@ def q_field_values(spark, sf_dir) -> DataFrame:
         F.round("value_conf", 6).alias("value_conf"))
 
 
-def _all_urls(spark, sf_dir) -> DataFrame:
-    """Url universe straight from the documents scan (url = 'doc://'||doc_id,
-    the bridge contract) — avoids a second consumer of the expensive
-    front-end plan, which round 1 papered over with a leaked .persist()."""
-    return _docs(spark, sf_dir).select(
-        F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"))
-
-
 def q_fields(spark, sf_dir) -> DataFrame:
-    cfg = field_config_df(spark, DEMO_CONFIG)
-    m = _mentions(spark, sf_dir)
-    f = consolidate_fields(m, cfg, _all_urls(spark, sf_dir))
+    f = document_fields(_documents(spark, sf_dir))
     return f.select(
         "url", "ClassId", "FieldName", "SortOrder",
         F.col("NumDetections").cast("bigint").alias("NumDetections"),
@@ -173,9 +168,7 @@ def q_apply_review(spark, sf_dir) -> DataFrame:
     presence-unchecked / exact-confirm / corrected-value / unanswered)."""
     from .operators.review import apply_review
 
-    cfg = field_config_df(spark, DEMO_CONFIG)
-    m = _mentions(spark, sf_dir)
-    f = consolidate_fields(m, cfg, _all_urls(spark, sf_dir))
+    f = document_fields(_documents(spark, sf_dir))
     base = f.withColumn(
         "_h", F.expr(X.h64("concat(url, '|', FieldName)", "spark")))
     reviews = base.filter("_h % 3 = 0").select(
@@ -194,10 +187,7 @@ def q_apply_review(spark, sf_dir) -> DataFrame:
 
 
 def q_doc_confidence(spark, sf_dir) -> DataFrame:
-    cfg = field_config_df(spark, DEMO_CONFIG)
-    m = _mentions(spark, sf_dir)
-    f = consolidate_fields(m, cfg, _all_urls(spark, sf_dir))
-    return doc_confidence(f).select(
+    return _documents(spark, sf_dir).select(
         "url", F.round("Confidence", 6).alias("Confidence"))
 
 

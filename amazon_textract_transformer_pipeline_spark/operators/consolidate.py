@@ -26,6 +26,12 @@ Semantics (pinned against the reference, quirks included):
 FP determinism: the noisy-OR is computed as ``1 − exp(Σ log1p(−conf))``;
 detections are summed in a fixed (ixe) order is NOT guaranteed by Spark agg,
 but log-sum is order-insensitive to ~1 ulp; tests compare at 1e-9.
+
+Which path serves what: the extraction pipeline consolidates per document
+in ``operators/fused.py`` (``fields_of``, ``doc_confidence_of``; the sum
+there runs in detection order). The groupBy operators here are the
+relational reference it is tested against; :func:`value_consolidation`
+also serves the ``field_values`` driver query over the kernel's mentions.
 """
 
 from __future__ import annotations

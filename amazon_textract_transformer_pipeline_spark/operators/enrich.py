@@ -19,6 +19,8 @@ interface:
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -52,6 +54,22 @@ def stub_conf_sql(url: str = "url", page: str = "page_num",
            f"cast({word_pos} as string))")
     return (f"(cast(0.5 as double) + "
             f"({spark_hash64(key)} % 500000) / cast(1000000 as double))")
+
+
+def _hash64_py(key: str) -> int:
+    """Python twin of ``spark_hash64``: the first 15 hex digits of md5."""
+    return int(hashlib.md5(key.encode()).hexdigest()[:15], 16)
+
+
+def stub_cls_py(url: str, page: int, word_pos: int,
+                n_classes: int = N_STUB_CLASSES, run_len: int = RUN_LEN) -> int:
+    """Python twin of :func:`stub_class_sql`, bit for bit."""
+    return _hash64_py(f"{url}#{page}#{word_pos // run_len}") % n_classes
+
+
+def stub_conf_py(url: str, page: int, word_pos: int) -> float:
+    """Python twin of :func:`stub_conf_sql`, bit for bit."""
+    return 0.5 + (_hash64_py(f"c{url}#{page}#{word_pos}") % 500000) / 1000000.0
 
 
 def stub_predictions(words_df: DataFrame,

@@ -22,6 +22,12 @@ against a rule-for-rule Python oracle in tests/ref_rules.py):
 Shuffle profile: one shuffle on url (window partition), then run-grain
 groupBy reuses the same partitioning — Catalyst collapses it into a single
 exchange. url is unique per doc → no skew.
+
+Which path serves what: the extraction pipeline computes mentions per
+document in ``operators/fused.py`` (``mentions_of``), without this shuffle.
+:func:`extract_mentions` is the relational reference the kernel is tested
+against (tests/test_entities.py); :func:`normalize_mentions` (E5-E6) runs
+on either one's mention relation.
 """
 
 from __future__ import annotations

@@ -270,13 +270,10 @@ def html_to_words(pages_df: DataFrame) -> DataFrame:
                  pa.array(parsed, type=pages_type)],
                 schema=arrow_schema)
 
-    src = pages_df.select("url", "html")
-    if not pages_df.isStreaming:
-        # CPU-bound parse: a source with fewer splits than cores (e.g. a
-        # handful of unsplittable .warc.gz archives) serializes it; one
-        # url-keyed exchange buys full parallelism, no-op at corpus scale
-        # (streaming sources are split by the source — leave them alone)
-        from ..plans.partitioning import spread_if_narrow
+    from ..plans.partitioning import spread_if_narrow
 
-        src = spread_if_narrow(src, "url")
+    # CPU-bound parse: a source with fewer splits than cores (e.g. a
+    # handful of unsplittable .warc.gz archives) serializes it; one
+    # url-keyed exchange buys full parallelism, no-op at corpus scale
+    src = spread_if_narrow(pages_df.select("url", "html"), "url")
     return src.mapInArrow(run, schema=DOC_WORDS_SCHEMA)

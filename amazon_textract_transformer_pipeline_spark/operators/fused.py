@@ -1,0 +1,333 @@
+"""Per-document extraction kernel: words → predictions → mentions → fields.
+
+The reference has no cross-document operator: mentions, fields and the
+doc-confidence gate are functions of one page (SURVEY §2.8-§2.9,
+``fn-postprocess/main.py:84-180``). This module computes all of them in ONE
+``mapInArrow`` call over ``doc_words``' nested pages, so the extraction plan
+is scan → front-end → this kernel → sink with no shuffle (operator fusion:
+*ML Inference Pipeline Execution Using Pure SQL Based on Operator Fusion*,
+ICDE 2025). It is the path ``plans.pipeline.extract_pipeline`` runs.
+
+Per document, in reading order:
+
+* **Predictions.** ``sql-stub``: the md5 stub (``enrich.stub_cls_py`` /
+  ``stub_conf_py``, the Python twins of ``enrich.stub_predictions``).
+  ``window-stub``: per page ``splitting.split_words`` →
+  ``inference.StubModel.predict_window`` → the per-word mean over the
+  windows that cover the word, so a page's windows never leave their task.
+  A word no window covers (an oversize word) gets no prediction.
+* **E1-E4** runs and mentions, **E7-E11** values, selectors and noisy-OR,
+  **E12-E13** doc confidence and the review flag — the rules documented in
+  ``operators/entities.py`` and ``operators/consolidate.py``, whose
+  relational operators remain the reference implementation the tests
+  compare this kernel against.
+
+Output rows nest the relational operators' columns (same names, same
+types) per document; :func:`document_mentions` and
+:func:`document_fields` explode them back into those relations.
+"""
+
+from __future__ import annotations
+
+import math
+from collections.abc import Iterable, Iterator
+
+import numpy as np
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..config import field_config_rows
+from ..schemas import MENTION_SCHEMA
+from .assembly import doc_text_col
+from .enrich import RUN_LEN, stub_cls_py, stub_conf_py
+from .inference import StubModel
+from .splitting import DEFAULT_MAX_CONTENT_SEQ_LEN, split_words, token_counter
+
+MODELS = ("sql-stub", "window-stub")
+
+#: one mention: the columns of ``entities.extract_mentions`` minus url
+DOC_MENTION_SCHEMA = T.StructType(
+    [T.StructField("run_id", T.LongType(), False)]
+    + [f for f in MENTION_SCHEMA.fields if f.name != "url"]
+    + [T.StructField("ixe", T.IntegerType(), False)])
+
+#: one field: the columns of ``consolidate.consolidate_fields`` minus url
+DOC_FIELD_SCHEMA = T.StructType([
+    T.StructField("ClassId", T.IntegerType(), False),
+    T.StructField("FieldName", T.StringType(), False),
+    T.StructField("SortOrder", T.IntegerType(), False),
+    T.StructField("Optional", T.BooleanType(), True),
+    T.StructField("NumDetections", T.LongType(), False),
+    T.StructField("NumDetectedValues", T.LongType(), False),
+    T.StructField("Value", T.StringType(), True),
+    T.StructField("Values", T.ArrayType(T.StructType([
+        T.StructField("Value", T.StringType(), False),
+        T.StructField("Confidence", T.DoubleType(), False),
+    ]), False), True),
+    T.StructField("Confidence", T.DoubleType(), False),
+])
+
+DOC_RESULT_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType(), False),
+    T.StructField("n_pages", T.IntegerType(), False),
+    T.StructField("extracted_text", T.StringType(), True),
+    T.StructField("mentions", T.ArrayType(DOC_MENTION_SCHEMA, False), False),
+    T.StructField("fields", T.ArrayType(DOC_FIELD_SCHEMA, False), False),
+    T.StructField("Confidence", T.DoubleType(), True),
+    T.StructField("needs_human_review", T.BooleanType(), False),
+])
+
+
+# ---------------------------------------------------------------------------
+# Predictions, one page at a time: (url, page_num, word tuples) →
+# (class per word, confidence per word); None where a word has none.
+# ---------------------------------------------------------------------------
+def _stub_page(url: str, page_num: int, words: list[tuple]):
+    n = len(words)
+    runs = [stub_cls_py(url, page_num, i) for i in range(0, n, RUN_LEN)]
+    return ([runs[i // RUN_LEN] for i in range(n)],
+            [stub_conf_py(url, page_num, i) for i in range(n)])
+
+
+def _window_page_fn():
+    """I1-I3 for one page: the same windows, forward passes and
+    cross-window mean as ``split_pages_to_windows`` → ``predict_windows``
+    → ``aggregate_word_predictions``, without leaving the task."""
+    mdl = StubModel()
+    n_toks = token_counter()
+
+    def predict(url: str, page_num: int, words: list[tuple]):
+        counts = [n_toks(w[2]) for w in words]
+        acc = np.zeros((len(words), mdl.n_classes))
+        cover = np.zeros(len(words))
+        windows = split_words(counts, DEFAULT_MAX_CONTENT_SEQ_LEN)
+        for wix, (s, e) in enumerate(windows):
+            boosts = [stub_cls_py(url, page_num, s + i, mdl.n_classes)
+                      for i in range(e - s)]
+            acc[s:e] += mdl.predict_window(url, page_num, wix, s,
+                                           counts[s:e], boosts)
+            cover[s:e] += 1
+        cls: list[int | None] = [None] * len(words)
+        pcc: list[float | None] = [None] * len(words)
+        hit = np.flatnonzero(cover)
+        if hit.size:
+            probs = acc[hit] / cover[hit, None]
+            arg = probs.argmax(axis=1)  # first max, like array_position
+            top = probs[np.arange(hit.size), arg]
+            for k, i in enumerate(hit.tolist()):
+                cls[i], pcc[i] = int(arg[k]), float(top[k])
+        return cls, pcc
+
+    return predict
+
+
+# ---------------------------------------------------------------------------
+# E1-E13 over one document. A word is the tuple
+# (page_num, line_id, text, conf, word_id, left, top, width, height,
+#  pred_cls, pcc), in reading order.
+# ---------------------------------------------------------------------------
+def _mention(run: list[tuple], cls: int, name: str, run_id: int,
+             flush_page: int, ixe: int) -> dict:
+    lines: list[str] = []
+    key, line = None, []
+    for w in run:
+        if (w[0], w[1]) != key:
+            if line:
+                lines.append(" ".join(line))
+            key, line = (w[0], w[1]), []
+        line.append(w[2])
+    lines.append(" ".join(line))
+    left = min(w[5] for w in run)
+    top = min(w[6] for w in run)
+    right = max(w[5] + w[7] for w in run)
+    bottom = max(w[6] + w[8] for w in run)
+    return {
+        "run_id": run_id, "ClassId": cls, "ClassName": name,
+        # the reference mixes the 0-1 and 0-100 scales (extract.py:46-54)
+        "Confidence": min(min(1.0 if w[10] is None else w[10], w[3])
+                          for w in run),
+        "Blocks": [w[4] for w in run],
+        "BoundingBox": {"left": left, "top": top, "width": right - left,
+                        "height": bottom - top},
+        "PageNum": flush_page, "Text": "\n".join(lines), "RawText": None,
+        "ixe": ixe,
+    }
+
+
+def mentions_of(words: Iterable[tuple], classes: dict[int, str]) -> list[dict]:
+    """E1-E4. ``run_id`` counts class changes, the first word counting as
+    one when its class is configured; a run becomes a mention only when a
+    later word of another class flushes it (the trailing run is dropped),
+    with PageNum = the flushing word's page (extract.py:101-129)."""
+    out: list[dict] = []
+    ixe: dict[int, int] = {}
+    run_id, cur, run = 0, None, []
+    for w in words:
+        cls = w[9] if w[9] in classes else None
+        if cls != cur:
+            if cur is not None:
+                out.append(_mention(run, cur, classes[cur], run_id, w[0],
+                                    ixe.get(cur, 0)))
+                ixe[cur] = ixe.get(cur, 0) + 1
+            run_id, cur, run = run_id + 1, cls, []
+        if cls is not None:
+            run.append(w)
+    return out
+
+
+#: E10 sort key per selector (config.py:23-28) over a value
+#: [text, n_detections, ix_first, ix_last, conf]; ties go to ix_first
+_SELECTOR_KEY = {
+    "confidence": lambda v: -v[4],
+    "first": lambda v: float(v[2]),
+    "last": lambda v: -float(v[3]),
+    "longest": lambda v: -float(len(v[0])),
+    "shortest": lambda v: float(len(v[0])),
+}
+
+
+def fields_of(mentions: list[dict], fields_cfg: list[dict]) -> list[dict]:
+    """E7-E11 for every non-ignored configured field, in SortOrder."""
+    by_class: dict[int, list[dict]] = {}
+    for m in mentions:
+        by_class.setdefault(m["ClassId"], []).append(m)
+    out = []
+    for fc in fields_cfg:
+        by_text: dict[str, list[dict]] = {}
+        for m in by_class.get(fc["ClassId"], ()):
+            by_text.setdefault(m["Text"], []).append(m)
+        vals = []
+        for text, ms in by_text.items():
+            cs = [m["Confidence"] for m in ms]
+            # noisy-OR 1 − exp(Σ log1p(−c)), in detection order
+            raw = 1.0 if max(cs) >= 1.0 else \
+                1.0 - math.exp(sum(math.log1p(-c) for c in cs))
+            vals.append([text, len(ms), ms[0]["ixe"], ms[-1]["ixe"], raw])
+        norm = max(1.0, sum(v[4] for v in vals))
+        for v in vals:
+            v[4] = v[4] / norm
+        select = fc["Select"]
+        if select is None:
+            value = None
+            conf = sum(v[4] for v in vals) / len(vals) if vals else 0.0
+        elif vals:
+            key = _SELECTOR_KEY[select]
+            win = min(vals, key=lambda v: (key(v), v[2]))
+            value, conf = win[0], win[4]
+        else:
+            value, conf = "", 0.0
+        out.append({
+            "ClassId": fc["ClassId"], "FieldName": fc["Name"],
+            "SortOrder": fc["SortOrder"], "Optional": fc["Optional"],
+            "NumDetections": sum(v[1] for v in vals),
+            "NumDetectedValues": len(vals),
+            "Value": value,
+            "Values": [{"Value": v[0], "Confidence": v[4]}
+                       for v in sorted(vals, key=lambda v: (-v[4], v[2]))]
+            or None,
+            "Confidence": conf,
+        })
+    return out
+
+
+def doc_confidence_of(fields: list[dict]) -> float | None:
+    """E12: min field confidence, zero-confidence Optional fields
+    excluded; None when every field is excluded."""
+    kept = [f["Confidence"] for f in fields
+            if not (f["Confidence"] == 0.0 and f["Optional"])]
+    return min(kept) if kept else None
+
+
+# ---------------------------------------------------------------------------
+# The Arrow kernel
+# ---------------------------------------------------------------------------
+def _children(arr) -> dict:
+    """Child arrays of a struct array by field name, offsets applied."""
+    return dict(zip([f.name for f in arr.type], arr.flatten()))
+
+
+def _doc_words(pages) -> Iterator[list[tuple[int, list[tuple]]]]:
+    """Per document of an Arrow ``pages`` column: its pages as (page_num,
+    word tuples without the two prediction slots)."""
+    import pyarrow.compute as pc
+
+    pg = _children(pages.flatten())
+    w = _children(pg["words"].flatten())
+    box = _children(w["box"])
+    cols = [w["line_id"], w["text"], w["conf"], w["id"], box["left"],
+            box["top"], box["width"], box["height"]]
+    line_id, text, conf, wid, left, top, width, height = (
+        c.to_pylist() for c in cols)
+    page_nums = pg["page_num"].to_pylist()
+    n_words = pc.list_value_length(pg["words"]).to_pylist()
+    p = lo = 0
+    for n_pages in pc.list_value_length(pages).to_pylist():
+        doc = []
+        for _ in range(n_pages):
+            num, hi = page_nums[p], lo + n_words[p]
+            doc.append((num, [
+                (num, line_id[i], text[i], conf[i], wid[i], left[i], top[i],
+                 width[i], height[i]) for i in range(lo, hi)]))
+            p, lo = p + 1, hi
+        yield doc
+
+
+def extract_documents(doc_words: DataFrame, config: list[dict],
+                      model: str = "window-stub") -> DataFrame:
+    """``doc_words`` (front-end output) → one row per document of
+    ``DOC_RESULT_SCHEMA``: text, mentions, fields, doc confidence and the
+    human-review flag. Map-only: one ``mapInArrow`` over a projection."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if model not in MODELS:
+        raise ValueError(f"unknown model mode {model!r}")
+    fields_cfg = [c for c in field_config_rows(config) if not c["Ignore"]]
+    classes = {c["ClassId"]: c["Name"] for c in fields_cfg}
+    arrow_schema = to_arrow_schema(DOC_RESULT_SCHEMA)
+    mentions_type = arrow_schema.field("mentions").type
+    fields_type = arrow_schema.field("fields").type
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        predict = _stub_page if model == "sql-stub" else _window_page_fn()
+        for b in batches:
+            col = dict(zip(b.schema.names, b.columns))
+            urls = col["url"].to_pylist()
+            mentions, fields, confs = [], [], []
+            for url, pages in zip(urls, _doc_words(col["pages"])):
+                words: list[tuple] = []
+                for page_num, page in pages:
+                    cls, pcc = predict(url, page_num, page)
+                    words.extend(w + (c, p) for w, c, p in zip(page, cls, pcc))
+                ms = mentions_of(words, classes)
+                fs = fields_of(ms, fields_cfg)
+                mentions.append(ms)
+                fields.append(fs)
+                confs.append(doc_confidence_of(fs))
+            yield pa.RecordBatch.from_arrays(
+                [col["url"], col["n_pages"], col["extracted_text"],
+                 pa.array(mentions, type=mentions_type),
+                 pa.array(fields, type=fields_type),
+                 pa.array(confs, type=pa.float64()),
+                 pa.array([c is None or not c >= 0.5 for c in confs],
+                          type=pa.bool_())],
+                schema=arrow_schema)
+
+    return (
+        doc_words.select("url", "n_pages", "pages",
+                         doc_text_col("pages").alias("extracted_text"))
+        .mapInArrow(run, schema=DOC_RESULT_SCHEMA)
+    )
+
+
+def document_mentions(documents: DataFrame) -> DataFrame:
+    """Kernel output → the mention relation of ``extract_mentions``."""
+    return documents.select("url", F.explode("mentions").alias("m")) \
+        .select("url", "m.*")
+
+
+def document_fields(documents: DataFrame) -> DataFrame:
+    """Kernel output → the field relation of ``consolidate_fields``."""
+    return documents.select("url", F.explode("fields").alias("f")) \
+        .select("url", "f.*")

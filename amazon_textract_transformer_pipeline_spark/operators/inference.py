@@ -21,6 +21,12 @@ Rebuilds the reference's SageMaker NER endpoint pipeline
 
 ``PredictedClass`` = argmax (first-max, numpy semantics);
 ``PredictedClassConfidence`` = probs[argmax] (inference.py:487-492).
+
+The extraction pipeline runs the stub through ``operators/fused.py``, which
+calls :meth:`StubModel.predict_window` per page inside its per-document
+kernel; the two relational steps here are the reference it is tested
+against, and the real-model collation in
+:func:`transformer_window_predictions`.
 """
 
 from __future__ import annotations
@@ -34,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .enrich import RUN_LEN as _RUN_LEN
+from .enrich import stub_cls_py as _stub_cls_py
 
 #: reference endpoint batch size (inference.py:68)
 INFERENCE_BATCH_SIZE = 8
@@ -117,13 +124,6 @@ def predict_windows(windows: DataFrame, model: StubModel | None = None) -> DataF
                 yield pd.DataFrame(out)
 
     return windows.mapInPandas(run, schema=WINDOW_PRED_SCHEMA)
-
-
-def _stub_cls_py(url: str, page: int, word_pos: int, n: int, run_len: int) -> int:
-    import hashlib
-
-    key = f"{url}#{page}#{word_pos // run_len}"
-    return int(hashlib.md5(key.encode()).hexdigest()[:15], 16) % n
 
 
 def aggregate_word_predictions(window_preds: DataFrame,
@@ -262,23 +262,3 @@ def transformer_window_predictions(windows: DataFrame, load_fn,
         yield from flush()
 
     return windows.mapInPandas(run, schema=WINDOW_PRED_SCHEMA)
-
-
-def enrich_words_with_model(pages: DataFrame, windows: DataFrame,
-                            model: StubModel | None = None) -> DataFrame:
-    """I4 relational form: join word-level predictions back onto the word
-    relation (preferred over the reference's in-place JSON mutation,
-    inference.py:484-492). Words never covered by a window (oversize-word
-    skip) keep NULL predictions — exactly the un-annotated state in the
-    reference output."""
-    from .assembly import words_view  # local import to avoid cycle
-
-    preds = aggregate_word_predictions(predict_windows(windows, model))
-    words = pages  # caller passes words_view output or doc grain
-    if "pages" in words.columns:
-        words = words_view(words)
-    return words.join(
-        preds.select("url", "page_num", "word_pos", "pred_cls", "pcc", "probs"),
-        ["url", "page_num", "word_pos"],
-        "left",
-    )

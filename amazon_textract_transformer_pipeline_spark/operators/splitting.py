@@ -22,7 +22,7 @@ budget reserves 2 tokens for CLS/SEP (max_seq_len − 2, ner.py:439).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from math import ceil
 
 import pandas as pd
@@ -105,6 +105,22 @@ class _HFWordTokenize:
         self._cache = {}
 
 
+def token_counter(tokenize=stub_tokenize) -> Callable[[str], int]:
+    """Per-word token count, memoized for the lifetime of one task: web
+    text repeats words heavily (bounded: vocabulary ≪ corpus)."""
+    cache: dict[str, int] = {}
+
+    def n_toks(word: str) -> int:
+        c = cache.get(word)
+        if c is None:
+            if len(cache) >= 1 << 20:
+                cache.clear()
+            cache[word] = c = len(tokenize(word))
+        return c
+
+    return n_toks
+
+
 def split_words(token_counts: list[int], max_len: int) -> list[tuple[int, int]]:
     """Word-boundary splits per the NaiveExampleSplitter contract.
 
@@ -169,18 +185,7 @@ def split_pages_to_windows(
     Map-only Arrow stage; downstream inference batches whole windows.
     """
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # web text repeats words heavily; memoize per-word token counts for
-        # the lifetime of the task (bounded: vocabulary ≪ corpus)
-        count_cache: dict[str, int] = {}
-
-        def n_toks(word: str) -> int:
-            c = count_cache.get(word)
-            if c is None:
-                if len(count_cache) >= 1 << 20:
-                    count_cache.clear()
-                count_cache[word] = c = len(tokenize(word))
-            return c
-
+        n_toks = token_counter(tokenize)
         for b in batches:
             out: dict[str, list] = {f.name: [] for f in WINDOW_SCHEMA}
             for url, page_num, words in zip(b["url"], b["page_num"], b["words"]):
@@ -233,16 +238,7 @@ def split_pages_to_window_bounds(
     the cost (BENCH r2 regression investigation).
     """
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        count_cache: dict[str, int] = {}
-
-        def n_toks(word: str) -> int:
-            c = count_cache.get(word)
-            if c is None:
-                if len(count_cache) >= 1 << 20:
-                    count_cache.clear()
-                count_cache[word] = c = len(tokenize(word))
-            return c
-
+        n_toks = token_counter(tokenize)
         for b in batches:
             out: dict[str, list] = {f.name: [] for f in WINDOW_BOUNDS_SCHEMA}
             for url, page_num, texts in zip(b["url"], b["page_num"],

@@ -60,8 +60,10 @@ def spread_if_narrow(df: DataFrame, key: str) -> DataFrame:
     single worker. When the input has fewer partitions than cores, one
     cheap deterministic-key exchange buys full parallelism; at corpus
     scale the scan already has ≥ cores splits and this is a no-op (no
-    exchange is added). Batch-only (``.rdd`` is illegal on streaming
-    DataFrames — streaming sources are already split by the source)."""
+    exchange is added). A streaming DataFrame comes back unchanged: its
+    source already splits it, and ``.rdd`` is illegal on it."""
+    if df.isStreaming:
+        return df
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par, F.col(key))

@@ -1,13 +1,18 @@
 """End-to-end extraction pipeline assembly (SURVEY §3.1, Spark restatement).
 
 The reference's S3→Lambda→SFn→SageMaker→Lambda hops collapse into one Spark
-DAG: scan → front-end UDF → (windows → model UDF) → entity/field
-consolidation → sinks. Two model modes:
+plan with no shuffle: scan → front-end (``frontend.html_to_words``) → the
+per-document kernel (``operators/fused.py``) → sinks. The kernel computes a
+document's text, predictions, mentions, fields and doc confidence in one
+Arrow call, since none of them depends on another document (SURVEY §2.9).
+The relational operators (``entities``, ``consolidate``, ``inference``,
+``splitting``) do not serve this path; they stay as the reference the kernel
+is tested against. Two model modes:
 
-* ``model="sql-stub"`` — the portable pure-column classifier (zero Python in
-  the enrichment step; the oracle-checkable path).
-* ``model="window-stub"`` (default) — the full window pipeline: tokenize +
-  split + per-window forward + cross-window averaging, i.e. the exact
+* ``model="sql-stub"`` — the md5 stub classifier, bit-identical to the
+  portable SQL one the DuckDB oracles replay.
+* ``model="window-stub"`` (default) — the full window pipeline per page:
+  tokenize + split + per-window forward + cross-window averaging, i.e. the
   physical shape the real transformer runs in.
 """
 
@@ -18,31 +23,32 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEMO_CONFIG, field_config_df
-from ..operators.assembly import assemble_text, pages_view, words_view
-from ..operators.consolidate import consolidate_fields, doc_confidence
-from ..operators.enrich import stub_predictions
-from ..operators.entities import extract_mentions
+from ..config import DEMO_CONFIG
 from ..operators.frontend import html_to_words
-from ..operators.inference import enrich_words_with_model
-from ..operators.splitting import split_pages_to_windows
-from .partitioning import salted_repartition_by_url, sort_by_cost_bucket
+from ..operators.fused import (
+    document_fields,
+    document_mentions,
+    extract_documents,
+)
+from .partitioning import salted_repartition_by_url
 
 
 @dataclass
 class ExtractionResult:
-    doc_words: DataFrame
+    """``documents`` is the kernel's one row per document; every other
+    frame is a projection or an ``explode`` of it."""
+
+    documents: DataFrame
     extracted_text: DataFrame
-    enriched_words: DataFrame
     mentions: DataFrame
     fields: DataFrame
     doc_confidences: DataFrame
 
     def unpersist(self) -> None:
-        """Release the persisted front-end output. Long-running callers
+        """Release the persisted per-document frame. Long-running callers
         (streaming micro-batches, lineage bucket loops) must call this after
         consuming the result or cached RDDs accumulate across batches."""
-        self.doc_words.unpersist()
+        self.documents.unpersist()
 
 
 def extract_pipeline(
@@ -51,36 +57,20 @@ def extract_pipeline(
     model: str = "window-stub",
     salt_partitions: int | None = None,
 ) -> ExtractionResult:
-    spark = pages.sparkSession
-    cfg = field_config_df(spark, config or DEMO_CONFIG)
-
     if salt_partitions:
         pages = salted_repartition_by_url(pages, salt_partitions)
 
-    # the front-end UDF output feeds text assembly and the word view —
-    # persist it (the single most expensive recompute). The url universe
-    # comes straight from the input scan (column-pruned), NOT from here.
-    doc_words = html_to_words(pages).persist()
-    text = assemble_text(doc_words)
-
-    if model == "sql-stub":
-        enriched = stub_predictions(words_view(doc_words))
-    elif model == "window-stub":
-        windows = sort_by_cost_bucket(
-            split_pages_to_windows(pages_view(doc_words)))
-        enriched = enrich_words_with_model(doc_words, windows)
-    else:
-        raise ValueError(f"unknown model mode {model!r}")
-
-    mentions = extract_mentions(enriched, cfg)
-    fields = consolidate_fields(mentions, cfg, pages.select("url"))
+    # every output reads the kernel's rows: persist them so that the text
+    # and the fields sinks run the front-end and the model once
+    docs = extract_documents(html_to_words(pages), config or DEMO_CONFIG,
+                             model).persist()
     return ExtractionResult(
-        doc_words=doc_words,
-        extracted_text=text,
-        enriched_words=enriched,
-        mentions=mentions,
-        fields=fields,
-        doc_confidences=doc_confidence(fields),
+        documents=docs,
+        extracted_text=docs.select("url", "n_pages", "extracted_text"),
+        mentions=document_mentions(docs),
+        fields=document_fields(docs),
+        doc_confidences=docs.select("url", "Confidence",
+                                    "needs_human_review"),
     )
 
 
@@ -89,16 +79,14 @@ def extraction_stage_for_lineage(config: list[dict] | None = None):
     the bucket column propagated (text + doc confidence, one row per url).
 
     Returns the (DataFrame, cleanup) form of the stage protocol so the
-    store unpersists the pipeline's cached front-end after each write —
+    store unpersists the pipeline's cached documents after each write —
     otherwise every resume/bucket run leaks one cached RDD."""
     def stage(bucketed_pages: DataFrame):
         res = extract_pipeline(bucketed_pages.drop("bucket"), config=config,
                                model="sql-stub")
         keys = bucketed_pages.select("url", "bucket")
         out = (
-            res.extracted_text
-            .join(res.doc_confidences, "url", "left")
-            .join(keys, "url")
+            res.documents.join(keys, "url")
             .select("url", "bucket", "n_pages", "extracted_text",
                     F.col("Confidence").alias("doc_confidence"),
                     "needs_human_review")

@@ -54,8 +54,7 @@ def start_extraction_stream(pages_stream: DataFrame, out_dir: str,
             return
         res = extract_pipeline(batch_df, config=config, model="sql-stub")
         out = (
-            res.extracted_text
-            .join(res.doc_confidences, "url", "left")
+            res.documents
             .select("url", "n_pages", "extracted_text", "Confidence",
                     "needs_human_review")
             .withColumn("batch_id", F.lit(batch_id))

@@ -63,7 +63,7 @@ def run_extraction(spark, n_docs: int, model: str = "sql-stub") -> tuple[float, 
     n_fields = res.fields.select(F.count(F.lit(1)),
                                  F.sum("Confidence")).collect()[0][0]
     wall = time.time() - t0
-    res.doc_words.unpersist()  # keep the session clean between runs
+    res.unpersist()  # keep the session clean between runs
     assert n_text == n_docs and n_fields > 0
     return wall, n_docs
 

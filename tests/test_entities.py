@@ -1,5 +1,7 @@
 """E1-E13: Spark entity extraction + consolidation vs the rule-for-rule
-Python oracle (ref_rules.py), plus targeted quirk tests."""
+Python oracle (ref_rules.py), plus targeted quirk tests. The oracle checks
+run over both implementations: the relational operators and the
+per-document kernel the pipeline runs (operators/fused.py)."""
 
 from __future__ import annotations
 
@@ -24,6 +26,13 @@ from amazon_textract_transformer_pipeline_spark.operators.entities import extrac
 from amazon_textract_transformer_pipeline_spark.operators.frontend import (
     pages_to_struct,
     parse_html,
+)
+from amazon_textract_transformer_pipeline_spark.operators.fused import (
+    document_fields,
+    document_mentions,
+    extract_documents,
+    fields_of,
+    mentions_of,
 )
 from amazon_textract_transformer_pipeline_spark.sources.synthetic import make_page_row
 
@@ -54,11 +63,25 @@ def _python_doc_words(i: int) -> tuple[str, list[dict]]:
     return url, words
 
 
-@pytest.fixture(scope="module")
-def spark_mentions(spark, doc_words):
-    cfg = field_config_df(spark, DEMO_CONFIG)
-    enriched = stub_predictions(words_view(doc_words))
-    return extract_mentions(enriched, cfg).cache()
+@pytest.fixture(scope="module", params=["relational", "kernel"])
+def extraction(request, spark, doc_words):
+    """(mentions, fields, doc confidences) of the sql-stub path, from the
+    relational operators or from the per-document kernel."""
+    if request.param == "relational":
+        cfg = field_config_df(spark, DEMO_CONFIG)
+        mentions = extract_mentions(
+            stub_predictions(words_view(doc_words)), cfg).cache()
+        fields = consolidate_fields(mentions, cfg,
+                                    doc_words.select("url")).cache()
+        yield mentions, fields, doc_confidence(fields)
+        mentions.unpersist()
+        fields.unpersist()
+    else:
+        docs = extract_documents(doc_words, DEMO_CONFIG,
+                                 model="sql-stub").cache()
+        yield (document_mentions(docs), document_fields(docs),
+               docs.select("url", "Confidence", "needs_human_review"))
+        docs.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -79,9 +102,9 @@ def test_stub_predictions_match_python(spark, doc_words):
         assert r.pcc == ref_rules.stub_conf(r.url, r.page_num, r.word_pos)
 
 
-def test_mentions_match_oracle(spark_mentions, oracle_docs):
+def test_mentions_match_oracle(extraction, oracle_docs):
     got = {}
-    for r in spark_mentions.collect():
+    for r in extraction[0].collect():
         got.setdefault(r.url, []).append(r)
     total_mentions = 0
     for url, words in oracle_docs.items():
@@ -102,10 +125,9 @@ def test_mentions_match_oracle(spark_mentions, oracle_docs):
     assert total_mentions > 1000  # the fixture actually exercises the path
 
 
-def test_fields_match_oracle(spark, spark_mentions, doc_words, oracle_docs):
-    cfg = field_config_df(spark, DEMO_CONFIG)
-    fields = consolidate_fields(spark_mentions, cfg, doc_words.select("url")).cache()
-    docs = {r.url: r for r in doc_confidence(fields).collect()}
+def test_fields_match_oracle(extraction, oracle_docs):
+    _, fields, doc_conf = extraction
+    docs = {r.url: r for r in doc_conf.collect()}
     got: dict[tuple, object] = {}
     for r in fields.collect():
         got[(r.url, r.FieldName)] = r
@@ -210,3 +232,47 @@ def test_none_runs_merge_and_line_breaks(spark):
     assert len(got) == 1
     assert got[0].Text == "a1\na2"
     assert got[0].ixe == 0
+
+
+def _kernel_words(rows):
+    """rows as in _mini_words → the kernel's word tuples."""
+    return [(p, ln, t, float(c), f"id{u}{p}{pos}", 0.1, 0.1, 0.1, 0.1,
+             cls, float(pcc))
+            for (u, p, pos, ln, t, c, cls, pcc) in rows]
+
+
+def test_kernel_trailing_run_flush_page_and_run_ids():
+    """The kernel keeps the relational quirks: trailing run dropped,
+    PageNum of the flushing word, and run_id counting the first word as a
+    change when its class is configured."""
+    rows = [
+        ("u1", 1, 0, 0, "a1", 99.0, 1, 0.9),
+        ("u1", 1, 1, 0, "a2", 99.0, 1, 0.8),
+        ("u1", 2, 0, 0, "b1", 99.0, 2, 0.7),
+        ("u1", 2, 1, 0, "b2", 99.0, 2, 0.7),
+    ]
+    got = mentions_of(_kernel_words(rows), {1: "A", 2: "B"})
+    assert [(m["run_id"], m["ClassId"], m["Text"], m["PageNum"])
+            for m in got] == [(1, 1, "a1 a2", 2)]
+    assert math.isclose(got[0]["Confidence"], 0.8)
+    # an unconfigured first word is no change: the class-1 run is run 1
+    rows = [("u1", 1, 0, 0, "x", 99.0, 5, 0.9)] + rows[:2] + [
+        ("u1", 1, 2, 1, "z", 99.0, 9, 0.9)]
+    got = mentions_of(_kernel_words(rows), {1: "A"})
+    assert [(m["run_id"], m["Text"], m["ixe"]) for m in got] == [
+        (1, "a1 a2", 0)]
+
+
+def test_kernel_noisy_or_fixture_and_saturation():
+    """main.py:106 worked example, and the max c >= 1 rule that the log
+    sum cannot express."""
+    cfg = field_config_rows([{"ClassId": 1, "Name": "A"}])
+    ms = [{"ClassId": 1, "Text": "v", "Confidence": c, "ixe": i}
+          for i, c in enumerate([0.84, 0.86, 0.90])]
+    (f,) = fields_of(ms, cfg)
+    assert math.isclose(f["Confidence"], 1 - 0.16 * 0.14 * 0.10,
+                        rel_tol=1e-12)
+    assert (f["NumDetections"], f["NumDetectedValues"]) == (3, 1)
+    ms.append({"ClassId": 1, "Text": "v", "Confidence": 1.0, "ixe": 3})
+    (f,) = fields_of(ms, cfg)
+    assert f["Confidence"] == 1.0

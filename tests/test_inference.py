@@ -1,4 +1,5 @@
-"""I1-I3: window predictions + cross-window mean vs direct Python math."""
+"""I1-I3: window predictions + cross-window mean vs direct Python math, and
+the per-document kernel's window-stub path vs the relational chain."""
 
 from __future__ import annotations
 
@@ -7,12 +8,29 @@ import math
 import numpy as np
 from pyspark.sql import functions as F
 
-from amazon_textract_transformer_pipeline_spark.operators.assembly import pages_view
+from amazon_textract_transformer_pipeline_spark.config import (
+    DEMO_CONFIG,
+    field_config_df,
+)
+from amazon_textract_transformer_pipeline_spark.operators.assembly import (
+    pages_view,
+    words_view,
+)
+from amazon_textract_transformer_pipeline_spark.operators.consolidate import (
+    consolidate_fields,
+)
+from amazon_textract_transformer_pipeline_spark.operators.entities import (
+    extract_mentions,
+)
+from amazon_textract_transformer_pipeline_spark.operators.fused import (
+    document_fields,
+    document_mentions,
+    extract_documents,
+)
 from amazon_textract_transformer_pipeline_spark.operators.inference import (
     StubModel,
     _stub_cls_py,
     aggregate_word_predictions,
-    enrich_words_with_model,
     predict_windows,
 )
 from amazon_textract_transformer_pipeline_spark.operators.splitting import (
@@ -94,27 +112,61 @@ def test_multiwindow_words_averaged(spark, doc_words):
     assert dup > 0
 
 
-def test_enrich_words_with_model_end_to_end(spark, doc_words):
-    pages = pages_view(doc_words)
-    windows = split_pages_to_windows(pages)
-    enriched = enrich_words_with_model(doc_words, windows).cache()
-    # oversize words (never windowed) keep NULL predictions
-    n_null = enriched.filter("pred_cls IS NULL AND length(text) >= 3000").count()
+def test_kernel_window_stub_matches_relational_chain(spark, doc_words):
+    """The per-document kernel's window-stub mentions and fields equal the
+    relational chain predict_windows → aggregate_word_predictions →
+    extract_mentions → consolidate_fields, on pages with multi-window words
+    and with oversize words no window covers."""
+    cfg = field_config_df(spark, DEMO_CONFIG)
+    words = words_view(doc_words)
+    windows = split_pages_to_windows(pages_view(doc_words))
+    preds = aggregate_word_predictions(predict_windows(windows))
+    enriched = words.join(
+        preds.select("url", "page_num", "word_pos", "pred_cls", "pcc"),
+        ["url", "page_num", "word_pos"], "left").cache()
+    # oversize words (never windowed) keep NULL predictions, all others
+    # are predicted, and some words sit in more than one window
     n_big = enriched.filter("length(text) >= 3000").count()
-    assert n_big > 0 and n_null == n_big
-    # everything else predicted
-    assert enriched.filter("pred_cls IS NULL AND length(text) < 3000").count() == 0
-    # and the mention extractor consumes it
-    from amazon_textract_transformer_pipeline_spark.config import (
-        DEMO_CONFIG,
-        field_config_df,
-    )
-    from amazon_textract_transformer_pipeline_spark.operators.entities import (
-        extract_mentions,
-    )
+    assert n_big > 0
+    assert enriched.filter("pred_cls IS NULL").count() == n_big
+    assert predict_windows(windows).groupBy(
+        "url", "page_num", "word_pos").count().filter("count > 1").count() > 0
 
-    m = extract_mentions(enriched, field_config_df(spark, DEMO_CONFIG))
-    n = m.count()
-    assert n > 500
-    multiword = m.filter(F.size("Blocks") > 1).count()
-    assert multiword > 0  # boost bias produces real runs
+    rel_m = extract_mentions(enriched, cfg).cache()
+    rel_f = consolidate_fields(rel_m, cfg, doc_words.select("url"))
+    docs = extract_documents(doc_words, DEMO_CONFIG,
+                             model="window-stub").cache()
+    ker_m, ker_f = document_mentions(docs), document_fields(docs)
+
+    def by_key(df, key):
+        return {tuple(r[k] for k in key): r for r in df.collect()}
+
+    exact = ("ClassId", "ClassName", "Blocks", "BoundingBox", "PageNum",
+             "Text", "RawText", "ixe")
+    a, b = by_key(rel_m, ("url", "run_id")), by_key(ker_m, ("url", "run_id"))
+    assert a.keys() == b.keys() and len(a) > 500
+    for k, r in a.items():
+        assert all(r[c] == b[k][c] for c in exact), k
+        assert math.isclose(r.Confidence, b[k].Confidence, rel_tol=1e-12), k
+    # the boost bias produces real multi-word runs
+    assert sum(len(r.Blocks) > 1 for r in b.values()) > 0
+    big = {r.word_id for r in enriched.filter("length(text) >= 3000")
+           .select("word_id").collect()}
+    assert not big & {w for r in b.values() for w in r.Blocks}
+
+    exact = ("ClassId", "FieldName", "SortOrder", "Optional",
+             "NumDetections", "NumDetectedValues", "Value")
+    a, b = by_key(rel_f, ("url", "ClassId")), by_key(ker_f, ("url", "ClassId"))
+    assert a.keys() == b.keys()
+    for k, r in a.items():
+        assert all(r[c] == b[k][c] for c in exact), k
+        assert math.isclose(r.Confidence, b[k].Confidence,
+                            rel_tol=1e-9, abs_tol=1e-12), k
+        av, bv = r.Values or [], b[k].Values or []
+        assert [v.Value for v in av] == [v.Value for v in bv], k
+        for x, y in zip(av, bv):
+            assert math.isclose(x.Confidence, y.Confidence,
+                                rel_tol=1e-9, abs_tol=1e-12), k
+    docs.unpersist()
+    enriched.unpersist()
+    rel_m.unpersist()

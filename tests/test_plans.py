@@ -11,6 +11,7 @@ from amazon_textract_transformer_pipeline_spark.plans.lineage import LineageStor
 from amazon_textract_transformer_pipeline_spark.plans.partitioning import (
     bucket_by_url,
     salted_repartition_by_url,
+    spread_if_narrow,
 )
 from amazon_textract_transformer_pipeline_spark.plans.pipeline import (
     extract_pipeline,
@@ -28,6 +29,28 @@ def test_full_pipeline_both_models(spark, pages_df):
         assert bad == 0, mode
         assert res.mentions.count() > 500, mode
         assert res.fields.count() == 300 * 11, mode
+
+
+def test_pipeline_plans_have_no_shuffle(spark, pages_df):
+    """scan → front-end → per-document kernel → sink: the fields and the
+    doc confidences of both models run without a shuffle exchange."""
+    for mode in ("sql-stub", "window-stub"):
+        res = extract_pipeline(pages_df, model=mode)
+        try:
+            for name in ("fields", "doc_confidences"):
+                plan = getattr(res, name)._jdf.queryExecution() \
+                    .executedPlan().toString()
+                assert "MapInArrow" in plan, (mode, name, plan)
+                assert "Exchange" not in plan, (mode, name, plan)
+        finally:
+            res.unpersist()
+
+
+def test_spread_if_narrow_passes_streams_through(spark, pages_df, tmp_path):
+    land = str(tmp_path / "landing")
+    pages_df.limit(5).write.parquet(land)
+    stream = spark.readStream.schema(pages_df.schema).parquet(land)
+    assert spread_if_narrow(stream, "url") is stream
 
 
 def test_salted_repartition_balances_zipf_hosts(spark, pages_df):
