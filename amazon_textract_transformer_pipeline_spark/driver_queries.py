@@ -54,9 +54,9 @@ def _enriched_words(spark, sf_dir) -> DataFrame:
 
 
 def _documents(spark, sf_dir) -> DataFrame:
-    """The pipeline's per-document kernel over the bridge words."""
-    return extract_documents(_doc_words(spark, sf_dir), DEMO_CONFIG,
-                             model="sql-stub")
+    """The pipeline's per-document kernel over the bridge pages."""
+    return extract_documents(pages_from_documents(_docs(spark, sf_dir)),
+                             DEMO_CONFIG, model="sql-stub")
 
 
 def _mentions(spark, sf_dir) -> DataFrame:

@@ -5,9 +5,10 @@ line, lines joined ``"\\n"`` — ``fn-postprocess/util/extract.py:55-60``
 applied document-wide (SURVEY.md §2.8 E2).
 
 Implemented as higher-order array functions (``aggregate``/``transform``)
-over the nested pages column: a pure projection, whole-stage-codegen'd,
-**zero shuffle** — the flagship extraction path is scan → mapInPandas →
-project at any scale.
+over the nested pages column of ``frontend.html_to_words``: a pure
+projection, zero shuffle. It serves driver queries and the tests; the
+extraction pipeline computes the same bytes inside its per-document kernel
+with the Python twin ``fused.text_of``, and the tests hold the two equal.
 """
 
 from __future__ import annotations

@@ -8,10 +8,13 @@ Tesseract adapter ``eng_tesseract.py`` is the reference instance, SURVEY.md
 (stdlib html.parser — no native deps), emitting ordered word sequences with
 synthetic page-relative geometry.
 
-This is UDF family (a) of the three sanctioned ones (SURVEY.md §2.12):
-``mapInPandas`` with Arrow batches; per-document Python is inherent to
-parsing, batching amortizes everything else. One input row → one output row
-(doc grain), so the stage is map-only: no shuffle at any scale.
+The extraction pipeline parses inside its per-document kernel
+(``operators/fused.py`` calls :func:`parse_document_struct` per row), so
+the page bytes go from the scan to the fields in one Python pass.
+:func:`html_to_words` maps the same parser into the nested doc-grain word
+view (``DOC_WORDS_SCHEMA``) for driver queries, the relational operators
+and the tests. Either way the parse is map-only, one input row → one
+document: no shuffle at any scale.
 
 Determinism contract (replaces reference uuid4 ids, ocr_engines/base.py:42-44
 — SURVEY.md §2.3 O7): block ids are sha256 of (url, page, line, word_pos),

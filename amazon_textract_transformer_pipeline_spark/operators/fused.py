@@ -1,15 +1,21 @@
-"""Per-document extraction kernel: words → predictions → mentions → fields.
+"""Per-document extraction kernel: page bytes → words → predictions →
+mentions → fields.
 
-The reference has no cross-document operator: mentions, fields and the
-doc-confidence gate are functions of one page (SURVEY §2.8-§2.9,
-``fn-postprocess/main.py:84-180``). This module computes all of them in ONE
-``mapInArrow`` call over ``doc_words``' nested pages, so the extraction plan
-is scan → front-end → this kernel → sink with no shuffle (operator fusion:
-*ML Inference Pipeline Execution Using Pure SQL Based on Operator Fusion*,
-ICDE 2025). It is the path ``plans.pipeline.extract_pipeline`` runs.
+The reference has no cross-document operator: the words, the text,
+mentions, fields and the doc-confidence gate are functions of one page
+(SURVEY §2.8-§2.9, ``fn-postprocess/main.py:84-180``). This module computes
+all of them in ONE ``mapInArrow`` call over the input's ``(url, html)``
+columns, so the extraction plan is scan → this kernel → sink with one Python
+map operator and no shuffle (operator fusion: *ML Inference Pipeline
+Execution Using Pure SQL Based on Operator Fusion*, ICDE 2025). It is the
+path ``plans.pipeline.extract_pipeline`` runs.
 
 Per document, in reading order:
 
+* **Words and text.** ``frontend.parse_document_struct`` (HTML main-content
+  parser or native PDF parse, the same function ``frontend.html_to_words``
+  maps) gives the word tuples; :func:`text_of`, the Python twin of
+  ``assembly.doc_text_col``, gives ``extracted_text``.
 * **Predictions.** ``sql-stub``: the md5 stub (``enrich.stub_cls_py`` /
   ``stub_conf_py``, the Python twins of ``enrich.stub_predictions``).
   ``window-stub``: per page ``splitting.split_words`` →
@@ -31,6 +37,8 @@ from __future__ import annotations
 
 import math
 from collections.abc import Iterable, Iterator
+from itertools import groupby
+from operator import itemgetter
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -39,8 +47,8 @@ from pyspark.sql import types as T
 
 from ..config import field_config_rows
 from ..schemas import MENTION_SCHEMA
-from .assembly import doc_text_col
 from .enrich import RUN_LEN, stub_cls_py, stub_conf_py
+from .frontend import parse_document_struct
 from .inference import StubModel
 from .splitting import DEFAULT_MAX_CONTENT_SEQ_LEN, split_words, token_counter
 
@@ -98,25 +106,28 @@ def _window_page_fn():
     n_toks = token_counter()
 
     def predict(url: str, page_num: int, words: list[tuple]):
+        n = len(words)
         counts = [n_toks(w[2]) for w in words]
-        acc = np.zeros((len(words), mdl.n_classes))
-        cover = np.zeros(len(words))
+        # the boost class is constant over each RUN_LEN run of words
+        boosts = np.repeat([stub_cls_py(url, page_num, i, mdl.n_classes)
+                            for i in range(0, n, RUN_LEN)], RUN_LEN)[:n]
+        acc = np.zeros((n, mdl.n_classes))
+        cover = np.zeros(n)
         windows = split_words(counts, DEFAULT_MAX_CONTENT_SEQ_LEN)
         for wix, (s, e) in enumerate(windows):
-            boosts = [stub_cls_py(url, page_num, s + i, mdl.n_classes)
-                      for i in range(e - s)]
             acc[s:e] += mdl.predict_window(url, page_num, wix, s,
-                                           counts[s:e], boosts)
+                                           counts[s:e], boosts[s:e])
             cover[s:e] += 1
-        cls: list[int | None] = [None] * len(words)
-        pcc: list[float | None] = [None] * len(words)
         hit = np.flatnonzero(cover)
-        if hit.size:
-            probs = acc[hit] / cover[hit, None]
-            arg = probs.argmax(axis=1)  # first max, like array_position
-            top = probs[np.arange(hit.size), arg]
-            for k, i in enumerate(hit.tolist()):
-                cls[i], pcc[i] = int(arg[k]), float(top[k])
+        probs = acc[hit] / cover[hit, None]
+        arg = probs.argmax(axis=1)  # first max, like array_position
+        top = probs[np.arange(hit.size), arg]
+        if hit.size == n:
+            return arg.tolist(), top.tolist()
+        cls: list[int | None] = [None] * n
+        pcc: list[float | None] = [None] * n
+        for i, c, p in zip(hit.tolist(), arg.tolist(), top.tolist()):
+            cls[i], pcc[i] = c, p
         return cls, pcc
 
     return predict
@@ -242,44 +253,40 @@ def doc_confidence_of(fields: list[dict]) -> float | None:
 # ---------------------------------------------------------------------------
 # The Arrow kernel
 # ---------------------------------------------------------------------------
-def _children(arr) -> dict:
-    """Child arrays of a struct array by field name, offsets applied."""
-    return dict(zip([f.name for f in arr.type], arr.flatten()))
+def doc_pages(url: str, payload) -> list[tuple[int, list[tuple]]]:
+    """One document through the shared front-end
+    (``frontend.parse_document_struct``): its pages as (page_num, word
+    tuples without the two prediction slots)."""
+    out = []
+    for pg in parse_document_struct(url, payload):
+        num, words = pg["page_num"], []
+        for w in pg["words"]:
+            b = w["box"]
+            words.append((num, w["line_id"], w["text"], w["conf"], w["id"],
+                          b["left"], b["top"], b["width"], b["height"]))
+        out.append((num, words))
+    return out
 
 
-def _doc_words(pages) -> Iterator[list[tuple[int, list[tuple]]]]:
-    """Per document of an Arrow ``pages`` column: its pages as (page_num,
-    word tuples without the two prediction slots)."""
-    import pyarrow.compute as pc
-
-    pg = _children(pages.flatten())
-    w = _children(pg["words"].flatten())
-    box = _children(w["box"])
-    cols = [w["line_id"], w["text"], w["conf"], w["id"], box["left"],
-            box["top"], box["width"], box["height"]]
-    line_id, text, conf, wid, left, top, width, height = (
-        c.to_pylist() for c in cols)
-    page_nums = pg["page_num"].to_pylist()
-    n_words = pc.list_value_length(pg["words"]).to_pylist()
-    p = lo = 0
-    for n_pages in pc.list_value_length(pages).to_pylist():
-        doc = []
-        for _ in range(n_pages):
-            num, hi = page_nums[p], lo + n_words[p]
-            doc.append((num, [
-                (num, line_id[i], text[i], conf[i], wid[i], left[i], top[i],
-                 width[i], height[i]) for i in range(lo, hi)]))
-            p, lo = p + 1, hi
-        yield doc
+def text_of(pages: list[tuple[int, list[tuple]]]) -> str:
+    """Python twin of ``assembly.doc_text_col``, byte for byte: words of a
+    line joined by " ", consecutive lines and non-empty pages by "\\n"."""
+    return "\n".join(
+        "\n".join(" ".join(w[2] for w in line)
+                  for _, line in groupby(words, key=itemgetter(1)))
+        for _, words in pages if words)
 
 
-def extract_documents(doc_words: DataFrame, config: list[dict],
+def extract_documents(pages: DataFrame, config: list[dict],
                       model: str = "window-stub") -> DataFrame:
-    """``doc_words`` (front-end output) → one row per document of
+    """Input pages (url, html) → one row per document of
     ``DOC_RESULT_SCHEMA``: text, mentions, fields, doc confidence and the
-    human-review flag. Map-only: one ``mapInArrow`` over a projection."""
+    human-review flag. Map-only: one ``mapInArrow`` that parses, predicts
+    and extracts each document in one Python pass."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ..plans.partitioning import spread_if_narrow
 
     if model not in MODELS:
         raise ValueError(f"unknown model mode {model!r}")
@@ -293,20 +300,24 @@ def extract_documents(doc_words: DataFrame, config: list[dict],
         predict = _stub_page if model == "sql-stub" else _window_page_fn()
         for b in batches:
             col = dict(zip(b.schema.names, b.columns))
-            urls = col["url"].to_pylist()
-            mentions, fields, confs = [], [], []
-            for url, pages in zip(urls, _doc_words(col["pages"])):
+            n_pages, texts, mentions, fields, confs = [], [], [], [], []
+            for url, html in zip(col["url"].to_pylist(),
+                                 col["html"].to_pylist()):
+                pages = doc_pages(url, html)
                 words: list[tuple] = []
                 for page_num, page in pages:
                     cls, pcc = predict(url, page_num, page)
                     words.extend(w + (c, p) for w, c, p in zip(page, cls, pcc))
                 ms = mentions_of(words, classes)
                 fs = fields_of(ms, fields_cfg)
+                n_pages.append(len(pages))
+                texts.append(text_of(pages))
                 mentions.append(ms)
                 fields.append(fs)
                 confs.append(doc_confidence_of(fs))
             yield pa.RecordBatch.from_arrays(
-                [col["url"], col["n_pages"], col["extracted_text"],
+                [col["url"], pa.array(n_pages, type=pa.int32()),
+                 pa.array(texts, type=pa.string()),
                  pa.array(mentions, type=mentions_type),
                  pa.array(fields, type=fields_type),
                  pa.array(confs, type=pa.float64()),
@@ -314,11 +325,11 @@ def extract_documents(doc_words: DataFrame, config: list[dict],
                           type=pa.bool_())],
                 schema=arrow_schema)
 
-    return (
-        doc_words.select("url", "n_pages", "pages",
-                         doc_text_col("pages").alias("extracted_text"))
-        .mapInArrow(run, schema=DOC_RESULT_SCHEMA)
-    )
+    # CPU-bound parse: a source with fewer splits than cores (e.g. a
+    # handful of unsplittable .warc.gz archives) serializes it; one
+    # url-keyed exchange buys full parallelism, no-op at corpus scale
+    src = spread_if_narrow(pages.select("url", "html"), "url")
+    return src.mapInArrow(run, schema=DOC_RESULT_SCHEMA)
 
 
 def document_mentions(documents: DataFrame) -> DataFrame:

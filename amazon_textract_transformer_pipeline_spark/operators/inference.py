@@ -64,18 +64,32 @@ class StubModel:
     def predict_window(self, url: str, page_num: int, window_ix: int,
                        start_word: int, token_counts: list[int],
                        boost_classes: list[int]) -> np.ndarray:
-        """Return per-word mean prob matrix, shape (n_words, n_classes)."""
+        """Return per-word mean prob matrix, shape (n_words, n_classes).
+
+        One draw of every token's uniforms (word after word, the order a
+        per-word loop would draw them in), then the per-word mean taken
+        over words of equal token count at once: ``mean(axis=1)`` of a
+        ``(n_words, k, C)`` block sums each word's k rows in the same
+        order as ``mean(axis=0)`` of one word's ``(k, C)`` rows, so the
+        result is bit-identical to that loop."""
         import hashlib
 
         key = f"{url}|{page_num}|{window_ix}".encode()
         seed = int(hashlib.md5(key).hexdigest()[:15], 16) & _H64_MASK
         rng = np.random.Generator(np.random.PCG64(seed))
-        out = np.empty((len(token_counts), self.n_classes))
-        for wix, (cnt, boost) in enumerate(zip(token_counts, boost_classes)):
-            logits = rng.random((cnt, self.n_classes))
-            logits[:, boost] += self._bias
-            probs = logits / logits.sum(axis=1, keepdims=True)
-            out[wix] = probs.mean(axis=0)
+        counts = np.asarray(token_counts, dtype=np.intp)
+        n_tok = int(counts.sum())
+        logits = rng.random((n_tok, self.n_classes))
+        boost = np.repeat(np.asarray(boost_classes, dtype=np.intp), counts)
+        logits[np.arange(n_tok), boost] += self._bias
+        probs = logits / logits.sum(axis=1, keepdims=True)
+        first = np.cumsum(counts) - counts
+        out = np.empty((len(counts), self.n_classes))
+        for k in np.unique(counts).tolist():
+            words = np.flatnonzero(counts == k)
+            tok = (first[words, None] + np.arange(k)).ravel()
+            out[words] = probs[tok].reshape(words.size, k, self.n_classes) \
+                .mean(axis=1)
         return out
 
 

@@ -1,13 +1,15 @@
 """End-to-end extraction pipeline assembly (SURVEY §3.1, Spark restatement).
 
 The reference's S3→Lambda→SFn→SageMaker→Lambda hops collapse into one Spark
-plan with no shuffle: scan → front-end (``frontend.html_to_words``) → the
-per-document kernel (``operators/fused.py``) → sinks. The kernel computes a
-document's text, predictions, mentions, fields and doc confidence in one
-Arrow call, since none of them depends on another document (SURVEY §2.9).
-The relational operators (``entities``, ``consolidate``, ``inference``,
-``splitting``) do not serve this path; they stay as the reference the kernel
-is tested against. Two model modes:
+plan with no shuffle and one Python map operator: scan → the per-document
+kernel (``operators/fused.py``) → sinks. The kernel parses a document's
+HTML or PDF bytes and computes its text, predictions, mentions, fields and
+doc confidence in one Arrow call, since none of them depends on another
+document (SURVEY §2.9). ``frontend.html_to_words`` + ``assembly`` (the
+nested word view and its SQL text fold) and the relational operators
+(``entities``, ``consolidate``, ``inference``, ``splitting``) do not serve
+this path; they serve driver queries and stay as the reference the kernel is
+tested against. Two model modes:
 
 * ``model="sql-stub"`` — the md5 stub classifier, bit-identical to the
   portable SQL one the DuckDB oracles replay.
@@ -24,13 +26,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEMO_CONFIG
-from ..operators.frontend import html_to_words
 from ..operators.fused import (
     document_fields,
     document_mentions,
     extract_documents,
 )
-from .partitioning import salted_repartition_by_url
 
 
 @dataclass
@@ -55,15 +55,10 @@ def extract_pipeline(
     pages: DataFrame,
     config: list[dict] | None = None,
     model: str = "window-stub",
-    salt_partitions: int | None = None,
 ) -> ExtractionResult:
-    if salt_partitions:
-        pages = salted_repartition_by_url(pages, salt_partitions)
-
     # every output reads the kernel's rows: persist them so that the text
-    # and the fields sinks run the front-end and the model once
-    docs = extract_documents(html_to_words(pages), config or DEMO_CONFIG,
-                             model).persist()
+    # and the fields sinks parse and run the model once
+    docs = extract_documents(pages, config or DEMO_CONFIG, model).persist()
     return ExtractionResult(
         documents=docs,
         extracted_text=docs.select("url", "n_pages", "extracted_text"),

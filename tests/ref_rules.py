@@ -13,6 +13,8 @@ from __future__ import annotations
 import hashlib
 from functools import reduce
 
+import numpy as np
+
 # --- stub model (must mirror operators/enrich.py exactly) -----------------
 N_STUB_CLASSES = 20
 RUN_LEN = 3
@@ -28,6 +30,27 @@ def stub_cls(url: str, page: int, word_pos: int, n: int = N_STUB_CLASSES) -> int
 
 def stub_conf(url: str, page: int, word_pos: int) -> float:
     return 0.5 + (_h64(f"c{url}#{page}#{word_pos}") % 500000) / 1000000.0
+
+
+# --- window stub forward pass (must mirror inference.StubModel) -------------
+STUB_BIAS = 1.2
+
+
+def stub_window_probs(url: str, page: int, window_ix: int,
+                      token_counts: list[int],
+                      boost_classes: list[int]) -> np.ndarray:
+    """One word at a time: draw the word's tokens' uniforms, boost its
+    class, normalize each token row, average the rows."""
+    key = f"{url}|{page}|{window_ix}".encode()
+    seed = int(hashlib.md5(key).hexdigest()[:15], 16) & ((1 << 63) - 1)
+    rng = np.random.Generator(np.random.PCG64(seed))
+    out = np.empty((len(token_counts), N_STUB_CLASSES))
+    for wix, (cnt, boost) in enumerate(zip(token_counts, boost_classes)):
+        logits = rng.random((cnt, N_STUB_CLASSES))
+        logits[:, boost] += STUB_BIAS
+        probs = logits / logits.sum(axis=1, keepdims=True)
+        out[wix] = probs.mean(axis=0)
+    return out
 
 
 # --- E1-E4 ------------------------------------------------------------------

@@ -64,7 +64,7 @@ def _python_doc_words(i: int) -> tuple[str, list[dict]]:
 
 
 @pytest.fixture(scope="module", params=["relational", "kernel"])
-def extraction(request, spark, doc_words):
+def extraction(request, spark, pages_df, doc_words):
     """(mentions, fields, doc confidences) of the sql-stub path, from the
     relational operators or from the per-document kernel."""
     if request.param == "relational":
@@ -77,7 +77,7 @@ def extraction(request, spark, doc_words):
         mentions.unpersist()
         fields.unpersist()
     else:
-        docs = extract_documents(doc_words, DEMO_CONFIG,
+        docs = extract_documents(pages_df, DEMO_CONFIG,
                                  model="sql-stub").cache()
         yield (document_mentions(docs), document_fields(docs),
                docs.select("url", "Confidence", "needs_human_review"))

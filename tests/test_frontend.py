@@ -112,3 +112,73 @@ def test_skewed_corpus_extracts_byte_identical(spark):
     assert out.count() == 60
     hot = out.filter("url LIKE 'https://bighost000%'").count()
     assert hot == 18  # hot_frac 0.3
+
+
+def _twin_pages(spark, pages_df):
+    """(url, html) rows for the text-twin test: the fixture's pages, the
+    PDF fixtures of test_pdf, hostile HTML and degenerate payloads."""
+    from amazon_textract_transformer_pipeline_spark.functions import pdf
+
+    from test_pdf import ACCENT_PAGES, DIALECTS, PAGES
+
+    blob = pdf.write_pdf(PAGES)
+    rows = [(f"pdf://pages/{i}", pdf.write_pdf(PAGES, **kw))
+            for i, kw in enumerate(DIALECTS)]
+    rows += [(f"pdf://accent/{f}", pdf.write_pdf(ACCENT_PAGES, font=f))
+             for f in ("courier", "winansi", "tounicode", "cid")]
+    rows += [(f"pdf://aes/{i}", pdf.write_pdf(ACCENT_PAGES, font="winansi",
+                                              encrypt="aes", **kw))
+             for i, kw in enumerate([{}, {"objstm": True}])]
+    rows += [
+        ("bad://garbage", bytes(range(256)) * 40),
+        ("bad://latin1", "<p>caf\xe9 na\xefve \xff\xfe</p>".encode("latin-1")),
+        ("bad://utf16", "<article><p>wide text</p></article>"
+         .encode("utf-16")),
+        ("bad://unclosed", b"<html><body><article><p>open <b>bold <i>it"
+                           b"<div>more <p>words"),
+        ("bad://nested-nav", b"<body><nav><nav><p>menu</p></nav><p>still"
+                             b"</p></nav><p>kept text</p><article><p>art"
+                             b"</p><nav><article><p>x</p></article></nav>"
+                             b"</article></body>"),
+        ("bad://big-attr", b'<p data-x="' + b"a" * 100_000 + b'">after '
+                           b"attr</p>"),
+        ("bad://corrupt-pdf", blob[:200]),
+        ("bad://pdf-garbage", b"%PDF-1.4\ngarbage"),
+        ("bad://null", None),
+        ("bad://empty-body", b"<html><body></body></html>"),
+        ("bad://empty", b""),
+    ]
+    odd = spark.createDataFrame(
+        [(u, None if h is None else bytearray(h)) for u, h in rows],
+        "url string, html binary")
+    return pages_df.select("url", "html").unionByName(odd), len(rows)
+
+
+def test_kernel_text_twin_matches_sql_assembly(spark, pages_df):
+    """The extraction kernel's Python text twin equals the SQL fold over
+    the front-end's word view, byte for byte per url, on normal, PDF,
+    hostile and degenerate pages."""
+    from amazon_textract_transformer_pipeline_spark.config import DEMO_CONFIG
+    from amazon_textract_transformer_pipeline_spark.operators.frontend import (
+        html_to_words,
+    )
+    from amazon_textract_transformer_pipeline_spark.operators.fused import (
+        extract_documents,
+    )
+
+    pages, n_odd = _twin_pages(spark, pages_df)
+    sql = {r.url: r for r in assemble_text(html_to_words(pages)).collect()}
+    kernel = {r.url: r for r in extract_documents(
+        pages, DEMO_CONFIG, model="sql-stub")
+        .select("url", "n_pages", "extracted_text").collect()}
+    assert len(sql) == 300 + n_odd and kernel.keys() == sql.keys()
+    for url, r in sql.items():
+        k = kernel[url]
+        assert k.n_pages == r.n_pages, url
+        assert k.extracted_text.encode() == r.extracted_text.encode(), url
+    # the odd pages exercise real text, several pages, and empty documents
+    assert kernel["pdf://pages/0"].n_pages == 2
+    assert kernel["bad://nested-nav"].extracted_text == "kept text\nart"
+    assert kernel["bad://big-attr"].extracted_text == "after attr"
+    assert kernel["bad://null"].extracted_text == ""
+    assert kernel["bad://corrupt-pdf"].n_pages == 0

@@ -8,6 +8,9 @@ import math
 import numpy as np
 from pyspark.sql import functions as F
 
+import ref_rules
+from ref_rules import N_STUB_CLASSES
+
 from amazon_textract_transformer_pipeline_spark.config import (
     DEMO_CONFIG,
     field_config_df,
@@ -23,13 +26,14 @@ from amazon_textract_transformer_pipeline_spark.operators.entities import (
     extract_mentions,
 )
 from amazon_textract_transformer_pipeline_spark.operators.fused import (
+    _window_page_fn,
+    doc_pages,
     document_fields,
     document_mentions,
     extract_documents,
 )
 from amazon_textract_transformer_pipeline_spark.operators.inference import (
     StubModel,
-    _stub_cls_py,
     aggregate_word_predictions,
     predict_windows,
 )
@@ -41,20 +45,48 @@ from amazon_textract_transformer_pipeline_spark.operators.splitting import (
 
 
 def _expected_word_probs(url, page_num, words):
-    """Direct Python replay: tokenize → split → stub model → global mean."""
+    """Direct Python replay: tokenize → split → per-word stub loop →
+    global mean."""
     counts = [len(stub_tokenize(w["text"])) for w in words]
-    model = StubModel()
     acc: dict[int, list[np.ndarray]] = {}
     for wix, (s, e) in enumerate(split_words(counts, 510)):
-        boosts = [_stub_cls_py(url, page_num, s + i, model.n_classes, 3)
+        boosts = [ref_rules.stub_cls(url, page_num, s + i)
                   for i in range(e - s)]
-        probs = model.predict_window(url, page_num, wix, s, counts[s:e], boosts)
+        probs = ref_rules.stub_window_probs(url, page_num, wix, counts[s:e],
+                                            boosts)
         for i in range(e - s):
             acc.setdefault(s + i, []).append(probs[i])
     return {pos: np.mean(vs, axis=0) for pos, vs in acc.items()}
 
 
-def test_word_predictions_match_python(spark, doc_words):
+def _stub_window_cases():
+    """(token counts, boost classes) windows: random counts 1-12, single
+    words, and windows whose words all have the same count."""
+    rng = np.random.default_rng(20)
+    cases = []
+    for n in (1, 2, 7, 40, 170, 400):
+        for _ in range(5):
+            cases.append(rng.integers(1, 13, n).tolist())
+    cases += [[k] for k in range(1, 13)]
+    cases += [[k] * n for k in (1, 3, 12) for n in (2, 50, 300)]
+    return [(c, rng.integers(0, N_STUB_CLASSES, len(c)).tolist())
+            for c in cases]
+
+
+def test_stub_window_bit_identical_to_per_word_loop():
+    """One draw per window + grouped per-word means == the per-word loop,
+    bit for bit (np.array_equal, not isclose)."""
+    model = StubModel()
+    for i, (counts, boosts) in enumerate(_stub_window_cases()):
+        want = ref_rules.stub_window_probs("https://h/p", 1 + i % 3, i,
+                                           counts, boosts)
+        got = model.predict_window("https://h/p", 1 + i % 3, i, 0, counts,
+                                   boosts)
+        assert got.shape == (len(counts), N_STUB_CLASSES)
+        assert np.array_equal(got, want), (i, counts)
+
+
+def test_word_predictions_match_python(spark, pages_df, doc_words):
     pages = pages_view(doc_words).cache()
     preds = aggregate_word_predictions(
         predict_windows(split_pages_to_windows(pages))
@@ -86,15 +118,26 @@ def test_word_predictions_match_python(spark, doc_words):
             )
         ).collect()
     }
+    # the kernel's per-page predictions over the same input pages
+    predict = _window_page_fn()
+    kernel = {}
+    for r in pages_df.filter(F.col("url").isin(
+            sorted({u for u, _ in targets}))).select("url", "html").collect():
+        for pnum, words in doc_pages(r.url, r.html):
+            kernel[(r.url, pnum)] = predict(r.url, pnum, words)
     assert len(page_words) == len(targets)
     n_checked = 0
     for (url, pnum), words in page_words.items():
         expected = _expected_word_probs(url, pnum, words)
+        k_cls, k_pcc = kernel[(url, pnum)]
         for pos, exp in expected.items():
             r = got[(url, pnum, pos)]
             assert np.allclose(np.array(r.probs), exp, atol=1e-12), (url, pnum, pos)
             assert r.pred_cls == int(np.argmax(exp))
             assert math.isclose(r.pcc, float(np.max(exp)), rel_tol=1e-12)
+            assert k_cls[pos] == int(np.argmax(exp)), (url, pnum, pos)
+            assert math.isclose(k_pcc[pos], float(np.max(exp)),
+                                rel_tol=1e-12), (url, pnum, pos)
             n_checked += 1
     assert n_checked > 100
 
@@ -112,7 +155,8 @@ def test_multiwindow_words_averaged(spark, doc_words):
     assert dup > 0
 
 
-def test_kernel_window_stub_matches_relational_chain(spark, doc_words):
+def test_kernel_window_stub_matches_relational_chain(spark, pages_df,
+                                                     doc_words):
     """The per-document kernel's window-stub mentions and fields equal the
     relational chain predict_windows → aggregate_word_predictions →
     extract_mentions → consolidate_fields, on pages with multi-window words
@@ -134,7 +178,7 @@ def test_kernel_window_stub_matches_relational_chain(spark, doc_words):
 
     rel_m = extract_mentions(enriched, cfg).cache()
     rel_f = consolidate_fields(rel_m, cfg, doc_words.select("url"))
-    docs = extract_documents(doc_words, DEMO_CONFIG,
+    docs = extract_documents(pages_df, DEMO_CONFIG,
                              model="window-stub").cache()
     ker_m, ker_f = document_mentions(docs), document_fields(docs)
 

@@ -46,6 +46,29 @@ def test_pipeline_plans_have_no_shuffle(spark, pages_df):
             res.unpersist()
 
 
+def _plan_nodes(plan) -> list[str]:
+    """Node names of a physical plan, depth first."""
+    kids = plan.children()
+    return [plan.nodeName()] + [n for i in range(kids.size())
+                                for n in _plan_nodes(kids.apply(i))]
+
+
+def test_pipeline_documents_are_one_python_pass(spark, pages_df):
+    """The persisted per-document frame is scan → one MapInArrow: the
+    front-end parses inside the kernel, not in a second Python map."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for mode in ("sql-stub", "window-stub"):
+        res = extract_pipeline(pages_df, model=mode)
+        try:
+            cached = cache.lookupCachedData(res.documents._jdf).get()
+            nodes = _plan_nodes(
+                cached.cachedRepresentation().cacheBuilder().cachedPlan())
+            assert nodes.count("MapInArrow") == 1, (mode, nodes)
+            assert not [n for n in nodes if "Exchange" in n], (mode, nodes)
+        finally:
+            res.unpersist()
+
+
 def test_spread_if_narrow_passes_streams_through(spark, pages_df, tmp_path):
     land = str(tmp_path / "landing")
     pages_df.limit(5).write.parquet(land)
