@@ -8,18 +8,20 @@ Tesseract adapter ``eng_tesseract.py`` is the reference instance, SURVEY.md
 (stdlib html.parser — no native deps), emitting ordered word sequences with
 synthetic page-relative geometry.
 
+Both engines emit geometry-only word tuples (:func:`document_words`).
 The extraction pipeline parses inside its per-document kernel
-(``operators/fused.py`` calls :func:`parse_document_struct` per row), so
-the page bytes go from the scan to the fields in one Python pass.
-:func:`html_to_words` maps the same parser into the nested doc-grain word
-view (``DOC_WORDS_SCHEMA``) for driver queries, the relational operators
-and the tests. Either way the parse is map-only, one input row → one
-document: no shuffle at any scale.
+(``operators/fused.py`` calls :func:`document_words` per row), so the page
+bytes go from the scan to the fields in one Python pass. :func:`html_to_words`
+maps the same words, as §1.2 structs (:func:`parse_document_struct`), into
+the nested doc-grain word view (``DOC_WORDS_SCHEMA``) for driver queries,
+the relational operators and the tests. Either way the parse is map-only,
+one input row → one document: no shuffle at any scale.
 
 Determinism contract (replaces reference uuid4 ids, ocr_engines/base.py:42-44
 — SURVEY.md §2.3 O7): block ids are sha256 of (url, page, line, word_pos),
-confidences sha1-derived — identical re-runs produce identical bytes, which is
-what makes resume-by-anti-join (plans/lineage.py) exactly-once.
+confidences sha1-derived (:func:`word_conf_id`, the one implementation of
+the key scheme) — identical re-runs produce identical bytes, which is what
+makes resume-by-anti-join (plans/lineage.py) exactly-once.
 """
 
 from __future__ import annotations
@@ -143,18 +145,17 @@ def parse_html(html_bytes: bytes | bytearray | memoryview | None) -> list[list[l
     return [pg for pg in p.pages if pg]
 
 
-def _conf(key: str) -> float:
-    """Deterministic pseudo-confidence, Textract 0-100 scale."""
-    h = int(hashlib.sha1(key.encode("utf-8")).hexdigest()[:8], 16)
-    return 50.0 + (h % 5000) / 100.0
+def word_conf_id(url: str, w: tuple) -> tuple[float, str]:
+    """(conf, id) of an engine word: a sha1-derived pseudo-confidence on
+    Textract's 0-100 scale and a sha256 block id, both from the key
+    ``{url}|p{page}|l{line}|w{position in line}``."""
+    key = f"{url}|p{w[0]}|l{w[1]}|w{w[3]}".encode("utf-8")
+    h = int(hashlib.sha1(key).hexdigest()[:8], 16)
+    return 50.0 + (h % 5000) / 100.0, hashlib.sha256(key).hexdigest()[:32]
 
 
-def _word_id(key: str) -> str:
-    return hashlib.sha256(key.encode("utf-8")).hexdigest()[:32]
-
-
-def pages_to_struct(url: str, pages: list[list[list[str]]]) -> list[dict]:
-    """Synthesize §1.2 word structs with 0-1 page-relative geometry.
+def _html_words(pages: list[list[list[str]]]) -> list[tuple[int, list[tuple]]]:
+    """Engine words with synthetic 0-1 page-relative geometry.
 
     Geometry model (stand-in for OCR boxes, validated 0-1 like
     ocr_engines/base.py:63-68): lines stacked vertically in reading order,
@@ -166,7 +167,7 @@ def pages_to_struct(url: str, pages: list[list[list[str]]]) -> list[dict]:
     for p_ix, lines in enumerate(pages):
         n_lines = len(lines)
         page_num = p_ix + 1
-        words = []
+        words: list[tuple] = []
         for l_ix, toks in enumerate(lines):
             top = 0.02 + 0.96 * l_ix / n_lines
             height = 0.8 * 0.96 / n_lines
@@ -175,31 +176,19 @@ def pages_to_struct(url: str, pages: list[list[list[str]]]) -> list[dict]:
             left = 0.02
             for w_ix, tok in enumerate(toks):
                 width = gap * len(tok)
-                key = f"{url}|p{page_num}|l{l_ix}|w{w_ix}"
-                words.append(
-                    {
-                        "text": tok,
-                        "conf": _conf(key),
-                        "id": _word_id(key),
-                        "line_id": l_ix,
-                        "box": {"left": left, "top": top,
-                                "width": width, "height": height},
-                    }
-                )
+                words.append((page_num, l_ix, tok, w_ix, len(words),
+                              left, top, width, height))
                 left += width + gap
-        out.append({"page_num": page_num, "words": words})
+        out.append((page_num, words))
     return out
 
 
-def pdf_pages_to_struct(url: str, pdf_pages: list[dict]) -> list[dict]:
-    """§1.2 word structs from the native PDF content-stream parse
+def _pdf_words(pdf_pages: list[dict]) -> list[tuple[int, list[tuple]]]:
+    """Engine words from the native PDF content-stream parse
     (functions/pdf.py) — unlike the HTML path, these boxes are REAL page
     geometry: content-stream baselines/advances normalized by the page
     MediaBox to the same 0-1 page-relative space OCR boxes use
-    (ocr_engines/base.py:63-68). Deterministic conf/ids use the identical
-    key scheme as the HTML front-end, so every downstream operator
-    (reading order, labels, entities, resume) treats both sources
-    identically. Empty pages dropped (D8)."""
+    (ocr_engines/base.py:63-68). Empty pages dropped (D8)."""
     out = []
     page_num = 0
     for page in pdf_pages:
@@ -209,38 +198,71 @@ def pdf_pages_to_struct(url: str, pdf_pages: list[dict]) -> list[dict]:
         page_num += 1
         w_pt = page["width_pt"] or 1.0
         h_pt = page["height_pt"] or 1.0
-        words = []
+        words: list[tuple] = []
         for l_ix, ln in enumerate(lines):
             for w_ix, wd in enumerate(ln["words"]):
-                key = f"{url}|p{page_num}|l{l_ix}|w{w_ix}"
-                left = min(max(wd["x"] / w_pt, 0.0), 1.0)
-                top = min(max((h_pt - wd["y"] - wd["h"]) / h_pt, 0.0), 1.0)
-                words.append({
-                    "text": wd["text"],
-                    "conf": _conf(key),
-                    "id": _word_id(key),
-                    "line_id": l_ix,
-                    "box": {"left": left, "top": top,
-                            "width": min(max(wd["w"] / w_pt, 0.0), 1.0),
-                            "height": min(max(wd["h"] / h_pt, 0.0), 1.0)},
-                })
-        out.append({"page_num": page_num, "words": words})
+                words.append((
+                    page_num, l_ix, wd["text"], w_ix, len(words),
+                    min(max(wd["x"] / w_pt, 0.0), 1.0),
+                    min(max((h_pt - wd["y"] - wd["h"]) / h_pt, 0.0), 1.0),
+                    min(max(wd["w"] / w_pt, 0.0), 1.0),
+                    min(max(wd["h"] / h_pt, 0.0), 1.0)))
+        out.append((page_num, words))
     return out
 
 
-def parse_document_struct(url: str, payload) -> list[dict]:
+def document_words(payload) -> list[tuple[int, list[tuple]]]:
     """Front-end dispatch: ``%PDF-`` payloads → native PDF content-stream
     parse with real geometry; everything else → the HTML main-content
-    parser with synthetic geometry. One contract out (§1.2 page structs),
-    two engines in — the reference's pluggable-OCR-engine seam
-    (ocr_engines/base.py:18-39) re-expressed as payload sniffing."""
+    parser with synthetic geometry. Two engines in, one contract out — the
+    reference's pluggable-OCR-engine seam (ocr_engines/base.py:18-39)
+    re-expressed as payload sniffing.
+
+    Returns the document's pages as (page_num, words), a word being the
+    geometry-only tuple ``(page_num, line_id, text, position in line,
+    position in page, left, top, width, height)``. The url-keyed conf and
+    id are not computed here: :func:`word_conf_id` derives them on demand,
+    so the extraction kernel hashes only the words its output reads."""
     if payload is not None and bytes(payload[:5]) == b"%PDF-":
         from ..functions.pdf import pdf_extract_words
         try:
-            return pdf_pages_to_struct(url, pdf_extract_words(bytes(payload)))
+            return _pdf_words(pdf_extract_words(bytes(payload)))
         except (ValueError, IndexError, KeyError, TypeError):
             return []  # warn-don't-fail: unparseable PDF → empty doc
-    return pages_to_struct(url, parse_html(payload))
+    return _html_words(parse_html(payload))
+
+
+def _struct(url: str, pages: list[tuple[int, list[tuple]]]) -> list[dict]:
+    """Engine words → §1.2 page structs, every word with its conf and id."""
+    out = []
+    for page_num, words in pages:
+        structs = []
+        for w in words:
+            conf, wid = word_conf_id(url, w)
+            structs.append({
+                "text": w[2], "conf": conf, "id": wid, "line_id": w[1],
+                "box": {"left": w[5], "top": w[6],
+                        "width": w[7], "height": w[8]},
+            })
+        out.append({"page_num": page_num, "words": structs})
+    return out
+
+
+def pages_to_struct(url: str, pages: list[list[list[str]]]) -> list[dict]:
+    """§1.2 word structs of a parsed HTML document (:func:`_html_words`)."""
+    return _struct(url, _html_words(pages))
+
+
+def pdf_pages_to_struct(url: str, pdf_pages: list[dict]) -> list[dict]:
+    """§1.2 word structs of a parsed PDF (:func:`_pdf_words`), with the same
+    key scheme as the HTML front-end, so every downstream operator (reading
+    order, labels, entities, resume) treats both sources identically."""
+    return _struct(url, _pdf_words(pdf_pages))
+
+
+def parse_document_struct(url: str, payload) -> list[dict]:
+    """:func:`document_words` as §1.2 page structs."""
+    return _struct(url, document_words(payload))
 
 
 def html_to_words(pages_df: DataFrame) -> DataFrame:

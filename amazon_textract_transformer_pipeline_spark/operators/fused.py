@@ -12,10 +12,12 @@ path ``plans.pipeline.extract_pipeline`` runs.
 
 Per document, in reading order:
 
-* **Words and text.** ``frontend.parse_document_struct`` (HTML main-content
-  parser or native PDF parse, the same function ``frontend.html_to_words``
-  maps) gives the word tuples; :func:`text_of`, the Python twin of
-  ``assembly.doc_text_col``, gives ``extracted_text``.
+* **Words and text.** ``frontend.document_words`` (HTML main-content
+  parser or native PDF parse, the same words ``frontend.html_to_words``
+  maps) gives geometry-only word tuples; :func:`text_of`, the Python twin
+  of ``assembly.doc_text_col``, gives ``extracted_text``. A word's conf and
+  block id (and the md5 stub's pcc) are hashed only when a mention reads
+  the word (:func:`_scorer`).
 * **Predictions.** ``sql-stub``: the md5 stub (``enrich.stub_cls_py`` /
   ``stub_conf_py``, the Python twins of ``enrich.stub_predictions``).
   ``window-stub``: per page ``splitting.split_words`` →
@@ -37,7 +39,7 @@ from __future__ import annotations
 
 import math
 from collections.abc import Iterable, Iterator
-from itertools import groupby
+from itertools import groupby, repeat
 from operator import itemgetter
 
 import numpy as np
@@ -48,7 +50,7 @@ from pyspark.sql import types as T
 from ..config import field_config_rows
 from ..schemas import MENTION_SCHEMA
 from .enrich import RUN_LEN, stub_cls_py, stub_conf_py
-from .frontend import parse_document_struct
+from .frontend import document_words, word_conf_id
 from .inference import StubModel
 from .splitting import DEFAULT_MAX_CONTENT_SEQ_LEN, split_words, token_counter
 
@@ -89,13 +91,15 @@ DOC_RESULT_SCHEMA = T.StructType([
 
 # ---------------------------------------------------------------------------
 # Predictions, one page at a time: (url, page_num, word tuples) →
-# (class per word, confidence per word); None where a word has none.
+# (class per word, confidence per word); None where a word has none, and
+# for every word of the md5 stub, whose confidence the scorer hashes.
 # ---------------------------------------------------------------------------
 def _stub_page(url: str, page_num: int, words: list[tuple]):
+    """The md5 stub's classes; its per-word confidence is hashed on demand
+    by :func:`_scorer`, for the words of a mention only."""
     n = len(words)
     runs = [stub_cls_py(url, page_num, i) for i in range(0, n, RUN_LEN)]
-    return ([runs[i // RUN_LEN] for i in range(n)],
-            [stub_conf_py(url, page_num, i) for i in range(n)])
+    return [runs[i // RUN_LEN] for i in range(n)], repeat(None, n)
 
 
 def _window_page_fn():
@@ -134,12 +138,31 @@ def _window_page_fn():
 
 
 # ---------------------------------------------------------------------------
-# E1-E13 over one document. A word is the tuple
-# (page_num, line_id, text, conf, word_id, left, top, width, height,
-#  pred_cls, pcc), in reading order.
+# E1-E13 over one document. A word is the front-end's tuple
+# (page_num, line_id, text, line_pos, page_pos, left, top, width, height)
+# plus (pred_cls, pcc), in reading order. A scorer maps a word to its
+# (conf, word_id, pcc); only the words of a mention are scored.
 # ---------------------------------------------------------------------------
+#: words that carry their scores: (conf, word_id) in place of the two
+#: positions, and pcc
+_carried = itemgetter(3, 4, 10)
+
+
+def _scorer(url: str, model: str):
+    """The kernel's scorer: conf and id from the front-end key scheme
+    (``frontend.word_conf_id``) and, for the md5 stub, the per-word pcc
+    (``enrich.stub_conf_py`` at the word's page position)."""
+    stub = model == "sql-stub"
+
+    def score(w: tuple) -> tuple:
+        conf, wid = word_conf_id(url, w)
+        return conf, wid, stub_conf_py(url, w[0], w[4]) if stub else w[10]
+
+    return score
+
+
 def _mention(run: list[tuple], cls: int, name: str, run_id: int,
-             flush_page: int, ixe: int) -> dict:
+             flush_page: int, ixe: int, score) -> dict:
     lines: list[str] = []
     key, line = None, []
     for w in run:
@@ -153,12 +176,13 @@ def _mention(run: list[tuple], cls: int, name: str, run_id: int,
     top = min(w[6] for w in run)
     right = max(w[5] + w[7] for w in run)
     bottom = max(w[6] + w[8] for w in run)
+    scored = [score(w) for w in run]
     return {
         "run_id": run_id, "ClassId": cls, "ClassName": name,
         # the reference mixes the 0-1 and 0-100 scales (extract.py:46-54)
-        "Confidence": min(min(1.0 if w[10] is None else w[10], w[3])
-                          for w in run),
-        "Blocks": [w[4] for w in run],
+        "Confidence": min(min(1.0 if p is None else p, c)
+                          for c, _, p in scored),
+        "Blocks": [i for _, i, _ in scored],
         "BoundingBox": {"left": left, "top": top, "width": right - left,
                         "height": bottom - top},
         "PageNum": flush_page, "Text": "\n".join(lines), "RawText": None,
@@ -166,11 +190,13 @@ def _mention(run: list[tuple], cls: int, name: str, run_id: int,
     }
 
 
-def mentions_of(words: Iterable[tuple], classes: dict[int, str]) -> list[dict]:
+def mentions_of(words: Iterable[tuple], classes: dict[int, str],
+                score=_carried) -> list[dict]:
     """E1-E4. ``run_id`` counts class changes, the first word counting as
     one when its class is configured; a run becomes a mention only when a
     later word of another class flushes it (the trailing run is dropped),
-    with PageNum = the flushing word's page (extract.py:101-129)."""
+    with PageNum = the flushing word's page (extract.py:101-129).
+    ``score`` gives a mention word's (conf, word_id, pcc)."""
     out: list[dict] = []
     ixe: dict[int, int] = {}
     run_id, cur, run = 0, None, []
@@ -179,7 +205,7 @@ def mentions_of(words: Iterable[tuple], classes: dict[int, str]) -> list[dict]:
         if cls != cur:
             if cur is not None:
                 out.append(_mention(run, cur, classes[cur], run_id, w[0],
-                                    ixe.get(cur, 0)))
+                                    ixe.get(cur, 0), score))
                 ixe[cur] = ixe.get(cur, 0) + 1
             run_id, cur, run = run_id + 1, cls, []
         if cls is not None:
@@ -255,17 +281,10 @@ def doc_confidence_of(fields: list[dict]) -> float | None:
 # ---------------------------------------------------------------------------
 def doc_pages(url: str, payload) -> list[tuple[int, list[tuple]]]:
     """One document through the shared front-end
-    (``frontend.parse_document_struct``): its pages as (page_num, word
-    tuples without the two prediction slots)."""
-    out = []
-    for pg in parse_document_struct(url, payload):
-        num, words = pg["page_num"], []
-        for w in pg["words"]:
-            b = w["box"]
-            words.append((num, w["line_id"], w["text"], w["conf"], w["id"],
-                          b["left"], b["top"], b["width"], b["height"]))
-        out.append((num, words))
-    return out
+    (``frontend.document_words``): its pages as (page_num, word tuples
+    without the two prediction slots). The words do not depend on ``url``;
+    :func:`_scorer` joins it into their keys when a mention reads them."""
+    return document_words(payload)
 
 
 def text_of(pages: list[tuple[int, list[tuple]]]) -> str:
@@ -282,7 +301,9 @@ def extract_documents(pages: DataFrame, config: list[dict],
     """Input pages (url, html) → one row per document of
     ``DOC_RESULT_SCHEMA``: text, mentions, fields, doc confidence and the
     human-review flag. Map-only: one ``mapInArrow`` that parses, predicts
-    and extracts each document in one Python pass."""
+    and extracts each document in one Python pass. An input ``bucket``
+    column (``LineageStore.with_buckets``) is passed through as the last
+    output column, so a bucketed write needs no join back onto the pages."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -292,7 +313,10 @@ def extract_documents(pages: DataFrame, config: list[dict],
         raise ValueError(f"unknown model mode {model!r}")
     fields_cfg = [c for c in field_config_rows(config) if not c["Ignore"]]
     classes = {c["ClassId"]: c["Name"] for c in fields_cfg}
-    arrow_schema = to_arrow_schema(DOC_RESULT_SCHEMA)
+    keep = ["bucket"] if "bucket" in pages.columns else []
+    out_schema = T.StructType(DOC_RESULT_SCHEMA.fields
+                              + [pages.schema[c] for c in keep])
+    arrow_schema = to_arrow_schema(out_schema)
     mentions_type = arrow_schema.field("mentions").type
     fields_type = arrow_schema.field("fields").type
 
@@ -308,7 +332,7 @@ def extract_documents(pages: DataFrame, config: list[dict],
                 for page_num, page in pages:
                     cls, pcc = predict(url, page_num, page)
                     words.extend(w + (c, p) for w, c, p in zip(page, cls, pcc))
-                ms = mentions_of(words, classes)
+                ms = mentions_of(words, classes, _scorer(url, model))
                 fs = fields_of(ms, fields_cfg)
                 n_pages.append(len(pages))
                 texts.append(text_of(pages))
@@ -322,14 +346,14 @@ def extract_documents(pages: DataFrame, config: list[dict],
                  pa.array(fields, type=fields_type),
                  pa.array(confs, type=pa.float64()),
                  pa.array([c is None or not c >= 0.5 for c in confs],
-                          type=pa.bool_())],
+                          type=pa.bool_())] + [col[c] for c in keep],
                 schema=arrow_schema)
 
     # CPU-bound parse: a source with fewer splits than cores (e.g. a
     # handful of unsplittable .warc.gz archives) serializes it; one
     # url-keyed exchange buys full parallelism, no-op at corpus scale
-    src = spread_if_narrow(pages.select("url", "html"), "url")
-    return src.mapInArrow(run, schema=DOC_RESULT_SCHEMA)
+    src = spread_if_narrow(pages.select("url", "html", *keep), "url")
+    return src.mapInArrow(run, schema=out_schema)
 
 
 def document_mentions(documents: DataFrame) -> DataFrame:

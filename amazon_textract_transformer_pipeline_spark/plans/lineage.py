@@ -12,9 +12,13 @@ unit of resume is one S3 object; here it is a deterministic url-hash
   is deterministic, SURVEY §7 "Deterministic IDs"), giving exactly-once
   output without a transactional table format. On a real cluster the same
   layout maps 1:1 onto Iceberg ``MERGE``/``replaceWhere``.
-* a lineage table records (bucket, n_docs, n_mentions, wall_ms, status,
-  run_id); :func:`remaining_buckets` anti-joins it away so a restarted job
-  touches only unfinished buckets.
+* a JSON-lines lineage log records (bucket, n_rows, status, run_id,
+  wall_ms_total_write) per bucket; :meth:`LineageStore.remaining` filters
+  the completed buckets away so a restarted job touches only unfinished
+  buckets.
+* row counts per bucket come from the parquet footers of the committed
+  files (:meth:`LineageStore.disk_counts`), read on the driver: recording
+  and validating a pass runs no Spark job beyond the write itself.
 """
 
 from __future__ import annotations
@@ -74,23 +78,41 @@ class LineageStore:
                 counts.pop(int(rec["bucket"]), None)
         return counts
 
-    def validate(self, spark: SparkSession) -> set[int]:
+    def disk_counts(self) -> dict[int, int]:
+        """Rows per ``bucket=`` directory of the results, summed from the
+        parquet footers of its part files on the driver (O(files), no Spark
+        job). Names starting with ``.`` or ``_`` are skipped, as Spark's
+        reader skips them, so uncommitted ``.spark-staging-*`` output does
+        not count. A bucket with an unreadable footer counts -1."""
+        import pyarrow.parquet as pq
+
+        out_dir = os.path.join(self.root, "results")
+        if not os.path.isdir(out_dir):
+            return {}
+        counts: dict[int, int] = {}
+        for name in os.listdir(out_dir):
+            if not name.startswith("bucket="):
+                continue
+            part_dir = os.path.join(out_dir, name)
+            try:
+                n = sum(pq.read_metadata(os.path.join(part_dir, f)).num_rows
+                        for f in os.listdir(part_dir) if f[0] not in "._")
+            except (OSError, ValueError):  # truncated or foreign file
+                n = -1
+            counts[int(name[len("bucket="):])] = n
+        return counts
+
+    def validate(self, spark: SparkSession | None = None) -> set[int]:
         """Reconcile lineage against the physical store: any completed
         bucket whose on-disk row count diverges from the recorded count is
         demoted (status='invalid') so the next run recomputes it. Guards
-        against out-of-band data loss the commit log can't see."""
+        against out-of-band data loss the commit log can't see; a damaged
+        part file demotes its own bucket only. Reads footers only, so
+        ``spark`` is not used."""
         recorded = self.recorded_counts()
         if not recorded:
             return set()
-        out_dir = os.path.join(self.root, "results")
-        try:
-            actual = {
-                int(r.bucket): int(r.n)
-                for r in spark.read.parquet(out_dir)
-                .groupBy("bucket").agg(F.count("*").alias("n")).collect()
-            }
-        except Exception:
-            actual = {}
+        actual = self.disk_counts()
         bad = {b for b, n in recorded.items() if actual.get(b, -1) != n}
         if bad:
             self.record(
@@ -119,47 +141,34 @@ class LineageStore:
         """Execute ``stage_fn(bucketed_pages) -> DataFrame`` over remaining
         buckets; write results partitioned by bucket; log lineage+metrics.
 
-        Returns summary metrics. Safe to re-invoke after any failure: only
-        unfinished buckets recompute (per-bucket dynamic overwrite makes a
-        partially-written bucket self-heal on retry).
+        The write is the pass's one Spark job: the stage's frame must carry
+        ``bucket`` and the per-bucket counts come from :meth:`disk_counts`
+        (``spark`` is not used). Returns summary metrics. Safe to re-invoke
+        after any failure: only unfinished buckets recompute (per-bucket
+        dynamic overwrite makes a partially-written bucket self-heal on
+        retry).
         """
         run_id = run_id or time.strftime("%Y%m%d-%H%M%S")
-        todo = self.remaining(pages)
-        result = stage_fn(todo)
-        # stage protocol: a DataFrame, or (DataFrame, cleanup) where cleanup
-        # releases any caches the stage created (run per write, else a
-        # long-running resume loop accumulates persisted RDDs).
-        cleanup = None
-        if isinstance(result, tuple):
-            result, cleanup = result
+        done_before = self.completed_buckets()
+        result = stage_fn(self.remaining(pages))
         assert "bucket" in result.columns, "stage_fn must propagate 'bucket'"
 
         t0 = time.time()
-        out_dir = os.path.join(self.root, "results")
-        try:
-            (result.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("bucket").parquet(out_dir))
-        finally:
-            if cleanup is not None:
-                cleanup()
+        (result.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("bucket").parquet(os.path.join(self.root, "results")))
         wall_ms = int((time.time() - t0) * 1000)
 
-        stats = (
-            spark.read.parquet(out_dir)
-            .groupBy("bucket").agg(F.count("*").alias("n_rows"))
-        )
-        done_before = self.completed_buckets()
         rows = [
             {
-                "bucket": int(r.bucket),
-                "n_rows": int(r.n_rows),
+                "bucket": b,
+                "n_rows": n,
                 "status": "ok",
                 "run_id": run_id,
                 "wall_ms_total_write": wall_ms,
             }
-            for r in stats.collect()
-            if int(r.bucket) not in done_before
+            for b, n in sorted(self.disk_counts().items())
+            if b not in done_before and n >= 0
         ]
         self.record(run_id, rows)
         return {"run_id": run_id, "buckets_done": len(rows), "wall_ms": wall_ms}

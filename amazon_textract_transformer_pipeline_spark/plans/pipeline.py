@@ -46,8 +46,8 @@ class ExtractionResult:
 
     def unpersist(self) -> None:
         """Release the persisted per-document frame. Long-running callers
-        (streaming micro-batches, lineage bucket loops) must call this after
-        consuming the result or cached RDDs accumulate across batches."""
+        must call this after consuming the result or cached RDDs
+        accumulate across calls."""
         self.documents.unpersist()
 
 
@@ -70,21 +70,15 @@ def extract_pipeline(
 
 
 def extraction_stage_for_lineage(config: list[dict] | None = None):
-    """stage_fn for LineageStore.run: pages(+bucket) → per-doc results with
-    the bucket column propagated (text + doc confidence, one row per url).
-
-    Returns the (DataFrame, cleanup) form of the stage protocol so the
-    store unpersists the pipeline's cached documents after each write —
-    otherwise every resume/bucket run leaks one cached RDD."""
-    def stage(bucketed_pages: DataFrame):
-        res = extract_pipeline(bucketed_pages.drop("bucket"), config=config,
-                               model="sql-stub")
-        keys = bucketed_pages.select("url", "bucket")
-        out = (
-            res.documents.join(keys, "url")
-            .select("url", "bucket", "n_pages", "extracted_text",
-                    F.col("Confidence").alias("doc_confidence"),
-                    "needs_human_review")
-        )
-        return out, res.unpersist
+    """stage_fn for LineageStore.run: bucketed pages → one row per url of
+    text, doc confidence and review flag, sql-stub model. The kernel
+    carries ``bucket`` through and the store's write is the frame's only
+    consumer, so nothing is persisted or joined: scan → kernel → bucketed
+    write is one Spark job."""
+    def stage(bucketed_pages: DataFrame) -> DataFrame:
+        return extract_documents(
+            bucketed_pages, config or DEMO_CONFIG, model="sql-stub",
+        ).select("url", "bucket", "n_pages", "extracted_text",
+                 F.col("Confidence").alias("doc_confidence"),
+                 "needs_human_review")
     return stage

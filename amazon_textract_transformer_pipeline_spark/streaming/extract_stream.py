@@ -36,7 +36,8 @@ def start_extraction_stream(pages_stream: DataFrame, out_dir: str,
                             config: list[dict] | None = None,
                             trigger_available_now: bool = True) -> StreamingQuery:
     """pages stream → per-doc extraction results via checkpointed
-    ``foreachBatch`` running the batch pipeline unchanged.
+    ``foreachBatch`` running the batch per-document kernel
+    (``operators/fused.extract_documents``, sql-stub) unchanged.
 
     foreachBatch is only at-least-once: a crash between the sink write and
     the checkpoint commit replays the micro-batch. The sink is therefore
@@ -47,24 +48,19 @@ def start_extraction_stream(pages_stream: DataFrame, out_dir: str,
     """
     from pyspark.sql import functions as F
 
-    from ..plans.pipeline import extract_pipeline
+    from ..config import DEMO_CONFIG
+    from ..operators.fused import extract_documents
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        res = extract_pipeline(batch_df, config=config, model="sql-stub")
-        out = (
-            res.documents
-            .select("url", "n_pages", "extracted_text", "Confidence",
-                    "needs_human_review")
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        try:
-            (out.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id").parquet(out_dir))
-        finally:
-            res.unpersist()  # micro-batches must not accumulate cached RDDs
+        # the write is the batch's only consumer: the kernel frame goes
+        # straight to the sink, one Spark job, nothing cached
+        (extract_documents(batch_df, config or DEMO_CONFIG, model="sql-stub")
+         .select("url", "n_pages", "extracted_text", "Confidence",
+                 "needs_human_review")
+         .withColumn("batch_id", F.lit(batch_id))
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("batch_id").parquet(out_dir))
 
     writer = (
         pages_stream.writeStream.foreachBatch(process)

@@ -182,3 +182,52 @@ def test_kernel_text_twin_matches_sql_assembly(spark, pages_df):
     assert kernel["bad://big-attr"].extracted_text == "after attr"
     assert kernel["bad://null"].extracted_text == ""
     assert kernel["bad://corrupt-pdf"].n_pages == 0
+
+
+def test_kernel_word_scores_match_struct_view(pages_df):
+    """Key-scheme twin: the conf and id the extraction kernel hashes on
+    demand for a mention word equal the struct view's (``pages_to_struct``
+    / ``pdf_pages_to_struct``) for every word, and both equal the hashes
+    of the key ``{url}|p{page}|l{line}|w{pos}``; the md5 stub's pcc equals
+    the reference rule at the word's page position."""
+    import hashlib
+
+    import ref_rules
+    from test_pdf import DIALECTS, PAGES
+
+    from amazon_textract_transformer_pipeline_spark.functions import pdf
+    from amazon_textract_transformer_pipeline_spark.operators.frontend import (
+        pdf_pages_to_struct,
+    )
+    from amazon_textract_transformer_pipeline_spark.operators.fused import (
+        _scorer,
+        doc_pages,
+    )
+
+    docs = [(r.url, r.html, pages_to_struct(r.url, parse_html(r.html)))
+            for r in pages_df.select("url", "html").collect()]
+    for i, kw in enumerate(DIALECTS):
+        url, blob = f"pdf://pages/{i}", pdf.write_pdf(PAGES, **kw)
+        docs.append((url, blob, pdf_pages_to_struct(
+            url, pdf.pdf_extract_words(blob))))
+    n_words = 0
+    for url, payload, struct in docs:
+        pages = doc_pages(url, payload)
+        assert [p for p, _ in pages] == [pg["page_num"] for pg in struct]
+        stub, window = _scorer(url, "sql-stub"), _scorer(url, "window-stub")
+        for (page_num, words), pg in zip(pages, struct):
+            assert len(words) == len(pg["words"]), url
+            line, pos = None, 0
+            for page_pos, (w, s) in enumerate(zip(words, pg["words"])):
+                pos = pos + 1 if s["line_id"] == line else 0
+                line = s["line_id"]
+                key = f"{url}|p{page_num}|l{line}|w{pos}".encode()
+                conf = 50.0 + (int(hashlib.sha1(key).hexdigest()[:8], 16)
+                               % 5000) / 100.0
+                wid = hashlib.sha256(key).hexdigest()[:32]
+                assert (s["conf"], s["id"]) == (conf, wid), (url, key)
+                assert stub(w + (None, None)) == (
+                    conf, wid, ref_rules.stub_conf(url, page_num, page_pos))
+                assert window(w + (None, 0.25)) == (conf, wid, 0.25)
+                n_words += 1
+    assert n_words > 10_000

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -160,3 +161,78 @@ def test_lineage_validate_heals_disk_damage(spark, pages_df, tmp_path):
     store.run(spark, pages_df, stage, run_id="h2")
     assert spark.read.parquet(root + "/results").count() == n0
     assert store.validate(spark) == set()
+
+
+def _jobs_of(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lineage_pass_is_one_spark_job(spark, pages_df, tmp_path):
+    """scan → kernel → bucketed write is the pass's only job: counts come
+    from parquet footers, so neither run nor validate reads the results
+    back through Spark."""
+    store = LineageStore(str(tmp_path / "jobs"), n_buckets=8)
+    stage = extraction_stage_for_lineage()
+    assert _jobs_of(spark, "lineage-run",
+                    lambda: store.run(spark, pages_df, stage)) == 1
+    assert sum(store.recorded_counts().values()) == 300
+    assert _jobs_of(spark, "lineage-validate",
+                    lambda: store.validate(spark)) == 0
+
+
+def test_lineage_results_match_pipeline(spark, pages_df, tmp_path):
+    """The lineage stage runs the kernel directly; per url its results
+    equal ``extract_pipeline``'s: text byte for byte against the oracle,
+    doc confidence bit for bit, the same review flag and bucket."""
+    root = str(tmp_path / "match")
+    store = LineageStore(root, n_buckets=8)
+    store.run(spark, pages_df, extraction_stage_for_lineage())
+    got = {r.url: r for r in spark.read.parquet(root + "/results").collect()}
+
+    res = extract_pipeline(pages_df, model="sql-stub")
+    try:
+        want = {r.url: r for r in res.doc_confidences
+                .join(store.with_buckets(pages_df)
+                      .select("url", "bucket", "text"), "url").collect()}
+    finally:
+        res.unpersist()
+    assert len(got) == 300 and got.keys() == want.keys()
+    for url, g in got.items():
+        w = want[url]
+        assert g.extracted_text.encode() == w.text.encode(), url
+        assert g.doc_confidence == w.Confidence, url
+        assert g.needs_human_review == w.needs_human_review, url
+        assert g.bucket == w.bucket, url
+
+
+def test_lineage_validate_demotes_only_damaged_bucket(spark, pages_df,
+                                                      tmp_path):
+    """A truncated part file makes its own bucket unreadable: validate
+    demotes that bucket alone and the next run rebuilds it in place."""
+    root = str(tmp_path / "trunc")
+    store = LineageStore(root, n_buckets=6)
+    stage = extraction_stage_for_lineage()
+    store.run(spark, pages_df, stage, run_id="t1")
+    before = sorted(spark.read.parquet(root + "/results").collect())
+    counts = store.disk_counts()
+
+    k = 4
+    part = sorted(glob.glob(root + f"/results/bucket={k}/part-*"))[0]
+    with open(part, "r+b") as f:
+        f.truncate(os.path.getsize(part) // 2)
+    assert store.disk_counts()[k] == -1
+
+    assert store.validate(spark) == {k}
+    assert store.completed_buckets() == set(range(6)) - {k}
+    assert store.run(spark, pages_df, stage, run_id="t2")["buckets_done"] == 1
+    assert store.disk_counts() == counts
+    assert store.validate(spark) == set()
+    assert sorted(spark.read.parquet(root + "/results").collect()) == before
