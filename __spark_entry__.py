@@ -7,8 +7,8 @@ each SQL-expressible query (built in
 amazon_textract_transformer_pipeline_spark/oracle.py from the same layout
 constants and portable-hash stubs as the Spark side). Every query has an exact-value
 oracle: G4 box merge (connected components) and the Q2 splitter (greedy
-window fill with backfill) via recursive CTEs; multimodal metadata against
-the closed-form spec of the deterministic FAKE1 generator.
+window fill with backfill) via recursive CTEs; PDF metadata and PDF text
+against the closed-form spec of the deterministic PDF generator.
 """
 
 from __future__ import annotations
@@ -156,8 +156,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mixture_sample": Q.q_mixture_sample,
         "dsir_importance": Q.q_dsir_importance,
         "g4_box_merge": Q.q_g4_box_merge,
-        "multimodal_metadata": Q.q_multimodal_metadata,
-        "real_media_metadata": Q.q_real_media_metadata,
         "charset_extract": Q.q_charset_extract,
     }
 
@@ -619,36 +617,7 @@ SELECT d.doc_id,
        CAST(coalesce(a.n_lines_removed, 0) AS BIGINT) AS n_lines_removed
 FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id"""
 
-    # multimodal_metadata oracle: the FAKE1 generator is a closed-form
-    # function of media_id (multimodal.synth_media_df/make_fake_blob:
-    # width 64+i%512, height 48+i%384, fmt i%5, payload w*h%4096+64 bytes,
-    # 14-byte header) — so the decode-metadata path checks end-to-end
-    # against the spec, not against itself.
-    sqls["multimodal_metadata"] = """
-SELECT i AS media_id,
-       cast(64 + i % 512 AS int) AS width,
-       cast(48 + i % 384 AS int) AS height,
-       (['png','jpeg','tiff','wav','mp4'])[(i % 5)::INT + 1] AS format,
-       cast(14 + ((64 + i % 512) * (48 + i % 384)) % 4096 + 64 AS bigint)
-         AS n_bytes,
-       true AS valid
-FROM range(0, 200) t(i)"""
-
-    # real_media_metadata oracle: synth_real_media_df's dims/format are
-    # closed-form in media_id (h = 16+i%48, w = 16+(i*7)%48, kind cycle),
-    # so the seven real-container header sniffs check against the spec —
-    # including lossy VP8, whose dims come from the uncompressed
-    # key-frame header (decode stays the declared codec seam).
-    sqls["real_media_metadata"] = """
-SELECT i AS media_id,
-       cast(16 + (i * 7) % 48 AS int) AS width,
-       cast(16 + i % 48 AS int) AS height,
-       (['png','jpeg','bmp','tiff','gif','webp','webp'])[(i % 7)::INT + 1]
-           AS format,
-       true AS valid
-FROM range(0, 150) t(i)"""
-
-    # pdf oracles: the synthetic PDF corpus (multimodal.synth_pdf_df) is a
+    # pdf oracles: the synthetic PDF corpus (synthetic.synth_pdf_df) is a
     # closed-form function of media_id — dims 300+(i%5)*60 × 400+(i%4)*80,
     # 1+i%4 pages, 1+(i+p)%3 lines of 'doc i page p line j tokK' — so the
     # whole native parser (xref tables/streams/predictors/ObjStm, page

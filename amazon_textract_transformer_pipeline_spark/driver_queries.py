@@ -24,17 +24,12 @@ from .operators.fused import (
     extract_documents,
 )
 from .operators.labels import merge_annotation_boxes, word_single_labels
-from .operators.multimodal import (
-    decode_metadata,
-    pdf_structure_metadata,
-    synth_media_df,
-    synth_pdf_df,
-)
 from .operators.smgt import smgt_to_seq2seq_examples
 from .operators.webclean import canonical_url_sql, remove_boilerplate_lines
 from .operators.splitting import split_pages_to_window_bounds
 from .operators.textstats import with_text_stats
 from .sources.bridge import pages_from_documents
+from .sources.synthetic import synth_pdf_df
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -585,7 +580,7 @@ def q_smgt_seq2seq(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Rows-only checks (non-SQL-expressible ops: splitter, G4, multimodal)
+# Rows-only checks (non-SQL-expressible ops: splitter, G4, PDF)
 # ---------------------------------------------------------------------------
 def q_split_windows(spark, sf_dir) -> DataFrame:
     pages = pages_view(_doc_words(spark, sf_dir))
@@ -603,31 +598,49 @@ def q_g4_box_merge(spark, sf_dir) -> DataFrame:
         F.size("ann_ixs").alias("n_members"), "x0", "x1")
 
 
-def q_multimodal_metadata(spark, sf_dir) -> DataFrame:
-    return decode_metadata(synth_media_df(spark, 200)).select(
-        "media_id", "width", "height", "format", "n_bytes", "valid")
-
-
-def q_real_media_metadata(spark, sf_dir) -> DataFrame:
-    """D1 over REAL containers: the six-format synthetic corpus
-    (png/jpeg/bmp/tiff/gif/webp bytes from the built-in encoders) through
-    decode_metadata's header sniff — format and header-only dims checked
-    against the generator's closed-form spec. n_bytes is excluded
-    (encoded size is not closed-form). Map-only."""
-    from .operators.multimodal import synth_real_media_df
-
-    return decode_metadata(synth_real_media_df(spark, 150)).select(
-        "media_id", "width", "height", "format", "valid")
-
-
 def q_pdf_metadata(spark, sf_dir) -> DataFrame:
     """PDF structure metadata over the six-dialect synthetic corpus:
     page-1 MediaBox point dims + page count + encrypted flag via the
     native xref/page-tree walk (functions/pdf.py) — checked against the
     closed-form generator spec, so classic xref, xref streams, PNG
-    predictors, and object streams all verify end-to-end. Map-only."""
-    return pdf_structure_metadata(synth_pdf_df(spark, 120)).select(
-        "media_id", "width", "height", "n_pages", "encrypted", "valid")
+    predictors, and object streams all verify end-to-end. Map-only; a
+    blob the parser rejects becomes a valid=false row."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from .functions import pdf
+
+    schema = T.StructType([
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("width", T.IntegerType(), True),
+        T.StructField("height", T.IntegerType(), True),
+        T.StructField("n_pages", T.IntegerType(), True),
+        T.StructField("encrypted", T.BooleanType(), True),
+        T.StructField("valid", T.BooleanType(), False),
+    ])
+
+    def run(batches):
+        cols = [f.name for f in schema]
+        for b in batches:
+            rows = []
+            for mid, blob in zip(b["media_id"], b["blob"]):
+                try:
+                    m = pdf.pdf_meta(bytes(blob))
+                    p0 = m["pages"][0] if m["pages"] else None
+                    rows.append({
+                        "media_id": int(mid),
+                        "width": round(p0["width_pt"]) if p0 else None,
+                        "height": round(p0["height_pt"]) if p0 else None,
+                        "n_pages": m["n_pages"],
+                        "encrypted": m["encrypted"],
+                        "valid": True})
+                except Exception:
+                    rows.append({"media_id": int(mid), "width": None,
+                                 "height": None, "n_pages": None,
+                                 "encrypted": None, "valid": False})
+            yield pd.DataFrame(rows, columns=cols)
+
+    return synth_pdf_df(spark, 120).mapInPandas(run, schema=schema)
 
 
 def q_gopher_filters(spark, sf_dir) -> DataFrame:

@@ -1,11 +1,12 @@
-"""Pure-Python/numpy image codecs — real decode with no native image libs.
+"""Pure-Python/numpy still-image codecs — real decode with no native libs.
 
-The reference decodes page images with PIL under SageMaker
-(``notebooks/preproc/preproc.py:70-173``, ``image_utils.py:83-168``); this
-sandbox ships no codecs, so round 2 left D2/D3 as an import-gated seam.
-This module closes the seam for every format a from-scratch decoder can
-cover from public specs using only the stdlib (``zlib``, ``struct``) and
-numpy:
+The reference decodes page images with PIL only to rasterize them for
+Textract OCR (``notebooks/preproc/preproc.py:70-173``,
+``image_utils.py:59-168``). This engine has no OCR step and no entry
+point reaches this module today; it is kept as the zero-dependency image
+layer an OCR front-end would sit on, covering every format a from-scratch
+decoder can handle from public specs using only the stdlib (``zlib``,
+``struct``) and numpy:
 
 - **PNG** (W3C PNG spec / RFC 2083): depth 8 (sequential AND Adam7
   interlaced), depth 16 (MSB downsample), sub-byte depths 1/2/4 for
@@ -23,26 +24,21 @@ numpy:
   Compression none/LZW(+Predictor 2)/PackBits, Orientation tag.
 - **GIF** (87a/89a): global/local color tables, GIF-variant LZW,
   interlace, transparency, multi-frame canvas compositing.
-- **WebP lossless (VP8L)** in the sibling ``functions/webp.py`` (prefix
-  codes, color cache, LZ77, all four transforms); lossy VP8 stays an
-  external-codec seam.
 
 Matching encoders (:func:`encode_png`, :func:`encode_bmp`,
 :func:`encode_ppm`, :func:`encode_tiff`, :func:`encode_gif`) exist so
-tests roundtrip real containers end-to-end and synthetic corpora can
-carry real-format payloads. Baseline JPEG lives in the sibling
-``functions/jpeg.py`` (full T.81 baseline decode + quality-scaled
-encoder); only progressive/arithmetic JPEG variants still need the PIL
-seam (``operators/multimodal.pil_decode_fn``), and ``auto_decode_fn``
-prefers PIL for JPEG when installed (libjpeg-turbo speed).
+tests roundtrip real containers end-to-end. JPEG lives in the sibling
+``functions/jpeg.py`` (T.81 baseline and progressive Huffman decode +
+quality-scaled encoder). WebP, ICO, AVIF/HEIF, SVG, MP4 and PDF are
+sniffed (format and, where the header carries them, dimensions) but have
+no pixel decoder here. The EXIF-rotation and resize/letterbox geometry of
+the reference (``image_utils.py:59-168``) closes the module.
 
 Decode cost note (100 TB): filters 0/1/2 are fully vectorized (copy,
 per-lane cumsum mod 256, vectorized up-add); filters 3/4 (average/Paeth)
 are inherently sequential per scanline byte and fall back to a Python
-loop. This runs inside the Arrow-batched ``thumbnail_images`` stage, which
-is already the sanctioned Python-side path; on a real cluster you'd still
-prefer Pillow-SIMD where installable — this is the zero-dependency floor,
-not the ceiling.
+loop. On a real cluster you'd still prefer Pillow-SIMD where installable
+— this is the zero-dependency floor, not the ceiling.
 """
 
 from __future__ import annotations
@@ -514,17 +510,11 @@ def _decode_jpeg(blob):
     return decode_jpeg(blob)
 
 
-def _decode_webp(blob):
-    from .webp import decode_webp  # sibling module (VP8L lossless)
-    return decode_webp(blob)
-
-
 _DECODERS = {"png": decode_png, "bmp": decode_bmp,
              "ppm": decode_ppm, "pgm": decode_ppm,
              "tiff": lambda blob: decode_tiff(blob),   # defined below
              "gif": lambda blob: decode_gif(blob),     # defined below
-             "jpeg": _decode_jpeg,
-             "webp": _decode_webp}
+             "jpeg": _decode_jpeg}
 
 
 #: exception types a truncated/bit-flipped container can surface from the
@@ -535,17 +525,16 @@ _PARSE_ERRORS = (struct.error, IndexError, KeyError, TypeError,
 
 
 def builtin_decode_fn(blob: bytes) -> tuple[np.ndarray, int | None]:
-    """Codec-seam implementation (``decode_fn(blob) -> (pixels,
-    orientation)``) backed entirely by this module — the zero-dependency
-    real-decode path for ``thumbnail_images``. Error contract: hostile
+    """Decode any supported still image to ``(pixels, orientation)``,
+    backed entirely by this module and ``jpeg.py``. Error contract: hostile
     input raises ValueError ONLY (fuzz-pinned in tests/test_properties.py);
     the Arrow stage converts that into the per-record ``error`` column."""
     fmt = sniff_format(bytes(blob))
     dec = _DECODERS.get(fmt)
     if dec is None:
         raise ValueError(
-            f"builtin_decode_fn: format {fmt or 'unknown'} needs a native "
-            "codec (PIL seam) — supported here: png/bmp/ppm/pgm/tiff/gif/jpeg")
+            f"builtin_decode_fn: format {fmt or 'unknown'} has no built-in "
+            "decoder — supported here: png/bmp/ppm/pgm/tiff/gif/jpeg")
     try:
         return dec(bytes(blob))
     except ValueError:
@@ -565,7 +554,7 @@ def builtin_decode_fn(blob: bytes) -> tuple[np.ndarray, int | None]:
 # 3 (palette via ColorMap), chunky planar config, strip layout,
 # Compression 1 (none), 5 (LZW, with horizontal Predictor 2), 32773
 # (PackBits), and the Orientation tag (the D4 input). Tiled TIFFs and
-# 16-bit samples stay on the PIL seam.
+# 16-bit samples raise ValueError.
 
 _TIFF_TAG_WIDTH = 256
 _TIFF_TAG_LENGTH = 257
@@ -764,9 +753,9 @@ def _tiff_endian(blob: bytes) -> str:
 
 
 def decode_tiff(blob: bytes) -> tuple[np.ndarray, int | None]:
-    """First frame only (single-image contract of the codec seam) — reads
+    """First frame only (single-image decode contract) — reads
     and decodes just the first IFD, not the whole chain (a 100-page
-    archive must not cost 100 decodes in the hot thumbnail stage)."""
+    archive must not cost 100 decodes on a hot path)."""
     e = _tiff_endian(blob)
     (off,) = struct.unpack_from(e + "I", blob, 4)
     tags, _ = _tiff_read_ifd(blob, e, off)
@@ -805,12 +794,6 @@ def _count_frames(blob: bytes) -> int:
     if fmt == "pdf":
         from .pdf import pdf_meta
         return pdf_meta(blob)["n_pages"]
-    if fmt == "mp4":
-        from .av import mp4_sample_tables
-        for trk in mp4_sample_tables(blob):
-            if trk["handler"] == b"vide" or trk["width"]:
-                return max(len(trk["samples"]), 1)
-        return 1
     return 1
 
 
@@ -1131,7 +1114,7 @@ def decode_gif_frames(blob: bytes, max_frames: int | None = None,
 
 
 def decode_gif(blob: bytes) -> tuple[np.ndarray, int | None]:
-    """First composited frame (single-image codec-seam contract) — stops
+    """First composited frame (single-image decode contract) — stops
     after the first image descriptor instead of decoding the whole
     animation."""
     return decode_gif_frames(blob, max_frames=1)[0]
@@ -1271,12 +1254,6 @@ def sniff_dimensions(blob: bytes) -> tuple[int, int] | None:
             return (int(w[0]), int(h[0])) if w and h else None
         if fmt == "webp":
             return _webp_dims(blob)
-        if fmt == "mp4":
-            from .av import sniff_mp4_meta
-            m = sniff_mp4_meta(blob)
-            if m["width"] and m["height"]:
-                return int(m["width"]), int(m["height"])
-            return None
         if fmt == "pdf":
             # page-1 MediaBox in whole points (structure walk only; PDFs
             # are scalable — pdf.render_plan gives the 300-DPI pixel dims)
@@ -1322,3 +1299,85 @@ def sniff_dimensions(blob: bytes) -> tuple[int, int] | None:
     except _PARSE_ERRORS:
         return None
     return None
+
+
+# --------------------------------------------------------------------------
+# D4/D5: EXIF rotation + resize/letterbox arithmetic (pure numpy; all
+# geometry below is codec-free).
+# --------------------------------------------------------------------------
+
+def exif_rotation_angle(orientation: int | None) -> int:
+    """EXIF orientation tag → anticlockwise rotation degrees
+    (``image_utils.py:59-80``: 3→180, 6→270, 8→90, anything else → 0;
+    mirrored orientations 2/4/5/7 are deliberately untouched, as in the
+    reference)."""
+    return {3: 180, 6: 270, 8: 90}.get(orientation or 0, 0)
+
+
+def apply_exif_rotation_array(arr: np.ndarray,
+                              orientation: int | None) -> tuple[np.ndarray, int]:
+    """Rotate (h, w[, c]) pixels per the EXIF tag; returns (pixels, angle).
+    ``np.rot90(k)`` is anticlockwise like PIL's ``rotate(expand=True)``."""
+    angle = exif_rotation_angle(orientation)
+    if angle:
+        arr = np.rot90(arr, k=angle // 90)
+    return arr, angle
+
+
+def resize_plan(iw: int, ih: int, size, default_square: bool = True,
+                max_size: int | None = None) -> tuple[int, int]:
+    """Target (width, height) per the reference's size normalization
+    (``image_utils.py:125-155``): a (w, h) pair passes through; a single
+    number is a square when ``default_square`` else the *shortest-edge*
+    target with aspect preserved and the ``max_size`` long-edge overrule
+    (all divisions truncate via int(), exactly as the reference)."""
+    if hasattr(size, "__len__"):
+        if len(size) != 1:
+            return int(size[0]), int(size[1])
+        size = size[0]
+    if default_square:
+        return int(size), int(size)
+    short = int(size)
+    ishort, ilong = (iw, ih) if iw <= ih else (ih, iw)
+    if short == ishort:
+        return iw, ih  # reference returns the original image untouched
+    long = int(short * ilong / ishort)
+    if max_size is not None:
+        if max_size <= short:
+            raise ValueError(
+                f"max_size = {max_size} must be strictly greater than the "
+                f"requested size for the smaller edge = {short}")
+        if long > max_size:
+            short, long = int(max_size * short / long), max_size
+    return (short, long) if iw <= ih else (long, short)
+
+
+def letterbox_plan(iw: int, ih: int, w: int, h: int) -> tuple[int, int, int, int]:
+    """(new_w, new_h, offset_x, offset_y) for letterboxing iw×ih into w×h
+    (``image_utils.py:157-165``: scale = min(w/iw, h/ih), truncating resize,
+    centered paste with floor-div offsets)."""
+    scale = min(w / iw, h / ih)
+    nw, nh = int(iw * scale), int(ih * scale)
+    return nw, nh, (w - nw) // 2, (h - nh) // 2
+
+
+def stretch_resize_array(arr: np.ndarray, w: int, h: int) -> np.ndarray:
+    """Nearest-neighbor stretch of (ih, iw[, c]) pixels to (h, w[, c]).
+    (The reference resamples BICUBIC via PIL — a codec detail; the *plan*
+    arithmetic above is what must match. Nearest keeps this path
+    dependency-free and deterministic.)"""
+    ih, iw = arr.shape[:2]
+    ys = (np.arange(h) * ih) // h
+    xs = (np.arange(w) * iw) // w
+    return arr[ys][:, xs]
+
+
+def letterbox_array(arr: np.ndarray, w: int, h: int,
+                    color: tuple[int, int, int] = (0, 0, 0)) -> np.ndarray:
+    """Letterbox (ih, iw, 3) pixels into a w×h canvas of ``color``."""
+    ih, iw = arr.shape[:2]
+    nw, nh, ox, oy = letterbox_plan(iw, ih, w, h)
+    out = np.empty((h, w, 3), dtype=arr.dtype)
+    out[:, :] = np.asarray(color, dtype=arr.dtype)
+    out[oy:oy + nh, ox:ox + nw] = stretch_resize_array(arr, nw, nh)
+    return out

@@ -1,11 +1,10 @@
-"""PDF structure codec — from-scratch ISO 32000 subset, stdlib-only.
+"""PDF structure parser — from-scratch ISO 32000 subset, stdlib-only.
 
 The reference's media-type registry marks ``.pdf`` as its primary
 *scalable* input (``notebooks/preproc/textract_transformers/image_utils.py:27-42``)
 and rasterizes via pdf2image at 300 DPI (``image_utils.py:560-582``,
-``util/ocr.py:33``). This module gives the engine a native PDF front door
-in the same spirit as the MP4 box walk (functions/av.py) and the image
-codec family (functions/codecs.py):
+``util/ocr.py:33``) for Textract OCR. This engine has no OCR step, so it
+reads the PDF's own structure and text instead, with a native front door:
 
 * **structure parse** — COS object tokenizer, classic ``xref`` tables AND
   PDF-1.5 cross-reference streams (FlateDecode + PNG predictors, both
@@ -32,12 +31,7 @@ codec family (functions/codecs.py):
   metadata-only (never ciphertext-as-text). AES runs on a from-scratch
   FIPS-197 implementation (test-vector pinned) — pure Python, fine for
   crawl-typical streams; a hot path with many large AES documents would
-  want a native crypto seam;
-* **rasterization stays a seam** — pixel rendering needs a rasterizer
-  (pdf2image/pypdfium2); :func:`render_plan` computes the pixel geometry
-  the reference's 300-DPI convention implies, and
-  operators/multimodal.auto_decode_fn gates the actual render exactly
-  like progressive JPEG.
+  want a native crypto seam.
 
 A fixture writer (:func:`write_pdf`) emits spec-valid PDFs in four
 structural dialects (classic xref / xref stream / +predictor / +ObjStm,
@@ -657,11 +651,10 @@ def _box_dims(box, rotate: int) -> tuple[float, float]:
 
 def pdf_meta(blob: bytes) -> dict:
     """Structure-only metadata: version, page count, per-page post-rotation
-    point dims, encrypted flag. The D1 answer for PDFs.
+    point dims, encrypted flag.
 
-    Error contract (same as every codec in this family): hostile or
-    truncated input raises ValueError ONLY — upstream Arrow stages turn
-    that into the per-record error column."""
+    Error contract: hostile or truncated input raises ValueError ONLY —
+    upstream Arrow stages turn that into the per-record error column."""
     try:
         doc = PdfDocument(blob)
         pages = []
@@ -693,8 +686,8 @@ def render_plan(width_pt: float, height_pt: float,
                 dpi: int = 300) -> tuple[int, int]:
     """Pixel geometry of a rasterization at ``dpi`` — the reference's
     300-DPI pdf2image convention (image_utils.py:560-582; ``scalable=True``
-    registry rows image_utils.py:27-42). Pure arithmetic; the render
-    itself is the external seam."""
+    registry rows image_utils.py:27-42). Pure arithmetic; this engine has
+    no rasterizer."""
     return round(width_pt * dpi / 72.0), round(height_pt * dpi / 72.0)
 
 

@@ -303,7 +303,8 @@ def extract_documents(pages: DataFrame, config: list[dict],
     human-review flag. Map-only: one ``mapInArrow`` that parses, predicts
     and extracts each document in one Python pass. An input ``bucket``
     column (``LineageStore.with_buckets``) is passed through as the last
-    output column, so a bucketed write needs no join back onto the pages."""
+    output column, so a bucketed write needs no join back onto the pages.
+    Rows with a NULL url are dropped."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -349,10 +350,13 @@ def extract_documents(pages: DataFrame, config: list[dict],
                           type=pa.bool_())] + [col[c] for c in keep],
                 schema=arrow_schema)
 
+    # a row without a url has no identity to key text, fields or a bucket
+    # by (and the result's url is non-null): it is dropped here.
     # CPU-bound parse: a source with fewer splits than cores (e.g. a
     # handful of unsplittable .warc.gz archives) serializes it; one
     # url-keyed exchange buys full parallelism, no-op at corpus scale
-    src = spread_if_narrow(pages.select("url", "html", *keep), "url")
+    src = spread_if_narrow(pages.select("url", "html", *keep)
+                           .filter(F.col("url").isNotNull()), "url")
     return src.mapInArrow(run, schema=out_schema)
 
 

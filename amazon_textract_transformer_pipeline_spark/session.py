@@ -3,7 +3,8 @@
 Local-mode defaults mirror what a 1000-executor cluster submit would set via
 ``spark-submit --conf``: AQE on (skew-join splitting + partition coalescing),
 Arrow enabled for the pandas-UDF stages, shuffle partitions sized to cores
-rather than the 200 default.
+rather than the 200 default. Starting a session loads nothing else of the
+package and sets no executor environment: every setting is a Spark conf.
 """
 
 from __future__ import annotations
@@ -47,23 +48,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "256m")
     )
-    # Codec-backend determinism (round-5 ADVICE): propagate the driver's
-    # ATTP_CODEC_BACKENDS policy to every executor so decode behavior is
-    # uniform fleet-wide — policy 'require' turns a missing system library
-    # (libwebp/libheif/libde265) into a deployment error instead of silent
-    # per-row degradation; 'none' pins library-less behavior everywhere.
-    from .functions.backends import CODEC_BACKEND_ENV, codec_backend_report
-
-    builder = builder.config(
-        f"spark.executorEnv.{CODEC_BACKEND_ENV}",
-        os.environ.get(CODEC_BACKEND_ENV, "auto"))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # Record the decode surface once per deployment: the active policy plus
-    # which optional system libraries actually load on this host, so a
-    # cluster run leaves evidence of the codec coverage it ran with.
-    print(f"[attp_spark] codec backends: {codec_backend_report()}",
-          flush=True)
     return spark

@@ -23,6 +23,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from ..schemas import PAGES_INPUT_SCHEMA
 
@@ -208,3 +209,51 @@ def skewed_pages_df(spark: SparkSession, n: int, seed: int = 42,
     rng_df = spark.range(0, n, 1,
                          partitions or spark.sparkContext.defaultParallelism)
     return rng_df.mapInPandas(gen, schema=PAGES_INPUT_SCHEMA)
+
+
+def synth_pdf_df(spark: SparkSession, n: int) -> DataFrame:
+    """Distributed deterministic PDF corpus: (media_id, blob). Closed-form
+    in media_id (dims/page-count/line text below mirror the DuckDB gate
+    oracle exactly), cycling through all six structural dialects of
+    functions/pdf.write_pdf (classic xref, Flate content, xref streams,
+    PNG-predictored xref streams, object streams) crossed with all four
+    font dialects (unencoded Courier, WinAnsi + /Differences + /Widths,
+    /ToUnicode CMap, Type0/CID Identity-H) — every line carries the
+    accented token 'café' so the encoded-font paths must actually decode
+    (a latin-1-only reader would emit mojibake and hash-mismatch)."""
+    from ..functions.pdf import write_pdf
+
+    schema = T.StructType([
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("blob", T.BinaryType(), False),
+    ])
+    dialects = [{}, {"compress": True}, {"xref_stream": True},
+                {"xref_stream": True, "predictor": True},
+                {"objstm": True}, {"objstm": True, "compress": True}]
+    fonts = ["courier", "winansi", "tounicode", "cid"]
+    # standard-security-handler axis: every 8th doc RC4- or AES-encrypted
+    # (owner-locked, empty user password) — text must still extract
+    encrypts = [None, None, None, "rc4", None, None, None, "aes"]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            rows = []
+            for i in b["id"]:
+                i = int(i)
+                pages = []
+                for p in range(1 + i % 4):
+                    lines = [
+                        f"doc {i} page {p} line {j} "
+                        f"tok{(i*7 + p*3 + j) % 100} café"
+                        for j in range(1 + (i + p) % 3)]
+                    pages.append({"width": 300 + (i % 5) * 60,
+                                  "height": 400 + (i % 4) * 80,
+                                  "lines": lines})
+                rows.append({"media_id": i,
+                             "blob": write_pdf(pages, font=fonts[i % 4],
+                                               encrypt=encrypts[i % 8],
+                                               **dialects[i % 6])})
+            yield pd.DataFrame(rows)
+
+    rng = spark.range(0, n, 1, max(8, spark.sparkContext.defaultParallelism))
+    return rng.mapInPandas(gen, schema=schema)

@@ -131,22 +131,14 @@ def bench_queries(spark) -> dict[str, float]:
           lambda: dedup.winnow_fingerprints(
               docs.filter("doc_id % 5 = 0").select("doc_id", "text")).count())
 
-    # round-3/4 operators: windowed analytics, WARC ingestion, real-codec
-    # decode, native PDF extraction
+    # round-3/4 operators: windowed analytics, WARC ingestion, native PDF
+    # extraction
     timed("gopher_repetition", lambda: _force(Q.q_gopher_repetition(spark, sf)))
     timed("tumbling_windows", lambda: _force(Q.q_tumbling_windows(spark, sf)))
     timed("session_windows", lambda: _force(Q.q_session_windows(spark, sf)))
     timed("pdf_extract", lambda: _force(Q.q_pdf_extract(spark, sf)))
 
     sf_name = Path(sf).name
-    n_media = {"sf0.001": 100, "sf0.01": 300, "sf0.1": 1000}.get(sf_name, 300)
-    from amazon_textract_transformer_pipeline_spark.operators import (  # noqa: E402
-        multimodal,
-    )
-    media = multimodal.synth_real_media_df(spark, n_media)
-    timed("codec_decode", lambda: multimodal.decode_image(media)
-          .filter("error IS NULL").count())
-
     n_warc = {"sf0.001": 500, "sf0.01": 2000, "sf0.1": 8000}.get(sf_name, 2000)
     import tempfile
 

@@ -40,7 +40,7 @@ PLANS = Path(__file__).parent / "plans" / "r07"
 
 def build_queries(spark):
     """Same DataFrame constructions as bench.py's bench_queries (minus the
-    staged codec/warc entries), name → lambda returning the DataFrame."""
+    staged warc entry), name → lambda returning the DataFrame."""
     sf = SF_DIR
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     embs = spark.read.parquet(f"{sf}/embeddings.parquet")

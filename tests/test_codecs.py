@@ -1,7 +1,6 @@
 """Pure-numpy image codecs (functions/codecs.py): encode/decode
 roundtrips for every PNG filter and color type, BMP/PPM variants, eXIf
-orientation, and the Spark-side decode_image integration that closes the
-D2/D3 codec seam (reference preproc.py:70-173 without PIL)."""
+orientation, multi-frame TIFF/GIF, and header-only sniffing."""
 
 import numpy as np
 import pytest
@@ -175,51 +174,14 @@ def test_builtin_decode_fn_dispatch_and_unsupported():
     arr = _rgb(3, 3, seed=17)
     out, _ = codecs.builtin_decode_fn(codecs.encode_bmp(arr))
     np.testing.assert_array_equal(out, arr)
-    # webp now dispatches to the VP8L decoder (empty container → error)
-    with pytest.raises(ValueError, match="WebP"):
+    # webp sniffs but has no built-in decoder (→ error channel)
+    with pytest.raises(ValueError, match="webp has no built-in decoder"):
         codecs.builtin_decode_fn(b"RIFF\x00\x00\x00\x00WEBP")
     with pytest.raises(ValueError, match="unknown"):
         codecs.builtin_decode_fn(b"total garbage")
     # jpeg magic now dispatches to the baseline decoder (garbage → error)
     with pytest.raises(ValueError, match="JPEG"):
         codecs.builtin_decode_fn(b"\xff\xd8\xff\xe0JFIF")
-
-
-# --------------------------------------------------------------------------
-# Spark integration: decode_image without PIL (the closed D2/D3 seam)
-# --------------------------------------------------------------------------
-
-def test_decode_image_real_formats_no_pil(spark):
-    from amazon_textract_transformer_pipeline_spark.operators.multimodal import (
-        decode_image,
-        letterbox_array,
-        make_fake_blob,
-    )
-
-    png_arr = _rgb(40, 30, seed=21)
-    bmp_arr = _rgb(16, 64, seed=22)
-    rows = [
-        (0, bytearray(codecs.encode_png(png_arr, filter_type="mixed"))),
-        (1, bytearray(codecs.encode_bmp(bmp_arr))),
-        (2, bytearray(codecs.encode_png(png_arr, orientation=6))),  # rotated
-        (3, bytearray(make_fake_blob(32, 24, 0, seed=7))),  # FAKE1 passthrough
-        (4, bytearray(b"\xff\xd8\xff\xe0JFIF-no-pil")),  # jpeg → error col
-    ]
-    media = spark.createDataFrame(rows, "media_id: long, blob: binary")
-    got = {r.media_id: r for r in decode_image(media, size=(32, 32)).collect()}
-
-    assert len(got) == 5
-    ok = [r for r in got.values() if r.error is None]
-    assert {r.media_id for r in ok} == {0, 1, 2, 3}
-    # byte-exact vs the local numpy reference path
-    want_png = letterbox_array(png_arr, 32, 32, (128, 128, 128))
-    assert bytes(got[0].pixels) == want_png.astype(np.uint8).tobytes()
-    assert (got[0].width, got[0].height) == (32, 32)
-    # eXIf orientation 6 → 90° rotation applied before resize
-    assert got[2].rotation_applied != 0
-    assert bytes(got[2].pixels) != bytes(got[0].pixels)
-    # malformed blob reports, never raises (jpeg magic, truncated body)
-    assert got[4].error is not None and "JPEG" in got[4].error
 
 
 # --------------------------------------------------------------------------
@@ -275,39 +237,6 @@ def test_tiff_unsupported_variants():
         codecs.decode_tiff(bytes(blob))
     with pytest.raises(ValueError, match="bad header"):
         codecs.decode_tiff(b"II+\x00nope")
-
-
-def test_multiframe_thumbnails_spark(spark):
-    from amazon_textract_transformer_pipeline_spark.operators.multimodal import (
-        multiframe_thumbnails,
-        thumbnail_npz_bundles,
-    )
-
-    f0, f1, f2 = (_rgb(30, 40, seed=50 + i) for i in range(3))
-    rows = [
-        (0, bytearray(codecs.encode_tiff([f0, f1, f2]))),      # 3 pages
-        (1, bytearray(codecs.encode_png(_rgb(8, 8, seed=60)))),  # single
-        (2, bytearray(b"\xff\xd8\xff\xe0JFIF")),               # error row
-    ]
-    media = spark.createDataFrame(rows, "media_id: long, blob: binary")
-    thumbs = multiframe_thumbnails(media, size=(16, 16)).cache()
-    got = thumbs.collect()
-    ok = [r for r in got if r.error is None]
-    assert {(r.media_id, r.frame_ix) for r in ok} == \
-        {(0, 0), (0, 1), (0, 2), (1, 0)}
-    assert all((r.width, r.height) == (16, 16) for r in ok)
-    assert [r.media_id for r in got if r.error is not None] == [2]
-
-    # frame order survives into the npz bundle naming
-    bundles = {r.media_id: r for r in thumbnail_npz_bundles(
-        thumbs.filter("error IS NULL")).collect()}
-    import io
-
-    import numpy as np_
-
-    npz = np_.load(io.BytesIO(bytes(bundles[0].npz)))
-    assert sorted(npz.files) == ["frame_0000", "frame_0001", "frame_0002"]
-    assert npz["frame_0000"].shape == (16, 16, 3)
 
 
 # --------------------------------------------------------------------------
@@ -379,39 +308,6 @@ def test_gif_errors():
         codecs.encode_gif([arr])
 
 
-def test_synth_real_media_full_decode_path(spark):
-    """Corpus-scale integration: real-format synthetic media (all seven
-    container kinds, deterministic) → multiframe_thumbnails decodes every
-    decodable record with zero errors; tiff rows yield 2 frames each;
-    lossy-VP8 rows land in the error column (the declared codec seam),
-    never fail the stage."""
-    from amazon_textract_transformer_pipeline_spark.operators.multimodal import (
-        multiframe_thumbnails,
-        synth_real_media_df,
-    )
-
-    media = synth_real_media_df(spark, 40, seed=9).cache()
-    assert {r.kind for r in media.select("kind").distinct().collect()} == \
-        {"png", "jpeg", "bmp", "tiff", "gif", "webp", "webp-vp8"}
-    # determinism
-    a = media.selectExpr("media_id", "md5(blob) h").collect()
-    b = synth_real_media_df(spark, 40, seed=9) \
-        .selectExpr("media_id", "md5(blob) h").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-    thumbs = multiframe_thumbnails(media, size=(16, 16)).cache()
-    kinds = {r.media_id: r.kind for r in media.select("media_id",
-                                                      "kind").collect()}
-    err_ids = {r.media_id for r in
-               thumbs.filter("error IS NOT NULL").collect()}
-    assert err_ids == {m for m, k in kinds.items() if k == "webp-vp8"}
-    per = {r.media_id: r["count"] for r in
-           thumbs.filter("error IS NULL").groupBy("media_id")
-           .count().collect()}
-    for mid, nframes in per.items():
-        assert nframes == (2 if kinds[mid] == "tiff" else 1), kinds[mid]
-
-
 def test_sniff_dimensions_all_formats():
     from amazon_textract_transformer_pipeline_spark.functions import jpeg
 
@@ -430,31 +326,6 @@ def test_sniff_dimensions_all_formats():
         assert codecs.sniff_dimensions(blob) == (31, 23), fmt
     assert codecs.sniff_dimensions(b"garbage") is None
     assert codecs.sniff_dimensions(b"\x89PNG\r\n\x1a\n\x00") is None  # trunc
-
-
-def test_decode_metadata_real_formats(spark):
-    from amazon_textract_transformer_pipeline_spark.operators.multimodal import (
-        decode_metadata,
-        make_fake_blob,
-        synth_real_media_df,
-    )
-
-    media = synth_real_media_df(spark, 20, seed=4)
-    meta = {r.media_id: r for r in decode_metadata(media).collect()}
-    assert all(m.valid for m in meta.values())
-    kinds = {r.media_id: r.kind for r in media.collect()}
-    for mid, m in meta.items():
-        # both webp kinds sniff as the container format "webp"
-        assert m.format == {"webp-vp8": "webp"}.get(kinds[mid], kinds[mid])
-        assert m.width > 0 and m.height > 0
-    # FAKE1 still wins the header race; garbage still invalid
-    extra = spark.createDataFrame(
-        [(0, bytearray(make_fake_blob(50, 40, 1, 3))),
-         (1, bytearray(b"not an image"))],
-        "media_id: long, blob: binary")
-    em = {r.media_id: r for r in decode_metadata(extra).collect()}
-    assert em[0].valid and em[0].format == "jpeg" and em[0].width == 50
-    assert not em[1].valid
 
 
 # --------------------------------------------------------------------------

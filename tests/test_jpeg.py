@@ -1,7 +1,7 @@
 """Baseline JPEG codec (functions/jpeg.py): exact bit-level machinery
 (zigzag, magnitude coding, canonical Huffman, DCT orthonormality, DRI
-equivalence) + lossy roundtrip closeness at high quality + the Spark
-decode path without PIL."""
+equivalence) + lossy roundtrip closeness at high quality + dispatch
+through codecs.builtin_decode_fn."""
 
 import numpy as np
 import pytest
@@ -170,25 +170,6 @@ def test_progressive_is_sof2_and_sniffs():
     assert b"\xff\xc2" in blob and b"\xff\xc0" not in blob
     assert codecs.sniff_format(blob) == "jpeg"
     assert codecs.sniff_dimensions(blob) == (40, 24)
-    # builtin path decodes it — progressive no longer falls to the PIL seam
+    # the builtin path decodes progressive too
     arr, orient = codecs.builtin_decode_fn(blob)
     assert arr.shape == (24, 40, 3) and orient is None
-
-
-def test_codecs_dispatch_and_spark_decode(spark):
-    from amazon_textract_transformer_pipeline_spark.operators.multimodal import (
-        decode_image,
-    )
-
-    img = _rng(9).integers(0, 256, size=(24, 32, 3), dtype=np.uint8)
-    blob = jpeg.encode_jpeg(img, quality=97)
-    assert codecs.sniff_format(blob) == "jpeg"
-    out, _ = codecs.builtin_decode_fn(blob)
-    assert _mae(out, img) < 3.0
-
-    media = spark.createDataFrame(
-        [(0, bytearray(blob)), (1, bytearray(b"\xff\xd8\xff\xe0junk"))],
-        "media_id: long, blob: binary")
-    got = {r.media_id: r for r in decode_image(media, size=(16, 16)).collect()}
-    assert got[0].error is None and (got[0].width, got[0].height) == (16, 16)
-    assert got[1].error is not None and "JPEG" in got[1].error

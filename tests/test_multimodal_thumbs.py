@@ -1,26 +1,18 @@
 """D4/D5 EXIF-rotation + resize/letterbox arithmetic (reference
-``image_utils.py:59-168``) and the S8 npz bundle sink (``preproc.py:120-173``)
-over the fake codec."""
+``image_utils.py:59-168``) in functions/codecs.py."""
 
 from __future__ import annotations
-
-import io
 
 import numpy as np
 import pytest
 
-from amazon_textract_transformer_pipeline_spark.operators.multimodal import (
+from amazon_textract_transformer_pipeline_spark.functions.codecs import (
     apply_exif_rotation_array,
     exif_rotation_angle,
-    fake_decode_array,
     letterbox_array,
     letterbox_plan,
-    make_fake_blob,
     resize_plan,
     stretch_resize_array,
-    synth_media_df,
-    thumbnail_images,
-    thumbnail_npz_bundles,
 )
 
 
@@ -92,84 +84,3 @@ def test_stretch_resize_exact_content():
     up = stretch_resize_array(arr, 4, 4)
     assert up.shape == (4, 4, 3)
     assert (up[0, 0] == arr[0, 0]).all() and (up[3, 3] == arr[1, 1]).all()
-
-
-def test_blank_thumbnail_fallback(spark):
-    """I5: failed decodes get the grey 224x224 placeholder + warning,
-    mirroring the reference's blank-thumbnail substitution
-    (inference.py:424-433)."""
-    from pyspark.sql import functions as F
-
-    from amazon_textract_transformer_pipeline_spark.operators.multimodal import (
-        blank_thumbnail,
-        fill_missing_thumbnails,
-    )
-
-    media = synth_media_df(spark, 10, seed=4)
-    # corrupt half the blobs → decode errors
-    broken = media.withColumn(
-        "blob",
-        F.when(F.col("media_id") % 2 == 0, F.col("blob"))
-        .otherwise(F.lit(b"not a fake1 blob")))
-    filled = fill_missing_thumbnails(
-        thumbnail_images(broken, size=(32, 32)), size=(32, 32)).collect()
-    assert len(filled) == 10
-    grey = blank_thumbnail((32, 32))
-    for r in filled:
-        if r.media_id % 2 == 0:
-            assert r.warning is None and bytes(r.pixels) != grey
-        else:
-            assert r.warning is not None
-            assert bytes(r.pixels) == grey
-            assert (r.width, r.height) == (32, 32)
-
-
-def test_thumbnail_pipeline_and_npz_roundtrip(spark):
-    media = synth_media_df(spark, 40, seed=9)
-    thumbs = thumbnail_images(media, size=(64, 64)).cache()
-    rows = thumbs.collect()
-    assert len(rows) == 40
-    ok = [r for r in rows if r.error is None]
-    assert len(ok) == 40
-    for r in ok[:5]:
-        assert (r.width, r.height) == (64, 64)
-        px = np.frombuffer(r.pixels, dtype=np.uint8)
-        assert px.size == 64 * 64 * 3
-        # replay: decode + rotate + letterbox in-process must match exactly
-        blob = bytes(make_fake_blob(64 + r.media_id % 512,
-                                    48 + r.media_id % 384,
-                                    r.media_id % 5, 9 ^ r.media_id))
-        arr, orient = fake_decode_array(blob)
-        arr, angle = apply_exif_rotation_array(arr, orient)
-        assert angle == r.rotation_applied
-        expect = letterbox_array(arr, 64, 64, (128, 128, 128))
-        assert (px.reshape(64, 64, 3) == expect).all()
-
-    bundles = thumbnail_npz_bundles(thumbs).collect()
-    assert len(bundles) == 40
-    b0 = bundles[0]
-    with np.load(io.BytesIO(b0.npz)) as z:
-        assert len(z.files) == b0.n_frames == 1
-        assert z["frame_0000"].shape == (64, 64, 3)
-
-
-def test_npz_multi_frame_order_deterministic(spark):
-    """frame_NNNN naming must follow the explicit frame index (reference
-    preproc.py writes pages in order), not Arrow delivery order."""
-    # 3 frames for one media, each a distinct solid-ish FAKE1 blob; shuffle
-    # the input row order to make Arrow delivery order adversarial.
-    blobs = [bytes(make_fake_blob(16 + 4 * i, 8 + 2 * i, 0, seed=100 + i))
-             for i in range(3)]
-    rows = [(7, ix, blobs[ix]) for ix in (2, 0, 1)]
-    media = spark.createDataFrame(rows, ["media_id", "frame_ix", "blob"]) \
-        .repartition(3)
-    thumbs = thumbnail_images(media, size=(32, 32))
-    got = {r.frame_ix: r for r in thumbs.collect()}
-    assert set(got) == {0, 1, 2}
-    bundles = thumbnail_npz_bundles(thumbs).collect()
-    assert len(bundles) == 1 and bundles[0].n_frames == 3
-    with io.BytesIO(bundles[0].npz) as buf, np.load(buf) as z:
-        for ix in range(3):
-            expect = np.frombuffer(got[ix].pixels, dtype=np.uint8) \
-                .reshape(32, 32, 3)
-            assert (z[f"frame_{ix:04d}"] == expect).all()

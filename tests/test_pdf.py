@@ -429,18 +429,6 @@ def test_sniff_integration():
     assert pdf.render_plan(612, 792, dpi=72) == (612, 792)
 
 
-def test_decode_metadata_routes_pdf(spark):
-    from amazon_textract_transformer_pipeline_spark.operators.multimodal import (
-        decode_metadata,
-        synth_pdf_df,
-    )
-    out = decode_metadata(synth_pdf_df(spark, 12, partitions=2)) \
-        .orderBy("media_id").collect()
-    assert all(r.format == "pdf" and r.valid for r in out)
-    assert out[0].width == 300 and out[0].height == 400
-    assert out[3].width == 480
-
-
 def test_frontend_dispatch_real_geometry(spark):
     """PDFs flow through html_to_words with content-stream geometry:
     boxes are real (margin 72pt of 612pt wide page → left ≈ 0.1176)."""

@@ -213,6 +213,37 @@ def test_lineage_results_match_pipeline(spark, pages_df, tmp_path):
         assert g.bucket == w.bucket, url
 
 
+def test_null_url_row_is_dropped_not_fatal(spark, pages_df, tmp_path):
+    """A page with a NULL url has no identity to key its outputs by: the
+    kernel drops it instead of failing the job, and every other url's
+    text and doc confidence equal a run without it."""
+    mixed = pages_df.unionByName(
+        pages_df.limit(1).withColumn("url", F.lit(None).cast("string")))
+
+    want = {}
+    for mode in ("sql-stub", "window-stub"):
+        got = {}
+        for name, pages in (("base", pages_df), ("mixed", mixed)):
+            res = extract_pipeline(pages, model=mode)
+            try:
+                got[name] = {r.url: (r.extracted_text, r.Confidence)
+                             for r in res.documents.select(
+                                 "url", "extracted_text", "Confidence")
+                             .collect()}
+            finally:
+                res.unpersist()
+        assert len(got["base"]) == 300, mode
+        assert got["mixed"] == got["base"], mode
+        want[mode] = got["base"]
+
+    store = LineageStore(str(tmp_path / "nulls"), n_buckets=8)
+    store.run(spark, mixed, extraction_stage_for_lineage())
+    assert sum(store.recorded_counts().values()) == 300
+    got = {r.url: (r.extracted_text, r.doc_confidence) for r in
+           spark.read.parquet(str(tmp_path / "nulls" / "results")).collect()}
+    assert got == want["sql-stub"]
+
+
 def test_lineage_validate_demotes_only_damaged_bucket(spark, pages_df,
                                                       tmp_path):
     """A truncated part file makes its own bucket unreadable: validate

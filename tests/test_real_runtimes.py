@@ -1,19 +1,17 @@
 """Auto-activating integration tests for the real-runtime seams.
 
-Every test here is gated on ``pytest.importorskip``: in this sandbox (no
-transformers / PIL / pypdfium2) they skip cleanly; on a cluster image
-that ships the real runtimes they run automatically and assert that the
-mock-tested seam contracts (tests/test_hf_adapter.py,
-tests/test_multimodal_thumbs.py, tests/test_pdf.py) hold against the
-real implementations — the activation hook the round-3 verdict asked
-for."""
+Every test here is gated on ``pytest.importorskip``: without
+transformers / PIL they skip cleanly; on a cluster image that ships the
+real runtimes they run automatically and assert that the mock-tested
+contracts (tests/test_hf_adapter.py, tests/test_codecs.py,
+tests/test_jpeg.py) hold against the real implementations."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from amazon_textract_transformer_pipeline_spark.functions import codecs, jpeg, pdf
+from amazon_textract_transformer_pipeline_spark.functions import codecs, jpeg
 
 
 # --------------------------------------------------------------------------
@@ -125,67 +123,10 @@ def test_our_decoder_reads_pil_progressive_jpeg():
     assert np.abs(via_pil.astype(int) - ours.astype(int)).mean() < 2.0
 
 
-def test_pil_decode_fn_seam_contract():
-    pytest.importorskip("PIL.Image")
-    from amazon_textract_transformer_pipeline_spark.operators.multimodal import (
-        pil_decode_fn,
-    )
-
-    arr = np.zeros((6, 9, 3), np.uint8)
-    out, orientation = pil_decode_fn(codecs.encode_png(arr))
-    assert out.shape == (6, 9, 3) and orientation in (None, 1)
-
-
-# --------------------------------------------------------------------------
-# PDF rasterizer seam
-# --------------------------------------------------------------------------
-
-def test_pdf_rasterize_seam_matches_render_plan():
-    try:
-        import pypdfium2  # noqa: F401
-    except ImportError:
-        pytest.importorskip("pdf2image")
-    from amazon_textract_transformer_pipeline_spark.operators.multimodal import (
-        pdf_rasterize_fn,
-    )
-
-    blob = pdf.write_pdf([{"width": 144, "height": 216,
-                           "lines": ["seam check"]}])
-    arr, orientation = pdf_rasterize_fn(blob, page=0, dpi=300)
-    want_w, want_h = pdf.render_plan(144, 216, dpi=300)
-    assert arr.shape == (want_h, want_w, 3)
-    assert orientation is None
-
-
-def test_pil_cross_validates_vp8l():
-    """Both directions: PIL/libwebp decodes our VP8L byte-exactly, and a
-    PIL-encoded lossless WebP decodes byte-exactly in our decoder
-    (real-world streams use transform combinations our fixture writer
-    never emits at once)."""
-    PIL_Image = pytest.importorskip("PIL.Image")
-    import io
-
-    from amazon_textract_transformer_pipeline_spark.functions import webp
-
-    rng = np.random.Generator(np.random.PCG64(21))
-    img = rng.integers(0, 256, (24, 31, 3), dtype=np.uint8)
-    ours = webp.encode_webp_lossless(img, subtract_green=True,
-                                     predictor_mode=11)
-    via_pil = np.asarray(PIL_Image.open(io.BytesIO(ours)).convert("RGB"))
-    assert np.array_equal(via_pil, img)
-
-    buf = io.BytesIO()
-    PIL_Image.fromarray(img).save(buf, format="WEBP", lossless=True,
-                                  quality=100)
-    theirs = buf.getvalue()
-    out, orient = webp.decode_webp(theirs)
-    assert np.array_equal(out, img) and orient is None
-
-
 def test_real_lossy_vp8_metadata_never_errors():
     """A REAL lossy-WebP file (PIL/libwebp-encoded VP8) must sniff its
     true dims through the uncompressed key-frame header — the lossy-WebP
-    metadata path is native even though pixel decode is seamed."""
+    metadata path is native even though there is no pixel decoder."""
     PIL_Image = pytest.importorskip("PIL.Image")
     import io
 

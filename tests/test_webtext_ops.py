@@ -1,4 +1,4 @@
-"""Dedup family, similarity search, text stats, multimodal plumbing."""
+"""Dedup family, similarity search, text stats."""
 
 from __future__ import annotations
 
@@ -6,14 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from amazon_textract_transformer_pipeline_spark.operators import dedup, similarity
-from amazon_textract_transformer_pipeline_spark.operators.multimodal import (
-    decode_image,
-    decode_metadata,
-    explode_frames,
-    extract_features,
-    frame_sample,
-    synth_media_df,
-)
 from amazon_textract_transformer_pipeline_spark.operators.textstats import (
     with_text_stats,
 )
@@ -206,40 +198,6 @@ def test_text_stats(spark, docs):
     assert 0.0 <= row.stopword_ratio <= 1.0
     assert st.filter("lang_guess NOT IN ('en','de','fr','es','und')").count() == 0
     assert st.select("fingerprint").distinct().count() > 400  # mostly unique
-
-
-def test_multimodal_plumbing(spark):
-    media = synth_media_df(spark, 50).cache()
-    meta = decode_metadata(media)
-    assert meta.filter("valid").count() == 50
-    m = meta.limit(1).collect()[0]
-    assert m.width >= 64 and m.format in ("png", "jpeg", "tiff", "wav", "mp4")
-
-    # corrupt blob → valid=false row, not an exception
-    bad = media.limit(1).select("media_id", F.expr("cast('junk' as binary)").alias("blob"))
-    assert decode_metadata(bad).filter("NOT valid").count() == 1
-
-    feats = extract_features(media).limit(1).collect()[0]
-    assert len(feats.byte_histogram) == 16
-    assert abs(sum(feats.byte_histogram) - 1.0) < 1e-9
-    assert 0 <= feats.entropy <= 4.0 + 1e-9
-
-    fr = frame_sample(media, n_frames=4)
-    ex = explode_frames(fr)
-    assert ex.count() == 200
-    assert ex.groupBy("media_id").count().filter("count <> 4").count() == 0
-
-    # round 3: decode_image no longer needs PIL — auto_decode_fn routes
-    # FAKE1 fixtures to the fake codec and png/bmp/ppm to functions/codecs
-    thumbs = decode_image(media.limit(5), size=(16, 16)).collect()
-    assert len(thumbs) == 5 and all(t.error is None for t in thumbs)
-    assert all((t.width, t.height) == (16, 16) for t in thumbs)
-
-
-def test_multimodal_determinism(spark):
-    a = synth_media_df(spark, 20).select("media_id", F.md5(F.col("blob")).alias("h"))
-    b = synth_media_df(spark, 20).select("media_id", F.md5(F.col("blob")).alias("h"))
-    assert a.exceptAll(b).count() == 0
 
 
 def test_kmeans_centroids_lift_ivf_recall(spark):
