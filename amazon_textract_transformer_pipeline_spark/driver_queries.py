@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from .config import DEMO_CONFIG
 from .functions import textsql as X
-from .operators import dedup, similarity
+from .operators import dedup
 from .operators.assembly import assemble_text, pages_view, words_view
 from .operators.consolidate import value_consolidation
 from .operators.enrich import stub_predictions
@@ -34,10 +34,6 @@ from .sources.synthetic import synth_pdf_df
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _doc_words(spark, sf_dir) -> DataFrame:
@@ -187,65 +183,8 @@ def q_doc_confidence(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Dedup / sketch family (documents)
+# Decontamination / PII / n-gram overlap (documents)
 # ---------------------------------------------------------------------------
-def q_fingerprint(spark, sf_dir) -> DataFrame:
-    return dedup.with_fingerprint(_docs(spark, sf_dir)).select(
-        "doc_id", "fingerprint")
-
-
-def q_minhash_signature(spark, sf_dir) -> DataFrame:
-    sig = dedup.minhash_signatures(_docs(spark, sf_dir).select("doc_id", "text"))
-    return sig.select(
-        "doc_id",
-        F.expr("concat_ws(',', transform(minhash, x -> cast(x as string)))")
-        .alias("minhash_csv"))
-
-
-def q_lsh_buckets(spark, sf_dir) -> DataFrame:
-    return dedup.lsh_band_buckets(
-        _docs(spark, sf_dir).select("doc_id", "text"), k=16, n_bands=8)
-
-
-def q_lsh_candidates(spark, sf_dir) -> DataFrame:
-    return dedup.lsh_candidate_pairs(
-        _docs(spark, sf_dir).select("doc_id", "text"), k=16, n_bands=8)
-
-
-def q_near_duplicates(spark, sf_dir) -> DataFrame:
-    """LSH candidates verified by exact n-gram Jaccard; threshold 0 keeps
-    every candidate pair so the gate hash-checks all Jaccard values."""
-    nd = dedup.near_duplicates(
-        _docs(spark, sf_dir).select("doc_id", "text"),
-        threshold=0.0, k=16, n_bands=8)
-    return nd.select("a", "b", F.round("jaccard", 6).alias("jaccard"))
-
-
-def _cluster_corpus(spark, sf_dir) -> DataFrame:
-    """Documents + planted near-identical variants (doc_id + 100000, same
-    text plus a 3-word tail) — guarantees the LSH pair graph has real
-    multi-member components whatever the base corpus looks like. The
-    construction is plain SQL replayed verbatim by the DuckDB oracle."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    variants = docs.filter("doc_id % 5 < 3").select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.expr("text || ' zq variant tail'").alias("text"))
-    return docs.union(variants)
-
-
-def q_dedup_clusters(spark, sf_dir) -> DataFrame:
-    """Near-dup cluster resolution end-to-end: LSH candidate pairs →
-    distributed connected components (alternating large-star/small-star)
-    → per-cluster canonical keeper (best quality = text length, ties to
-    min id). Exact against a DuckDB recursive-CTE transitive closure —
-    the corpus-scale twin of the G4 box-merge semantics."""
-    corpus = _cluster_corpus(spark, sf_dir) \
-        .withColumn("_q", F.length("text").cast("double"))
-    pairs = dedup.lsh_candidate_pairs(corpus, k=16, n_bands=8)
-    return dedup.resolve_near_dup_clusters(corpus, pairs,
-                                           quality_col="_q")
-
-
 def q_decontaminate(spark, sf_dir) -> DataFrame:
     """Benchmark decontamination over a planted eval set: blocklist =
     every 17th doc's words 6-26 (contiguous → its 13-grams all appear in
@@ -302,97 +241,6 @@ def q_ngram_jaccard_consecutive(spark, sf_dir) -> DataFrame:
         .withColumn("jaccard", F.round(F.expr(X.jaccard(wa, wb, 3, "spark")), 6))
         .select("a", "b", "jaccard")
     )
-
-
-def q_simhash(spark, sf_dir) -> DataFrame:
-    return dedup.simhash_sketch(_docs(spark, sf_dir).select("doc_id", "text")) \
-        .select("doc_id", "simhash")
-
-
-def q_simhash_hamming_consecutive(spark, sf_dir) -> DataFrame:
-    s = dedup.simhash_sketch(_docs(spark, sf_dir).select("doc_id", "text"))
-    a = s.select(F.col("doc_id").alias("a"), F.col("simhash").alias("sa"))
-    b = s.select((F.col("doc_id") - 1).alias("a"),
-                 F.col("doc_id").alias("b"), F.col("simhash").alias("sb"))
-    return (
-        a.join(b, "a")
-        .withColumn("hamming",
-                    F.expr(X.hamming("sa", "sb", "spark", 64)).cast("bigint"))
-        .select("a", "b", "hamming")
-    )
-
-
-def q_embedding_cosine_consecutive(spark, sf_dir) -> DataFrame:
-    # threshold=None: a NULL cosine (zero-norm vector) must survive to match
-    # the filterless oracle; any `cos >= t` predicate would drop it.
-    return dedup.embedding_near_duplicates(
-        _embs(spark, sf_dir), threshold=None).select(
-        "a", "b", F.round("cos", 6).alias("cos"))
-
-
-def semantic_corpus(embs: DataFrame) -> DataFrame:
-    """Gate corpus for SemDedup: the natural embeddings are near-random
-    (max pairwise cosine ~0.51 at sf0.01), so duplicate structure is
-    planted deterministically — exact copies at +10000 for vec_id%25==1
-    (20 pairs) and a second copy at +20000 for vec_id%50==1 (10 triples,
-    exercising earliest-witness selection), plus one zero-norm vector at
-    id 30000 (NULL-cosine paths; 30000%25==0 also makes it a centroid,
-    exercising the unscorable-centroid branch)."""
-    base = embs.select("vec_id", "embedding")
-    c1 = base.filter("vec_id % 25 = 1").select(
-        (F.col("vec_id") + 10000).alias("vec_id"), "embedding")
-    c2 = base.filter("vec_id % 50 = 1").select(
-        (F.col("vec_id") + 20000).alias("vec_id"), "embedding")
-    z = base.filter("vec_id = 0").select(
-        F.lit(30000).cast("long").alias("vec_id"),
-        F.expr("transform(embedding, v -> cast(0.0 as float))")
-        .alias("embedding"))
-    return base.unionByName(c1).unionByName(c2).unionByName(z)
-
-
-def q_semantic_dedup(spark, sf_dir) -> DataFrame:
-    """SemDedup over the planted corpus: every +10000/+20000 copy must be
-    flagged with its source as the witness (identical vectors share the
-    cluster and the source out-ranks them by vec_id tie-break); natural
-    vectors all survive at 0.95 (max natural cosine ~0.51); the zero-norm
-    vector neither flags nor is flagged. Exact against the identical
-    centroid-assignment + rank + witness construction in DuckDB."""
-    out = dedup.semantic_dedup(
-        semantic_corpus(_embs(spark, sf_dir)),
-        threshold=0.95, centroid_every=25)
-    return out.select(
-        "vec_id", "cluster_id", F.round("cent_cos", 6).alias("cent_cos"),
-        F.col("cluster_rank").cast("int").alias("cluster_rank"),
-        "is_dup", "dup_of", "kept")
-
-
-# ---------------------------------------------------------------------------
-# Similarity search (embeddings)
-# ---------------------------------------------------------------------------
-def q_ann_bruteforce_topk(spark, sf_dir) -> DataFrame:
-    embs = _embs(spark, sf_dir)
-    res = similarity.brute_force_topk(
-        embs, embs.filter("vec_id % 100 = 0"), topk=5)
-    return res.select("query_id", "rank", "cand_id",
-                      F.round("cos", 6).alias("cos"))
-
-
-def q_ann_lsh_topk(spark, sf_dir) -> DataFrame:
-    embs = _embs(spark, sf_dir)
-    res = similarity.lsh_topk(
-        embs, embs.filter("vec_id % 100 = 0"), topk=5,
-        n_planes=6, n_tables=2)
-    return res.select("query_id", "rank", "cand_id",
-                      F.round("cos", 6).alias("cos"))
-
-
-def q_ann_ivf_topk(spark, sf_dir) -> DataFrame:
-    embs = _embs(spark, sf_dir)
-    res = similarity.ivf_topk(
-        embs, embs.filter("vec_id % 100 = 0"), topk=5,
-        n_centroids=64, nprobe=2)
-    return res.select("query_id", "rank", "cand_id",
-                      F.round("cos", 6).alias("cos"))
 
 
 # ---------------------------------------------------------------------------

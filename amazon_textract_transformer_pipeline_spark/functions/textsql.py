@@ -130,9 +130,7 @@ def simhash(ws_expr: str, engine: str, bits: int = 64) -> str:
     digest; the packed sketch is a signed BIGINT (bit 63 = sign bit). Wider
     sketches are the N²/B lever of the near-dup join: the block-join bucket
     space must grow with the corpus, and a 32-bit sketch caps it (VERDICT
-    r2 #4). Inline single-expression form for oracles/parity tests; the
-    engine path is operators/dedup.py::simhash_sketch (explode + one hash
-    aggregate — same values).
+    r2 #4). Inline single-expression form for the parity tests.
     """
     assert 1 <= bits <= 64
     if engine == "spark":

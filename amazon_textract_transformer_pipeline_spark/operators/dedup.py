@@ -1,21 +1,18 @@
-"""Training-data deduplication operators over a documents corpus.
+"""Per-corpus n-gram operators over a documents table.
 
-The operations a 100 TB web-text pipeline needs in front of model training:
-exact dedup, MinHash+LSH near-dup, SimHash, n-gram Jaccard verification, and
-embedding-cosine near-dup. All sketching is pure Spark SQL expressions
-(functions/textsql.py) — JVM-side, codegen'd, and bit-identical to the
-DuckDB oracles the driver runs.
+What is here: word-shingle rows (:func:`shingle_rows`), benchmark
+decontamination by shared 13-grams (:func:`decontamination_flags`,
+:func:`decontaminate`, and the word-exact :func:`decontaminate_mask`),
+ExactSubstr span dedup (:func:`exact_substring_dedup`) and winnowing
+fingerprints (:func:`winnow_fingerprints`, its relational twin
+:func:`winnow_fingerprints_sql` and the DuckDB replay
+:func:`winnow_oracle_sql`). Gram hashes are the portable md5-prefix
+64-bit hash (functions/textsql.py), integer-exact, so every output is
+bit-identical to the DuckDB oracles the driver runs.
 
-Scale notes (the part that matters at 10^12 docs):
-* exact dedup: one shuffle on a 64-bit fingerprint — the canonical
-  hash-groupBy; combiner-side partial aggregation keeps it cheap.
-* MinHash LSH: cost is (k·shingles) hashes map-side, then a shuffle keyed by
-  (band, band_hash). Bucket sizes are the skew risk (boilerplate-heavy
-  buckets); candidate pair generation is a *within-bucket* self-join, never
-  a global one, and `max_bucket` caps pathological buckets (drop + count as
-  metric rather than explode — the classic spam-cluster guard).
-* verification joins fetch shingle arrays by doc_id — broadcast when the
-  candidate side is small, shuffle-hash otherwise (AQE decides).
+None of these is on the extraction path: the pipeline, the lineage job
+and the stream never import this module. The driver queries and their
+tests are its only callers.
 """
 
 from __future__ import annotations
@@ -23,33 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import portable
 from ..functions import textsql as X
-
-SIMHASH_BITS = 64  # sketch width; bucket space of the near-dup block join
-
-DEFAULT_K = 16
-DEFAULT_BANDS = 4  # 4 bands × 4 rows: s-curve threshold ≈ (1/4)^(1/4) ≈ 0.71
-
-
-def with_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact-dup / document fingerprint: hash64 of whitespace-collapsed
-    lowercase text."""
-    return docs.withColumn(
-        "fingerprint", F.expr(X.h64(X.norm_text(text_col, "spark"), "spark"))
-    )
-
-
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    """Groups of byte-equal (normalized) documents: one row per duplicated
-    fingerprint with group size and the keeper (min id)."""
-    return (
-        with_fingerprint(docs, text_col)
-        .groupBy("fingerprint")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keeper_id"))
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def shingle_rows(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
@@ -78,355 +49,6 @@ def shingle_rows(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
         .alias("shingle"))
 
 
-
-def _distinct_shingle_rows(docs: DataFrame, n: int, id_col: str,
-                           text_col: str) -> DataFrame:
-    """Per-doc-distinct (id, shingle) rows — value-identical to
-    ``shingle_rows(...).distinct()`` because the key includes the doc id,
-    so global distinctness IS per-doc distinctness. Zero-shuffle Arrow
-    kernel (round 7): the explode + distinct exchange of the relational
-    form disappear; shingle strings are the identical slice+join
-    construction (textsql.shingles semantics incl. the <n-words
-    fallback)."""
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    id_type = docs.schema[id_col].dataType
-    schema = T.StructType([
-        T.StructField(id_col, id_type, True),
-        T.StructField("shingle", T.StringType(), False),
-    ])
-
-    def run(batches):
-        for b in batches:
-            ids: list = []
-            shs: list = []
-            for did, ws in zip(b[id_col], b["ws"]):
-                ws = [] if ws is None else list(ws)
-                m = len(ws) - n + 1
-                if m <= 0:
-                    grams = {" ".join(ws)}
-                else:
-                    grams = {" ".join(ws[i:i + n]) for i in range(m)}
-                ids.extend([did] * len(grams))
-                shs.extend(grams)
-            yield pd.DataFrame({id_col: ids, "shingle": shs})
-
-    base = _spread(docs.select(
-        id_col, F.expr(X.words(text_col, "spark")).alias("ws")), id_col)
-    return base.mapInPandas(run, schema=schema)
-
-
-def _shingle_hashes_py(ws, n: int, md5) -> "list[int]":
-    """Python twin of h64(shingles(ws, n)) — the md5-prefix hash of each
-    word n-gram, whole-text fallback below n words (textsql.shingles
-    semantics, integer-exact)."""
-    m = len(ws) - n + 1
-    if m <= 0:
-        grams = [" ".join(ws)]
-    else:
-        grams = [" ".join(ws[i:i + n]) for i in range(m)]
-    return [int(md5(g.encode("utf-8")).hexdigest()[:15], 16) for g in grams]
-
-
-def minhash_signatures(docs: DataFrame, k: int = DEFAULT_K, n: int = 3,
-                       id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """MinHash signatures — k permuted mins over shingle hashes.
-
-    Round-7 shape (guide §4.2): ONE zero-shuffle Arrow kernel per doc
-    (words arrive pre-split from the JVM; md5 + the affine permutations
-    are exact BIGINT math, bit-identical to textsql.minhash_signature /
-    the DuckDB oracle). The round-6 relational form exploded shingle
-    rows through a repartition barrier and a 16-column hash aggregate —
-    one exchange plus a multi-KB codegen unit per invocation; kept as
-    the shingle_rows-based verification path's machinery only. Returns
-    (id_col, minhash ARRAY<BIGINT>)."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    P = X.MINHASH_PRIME
-    id_type = docs.schema[id_col].dataType
-    schema = T.StructType([
-        T.StructField(id_col, id_type, True),
-        T.StructField("minhash", T.ArrayType(T.LongType()), False),
-    ])
-    md5 = hashlib.md5
-    js = np.arange(k, dtype=np.int64)
-    mul = 2 * js + 1
-    add = 7 + 3 * js
-
-    def run(batches):
-        for b in batches:
-            ids: list = []
-            sigs: list = []
-            for did, ws in zip(b[id_col], b["ws"]):
-                ws = [] if ws is None else list(ws)
-                hs = np.array(_shingle_hashes_py(ws, n, md5),
-                              dtype=np.int64) % P
-                # perm_j(h) = ((2j+1)·h + 7+3j) mod P; products < 2^62
-                sig = (mul[:, None] * hs[None, :] + add[:, None]) % P
-                ids.append(did)
-                sigs.append(sig.min(axis=1).tolist())
-            yield pd.DataFrame({id_col: ids, "minhash": sigs})
-
-    base = _spread(docs.select(
-        id_col, F.expr(X.words(text_col, "spark")).alias("ws")), id_col)
-    return base.mapInPandas(run, schema=schema)
-
-
-def _bands_from_wide_sig(sig: DataFrame, k: int,
-                         n_bands: int) -> DataFrame:
-    """(doc_id, _s0.._s{k-1}) → (doc_id, band_ix, band_hash) rows; each
-    band hash is a plain md5 over the band's signature values; ``stack``
-    unpivots to rows. No lambdas anywhere (see shingle_rows notes)."""
-    rows = k // n_bands
-    band_cols = []
-    for b in range(n_bands):
-        parts = ", ".join(
-            f"cast(_s{b * rows + r} as string)" for r in range(rows))
-        band_str = f"concat('{b}', ':', concat_ws(',', {parts}))"
-        band_cols.append(f"{b}, {X.h64(band_str, 'spark')}")
-    stack = (f"stack({n_bands}, "
-             + ", ".join(band_cols)
-             + ") as (band_ix, band_hash)")
-    return sig.select("doc_id", F.expr(stack)).select(
-        "doc_id", F.col("band_ix").cast("int").alias("band_ix"), "band_hash")
-
-
-def lsh_band_buckets(docs: DataFrame, k: int = DEFAULT_K,
-                     n_bands: int = DEFAULT_BANDS, n: int = 3,
-                     id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """doc → (band_ix, band_hash) rows; bucket key is the LSH join key.
-    Signatures come from the Arrow kernel (round 7); band hashing stays a
-    flat codegen projection."""
-    sig = minhash_signatures(docs, k, n, id_col, text_col).select(
-        F.col(id_col).alias("doc_id"),
-        *[F.col("minhash")[i].alias(f"_s{i}") for i in range(k)],
-    )
-    return _bands_from_wide_sig(sig, k, n_bands)
-
-
-def lsh_bucket_stats(docs: DataFrame, k: int = DEFAULT_K,
-                     n_bands: int = DEFAULT_BANDS, n: int = 3,
-                     max_bucket: int = 1000) -> DataFrame:
-    """Monitoring relation for the boilerplate guard: one row per band
-    bucket with its size and whether the candidate join will drop it.
-    At 100 TB this is the metric table an operator watches — dropped-bucket
-    doc counts quantify what the `max_bucket` cap excluded."""
-    return (
-        lsh_band_buckets(docs, k, n_bands, n)
-        .groupBy("band_ix", "band_hash")
-        .agg(F.count("*").alias("sz"))
-        .withColumn("dropped", F.col("sz") > max_bucket)
-    )
-
-
-def lsh_candidate_pairs(docs: DataFrame, k: int = DEFAULT_K,
-                        n_bands: int = DEFAULT_BANDS, n: int = 3,
-                        max_bucket: int = 1000) -> DataFrame:
-    """Distinct candidate pairs (a < b) sharing ≥1 band bucket. Buckets over
-    ``max_bucket`` docs are dropped (boilerplate guard) — count them via
-    :func:`lsh_bucket_stats` instead of letting one bucket go quadratic."""
-    return _candidates_from_bands(lsh_band_buckets(docs, k, n_bands, n),
-                                  max_bucket)
-
-
-def _candidates_from_bands(bands: DataFrame, max_bucket: int) -> DataFrame:
-    """Band rows → distinct candidate pairs (a < b) sharing ≥1 bucket.
-
-    Materialize band rows through ONE bucket-keyed exchange and truncate
-    lineage there (localCheckpoint, round 7): the three consumers (size
-    filter + both self-join sides) then scan one materialized relation
-    already partitioned on the join key instead of each replaying the
-    signature aggregate + stack subtree — the exchange was materializing
-    these rows anyway, so no new data-volume class. (Columnar cache of
-    array columns and HOF re-inlining are both pathological here — see
-    shingle_rows plan notes.)"""
-    b = bands.repartition("band_ix", "band_hash").localCheckpoint(eager=False)
-    sizes = b.groupBy("band_ix", "band_hash").agg(F.count("*").alias("sz"))
-    small = b.join(
-        sizes.filter(F.col("sz") <= max_bucket), ["band_ix", "band_hash"]
-    )
-    left = small.select("band_ix", "band_hash", F.col("doc_id").alias("a"))
-    right = small.select("band_ix", "band_hash", F.col("doc_id").alias("b"))
-    return (
-        left.join(right, ["band_ix", "band_hash"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-
-
-def near_duplicates(docs: DataFrame, threshold: float = 0.7,
-                    k: int = DEFAULT_K, n_bands: int = DEFAULT_BANDS,
-                    n: int = 3, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """MinHash-LSH candidates verified by exact n-gram Jaccard ≥ threshold.
-
-    Set semantics, fully relational: |A∩B| via a shingle-equality join over
-    the candidate pairs, |A∪B| = |A|+|B|−|A∩B|. No array lambdas in the hot
-    path; the shingle join is keyed (doc, shingle) so only candidate pairs'
-    shingles move.
-    """
-    # ONE distinct shingle relation feeds signatures, counts, and both
-    # verification sides (round 7): MinHash mins over a multiset equal
-    # the mins over its set, so deriving the signature from the DISTINCT
-    # shingles is value-identical to minhash_signatures while sharing the
-    # shingle construction with verification. Distinctness of
-    # (id, shingle) is PER-DOC by construction, so a zero-shuffle Arrow
-    # kernel emits each doc's shingle set directly — no explode, no
-    # global distinct exchange. localCheckpoint truncates the four
-    # consumers' lineage onto one materialization — without it the
-    # optimizer replays the construction per consumer (~10 copies in the
-    # round-6 physical plan, most of that query's planning + codegen
-    # wall). The relation was crossing two verification-join exchanges
-    # anyway, so the materialization adds no new data volume class at
-    # corpus scale (the semantic_dedup members precedent).
-    sr = _distinct_shingle_rows(docs, n, id_col, text_col) \
-        .localCheckpoint(eager=False)
-    P = X.MINHASH_PRIME
-    hs = sr.select(id_col,
-                   F.expr(f"{X.h64('shingle', 'spark')} % {P}").alias("h"))
-    mins = [
-        F.min(F.expr(f"((2*{j} + 1) * h + 7 + 3*{j}) % {P}")).alias(f"_s{j}")
-        for j in range(k)
-    ]
-    sig = hs.groupBy(id_col).agg(*mins).withColumnRenamed(id_col, "doc_id")
-    cands = _candidates_from_bands(
-        _bands_from_wide_sig(sig, k, n_bands), max_bucket=1000)
-    counts = sr.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-
-    sa = sr.select(F.col(id_col).alias("a"), "shingle")
-    sb = sr.select(F.col(id_col).alias("b"), "shingle")
-    isect = (
-        cands.join(sa, "a").join(sb, ["b", "shingle"])
-        .groupBy("a", "b").agg(F.count("*").alias("n_isect"))
-    )
-    ja = (
-        cands.join(isect, ["a", "b"], "left")
-        .join(counts.select(F.col(id_col).alias("a"), F.col("n_sh").alias("na")), "a")
-        .join(counts.select(F.col(id_col).alias("b"), F.col("n_sh").alias("nb")), "b")
-        .withColumn("jaccard",
-                    F.coalesce("n_isect", F.lit(0)).cast("double")
-                    / (F.col("na") + F.col("nb") - F.coalesce("n_isect", F.lit(0))))
-    )
-    return ja.filter(F.col("jaccard") >= threshold).select("a", "b", "jaccard")
-
-
-def simhash_sketch(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text",
-                   bits: int = SIMHASH_BITS) -> DataFrame:
-    """Relational SimHash: word rows → ONE codegen'd md5 per word (two
-    32-bit halves sliced from the same digest) → ``bits`` bit-sums in one
-    hash aggregate → bits recombined by plain arithmetic. Identical values
-    to textsql.simhash (the oracle form). Returns docs plus ``simhash``.
-
-    Default 64-bit: the sketch width bounds the near-dup block-join bucket
-    space (N²/B), so 32 bits caps the corpus size this engine claims —
-    64-bit buckets keep growing to 10^12 docs (VERDICT r2 #4). Bit 63 packs
-    as the BIGINT sign bit (weight Long.MIN)."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    id_type = docs.schema[id_col].dataType
-    schema = T.StructType([
-        T.StructField(id_col, id_type, True),
-        T.StructField("simhash", T.LongType(), False),
-    ])
-    md5 = hashlib.md5
-    shifts = np.arange(32, dtype=np.int64)
-
-    # round-7 shape (guide §4.2): the word explode + two codegen'd
-    # 32-bit md5 slices + a 64-column bit-sum aggregate (one exchange,
-    # a multi-KB codegen unit) collapse into one zero-shuffle Arrow
-    # kernel — md5 hex-slice ints and ±1 bit sums are exact integers,
-    # bit-identical to textsql.simhash / the DuckDB oracle.
-    def run(batches):
-        for b in batches:
-            ids: list = []
-            sks: list = []
-            for did, ws in zip(b[id_col], b["ws"]):
-                ids.append(did)
-                if ws is None or not len(ws):
-                    sks.append(0)  # the left-join coalesce(0) contract
-                    continue
-                digs = [md5(w.encode("utf-8")).hexdigest() for w in ws]
-                lo = np.array([int(d[:8], 16) for d in digs], dtype=np.int64)
-                hi = np.array([int(d[8:16], 16) for d in digs],
-                              dtype=np.int64)
-                sums = np.concatenate([
-                    (((lo[:, None] >> shifts[None, :]) & 1) * 2 - 1)
-                    .sum(axis=0),
-                    (((hi[:, None] >> shifts[None, :]) & 1) * 2 - 1)
-                    .sum(axis=0),
-                ])[:bits]
-                sk = 0
-                for bb in np.nonzero(sums > 0)[0]:
-                    sk |= 1 << int(bb)
-                if sk >= 1 << 63:  # bit 63 = the BIGINT sign bit
-                    sk -= 1 << 64
-                sks.append(sk)
-            yield pd.DataFrame({id_col: ids, "simhash": sks})
-
-    base = _spread(docs.select(
-        id_col, F.expr(X.words(text_col, "spark")).alias("ws")), id_col)
-    agg = base.mapInPandas(run, schema=schema)
-    return docs.join(agg, id_col, "left").withColumn(
-        "simhash", F.coalesce("simhash", F.lit(0).cast("bigint")))
-
-
-def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 3,
-                            id_col: str = "doc_id",
-                            bits: int = SIMHASH_BITS) -> DataFrame:
-    """SimHash near-dups via the block-permutation trick: split the
-    ``bits``-wide sketch into ``max_hamming + 1`` blocks — by pigeonhole,
-    any pair within the Hamming budget shares at least one exact block —
-    join on (block_ix, block_value), then verify Hamming. Linear +
-    bucketed, never all-pairs.
-
-    Block count tracks the budget so the bucket space is as large as the
-    guarantee allows: over 64 bits, ≤3 → 4×16-bit blocks (2^16 values
-    each), ≤2 → 3×22-bit (4.2M), ≤1 → 2×32-bit (4.3B). The bucket space is
-    the N²/B lever of this join — the 64-bit default keeps B growing to
-    10^12-doc corpora where the old 32-bit sketch capped it (≤2 gave only
-    2^11 buckets). Negative (bit-63-set) sketches block-extract correctly:
-    arithmetic ``>>`` sign-extends above bit 63 but ``& mask`` keeps only
-    in-range bits plus sign copies — a deterministic function of the same
-    sketch bits on both join sides.
-    """
-    n_blocks = max_hamming + 1
-    bsize = -(-bits // n_blocks)
-    # full-width block (max_hamming=0): (1<<64)-1 overflows BIGINT literals;
-    # -1 is the same all-ones bit pattern in two's complement
-    mask = (1 << bsize) - 1 if bsize < 64 else -1
-    sk = simhash_sketch(docs, bits=bits).select(
-        F.col(id_col).alias("doc_id"), "simhash")
-    blocks = sk.select(
-        "doc_id", "simhash",
-        F.posexplode(
-            F.expr(f"transform(sequence(0, {n_blocks - 1}), "
-                   f"b -> (simhash >> (b * {bsize})) & {mask})")
-        ).alias("block_ix", "block_val"),
-    )
-    left = blocks.select("block_ix", "block_val",
-                         F.col("doc_id").alias("a"), F.col("simhash").alias("sh_a"))
-    right = blocks.select("block_ix", "block_val",
-                          F.col("doc_id").alias("b"), F.col("simhash").alias("sh_b"))
-    pairs = (
-        left.join(right, ["block_ix", "block_val"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "sh_a", "sh_b").distinct()
-        .withColumn("hamming", F.expr(X.hamming("sh_a", "sh_b", "spark", bits)))
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming).select("a", "b", "hamming")
-
-
 #: benchmark-decontamination n-gram width (the 13-gram standard used by
 #: GPT-3 appendix C / Gopher §A.3-style eval-overlap filtering)
 DECONTAM_NGRAM = 13
@@ -452,8 +74,7 @@ def decontamination_flags(docs: DataFrame, blocklist: DataFrame,
     broadcasts the blocklist side when it measures small (typical: eval
     sets are thousands of docs vs a 10^12-doc corpus — never force the
     broadcast, a full eval *suite* can be millions of grams). No
-    all-pairs anything; same machinery as MinHash (:func:`shingle_rows`
-    + the portable hash)."""
+    all-pairs anything; :func:`shingle_rows` + the portable hash."""
     bad = (
         shingle_rows(blocklist, n, id_col, text_col)
         .select(F.expr(X.h64("shingle", "spark")).alias("gh"))
@@ -855,418 +476,3 @@ m AS (
 )
 SELECT DISTINCT doc_id, CAST(-(m.np) AS INT) AS pos, m.h AS fp
 FROM m WHERE pos <= n - {w}"""
-
-
-def connected_components(pairs: DataFrame, a_col: str = "a",
-                         b_col: str = "b",
-                         max_iter: int = 20) -> DataFrame:
-    """Distributed connected components over an undirected edge list —
-    the cluster-resolution step every published dedup pipeline (Gopher,
-    C4, RefinedWeb) runs after near-dup pair generation.
-
-    Algorithm: the alternating large-star/small-star method (Kiveris et
-    al. 2014, "Connected Components in MapReduce and Beyond") — each
-    round rewires every node's larger neighbors (large-star) then its
-    smaller neighborhood (small-star) toward the local minimum.
-    Connectivity is preserved by both steps and the fixed point is one
-    star per component rooted at its minimum id, so the answer falls
-    straight out of the final edge list. Convergence is O(log² n) rounds
-    worst-case and ~3-5 rounds in practice at any scale (the paper runs
-    10^12-edge graphs); ``max_iter`` = 20 is a safety bound far above
-    it, and the loop exits when the edge set reaches the fixed point,
-    detected by an order-independent fingerprint (count + bit-xor + min
-    + max of a 64-bit edge hash over the *materialized* checkpoint —
-    one cheap 4-value aggregate job, no data collect; xor, not sum,
-    because ANSI mode overflow-checks BIGINT sums). A fingerprint
-    collision between two *different* consecutive edge sets would exit
-    one round early; that needs equal count AND equal hash xor AND
-    equal extremes across a changing set (≪ 2^-64 per round) and is the
-    accepted trade for not diffing the full edge set each round.
-
-    Scale shape (the 100-TB audit): per round, two hash aggregates on
-    node id + two joins on the same key — all map-side-combinable, no
-    driver collect anywhere (the per-round fingerprint is a 2-value
-    aggregate, the k-means-loop pattern). ``localCheckpoint`` between
-    rounds truncates lineage exactly as the k-means fit does. Skew note:
-    a mega-cluster's root accumulates its members at the END (that IS
-    the output), but intermediate rounds only ever key by node id, so no
-    single key sees more than a node's degree — bounded by LSH
-    ``max_bucket`` upstream.
-
-    Returns (node BIGINT, component BIGINT) for every node that appears
-    in ``pairs``; component = min node id of its connected component.
-    Isolated docs (no pairs) are absent — callers union them back (see
-    :func:`resolve_near_dup_clusters`).
-    """
-    e = (
-        pairs.select(F.col(a_col).cast("bigint").alias("u"),
-                     F.col(b_col).cast("bigint").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"),
-                F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_sig: tuple | None = None
-    for _ in range(max_iter):
-        # -- large-star: every strictly-larger neighbor of u rewires to
-        #    min(Γ(u) ∪ {u})
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("mn")) \
-            .select("u", F.least("mn", "u").alias("m"))
-        e = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # -- small-star: u and its strictly-smaller neighbors rewire to
-        #    the smallest of them
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        smaller = sym.filter(F.col("v") < F.col("u"))
-        mins = smaller.groupBy("u").agg(F.min("v").alias("m"))
-        e = (
-            smaller.join(mins, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .union(mins.select(F.col("u").alias("a"), F.col("m").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .select(F.greatest("a", "b").alias("u"),
-                    F.least("a", "b").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)   # truncate lineage per round
-        )
-        sig_row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),  # overflow-free
-            F.min(F.xxhash64("u", "v")).alias("lo"),
-            F.max(F.xxhash64("u", "v")).alias("hi")).collect()[0]
-        sig = tuple(sig_row)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    # fixed point: edges are (member u, root v) stars; roots self-map
-    return (
-        e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-        .union(e.select(F.col("v").alias("node"),
-                        F.col("v").alias("component")))
-        .distinct()
-    )
-
-
-def resolve_near_dup_clusters(docs: DataFrame, pairs: DataFrame,
-                              id_col: str = "doc_id",
-                              quality_col: str | None = None) -> DataFrame:
-    """Cluster resolution + canonical-keeper selection over verified
-    near-dup ``pairs`` (from :func:`near_duplicates` /
-    :func:`lsh_candidate_pairs` / :func:`simhash_near_duplicates`).
-
-    Every document gets a row: members of a pair-connected component
-    share ``cluster_id`` (= min member id); isolated docs are their own
-    singleton cluster. The keeper is the cluster's canonical survivor —
-    highest ``quality_col`` when given (ties toward min id), else plain
-    min id — and ``.filter("is_keeper")`` is the deduplicated corpus.
-
-    Scale: one CC run over the pair graph (see
-    :func:`connected_components`), one left join back to the corpus on
-    ``id_col``, one per-cluster max-of-struct aggregate. The keeper
-    aggregate keys by cluster_id; a pathological mega-cluster (all-spam)
-    is already capped upstream by ``max_bucket``.
-    """
-    cc = connected_components(pairs)
-    base = docs.select(
-        F.col(id_col).cast("bigint").alias(id_col),
-        *([F.col(quality_col).cast("double").alias("_q")]
-          if quality_col else [F.lit(0.0).alias("_q")]))
-    with_comp = base.join(
-        cc.withColumnRenamed("node", id_col), id_col, "left"
-    ).withColumn("cluster_id", F.coalesce("component", F.col(id_col))) \
-     .drop("component")
-    # keeper: max (quality, -id) — i.e. best quality, ties to min id
-    keep = (
-        with_comp.groupBy("cluster_id")
-        .agg(F.max(F.struct(F.col("_q").alias("q"),
-                            (-F.col(id_col)).alias("nid"))).alias("k"),
-             F.count(F.lit(1)).alias("cluster_size"))
-        .select("cluster_id", (-F.col("k.nid")).alias("keeper_id"),
-                "cluster_size")
-    )
-    return (
-        with_comp.join(keep, "cluster_id")
-        .select(id_col, "cluster_id", "cluster_size", "keeper_id",
-                (F.col(id_col) == F.col("keeper_id")).alias("is_keeper"))
-    )
-
-
-def _semantic_assign_arrow(embs: DataFrame, centroids: DataFrame,
-                           id_col: str, vec_col: str) -> DataFrame:
-    """Arrow twin of SemDedup's assignment stage: the centroid matrix is
-    collected (tiny — same budget as the SQL path's broadcast) and each
-    corpus batch runs ONE numpy matmul; identical tie rules (argmax over
-    9-dp-rounded cosines on a cent_id-ascending matrix = lowest cent_id
-    on ties; zero-norm rows/columns score the SQL path's -2 sentinel and
-    surface NULL ``cent_cos``). float64 matmul sums in a different
-    association order than the HOF fold, so knife-edge values can round
-    differently in the 9th decimal — the SQL path remains the
-    exact-oracle baseline (same caveat as brute_force_topk_arrow)."""
-    import numpy as np
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    crows = sorted(centroids.collect(), key=lambda r: r[0])
-    cids = np.array([r[0] for r in crows], dtype=np.int64)
-    cmat = np.array([list(r[1]) for r in crows], dtype=np.float64)
-    cnorm = np.linalg.norm(cmat, axis=1)
-    czero = cnorm == 0
-    cnorm[czero] = 1.0
-
-    vec_type = embs.schema[vec_col].dataType
-    schema = T.StructType([
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("cluster_id", T.LongType(), False),
-        T.StructField("cent_cos", T.DoubleType(), True),
-        T.StructField("v", vec_type, True),
-    ])
-
-    def run(batches):
-        for b in batches:
-            ids = b[id_col].to_numpy(dtype=np.int64)
-            if not len(ids):
-                continue
-            vecs = list(b[vec_col])
-            mat = np.array(vecs, dtype=np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            vzero = norms == 0
-            norms[vzero] = 1.0
-            cos = np.round((mat @ cmat.T) / norms[:, None] / cnorm[None, :], 9)
-            cos[vzero, :] = -2.0
-            cos[:, czero] = -2.0
-            best = np.argmax(cos, axis=1)  # first max = lowest cent_id
-            bc = cos[np.arange(len(ids)), best]
-            yield pd.DataFrame({
-                "vec_id": ids,
-                "cluster_id": cids[best],
-                "cent_cos": [None if c == -2.0 else float(c) for c in bc],
-                "v": vecs,
-            })
-
-    return embs.select(id_col, vec_col).mapInPandas(
-        lambda it: run(it), schema=schema)
-
-
-def _semantic_assign_exact(embs: DataFrame, centroids: DataFrame,
-                           id_col: str, vec_col: str) -> DataFrame:
-    """Exact Arrow twin of the relational assignment stage (round-7
-    optimization, guide §4.2): centroids are collected (tiny — the same
-    budget the SQL path's broadcast paid) and each corpus batch computes
-    all N×K cosines with the exact HOF-fold association order
-    (:func:`~.similarity._fold_dot` — bit-identical doubles, unlike a
-    matmul), emitting per vector only the nearest-centroid CANDIDATES
-    within 1e-9 of the best raw score; the winner is then picked by
-    Spark's own round(·, 9) + max_by over ~1 row/vector. round(·, 9)
-    moves a double ≤ 5e-10, so no dropped centroid can outrank a kept
-    one after rounding — assignment is bit-identical to the SQL path
-    (parity-tested) at zero shuffled N×K rows.
-
-    NULL semantics preserved: a zero-norm vector (or centroid) scores
-    NULL; for an all-NULL row every centroid is emitted and the -2
-    sentinel coalesce in the max_by key lands it on the lowest cent_id,
-    exactly as the SQL path."""
-    import numpy as np
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    from .similarity import _fold_dot
-
-    crows = centroids.select("cent_id", "centv").collect()
-    if not crows:
-        raise ValueError(
-            "semantic_dedup: empty centroid relation — no vec_id satisfies "
-            "the seed rule (or an empty trained centroids frame was passed); "
-            "every input vector would silently drop")
-    crows.sort(key=lambda r: r[0])
-    cids = np.array([r[0] for r in crows], dtype=np.int64)
-    cmat = np.array([list(r[1]) for r in crows], dtype=np.float64)
-    cnrm = np.zeros(len(cids))
-    for i in range(cmat.shape[1]):
-        cnrm += cmat[:, i] * cmat[:, i]
-    cnrm = np.sqrt(cnrm)
-
-    vec_type = embs.schema[vec_col].dataType
-    schema = T.StructType([
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("cent_id", T.LongType(), False),
-        T.StructField("cos_raw", T.DoubleType(), True),
-        T.StructField("v", vec_type, True),
-    ])
-
-    def run(batches):
-        for b in batches:
-            ids = b[id_col].to_numpy(dtype=np.int64)
-            if not len(ids):
-                continue
-            vecs = list(b[vec_col])
-            mat = np.array(vecs, dtype=np.float64)
-            dot, vnrm = _fold_dot(mat, cmat)  # a = v in cosine(v, centv)
-            denom = vnrm[:, None] * cnrm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dot / denom
-            nullm = denom == 0.0
-            eff = np.where(nullm, -2.0, cos)
-            best = eff.max(axis=1)
-            out_id: list = []
-            out_c: list = []
-            out_v: list = []
-            out_vec: list = []
-            for i in range(len(ids)):
-                keep = np.nonzero(eff[i] >= best[i] - 1e-9)[0]
-                out_id.extend([ids[i]] * len(keep))
-                out_c.extend(cids[keep].tolist())
-                out_v.extend(None if nullm[i, j] else float(cos[i, j])
-                             for j in keep)
-                out_vec.extend([vecs[i]] * len(keep))
-            yield pd.DataFrame({"vec_id": out_id, "cent_id": out_c,
-                                "cos_raw": out_v, "v": out_vec})
-
-    return embs.select(id_col, vec_col).mapInPandas(run, schema=schema)
-
-
-def semantic_dedup(embs: DataFrame, threshold: float = 0.95,
-                   centroids: DataFrame | None = None,
-                   centroid_every: int = 25,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   max_cluster: int = 10_000,
-                   assign: str = "exact") -> DataFrame:
-    """SemDedup (Abbas et al. 2023): semantic deduplication by embedding
-    cosine *within clusters*. Complements the lexical family (exact /
-    MinHash / SimHash): paraphrases and re-encodings share no shingles but
-    sit on top of each other in embedding space.
-
-    Semantics (pinned, replayed exactly by the DuckDB oracle):
-
-    * each vector is assigned to its nearest centroid by cosine (ties →
-      lowest ``cent_id``; an unscorable zero-norm vector sorts below every
-      real score and lands deterministically on the lowest ``cent_id``);
-    * cluster members are ranked by cosine-to-centroid ASCENDING (vec_id
-      tie-break) — the paper keeps, within a duplicate group, the member
-      FARTHEST from the centroid (the outlier carries the information;
-      the ones nearest the centroid are the redundant mass);
-    * a member is a duplicate iff some earlier-ranked member of the same
-      cluster has cosine ≥ ``threshold`` with it; ``dup_of`` is the
-      earliest-ranked such witness. Zero-norm vectors produce NULL
-      cosines, so they never flag and are never flagged.
-
-    ``centroids`` accepts a trained (cent_id, centv) relation (e.g.
-    :func:`~..operators.similarity.kmeans_centroids`); by default the
-    deterministic seed rule ``id % centroid_every == 0`` is used — SemDedup
-    is famously insensitive to clustering quality (the paper uses k-means
-    purely to bound the O(c²) pair scan), and seeds keep the oracle exact.
-
-    Scale shape (100 TB audit): the centroid relation is tiny → broadcast;
-    assignment is one broadcast nested-loop map + a groupBy(vec_id)
-    max_by with map-side partial combine (1 row/vector crosses the wire,
-    not K). ``assign="arrow"`` swaps that stage for a zero-shuffle numpy
-    matmul twin (:func:`_semantic_assign_arrow`) — the production path
-    when K is large; the SQL path stays the exact-oracle baseline. The ranked ``members`` relation is localCheckpoint'd — it
-    feeds both witness-join sides, and without the checkpoint Spark
-    recomputes the N×K cosine scoring per reference (3× measured). One
-    LEFT self-join on cluster_id + one groupBy(vec_id) then yields
-    witness-pick and passthrough together (unmatched members aggregate a
-    NULL-ord group, which ``min_by`` skips). Per-cluster pair cost is
-    O(c²) — bounded by sizing K ∝ n (the paper's regime) and hard-capped
-    by ``max_cluster``: only the first ``max_cluster`` ranked members
-    serve as witnesses, so a pathological megacluster costs
-    max_cluster·c, not c² (the spam-cluster guard, same policy as LSH
-    ``max_bucket``).
-
-    Returns one row per input vector: (vec_id, cluster_id, cent_cos,
-    cluster_rank, is_dup, dup_of, kept).
-    """
-    if centroids is None:
-        centroids = embs.filter(F.col(id_col) % centroid_every == 0).select(
-            F.col(id_col).alias("cent_id"), F.col(vec_col).alias("centv"))
-    if assign == "arrow":
-        assigned = _semantic_assign_arrow(embs, centroids, id_col, vec_col)
-    else:
-        if assign == "exact":
-            # round-7 default: exact Arrow candidate kernel — ~1 row per
-            # vector reaches the max_by instead of the full N×K score
-            # relation; winner rule and values unchanged (see
-            # _semantic_assign_exact)
-            scored = _semantic_assign_exact(embs, centroids, id_col,
-                                            vec_col).withColumn(
-                "cos9", F.round(F.col("cos_raw"), 9))
-        else:  # "sql": the oracle-shaped relational baseline
-            e = embs.select(F.col(id_col).alias("vec_id"),
-                            F.col(vec_col).alias("v"))
-            scored = (
-                e.crossJoin(F.broadcast(centroids))
-                .withColumn("cos9",
-                            F.round(F.expr(X.cosine("v", "centv", "spark")),
-                                    9))
-            )
-        # total order (score desc, cent_id asc) packed into one max_by
-        # key — deterministic, and partial-aggregates map-side unlike a
-        # window sort
-        ord_key = F.struct(
-            F.coalesce(F.col("cos9"), F.lit(-2.0)).alias("c"),
-            (-F.col("cent_id")).alias("t"))
-        assigned = (
-            scored.groupBy("vec_id")
-            .agg(F.max_by(F.struct("cent_id", "cos9"), ord_key).alias("best"),
-                 F.first("v").alias("v"))
-            .select("vec_id", F.col("best.cent_id").alias("cluster_id"),
-                    F.col("best.cos9").alias("cent_cos"), "v")
-        )
-    rank_w = Window.partitionBy("cluster_id").orderBy(
-        F.coalesce(F.col("cent_cos"), F.lit(-2.0)).asc(), F.col("vec_id").asc())
-    # checkpoint: members feeds BOTH witness-join sides — without it Spark
-    # recomputes the N×K assignment cross join per reference (measured 3×
-    # at gate scale before the restructure). One local materialization of
-    # N narrow rows beats re-scoring the corpus against every centroid.
-    members = (
-        assigned.withColumn("cluster_rank", F.row_number().over(rank_w))
-        .localCheckpoint(eager=False)
-    )
-    m1 = members.filter(F.col("cluster_rank") <= max_cluster).select(
-        F.col("cluster_id").alias("w_cluster"), F.col("vec_id").alias("w_id"),
-        F.col("v").alias("wv"), F.col("cluster_rank").alias("w_rank"))
-    # one left join + one agg does witness-pick AND passthrough: unmatched
-    # members keep a NULL-ord group, which min_by skips -> dup_of NULL
-    joined = members.join(
-        m1,
-        (F.col("cluster_id") == F.col("w_cluster"))
-        & (F.col("w_rank") < F.col("cluster_rank"))
-        & (F.round(F.expr(X.cosine("wv", "v", "spark")), 9)
-           >= F.lit(threshold)),
-        "left")
-    return (
-        joined.groupBy("vec_id")
-        .agg(F.first("cluster_id").alias("cluster_id"),
-             F.first("cent_cos").alias("cent_cos"),
-             F.first("cluster_rank").alias("cluster_rank"),
-             F.min_by("w_id", "w_rank").alias("dup_of"))
-        .select("vec_id", "cluster_id", "cent_cos", "cluster_rank",
-                F.col("dup_of").isNotNull().alias("is_dup"), "dup_of",
-                F.col("dup_of").isNull().alias("kept"))
-    )
-
-
-def embedding_near_duplicates(embs: DataFrame, threshold: float | None = 0.98,
-                              id_col: str = "vec_id",
-                              vec_col: str = "embedding") -> DataFrame:
-    """Embedding-cosine near-dup on *consecutive-id* pairs (the linear scan
-    form; the all-pairs form is operators/similarity.py's job via LSH
-    buckets). ``threshold=None`` keeps every pair — including NULL cosines
-    from zero-norm vectors, which any ``cos >= t`` predicate would silently
-    drop."""
-    a = embs.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
-    b = embs.select((F.col(id_col) - 1).alias("a"), F.col(id_col).alias("b"),
-                    F.col(vec_col).alias("vb"))
-    scored = (
-        a.join(b, "a")
-        .withColumn("cos", F.round(F.expr(X.cosine("va", "vb", "spark")), 9))
-    )
-    if threshold is not None:
-        scored = scored.filter(F.col("cos") >= threshold)
-    return scored.select("a", "b", "cos")

@@ -67,8 +67,7 @@ def train_nb(labeled: DataFrame, id_col: str = "doc_id",
     toks = _tokens(labeled, [label_col], text_col)
     # checkpoint: word_counts feeds BOTH the scalar stats agg and the
     # scoring join — without it the training token aggregation replays
-    # per reference (the semantic_dedup lesson; lazy, materializes on
-    # first action)
+    # per reference (lazy, materializes on first action)
     word_counts = (
         toks.groupBy("w")
         .agg(F.sum(F.when(F.col(label_col), 1).otherwise(0)).alias("c_hq"),

@@ -35,6 +35,19 @@ from .partitioning import bucket_by_url
 LINEAGE_SUBDIR = "_lineage"
 
 
+def _end_torn_line(path: str) -> None:
+    """Cut a last line that has no newline, so the next append to ``path``
+    starts a line of its own. A kill during an append leaves such a line;
+    its buckets then count as not done and are recomputed, as
+    :meth:`LineageStore._records` already treats a torn last line."""
+    if not os.path.exists(path):
+        return
+    with open(path, "rb+") as f:
+        data = f.read()
+        if data and not data.endswith(b"\n"):
+            f.truncate(data.rfind(b"\n") + 1)
+
+
 class LineageStore:
     """Filesystem-rooted lineage (parquet results + JSON-lines lineage log)."""
 
@@ -45,13 +58,23 @@ class LineageStore:
 
     # -- lineage log -------------------------------------------------------
     def _records(self) -> list[dict]:
+        """Every lineage record, oldest first. A kill during
+        :meth:`record`'s append can tear a file's last line: that line is
+        skipped, so its buckets count as not done and the next run
+        recomputes them. A bad line anywhere else still raises."""
         recs: list[dict] = []
         if not os.path.isdir(self.lineage_dir):
             return recs
         for name in sorted(os.listdir(self.lineage_dir)):
             if name.endswith(".jsonl"):
                 with open(os.path.join(self.lineage_dir, name)) as f:
-                    recs.extend(json.loads(line) for line in f)
+                    lines = f.read().splitlines()
+                for i, line in enumerate(lines):
+                    try:
+                        recs.append(json.loads(line))
+                    except ValueError:
+                        if i < len(lines) - 1:
+                            raise
         recs.sort(key=lambda r: r.get("ts", 0))  # last-record-wins ordering
         return recs
 
@@ -64,6 +87,7 @@ class LineageStore:
     def record(self, run_id: str, rows: list[dict]) -> None:
         os.makedirs(self.lineage_dir, exist_ok=True)
         path = os.path.join(self.lineage_dir, f"run-{run_id}.jsonl")
+        _end_torn_line(path)
         ts = time.time_ns()
         with open(path, "a") as f:
             for i, r in enumerate(rows):

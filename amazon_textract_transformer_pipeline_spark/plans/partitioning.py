@@ -37,8 +37,9 @@ def salted_repartition_by_url(df: DataFrame, num_partitions: int | None = None,
 def bucket_by_url(df: DataFrame, n_buckets: int, url_col: str = "url",
                   out_col: str = "bucket") -> DataFrame:
     """Stable lineage bucket: deterministic url-hash bucket id (the resume
-    unit — see plans/lineage.py). sha2-based so it never changes across
-    Spark versions/configs."""
+    unit — see plans/lineage.py): the first 15 hex digits of the url's
+    md5, mod ``n_buckets``, so it never changes across Spark
+    versions/configs."""
     return df.withColumn(
         out_col,
         F.pmod(

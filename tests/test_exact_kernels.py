@@ -1,69 +1,17 @@
-"""Round-7 optimization: the Arrow-exact kernels must be BIT-identical
-to their relational (oracle-shaped) baselines — not approximately equal.
-The kernels replicate the HOF-fold association order double-for-double
-(similarity._fold_dot) and leave round(·, 9) + final selection to Spark
-with a 1e-9 keep margin, so any divergence is a bug, not float noise."""
+"""Round-7 optimization: the Arrow winnowing kernel must be BIT-identical
+to its relational (oracle-shaped) baseline — not approximately equal. Both
+select over the same integer md5-prefix gram hashes, so any divergence is a
+bug, not float noise."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from amazon_textract_transformer_pipeline_spark.operators import (
-    dedup,
-    similarity,
-)
-
-N = 300
-
-
-@pytest.fixture(scope="module")
-def embs(spark):
-    # deterministic float32 vectors incl. a zero-norm row and near-ties
-    return spark.range(N).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "CASE WHEN id = 37 THEN transform(sequence(0, 15), "
-            "d -> cast(0.0 as float)) ELSE transform(sequence(0, 15), "
-            "d -> cast(sin(id * 0.7 + d) as float)) END"
-        ).alias("embedding"),
-    )
+from amazon_textract_transformer_pipeline_spark.operators import dedup
 
 
 def rows(df):
     return sorted(map(tuple, df.collect()))
-
-
-def test_brute_force_kernel_bit_identical(embs):
-    q = embs.filter("vec_id % 9 = 0")  # includes vec_id 0; 34 queries
-    got = rows(similarity.brute_force_topk(embs, q, topk=7))
-    want = rows(similarity.brute_force_topk_sql(embs, q, topk=7))
-    assert got == want and len(want) == 34 * 7
-
-
-def test_brute_force_kernel_zero_norm_query(embs):
-    # 37 is the zero vector: every cosine NULL -> top-k by cand_id asc
-    q = embs.filter("vec_id in (37, 40)")
-    got = rows(similarity.brute_force_topk(embs, q, topk=4))
-    want = rows(similarity.brute_force_topk_sql(embs, q, topk=4))
-    assert got == want
-    z = [r for r in got if r[0] == 37]
-    assert [r[2] for r in z] == [0, 1, 2, 3] and all(r[3] is None for r in z)
-
-
-def test_semantic_assign_exact_bit_identical(embs):
-    got = rows(dedup.semantic_dedup(embs, threshold=0.9, centroid_every=20,
-                                    assign="exact"))
-    want = rows(dedup.semantic_dedup(embs, threshold=0.9, centroid_every=20,
-                                     assign="sql"))
-    assert got == want and len(want) == N
-
-
-def test_semantic_empty_centroids_raises(embs):
-    empty = embs.filter("vec_id < 0").select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("centv"))
-    with pytest.raises(ValueError, match="empty centroid relation"):
-        dedup.semantic_dedup(embs, centroids=empty)
 
 
 def test_winnow_kernel_matches_sql_form(spark):

@@ -21,7 +21,6 @@ FILES = sorted([
     *(ROOT / "perfbench").rglob("*.py"),
     *(ROOT / "scripts").rglob("*.py"),
     ROOT / "__spark_entry__.py",
-    ROOT / "bench.py",
 ])
 
 

@@ -267,3 +267,34 @@ def test_lineage_validate_demotes_only_damaged_bucket(spark, pages_df,
     assert store.disk_counts() == counts
     assert store.validate(spark) == set()
     assert sorted(spark.read.parquet(root + "/results").collect()) == before
+
+
+def test_torn_lineage_line_is_recomputed_not_fatal(spark, pages_df,
+                                                   tmp_path):
+    """A kill during the lineage append can cut the log's last line. That
+    line's bucket then counts as not done: validate() does not raise, the
+    next run (appending to the same log file) recomputes exactly that
+    bucket, and the rows read back equal an uninterrupted run's."""
+    stage = extraction_stage_for_lineage()
+    whole = str(tmp_path / "whole")
+    LineageStore(whole, n_buckets=8).run(spark, pages_df, stage)
+    want = {r.url: r for r in spark.read.parquet(whole + "/results").collect()}
+
+    root = str(tmp_path / "torn")
+    store = LineageStore(root, n_buckets=8)
+    store.run(spark, pages_df, stage, run_id="k1")
+    log = os.path.join(root, "_lineage", "run-k1.jsonl")
+    with open(log) as f:
+        lines = f.read().splitlines(keepends=True)
+    torn = json.loads(lines[-1])["bucket"]
+    with open(log, "w") as f:
+        f.writelines(lines[:-1])
+        f.write(lines[-1][:len(lines[-1]) // 2])
+
+    assert store.validate(spark) == set()
+    assert store.completed_buckets() == set(range(8)) - {torn}
+    assert store.run(spark, pages_df, stage, run_id="k1")["buckets_done"] == 1
+    assert store.completed_buckets() == set(range(8))
+    assert store.validate(spark) == set()
+    got = {r.url: r for r in spark.read.parquet(root + "/results").collect()}
+    assert len(got) == 300 and got == want

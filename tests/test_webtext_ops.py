@@ -1,11 +1,10 @@
-"""Dedup family, similarity search, text stats."""
+"""Text stats, Gopher / C4 / repetition filters, vocab top-k, and Textract
+polygon-only geometry."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from amazon_textract_transformer_pipeline_spark.operators import dedup, similarity
 from amazon_textract_transformer_pipeline_spark.operators.textstats import (
     with_text_stats,
 )
@@ -16,125 +15,6 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def embs(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
-
-
-def test_exact_duplicates_planted(spark, docs):
-    """Plant exact dups (with whitespace/case noise) and find exactly them."""
-    noisy = docs.limit(5).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.upper(F.concat(F.lit("  "), F.col("text"), F.lit(" "))).alias("text"),
-    )
-    base = docs.select("doc_id", F.upper("text").alias("text"))
-    groups = dedup.exact_duplicates(base.unionByName(noisy))
-    assert groups.count() == 5
-    assert groups.filter("n_docs <> 2").count() == 0
-    assert groups.agg(F.max("keeper_id")).collect()[0][0] < 100000
-
-
-def test_minhash_near_duplicates_planted(spark, docs):
-    """A doc with one word changed out of ~25 → jaccard well above 0.7;
-    unrelated docs stay below."""
-    mutated = docs.limit(8).select(
-        (F.col("doc_id") + 200000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzqx")).alias("text"),
-    )
-    corpus = docs.select("doc_id", "text").unionByName(mutated)
-    nd = dedup.near_duplicates(corpus, threshold=0.5).cache()
-    found_pairs = {(r.a, r.b) for r in nd.collect()}
-    planted = {(i, i + 200000) for i in range(8)}
-    assert planted <= found_pairs
-    # jaccard sane
-    assert nd.filter("jaccard > 1.0 OR jaccard < 0.5").count() == 0
-
-
-def test_minhash_empty_text_parity(spark):
-    """Zero-word docs must get the same ['']-shingle signature as the oracle
-    HOF form (round-1 latent divergence: posexplode emitted no rows and the
-    doc vanished from the relational sketch)."""
-    from amazon_textract_transformer_pipeline_spark.functions import textsql as X
-
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, ""), (3, "   "), (4, "solo")],
-        ["doc_id", "text"])
-    rel = {r.doc_id: list(r.minhash)
-           for r in dedup.minhash_signatures(df, k=8).collect()}
-    hof = {r.doc_id: list(r.mh) for r in df.selectExpr(
-        "doc_id",
-        X.minhash_signature(
-            X.shingles(X.words("text", "spark"), 3, "spark"), 8, "spark")
-        + " AS mh").collect()}
-    assert rel == hof
-    assert set(rel) == {1, 2, 3, 4}  # empty/whitespace docs keep a row
-
-
-def test_lsh_is_not_all_pairs(spark, docs):
-    """Candidate set must be far below the N^2 cross join."""
-    n = docs.count()
-    cands = dedup.lsh_candidate_pairs(docs.select("doc_id", "text")).count()
-    assert cands < n * (n - 1) / 20
-
-
-def test_simhash_near_duplicates(spark, docs):
-    sk = dedup.simhash_sketch(docs.select("doc_id", "text"))
-    # 64-bit sketch: with 500 docs, bits above 31 are set ~always on some
-    # doc — the old 32-bit form never leaves [0, 2^32)
-    assert sk.filter("simhash > 4294967295 OR simhash < 0").count() > 0
-    clones = docs.limit(4).select(
-        (F.col("doc_id") + 300000).alias("doc_id"), "text")
-    pairs = dedup.simhash_near_duplicates(
-        docs.select("doc_id", "text").unionByName(clones), max_hamming=0)
-    found = {(r.a, r.b) for r in pairs.collect()}
-    assert {(i, i + 300000) for i in range(4)} <= found
-
-
-def test_embedding_near_duplicates(spark, embs):
-    nd = dedup.embedding_near_duplicates(embs, threshold=-1.0)
-    assert nd.count() == embs.count() - 1  # every consecutive pair scored
-    assert nd.filter("cos > 1.0000001 OR cos < -1.0000001").count() == 0
-
-
-def test_brute_force_topk(spark, embs):
-    queries = embs.filter("vec_id % 100 = 0")
-    res = similarity.brute_force_topk(embs, queries, topk=5).cache()
-    nq = queries.count()
-    assert res.count() == nq * 5
-    # rank 1 has max cos per query; no self matches
-    assert res.filter("cand_id = query_id").count() == 0
-    r1 = res.filter("rank = 1").select("query_id", F.col("cos").alias("c1"))
-    mx = res.groupBy("query_id").agg(F.max("cos").alias("cmax"))
-    assert r1.join(mx, "query_id").filter("c1 <> cmax").count() == 0
-
-
-def test_lsh_topk_recall(spark, embs):
-    queries = embs.filter("vec_id % 50 = 0")
-    exact = similarity.brute_force_topk(embs, queries, topk=5)
-    # random 64-dim vectors are a worst case for sign-LSH (top-5 neighbors
-    # aren't very close); 4 planes × 8 tables trades candidate volume for
-    # recall — the knob a real deployment tunes per corpus
-    approx = similarity.lsh_topk(embs, queries, topk=5, n_planes=4, n_tables=8)
-    rec = similarity.topk_recall(exact, approx)
-    assert rec > 0.5, f"recall too low: {rec}"
-
-
-def test_cosine_near_duplicates_planted(spark, embs):
-    """Plant barely-perturbed clones → the LSH self-join must recover them;
-    all reported pairs satisfy the threshold."""
-    clones = embs.limit(6).select(
-        (F.col("vec_id") + 500000).alias("vec_id"),
-        F.expr("transform(embedding, x -> cast(x * 1.0001 + 0.0001 as float))")
-        .alias("embedding"))
-    corpus = embs.select("vec_id", "embedding").unionByName(clones)
-    nd = similarity.cosine_near_duplicates(
-        corpus, threshold=0.99, n_planes=8, n_tables=6).cache()
-    pairs = {(r.a, r.b) for r in nd.collect()}
-    planted = {(i, i + 500000) for i in range(6)}
-    assert planted <= pairs, planted - pairs
-    assert nd.filter("cos < 0.99 OR cos > 1.0").count() == 0
 
 
 def test_blocks_polygon_only_geometry(spark):
@@ -171,26 +51,6 @@ def test_blocks_polygon_only_geometry(spark):
     assert abs(box["height"] - 0.2) < 1e-12
 
 
-def test_ivf_topk_recall(spark, embs):
-    """IVF-flat: probing more cells monotonically lifts recall vs exact;
-    every query gets ≤ topk ranked candidates."""
-    queries = embs.filter("vec_id % 50 = 0")
-    exact = similarity.brute_force_topk(embs, queries, topk=5).cache()
-    # n_centroids ~ sqrt(N): 500 vectors -> 22 cells of ~23 vectors
-    r1 = similarity.topk_recall(
-        exact, similarity.ivf_topk(embs, queries, topk=5,
-                                   n_centroids=22, nprobe=1))
-    r3 = similarity.topk_recall(
-        exact, similarity.ivf_topk(embs, queries, topk=5,
-                                   n_centroids=22, nprobe=3))
-    assert 0.0 < r1 <= r3 <= 1.0
-    assert r3 > 0.4, f"nprobe=3 recall suspiciously low: {r3}"
-    got = similarity.ivf_topk(embs, queries, topk=5,
-                              n_centroids=22, nprobe=2)
-    per_q = got.groupBy("query_id").count().agg(F.max("count")).collect()[0][0]
-    assert per_q <= 5
-
-
 def test_text_stats(spark, docs):
     st = with_text_stats(docs).cache()
     row = st.filter("n_words > 0").limit(1).collect()[0]
@@ -198,47 +58,6 @@ def test_text_stats(spark, docs):
     assert 0.0 <= row.stopword_ratio <= 1.0
     assert st.filter("lang_guess NOT IN ('en','de','fr','es','und')").count() == 0
     assert st.select("fingerprint").distinct().count() > 400  # mostly unique
-
-
-def test_kmeans_centroids_lift_ivf_recall(spark):
-    """Trained centroids (relational Lloyd's, spherical) recover planted
-    cluster structure: on a clustered corpus they beat the random-sample
-    baseline at the same nprobe, centroids stay unit-norm and k-fixed,
-    and the fit is deterministic."""
-    import numpy as np
-
-    rng = np.random.Generator(np.random.PCG64(77))
-    centers = rng.normal(size=(8, 16))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows = []
-    for i in range(400):
-        v = centers[i % 8] + rng.normal(scale=0.15, size=16)
-        rows.append((i, [float(x) for x in v]))
-    clustered = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>").cache()
-
-    queries = clustered.filter("vec_id % 40 = 0")
-    exact = similarity.brute_force_topk(clustered, queries, topk=5).cache()
-    k = 8
-    trained = similarity.kmeans_centroids(clustered, k, n_iter=5).cache()
-    assert trained.count() == k  # k fixed; empty cells keep old centroid
-    norms = trained.select(
-        F.expr("aggregate(centv, 0d, (a, x) -> a + x * x)").alias("n2"))
-    assert norms.filter("abs(n2 - 1.0) > 1e-6").count() == 0
-
-    r_rand = similarity.topk_recall(
-        exact, similarity.ivf_topk(clustered, queries, topk=5,
-                                   n_centroids=k, nprobe=1))
-    r_fit = similarity.topk_recall(
-        exact, similarity.ivf_topk(clustered, queries, topk=5, nprobe=1,
-                                   centroids=trained))
-    assert r_fit >= r_rand, f"trained {r_fit} < random {r_rand}"
-    assert r_fit > 0.9, f"trained centroids missed planted clusters: {r_fit}"
-
-    again = similarity.kmeans_centroids(clustered, k, n_iter=5)
-    diff = trained.alias("a").join(again.alias("b"), "cent_id") \
-        .filter("a.centv <> b.centv").count()
-    assert diff == 0
 
 
 def test_gopher_filters_rules(spark):
@@ -285,13 +104,6 @@ def test_symbol_ratio_counts_ascii_ellipsis(spark):
     assert out[0].gopher_pass and out[0].symbol_word_ratio < 0.1
     assert not out[1].gopher_pass and out[1].symbol_word_ratio > 0.1
     assert not out[2].gopher_pass and out[2].symbol_word_ratio > 0.1
-
-
-def test_brute_force_arrow_empty_queries(spark, embs):
-    out = similarity.brute_force_topk_arrow(
-        embs, embs.filter("vec_id < 0"), topk=5)
-    assert out.count() == 0
-    assert out.columns == ["query_id", "rank", "cand_id", "cos"]
 
 
 def test_repetition_filters_rules(spark):
@@ -341,20 +153,6 @@ def test_dup_ngram_char_fracs(spark):
     assert out[1].dup7gram_char_frac == 0.0
     assert out[2].dup5gram_char_frac == 0.0 and out[2].repetition_pass
     assert out[3].repetition_pass
-
-
-def test_brute_force_arrow_matches_relational(spark, embs):
-    """The vectorized matmul twin agrees with the exact-oracle relational
-    variant: identical (query, rank, cand) sets modulo float last-digit
-    knife edges (>= 99.9% agreement) and identical row counts."""
-    queries = embs.filter("vec_id % 50 = 0")
-    rel = similarity.brute_force_topk(embs, queries, topk=5)
-    arw = similarity.brute_force_topk_arrow(embs, queries, topk=5)
-    a = {(r.query_id, r.rank, r.cand_id) for r in rel.collect()}
-    b = {(r.query_id, r.rank, r.cand_id) for r in arw.collect()}
-    assert len(a) == len(b)
-    agree = len(a & b) / len(a)
-    assert agree >= 0.999, f"rank agreement {agree}"
 
 
 def test_dup_paragraph_signals(spark):
