@@ -6,9 +6,9 @@ driver's parquet tables; ``oracle_sql`` gives the DuckDB recomputation of
 each SQL-expressible query (built in
 amazon_textract_transformer_pipeline_spark/oracle.py from the same layout
 constants and portable-hash stubs as the Spark side). Every query has an exact-value
-oracle: G4 box merge (connected components) and the Q2 splitter (greedy
-window fill with backfill) via recursive CTEs; PDF metadata and PDF text
-against the closed-form spec of the deterministic PDF generator.
+oracle: the Q2 splitter (greedy window fill with backfill) via a recursive
+CTE; PDF metadata and PDF text against the closed-form spec of the
+deterministic PDF generator.
 """
 
 from __future__ import annotations
@@ -33,16 +33,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Dict ORDER is load-bearing: the round-6 driver validated exactly the
-    # FIRST 50 entries, so (round-6 verdict, "Next round" #1) the entries
-    # that most need a fresh driver row come first — the 12 round-6
-    # operators that never had one plus the 4 gates whose code changed in
-    # round 6, followed by every query whose physical path changed in this
-    # optimization round (extraction family, split/main-content, corpus
-    # filter). Long-stable gates with green r5/r6 rows on unchanged code
-    # rotate to the back.
     return {
-        # --- never-driver-validated round-6 operators + round-6-stale gates
+        # --- PDF front-end and corpus operators
         "pdf_metadata": Q.q_pdf_metadata,
         "pdf_extract": Q.q_pdf_extract,
         "gopher_filters": Q.q_gopher_filters,
@@ -59,7 +51,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vocab_top_k": Q.q_vocab_top_k,
         "html_meta": Q.q_html_meta,
         "corpus_report": Q.q_corpus_report,
-        # --- extraction path (changed: bridge spread)
+        # --- extraction path
         "extract_text": Q.q_extract_text,
         "word_enrichment": Q.q_word_enrichment,
         "entity_mentions": Q.q_entity_mentions,
@@ -67,9 +59,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fields": Q.q_fields,
         "doc_confidence": Q.q_doc_confidence,
         "apply_review": Q.q_apply_review,
-        "eval_token_metrics": Q.q_eval_token_metrics,
-        "eval_class_ratios": Q.q_eval_class_ratios,
-        "eval_seq2seq_acc": Q.q_eval_seq2seq_acc,
         # --- splitter over the spread bridge
         "split_windows": Q.q_split_windows,
         # --- densitometric main content (spread parse)
@@ -84,20 +73,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- text stats
         "text_stats": Q.q_text_stats,
         "langid_scores": Q.q_langid_scores,
-        # --- geometric label join (G1/G2)
-        "g1_word_labels": Q.q_g1_word_labels,
         # --- Gopher repetition signals
         "gopher_repetition": Q.q_gopher_repetition,
-        # --- r5/r6-green gates on unchanged code (positions 38-57: the
-        # last 7 fall past the 50-window)
+        # --- reference aggregation shapes
         "o1_group_minmax": Q.q_o1_group_minmax,
         "top1_per_group": Q.q_top1_per_group,
         "noisy_or_events": Q.q_noisy_or_events,
         "tumbling_windows": Q.q_tumbling_windows,
         "session_windows": Q.q_session_windows,
         "s4_pagination_merge": Q.q_s4_pagination_merge,
-        "train_test_split": Q.q_train_test_split,
-        "smgt_seq2seq": Q.q_smgt_seq2seq,
+        # --- URL and line cleaning, quality scoring, sampling, charsets
         "canonical_urls": Q.q_canonical_urls,
         "boilerplate_lines": Q.q_boilerplate_lines,
         "c4_span_dedup": Q.q_c4_span_dedup,
@@ -108,7 +93,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_line_dedup": Q.q_doc_line_dedup,
         "mixture_sample": Q.q_mixture_sample,
         "dsir_importance": Q.q_dsir_importance,
-        "g4_box_merge": Q.q_g4_box_merge,
         "charset_extract": Q.q_charset_extract,
     }
 
@@ -124,9 +108,6 @@ def oracle_sql() -> dict[str, str]:
         "fields": O.fields_oracle(),
         "doc_confidence": O.doc_confidence_oracle(),
         "apply_review": O.apply_review_oracle(),
-        "eval_token_metrics": O.eval_token_metrics_oracle(),
-        "eval_class_ratios": O.eval_class_ratios_oracle(),
-        "eval_seq2seq_acc": O.eval_seq2seq_acc_oracle(),
         # benchmark decontamination: planted eval-set blocklist (words 6-26
         # of every 17th doc), distinct 13-gram hash semi-join, per-doc hit
         # counts — the dedup.decontamination_flags replay.
@@ -165,32 +146,6 @@ SELECT d1.doc_id AS a, d2.doc_id AS b,
         len(list_distinct(list_concat(d1.sh, d2.sh))), 6) AS jaccard
 FROM w d1 JOIN w d2 ON d2.doc_id = d1.doc_id + 1""",
         "text_stats": None,  # built below
-        "g1_word_labels": f"""
-WITH d AS (SELECT doc_id, len({dw}) AS nw FROM documents),
-words AS (
-  SELECT 'doc://' || doc_id AS url, unnest(range(0, nw)) AS word_pos, doc_id
-  FROM d
-),
-anns AS (
-  SELECT 'doc://' || doc_id AS url, unnest(range(0, nw // 5)) AS ann_ix
-  FROM d WHERE nw >= 5
-),
-ann2 AS (
-  SELECT url, ann_ix, cast(ann_ix % 3 AS int) AS class_id,
-         ann_ix * 50 AS ax0, ann_ix * 50 + 34 AS ax1
-  FROM anns
-),
-matched AS (
-  SELECT w.url, w.word_pos, min(a.class_id) AS mc
-  FROM words w JOIN ann2 a ON a.url = w.url
-   AND greatest(0, least(w.word_pos * 10 + 9, a.ax1)
-                  - greatest(w.word_pos * 10, a.ax0)) * 9.0
-       >= (9.0 * 9.0) / 2
-  GROUP BY w.url, w.word_pos
-)
-SELECT w.url, cast(w.word_pos AS int) AS word_pos,
-       cast(coalesce(m.mc, 3) AS int) AS label
-FROM words w LEFT JOIN matched m ON m.url = w.url AND m.word_pos = w.word_pos""",
         "o1_group_minmax": """
 SELECT l_returnflag, l_linestatus,
        round(sum(l_quantity), 6) AS sum_qty,
@@ -244,11 +199,6 @@ SELECT user_id, count(*) AS n_events,
        string_agg(cast(event_id AS varchar), ','
                   ORDER BY ts, event_id) AS event_ids_csv
 FROM events GROUP BY user_id""",
-        "train_test_split": f"""
-SELECT doc_id,
-  CASE WHEN {X.h64("concat('split', cast(doc_id as varchar))", 'duck')} % 10 < 9
-       THEN 'train' ELSE 'test' END AS split
-FROM documents""",
     }
 
     # text_stats assembled from the same expression builders
@@ -533,79 +483,6 @@ FROM range(0, 120) t(i)"""
     # split_windows oracle: recursive-CTE replay of the greedy splitter
     # (oracle.py::split_windows_oracle) — was rows-only in round 1
     sqls["split_windows"] = O.split_windows_oracle(24)
-
-    # smgt_seq2seq oracle: same synthetic annotation construction + the
-    # extended-task parse rules (targetText default, wrong-without-target
-    # drop, unknown-status drop, null-label drop) in plain SQL.
-    sqls["smgt_seq2seq"] = f"""
-WITH d AS (SELECT doc_id, {dw} AS ws FROM documents),
-e AS (
-  SELECT doc_id, ws, unnest(range(0, len(ws) // 8)) AS i
-  FROM d WHERE len(ws) >= 8
-),
-f AS (
-  SELECT doc_id, cast(i AS int) AS entity_ix,
-    CASE WHEN i % 5 = 4 THEN 'bogus'
-         ELSE (['correct','unclear','wrong'])[(i % 3)::INT + 1] END AS status,
-    ws[(i * 8)::INT + 1] AS raw_text,
-    CASE WHEN i % 2 = 0 THEN upper(ws[(i * 8)::INT + 1]) END AS tgt0,
-    CASE WHEN i % 7 = 6 THEN NULL
-         ELSE 'field' || (i % 4)::VARCHAR END AS label
-  FROM e
-),
-g AS (
-  SELECT doc_id, entity_ix, label, raw_text,
-         coalesce(tgt0, CASE WHEN status <> 'wrong' THEN raw_text END)
-           AS target_text
-  FROM f
-  WHERE status IN ('correct', 'unclear', 'wrong')
-    AND NOT (tgt0 IS NULL AND status = 'wrong')
-)
-SELECT doc_id, entity_ix, label AS class_name,
-       'Normalize ' || label || ': ' || raw_text AS src_texts,
-       target_text AS tgt_texts
-FROM g
-WHERE label IS NOT NULL AND raw_text IS NOT NULL
-  AND target_text IS NOT NULL"""
-
-    # g4_box_merge oracle: connected components of the same-class overlap
-    # graph as a recursive label-propagation CTE (bounded per-page box sets
-    # keep the closure tiny). Input construction mirrors driver_queries
-    # _g1_inputs + the +120 widening in q_g4_box_merge.
-    sqls["g4_box_merge"] = f"""
-WITH RECURSIVE d AS (SELECT doc_id, len({dw}) AS nw FROM documents),
-a2 AS (
-  SELECT 'doc://' || doc_id AS url,
-         cast(unnest(range(0, nw // 5)) AS int) AS ann_ix
-  FROM d WHERE nw >= 5
-),
-anns AS (
-  SELECT url, ann_ix, cast(ann_ix % 3 AS int) AS class_id,
-         ann_ix * 50.0 AS x0, 0.0 AS y0,
-         ann_ix * 50.0 + 154 AS x1, 9.0 AS y1
-  FROM a2
-),
-edges AS (
-  SELECT a.url, a.class_id, a.ann_ix AS src, b.ann_ix AS dst
-  FROM anns a JOIN anns b ON a.url = b.url AND a.class_id = b.class_id
-  WHERE a.x1 >= b.x0 AND b.x1 >= a.x0 AND a.y1 >= b.y0 AND b.y1 >= a.y0
-),
-reach(url, class_id, root, node) AS (
-  SELECT url, class_id, ann_ix, ann_ix FROM anns
-  UNION
-  SELECT r.url, r.class_id, r.root, e.dst
-  FROM reach r JOIN edges e
-    ON e.url = r.url AND e.class_id = r.class_id AND e.src = r.node
-),
-comp AS (
-  SELECT url, class_id, node, min(root) AS group_id
-  FROM reach GROUP BY url, class_id, node
-)
-SELECT c.url, c.class_id, c.group_id,
-       cast(count(*) AS int) AS n_members, min(a.x0) AS x0, max(a.x1) AS x1
-FROM comp c JOIN anns a
-  ON a.url = c.url AND a.class_id = c.class_id AND a.ann_ix = c.node
-GROUP BY c.url, c.class_id, c.group_id"""
 
     # main_content oracles: planted block features re-derived closed-form
     # (same mc_feature_sql string both engines), then the identical

@@ -3,10 +3,10 @@
 A from-scratch rebuild of the *computations* of
 aws-samples/amazon-textract-transformer-pipeline (reference snapshot at
 /root/reference, cited per-operator as ``file:line`` in docstrings) on an
-idiomatic Spark substrate: DataFrame/SQL transforms plus exactly three
-Arrow-batched pandas-UDF families (HTML front-end, tokenize+split, model
-forward). The execution model is documented in SURVEY.md; the data model in
-FIXTURES.md.
+idiomatic Spark substrate. The extraction plan is scan → the one ``fused``
+``mapInArrow`` kernel (parse, assemble, enrich, mention and consolidate
+each page in one Python pass) → sink. The execution model is documented in
+SURVEY.md; the data model in FIXTURES.md.
 
 Grain convention:
   * **doc grain** — one row per url, ``pages ARRAY<STRUCT<...>>`` nested.
@@ -14,7 +14,7 @@ Grain convention:
     (the reference has no cross-document joins, SURVEY.md §2.9), so the
     hot path runs shuffle-free.
   * **page / word grain** — ``explode`` views for relational operators
-    (entity runs, consolidation, geometric joins).
+    (driver-gate queries, oracles and tests).
 """
 
 __version__ = "0.1.0"

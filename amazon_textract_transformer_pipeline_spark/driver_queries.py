@@ -23,8 +23,6 @@ from .operators.fused import (
     document_mentions,
     extract_documents,
 )
-from .operators.labels import merge_annotation_boxes, word_single_labels
-from .operators.smgt import smgt_to_seq2seq_examples
 from .operators.webclean import canonical_url_sql, remove_boilerplate_lines
 from .operators.splitting import split_pages_to_window_bounds
 from .operators.textstats import with_text_stats
@@ -89,67 +87,6 @@ def q_fields(spark, sf_dir) -> DataFrame:
         F.col("NumDetections").cast("bigint").alias("NumDetections"),
         F.col("NumDetectedValues").cast("bigint").alias("NumDetectedValues"),
         "Value", F.round("Confidence", 6).alias("Confidence"))
-
-
-def _eval_tokens(spark, sf_dir) -> DataFrame:
-    """Deterministic (example, label, pred) token relation for the eval
-    gates: labels = the stub classes; preds agree 70% of the time, diverge
-    via the portable hash otherwise; ~1/13 positions are pad (-100). Both
-    engines construct identical rows (oracle.eval_* replays this)."""
-    from .operators.enrich import N_STUB_CLASSES
-
-    we = _enriched_words(spark, sf_dir)
-    key = "concat(url, '#', cast(page_num as string), '#', cast(word_pos as string))"
-    h1 = X.h64(f"concat('pad', {key})", "spark")
-    h2 = X.h64(f"concat('prd', {key})", "spark")
-    return we.select(
-        F.expr("concat(url, '#', cast(page_num as string))").alias("example_id"),
-        F.expr(f"CASE WHEN {h1} % 13 = 0 THEN -100 ELSE pred_cls END")
-        .alias("label"),
-        F.expr(f"CASE WHEN {h2} % 10 < 7 THEN pred_cls "
-               f"ELSE cast({h2} % {N_STUB_CLASSES} as int) END").alias("pred"),
-    )
-
-
-def q_eval_token_metrics(spark, sf_dir) -> DataFrame:
-    from .operators.enrich import N_STUB_CLASSES
-    from .operators.evaluation import token_classification_metrics
-
-    m = token_classification_metrics(_eval_tokens(spark, sf_dir),
-                                     num_labels=N_STUB_CLASSES)
-    return m.select(
-        "n_examples", F.round("acc", 6).alias("acc"), "n_focus_examples",
-        F.round("focus_acc", 6).alias("focus_acc"),
-        F.round("focus_else_acc_minus_one", 6)
-        .alias("focus_else_acc_minus_one"))
-
-
-def q_eval_class_ratios(spark, sf_dir) -> DataFrame:
-    from .operators.evaluation import class_prediction_ratios
-
-    r = class_prediction_ratios(_eval_tokens(spark, sf_dir))
-    return r.select("pred_class", "n_tokens",
-                    F.round("ratio", 6).alias("ratio"))
-
-
-def q_eval_seq2seq_acc(spark, sf_dir) -> DataFrame:
-    """Normalized exact-match over deterministic (gen, target) pairs built
-    from each doc's first word: h%3 rotates match-after-normalization /
-    exact match / miss."""
-    from .operators.evaluation import seq2seq_exact_match
-
-    ws = X.words("text", "spark")
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(f"coalesce({ws}[0], '')").alias("w1"))
-    h = X.h64("concat('s2s', cast(doc_id as string))", "spark")
-    pairs = d.select(
-        F.expr(f"CASE WHEN {h} % 3 = 0 THEN concat('  ', upper(w1), ' ') "
-               f"WHEN {h} % 3 = 1 THEN w1 "
-               f"ELSE concat(w1, 'x') END").alias("gen_text"),
-        F.col("w1").alias("target_text"),
-    )
-    m = seq2seq_exact_match(pairs)
-    return m.select("n_examples", F.round("acc", 6).alias("acc"))
 
 
 def q_apply_review(spark, sf_dir) -> DataFrame:
@@ -263,43 +200,6 @@ def q_langid_scores(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# G1 overlap labeling on portable synthetic geometry
-# ---------------------------------------------------------------------------
-def _g1_inputs(spark, sf_dir):
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(f"size({X.words('text', 'spark')})").alias("nw"))
-    words = d.select(
-        F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
-        F.lit(1).alias("page_num"),
-        F.explode(F.expr("sequence(0, nw - 1)")).alias("word_pos"),
-    ).withColumn(
-        "wbox",
-        F.expr("struct(cast(word_pos * 10 as double) as x0, "
-               "cast(0 as double) as y0, "
-               "cast(word_pos * 10 + 9 as double) as x1, "
-               "cast(9 as double) as y1)"),
-    )
-    anns = d.filter("nw >= 5").select(
-        F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
-        F.lit(1).alias("page_num"),
-        F.explode(F.expr("sequence(0, cast(nw / 5 as int) - 1)")).alias("ann_ix"),
-    ).withColumn("class_id", F.expr("cast(ann_ix % 3 as int)")).withColumn(
-        "abox",
-        F.expr("struct(cast(ann_ix * 50 as double) as x0, "
-               "cast(0 as double) as y0, "
-               "cast(ann_ix * 50 + 34 as double) as x1, "
-               "cast(9 as double) as y1)"),
-    )
-    return words, anns
-
-
-def q_g1_word_labels(spark, sf_dir) -> DataFrame:
-    words, anns = _g1_inputs(spark, sf_dir)
-    return word_single_labels(words, anns, n_classes=4).select(
-        "url", "word_pos", "label")
-
-
-# ---------------------------------------------------------------------------
 # Reference aggregation shapes on TPC-H-ish tables (§2.9/§2.10 analogs)
 # ---------------------------------------------------------------------------
 def q_o1_group_minmax(spark, sf_dir) -> DataFrame:
@@ -354,15 +254,6 @@ def q_s4_pagination_merge(spark, sf_dir) -> DataFrame:
     )
 
 
-def q_train_test_split(spark, sf_dir) -> DataFrame:
-    """T1/T2 seeded deterministic split (portable hash instead of RNG)."""
-    d = _docs(spark, sf_dir)
-    h = X.h64("concat('split', cast(doc_id as string))", "spark")
-    return d.select(
-        "doc_id",
-        F.expr(f"CASE WHEN {h} % 10 < 9 THEN 'train' ELSE 'test' END").alias("split"))
-
-
 def messy_url_sql(engine: str) -> str:
     """Deterministic messy-URL construction from doc_id (both engines):
     mixed-case scheme/host, www + default port, tracking params, fragment."""
@@ -397,53 +288,12 @@ def q_boilerplate_lines(spark, sf_dir) -> DataFrame:
     return out.select("doc_id", "kept_text", "n_lines_kept", "n_lines_removed")
 
 
-def q_smgt_seq2seq(spark, sf_dir) -> DataFrame:
-    """SMGT extended-task entities → seq2seq examples, over deterministic
-    synthetic annotations derived from the documents table. Exercises every
-    parse rule: targetText default, wrong-without-target error drop,
-    unknown-status drop, null-label drop (smgt.py:200-234,
-    task_builder.py:150-199)."""
-    ws = X.words("text", "spark")
-    ents = f"""transform(sequence(0, cast(size({ws}) / 8 as int) - 1),
-      i -> named_struct(
-        'detectionId', concat('det-', cast(i as string)),
-        'ocrStatus', CASE WHEN i % 5 = 4 THEN 'bogus'
-                          ELSE element_at(array('correct','unclear','wrong'),
-                                          cast(i % 3 as int) + 1) END,
-        'boxIxs', array(cast(i as int)),
-        'classId', cast(i % 4 as int),
-        'rawText', element_at({ws}, cast(i * 8 as int) + 1),
-        'targetText', CASE WHEN i % 2 = 0
-                           THEN upper(element_at({ws}, cast(i * 8 as int) + 1))
-                           END,
-        'label', CASE WHEN i % 7 = 6 THEN NULL
-                      ELSE concat('field', cast(i % 4 as string)) END))"""
-    ann = (
-        _docs(spark, sf_dir)
-        .filter(F.expr(f"size({ws}) >= 8"))
-        .select("doc_id", F.expr(ents).alias("entities"))
-    )
-    return smgt_to_seq2seq_examples(ann, keys=["doc_id"]).select(
-        "doc_id", "entity_ix", "class_name", "src_texts", "tgt_texts")
-
-
 # ---------------------------------------------------------------------------
-# Rows-only checks (non-SQL-expressible ops: splitter, G4, PDF)
+# Rows-only checks (non-SQL-expressible ops: splitter, PDF)
 # ---------------------------------------------------------------------------
 def q_split_windows(spark, sf_dir) -> DataFrame:
     pages = pages_view(_doc_words(spark, sf_dir))
     return split_pages_to_window_bounds(pages, max_content_seq_len=24)
-
-
-def q_g4_box_merge(spark, sf_dir) -> DataFrame:
-    _, anns = _g1_inputs(spark, sf_dir)
-    # widen anns so consecutive ones touch → multi-box groups exist
-    wide = anns.withColumn(
-        "abox", F.expr("struct(abox.x0 as x0, abox.y0 as y0, "
-                       "abox.x1 + 120 as x1, abox.y1 as y1)"))
-    return merge_annotation_boxes(wide).select(
-        "url", "class_id", "group_id",
-        F.size("ann_ixs").alias("n_members"), "x0", "x1")
 
 
 def q_pdf_metadata(spark, sf_dir) -> DataFrame:

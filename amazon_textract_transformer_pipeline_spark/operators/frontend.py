@@ -159,9 +159,9 @@ def _html_words(pages: list[list[list[str]]]) -> list[tuple[int, list[tuple]]]:
 
     Geometry model (stand-in for OCR boxes, validated 0-1 like
     ocr_engines/base.py:63-68): lines stacked vertically in reading order,
-    words laid left→right with width proportional to character count — so the
-    XY-cut reading-order sort (operators/geometry.py) recovers exactly the
-    parse order, which is the invariant the tests pin.
+    words laid left→right with width proportional to character count — so a
+    top-to-bottom, left-to-right sort of the boxes recovers exactly the parse
+    order.
     """
     out = []
     for p_ix, lines in enumerate(pages):

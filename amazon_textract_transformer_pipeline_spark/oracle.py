@@ -283,88 +283,6 @@ LEFT JOIN winners w ON w.url = u.url AND w.class_id = c.class_id
 LEFT JOIN multi m ON m.url = u.url AND m.class_id = c.class_id"""
 
 
-def _eval_tokens_ctes() -> str:
-    """driver_queries._eval_tokens replayed on the bridge word relation."""
-    key = "concat(url, '#', cast(page_num as varchar), '#', cast(word_pos as varchar))"
-    h1 = X.h64(f"concat('pad', {key})", "duck")
-    h2 = X.h64(f"concat('prd', {key})", "duck")
-    return f"""{WORDS_CTE},
-toks AS (
-  SELECT url || '#' || page_num::VARCHAR AS ex,
-         CASE WHEN {h1} % 13 = 0 THEN -100 ELSE pred_cls END AS label,
-         CASE WHEN {h2} % 10 < 7 THEN pred_cls
-              ELSE cast({h2} % {N_STUB_CLASSES} as int) END AS pred
-  FROM we
-)"""
-
-
-def eval_token_metrics_oracle() -> str:
-    other = N_STUB_CLASSES - 1
-    return f"""
-WITH {_eval_tokens_ctes()},
-perex AS (
-  SELECT ex,
-    sum(CASE WHEN label <> -100 THEN 1 ELSE 0 END) AS n_tok,
-    sum(CASE WHEN label <> -100 AND label = pred THEN 1 ELSE 0 END) AS n_cor,
-    sum(CASE WHEN label <> -100 AND (label <> {other} OR pred <> {other})
-        THEN 1 ELSE 0 END) AS n_foc,
-    sum(CASE WHEN label <> -100 AND (label <> {other} OR pred <> {other})
-        AND label = pred THEN 1 ELSE 0 END) AS n_fc
-  FROM toks GROUP BY ex
-),
-summ AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_examples,
-    sum(n_cor::DOUBLE / nullif(n_tok, 0)) / count(*) AS acc_raw,
-    CAST(sum(CASE WHEN n_foc > 0 THEN 1 ELSE 0 END) AS BIGINT)
-      AS n_focus_examples,
-    sum(CASE WHEN n_foc > 0 THEN n_fc::DOUBLE / n_foc END)
-      / sum(CASE WHEN n_foc > 0 THEN 1 ELSE 0 END) AS facc_raw
-  FROM perex
-)
-SELECT n_examples, round(acc_raw, 6) AS acc, n_focus_examples,
-       round(facc_raw, 6) AS focus_acc,
-       round(CASE WHEN facc_raw > 0 THEN facc_raw ELSE acc_raw - 1.0 END, 6)
-         AS focus_else_acc_minus_one
-FROM summ"""
-
-
-def eval_class_ratios_oracle() -> str:
-    return f"""
-WITH {_eval_tokens_ctes()},
-eff AS (
-  SELECT CASE WHEN label <> -100 THEN pred ELSE -100 END AS pred_class
-  FROM toks
-),
-counted AS (
-  SELECT pred_class, CAST(count(*) AS BIGINT) AS n_tokens
-  FROM eff WHERE pred_class <> -100 GROUP BY pred_class
-)
-SELECT pred_class, n_tokens,
-       round(n_tokens::DOUBLE / sum(n_tokens) OVER (), 6) AS ratio
-FROM counted"""
-
-
-def eval_seq2seq_acc_oracle() -> str:
-    dw = X.words("text", "duck")
-    h = X.h64("concat('s2s', cast(doc_id as varchar))", "duck")
-    return f"""
-WITH d AS (
-  SELECT doc_id, coalesce(({dw})[1], '') AS w1 FROM documents
-),
-pairs AS (
-  SELECT CASE WHEN {h} % 3 = 0 THEN concat('  ', upper(w1), ' ')
-              WHEN {h} % 3 = 1 THEN w1
-              ELSE concat(w1, 'x') END AS gen_text,
-         w1 AS target_text
-  FROM d
-)
-SELECT CAST(count(*) AS BIGINT) AS n_examples,
-       round(sum(CASE WHEN lower(trim(coalesce(gen_text, ''))) =
-                      lower(trim(coalesce(target_text, '')))
-                 THEN 1 ELSE 0 END)::DOUBLE / count(*), 6) AS acc
-FROM pairs"""
-
-
 def doc_confidence_oracle() -> str:
     return f"""
 WITH {VALUES_CTE},

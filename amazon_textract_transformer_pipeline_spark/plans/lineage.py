@@ -12,10 +12,11 @@ unit of resume is one S3 object; here it is a deterministic url-hash
   is deterministic, SURVEY §7 "Deterministic IDs"), giving exactly-once
   output without a transactional table format. On a real cluster the same
   layout maps 1:1 onto Iceberg ``MERGE``/``replaceWhere``.
-* a JSON-lines lineage log records (bucket, n_rows, status, run_id,
-  wall_ms_total_write) per bucket; :meth:`LineageStore.remaining` filters
-  the completed buckets away so a restarted job touches only unfinished
-  buckets.
+* a JSON-lines lineage log records (bucket, n_buckets, n_rows, status,
+  run_id, wall_ms_total_write) per bucket; :meth:`LineageStore.remaining`
+  filters the completed buckets away so a restarted job touches only
+  unfinished buckets. A bucket id means something only under the bucket
+  count that wrote it, so resuming with another count raises.
 * row counts per bucket come from the parquet footers of the committed
   files (:meth:`LineageStore.disk_counts`), read on the driver: recording
   and validating a pass runs no Spark job beyond the write itself.
@@ -46,6 +47,14 @@ def _end_torn_line(path: str) -> None:
         data = f.read()
         if data and not data.endswith(b"\n"):
             f.truncate(data.rfind(b"\n") + 1)
+
+
+def _completed(recs: list[dict]) -> set[int]:
+    """Buckets whose last record in ``recs`` is ``ok``."""
+    state: dict[int, str] = {}
+    for rec in recs:
+        state[int(rec["bucket"])] = rec.get("status", "")
+    return {b for b, s in state.items() if s == "ok"}
 
 
 class LineageStore:
@@ -79,10 +88,7 @@ class LineageStore:
         return recs
 
     def completed_buckets(self) -> set[int]:
-        state: dict[int, str] = {}
-        for rec in self._records():
-            state[int(rec["bucket"])] = rec.get("status", "")
-        return {b for b, s in state.items() if s == "ok"}
+        return _completed(self._records())
 
     def record(self, run_id: str, rows: list[dict]) -> None:
         os.makedirs(self.lineage_dir, exist_ok=True)
@@ -93,14 +99,18 @@ class LineageStore:
             for i, r in enumerate(rows):
                 f.write(json.dumps({**r, "ts": ts + i}) + "\n")
 
-    def recorded_counts(self) -> dict[int, int]:
-        counts: dict[int, int] = {}
+    def _ok_records(self) -> dict[int, dict]:
+        """Per bucket, its last ``ok`` record, unless demoted since."""
+        last: dict[int, dict] = {}
         for rec in self._records():
             if rec.get("status") == "ok":
-                counts[int(rec["bucket"])] = int(rec["n_rows"])
+                last[int(rec["bucket"])] = rec
             elif rec.get("status") == "invalid":
-                counts.pop(int(rec["bucket"]), None)
-        return counts
+                last.pop(int(rec["bucket"]), None)
+        return last
+
+    def recorded_counts(self) -> dict[int, int]:
+        return {b: int(r["n_rows"]) for b, r in self._ok_records().items()}
 
     def disk_counts(self) -> dict[int, int]:
         """Rows per ``bucket=`` directory of the results, summed from the
@@ -132,18 +142,21 @@ class LineageStore:
         demoted (status='invalid') so the next run recomputes it. Guards
         against out-of-band data loss the commit log can't see; a damaged
         part file demotes its own bucket only. Reads footers only, so
-        ``spark`` is not used."""
-        recorded = self.recorded_counts()
+        ``spark`` is not used. A demotion carries the ``n_buckets`` of the
+        record it undoes: it compares bucket directories only, so running it
+        with another bucket count does not tie the log to that count."""
+        recorded = self._ok_records()
         if not recorded:
             return set()
         actual = self.disk_counts()
-        bad = {b for b, n in recorded.items() if actual.get(b, -1) != n}
+        bad = sorted(b for b, r in recorded.items()
+                     if actual.get(b, -1) != int(r["n_rows"]))
         if bad:
-            self.record(
-                "validate",
-                [{"bucket": int(b), "status": "invalid"} for b in sorted(bad)],
-            )
-        return bad
+            self.record("validate", [
+                {"bucket": b, "status": "invalid",
+                 "n_buckets": recorded[b].get("n_buckets", self.n_buckets)}
+                for b in bad])
+        return set(bad)
 
     # -- planning ----------------------------------------------------------
     def with_buckets(self, pages: DataFrame) -> DataFrame:
@@ -152,8 +165,20 @@ class LineageStore:
     def remaining(self, pages: DataFrame) -> DataFrame:
         """Anti-join completed work away *before* the expensive UDF stages —
         the filter is on the deterministic bucket column, so Catalyst pushes
-        it into the scan when the input is already bucket-partitioned."""
-        done = self.completed_buckets()
+        it into the scan when the input is already bucket-partitioned.
+
+        Raises ``ValueError`` if the log holds records of another bucket
+        count: planning with this one would write pages a second time under
+        new bucket ids. Records without ``n_buckets`` are not checked."""
+        recs = self._records()
+        other = sorted({r["n_buckets"] for r in recs if "n_buckets" in r}
+                       - {self.n_buckets})
+        if other:
+            raise ValueError(
+                f"lineage at {self.root} was written with n_buckets="
+                f"{', '.join(map(str, other))}, this store has n_buckets="
+                f"{self.n_buckets}; resume with the same count or a new root")
+        done = _completed(recs)
         bucketed = self.with_buckets(pages)
         if not done:
             return bucketed
@@ -186,6 +211,7 @@ class LineageStore:
         rows = [
             {
                 "bucket": b,
+                "n_buckets": self.n_buckets,
                 "n_rows": n,
                 "status": "ok",
                 "run_id": run_id,

@@ -27,8 +27,7 @@ PAGES_INPUT_SCHEMA = T.StructType(
 # §1.2 word-sequence view. One row per document; pages nested so the whole
 # extraction path is shuffle-free (no cross-doc operator exists in the
 # reference, SURVEY.md §2.9). Boxes are 0-1 page-relative TLHW doubles
-# (Textract native, ocr_engines/base.py:131-141); the 0-1000 int projection
-# (data/geometry.py:50-69) is a derived column, see operators/geometry.py.
+# (Textract native, ocr_engines/base.py:131-141).
 # ---------------------------------------------------------------------------
 BOX_SCHEMA = T.StructType(
     [
@@ -61,60 +60,6 @@ DOC_WORDS_SCHEMA = T.StructType(
         T.StructField("url", T.StringType(), False),
         T.StructField("n_pages", T.IntegerType(), False),
         T.StructField("pages", T.ArrayType(PAGE_SCHEMA), False),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# §1.1 Textract-style block tree (serialized sink form; FIXTURES.md §2).
-# ---------------------------------------------------------------------------
-GEOMETRY_SCHEMA = T.StructType(
-    [
-        T.StructField("BoundingBox", T.StructType(
-            [
-                T.StructField("Width", T.DoubleType(), False),
-                T.StructField("Height", T.DoubleType(), False),
-                T.StructField("Left", T.DoubleType(), False),
-                T.StructField("Top", T.DoubleType(), False),
-            ]
-        ), False),
-        T.StructField("Polygon", T.ArrayType(T.StructType(
-            [
-                T.StructField("X", T.DoubleType(), False),
-                T.StructField("Y", T.DoubleType(), False),
-            ]
-        )), False),
-    ]
-)
-
-BLOCK_SCHEMA = T.StructType(
-    [
-        T.StructField("Id", T.StringType(), False),
-        T.StructField("BlockType", T.StringType(), False),  # PAGE | LINE | WORD
-        T.StructField("Text", T.StringType(), True),
-        T.StructField("Confidence", T.DoubleType(), True),
-        T.StructField("Page", T.IntegerType(), False),
-        T.StructField("Geometry", GEOMETRY_SCHEMA, False),
-        T.StructField("Relationships", T.ArrayType(T.StructType(
-            [
-                T.StructField("Type", T.StringType(), False),
-                T.StructField("Ids", T.ArrayType(T.StringType()), False),
-            ]
-        )), True),
-        # Enrichment fields (inference.py:490-492), null until the model stage.
-        T.StructField("PredictedClass", T.IntegerType(), True),
-        T.StructField("PredictedClassConfidence", T.DoubleType(), True),
-        T.StructField("ClassificationProbabilities", T.ArrayType(T.DoubleType()), True),
-    ]
-)
-
-TEXTRACT_DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("DetectDocumentTextModelVersion", T.StringType(), False),
-        T.StructField("DocumentMetadata", T.StructType(
-            [T.StructField("Pages", T.IntegerType(), False)]
-        ), False),
-        T.StructField("JobStatus", T.StringType(), False),
-        T.StructField("Blocks", T.ArrayType(BLOCK_SCHEMA), False),
     ]
 )
 

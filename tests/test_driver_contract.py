@@ -93,3 +93,8 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert set(df.columns) == {"url", "extracted_text", "n_pages"}
+
+
+def test_query_list_fits_driver_window():
+    # the driver validates only the first 50 keys of queries()
+    assert len(entrymod.queries()) <= 50

@@ -1,10 +1,8 @@
-"""P4-P6 naming/URI ops, T1-T7 training ops, E5-E6+I6 normalization,
-XY-cut reading order, S1/S2 sources."""
+"""P4-P6 naming/URI ops, E5-E6+I6 normalization, S1/S2 sources."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from amazon_textract_transformer_pipeline_spark.config import field_config_df
 from amazon_textract_transformer_pipeline_spark.functions.naming import (
@@ -13,7 +11,6 @@ from amazon_textract_transformer_pipeline_spark.functions.naming import (
     remap_uri_prefix,
     snake_to_pascal,
 )
-from amazon_textract_transformer_pipeline_spark.operators import training as T
 from amazon_textract_transformer_pipeline_spark.operators.entities import (
     extract_mentions,
     normalize_mentions,
@@ -118,76 +115,6 @@ def test_normalize_mentions_dedup_and_rawtext(spark):
     assert acc.value == 2
 
 
-def test_stratified_sample_and_split(spark):
-    m = spark.createDataFrame(
-        [(f"d{i}", p) for i in range(200) for p in (1, 2, 3)],
-        "source_ref string, page_num int",
-    )
-    excl = spark.createDataFrame([(f"d{i}",) for i in range(100)],
-                                 "source_ref string")
-    s = T.stratified_first_page_sample(m, 0.5, seed=7, exclude=excl).cache()
-    assert s.filter("page_num <> 1").count() == 0
-    assert s.join(excl, "source_ref", "left_semi").count() == 0
-    assert 20 <= s.count() <= 80  # ~50 of the 100 remaining firsts
-    # determinism
-    s2 = T.stratified_first_page_sample(m, 0.5, seed=7, exclude=excl)
-    assert s.exceptAll(s2).count() == 0
-
-    tr, te = T.train_test_split(m, 0.9, seed=1)
-    assert tr.count() + te.count() == 600
-
-
-def test_manifest_union_and_validation(spark):
-    m1 = spark.createDataFrame([("a", "s3://x/1", "labels-v1")],
-                               "source_ref string, textract_ref string, my_label string")
-    m2 = spark.createDataFrame([("b", "s3://x/2")],
-                               "source_ref string, textract_ref string")
-    u = T.consolidate_manifests([m1, m2], {"my_label": "label"})
-    assert set(u.columns) == {"source_ref", "textract_ref", "label"}
-    assert u.count() == 2
-    uris = T.pre_annotated_uris([m1, m2])
-    assert [r.textract_ref for r in uris.collect()] == ["s3://x/1", "s3://x/2"]
-
-    pages = spark.createDataFrame(
-        [("a", 1), ("a", 2), ("a", 3), ("b", 1), ("b", 3)],
-        "source_ref string, page_num int")
-    v = {r.source_ref: r.pages_valid for r in T.validate_page_sequences(pages).collect()}
-    assert v == {"a": True, "b": False}
-
-
-def test_synthetic_date_pairs(spark):
-    df = T.synthetic_date_pairs(spark, 50).cache()
-    assert df.count() == 50
-    rows = df.collect()
-    from amazon_textract_transformer_pipeline_spark.operators.seq2seq import (
-        rule_based_date_normalizer,
-    )
-    outs = rule_based_date_normalizer([r.src_text for r in rows])
-    ok = sum(1 for o, r in zip(outs, rows) if o == r.tgt_text)
-    assert ok >= 40  # normalizer solves most generated formats
-
-
-def test_xy_cut_reading_order(spark):
-    """Shuffled words on a page re-sort into visual reading order."""
-    from amazon_textract_transformer_pipeline_spark.operators.geometry import (
-        sort_words_reading_order,
-    )
-
-    def w(t, left, top, lid):
-        return {"text": t, "conf": 90.0, "id": t, "line_id": lid,
-                "box": {"left": left, "top": top, "width": 0.05, "height": 0.02}}
-
-    # two visual rows; given shuffled
-    words = [w("c", 0.5, 0.101, 0), w("a", 0.1, 0.10, 0), w("e", 0.3, 0.30, 1),
-             w("b", 0.3, 0.102, 0), w("d", 0.1, 0.301, 1)]
-    df = spark.createDataFrame(
-        [(words,)],
-        "words array<struct<text:string,conf:double,id:string,line_id:int,"
-        "box:struct<left:double,top:double,width:double,height:double>>>")
-    got = df.select(sort_words_reading_order(F.col("words")).alias("s")).collect()[0].s
-    assert [x.text for x in got] == ["a", "b", "c", "d", "e"]
-
-
 def test_binary_and_manifest_sources(spark, tmp_path):
     from amazon_textract_transformer_pipeline_spark.sources.readers import (
         read_document_corpus,
@@ -221,16 +148,3 @@ def test_hf_generate_fn_gated():
 
     with pytest.raises(NotImplementedError, match="transformers"):
         hf_generate_fn("some/checkpoint")
-
-
-def test_synthetic_date_pairs_distributed_and_deterministic(spark):
-    """VERDICT r2 #8: spark.range-based generation — identical rows across
-    invocations at n=10k, and the plan is a Range scan (no driver-side
-    createDataFrame / LogicalRDD materialization)."""
-    a = T.synthetic_date_pairs(spark, 10_000, seed=7)
-    b = T.synthetic_date_pairs(spark, 10_000, seed=7)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    plan = a._jdf.queryExecution().analyzed().toString()
-    assert "Range" in plan and "LogicalRDD" not in plan
-    c = T.synthetic_date_pairs(spark, 1000, seed=8)
-    assert c.select("tgt_text").distinct().count() > 900  # spread of dates

@@ -5,7 +5,9 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from amazon_textract_transformer_pipeline_spark.plans.lineage import LineageStore
@@ -298,3 +300,27 @@ def test_torn_lineage_line_is_recomputed_not_fatal(spark, pages_df,
     assert store.validate(spark) == set()
     got = {r.url: r for r in spark.read.parquet(root + "/results").collect()}
     assert len(got) == 300 and got == want
+
+
+def test_resume_with_other_bucket_count_raises(spark, pages_df, tmp_path):
+    """A store written with 64 buckets, one bucket lost, validated and then
+    resumed with 16: the 16-bucket pass would rewrite bucket 5 with other
+    pages and duplicate them. The run raises before it writes, and a
+    resume with the original count heals the store."""
+    root = str(tmp_path / "rebucket")
+    stage = extraction_stage_for_lineage()
+    LineageStore(root, n_buckets=64).run(spark, pages_df, stage)
+    shutil.rmtree(root + "/results/bucket=5")
+    before = sorted(spark.read.parquet(root + "/results").collect())
+    assert 0 < len(before) < 300
+
+    assert LineageStore(root, n_buckets=16).validate(spark) == {5}
+    with pytest.raises(ValueError, match="n_buckets=64.*n_buckets=16"):
+        LineageStore(root, n_buckets=16).run(spark, pages_df, stage)
+    assert sorted(spark.read.parquet(root + "/results").collect()) == before
+
+    store = LineageStore(root, n_buckets=64)
+    assert store.run(spark, pages_df, stage)["buckets_done"] == 1
+    urls = [r.url for r in
+            spark.read.parquet(root + "/results").select("url").collect()]
+    assert len(urls) == len(set(urls)) == 300

@@ -149,49 +149,6 @@ def test_tokenizer_reconstruction(lengths):
         assert len(pieces) >= 1
 
 
-# ---------------------------------------------------------------------------
-# UniversalBox reconstruction properties (boxes.py:11-111 semantics)
-# ---------------------------------------------------------------------------
-_coord = st.floats(0.0, 1.0, allow_nan=False)
-
-
-@given(top=_coord, left=_coord, h=st.floats(0.001, 1.0),
-       w=st.floats(0.001, 1.0))
-@settings(max_examples=200, deadline=None)
-def test_ubox_any_two_of_three_agree(top, left, h, w):
-    """Every sufficient constructor subset reconstructs the same box, and
-    re-serializing through any style roundtrips."""
-    from amazon_textract_transformer_pipeline_spark.operators.uboxes import UBox
-
-    full = UBox(top=top, left=left, height=h, width=w)
-    variants = [
-        UBox(top=top, bottom=full.bottom, left=left, right=full.right),
-        UBox(bottom=full.bottom, height=h, right=full.right, width=w),
-        UBox(box=full.to_dict("TLHW")),
-        UBox(box=full.to_dict("tbrl")),
-        UBox(box=full.to_dict("THWBRL")),  # over-specified but consistent
-    ]
-    for v in variants:
-        for attr in ("top", "left", "height", "width", "bottom", "right"):
-            assert abs(getattr(v, attr) - getattr(full, attr)) < 1e-9
-
-
-@given(st.lists(st.tuples(_coord, _coord, st.floats(0.001, 0.5),
-                          st.floats(0.001, 0.5)),
-                min_size=1, max_size=8))
-@settings(max_examples=100, deadline=None)
-def test_ubox_aggregate_contains_all(boxes):
-    """The aggregate box contains every input box (same orientation)."""
-    from amazon_textract_transformer_pipeline_spark.operators.uboxes import UBox
-
-    ubs = [UBox(top=t, left=l, height=h, width=w) for t, l, h, w in boxes]
-    agg = UBox.aggregate(ubs)
-    eps = 1e-9
-    for b in ubs:
-        assert agg.top <= b.top + eps and agg.left <= b.left + eps
-        assert agg.bottom >= b.bottom - eps and agg.right >= b.right - eps
-
-
 # --------------------------------------------------------------------------
 # image codecs (functions/codecs.py): encode→decode is the identity for
 # opaque pixels, any shape, any PNG filter choice

@@ -1,5 +1,4 @@
-"""Text stats, Gopher / C4 / repetition filters, vocab top-k, and Textract
-polygon-only geometry."""
+"""Text stats, Gopher / C4 / repetition filters and vocab top-k."""
 
 from __future__ import annotations
 
@@ -15,40 +14,6 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").cache()
-
-
-def test_blocks_polygon_only_geometry(spark):
-    """Third-party Textract JSON with Polygon but no BoundingBox still
-    parses: the box derives from the polygon envelope."""
-    import json as _json
-
-    from amazon_textract_transformer_pipeline_spark.operators.blocks import (
-        blocks_to_words,
-        parse_textract_json,
-    )
-
-    poly = [{"X": 0.2, "Y": 0.1}, {"X": 0.5, "Y": 0.1},
-            {"X": 0.5, "Y": 0.3}, {"X": 0.2, "Y": 0.3}]
-    doc = {
-        "DetectDocumentTextModelVersion": "1.0",
-        "DocumentMetadata": {"Pages": 1},
-        "JobStatus": "SUCCEEDED",
-        "Blocks": [
-            {"Id": "L1", "BlockType": "LINE", "Page": 1,
-             "Relationships": [{"Type": "CHILD", "Ids": ["W1"]}]},
-            {"Id": "W1", "BlockType": "WORD", "Text": "hello",
-             "Confidence": 99.0, "Page": 1,
-             "Geometry": {"Polygon": poly}},
-        ],
-    }
-    df = spark.createDataFrame([("u1", _json.dumps(doc))],
-                               ["url", "textract_json"])
-    dw = blocks_to_words(parse_textract_json(df)).collect()
-    assert len(dw) == 1
-    box = dw[0].pages[0]["words"][0]["box"]
-    assert (box["left"], box["top"]) == (0.2, 0.1)
-    assert abs(box["width"] - 0.3) < 1e-12
-    assert abs(box["height"] - 0.2) < 1e-12
 
 
 def test_text_stats(spark, docs):
