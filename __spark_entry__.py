@@ -39,11 +39,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pdf_extract": Q.q_pdf_extract,
         "gopher_filters": Q.q_gopher_filters,
         "c4_filters": Q.q_c4_filters,
-        "bpe_merges": Q.q_bpe_merges,
-        "bpe_tokenize": Q.q_bpe_tokenize,
         "winnow_fingerprints": Q.q_winnow_fingerprints,
-        "pagerank": Q.q_pagerank,
-        "export_shards": Q.q_export_shards,
         "decontaminate_mask": Q.q_decontaminate_mask,
         "exact_substring_dedup": Q.q_exact_substring_dedup,
         "pack_sequences": Q.q_pack_sequences,
@@ -82,13 +78,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tumbling_windows": Q.q_tumbling_windows,
         "session_windows": Q.q_session_windows,
         "s4_pagination_merge": Q.q_s4_pagination_merge,
-        # --- URL and line cleaning, quality scoring, sampling, charsets
+        # --- URL and line cleaning, sampling, charsets
         "canonical_urls": Q.q_canonical_urls,
         "boilerplate_lines": Q.q_boilerplate_lines,
         "c4_span_dedup": Q.q_c4_span_dedup,
-        "lm_perplexity": Q.q_lm_perplexity,
-        "quality_nb": Q.q_quality_nb,
-        "tfidf_top_terms": Q.q_tfidf_top_terms,
         "domain_blocklist": Q.q_domain_blocklist,
         "doc_line_dedup": Q.q_doc_line_dedup,
         "mixture_sample": Q.q_mixture_sample,
@@ -592,89 +585,6 @@ SELECT n.doc_id,
   cast(n.n_sent - coalesce(a.n_sent_kept, 0) AS bigint) AS n_sent_removed
 FROM sdn n LEFT JOIN sdagg a ON a.doc_id = n.doc_id"""
 
-    # lm_perplexity oracle: the same stupid-backoff bigram model trained
-    # and scored in DuckDB (operators/lm.py constants shared).
-    from amazon_textract_transformer_pipeline_spark.driver_queries import (
-        LM_REF_MOD,
-    )
-    from amazon_textract_transformer_pipeline_spark.operators.lm import (
-        BACKOFF,
-        UNSEEN_SCALE,
-        ppl_bucket_sql,
-    )
-
-    dwl = X.words("lower(text)", "duck")
-
-    def lm_pairs(flt: str) -> str:
-        return f"""
-    SELECT doc_id, u.w1 AS w1, u.w2 AS w2 FROM (
-      SELECT doc_id, unnest(list_transform(range(1, len(ws)),
-             i -> {{'w1': ws[i], 'w2': ws[i + 1]}})) AS u
-      FROM (SELECT doc_id, {dwl} AS ws FROM documents{flt})
-      WHERE len(ws) >= 2)"""
-
-    ppl = "round(exp(-(a.ll / a.n_pairs)), 6)"
-    sqls["lm_perplexity"] = f"""
-WITH lmuni AS MATERIALIZED (
-  SELECT w, count(*) AS c1 FROM (
-    SELECT unnest({dwl}) AS w FROM documents
-    WHERE doc_id % {LM_REF_MOD} = 0)
-  GROUP BY w
-),
-lmtot AS (SELECT cast(sum(c1) AS double) AS n_tokens FROM lmuni),
-lmbig AS MATERIALIZED (
-  SELECT w1, w2, count(*) AS c2
-  FROM ({lm_pairs(f' WHERE doc_id % {LM_REF_MOD} = 0')})
-  GROUP BY w1, w2
-),
-lmp AS ({lm_pairs('')}),
-lms AS (
-  SELECT p.doc_id,
-    ln(CASE WHEN b.c2 IS NOT NULL THEN b.c2 / cast(u1.c1 AS double)
-        ELSE {BACKOFF} * coalesce(u2.c1 / t.n_tokens,
-                                  1.0 / ({UNSEEN_SCALE} * t.n_tokens)) END)
-      AS lp
-  FROM lmp p
-  LEFT JOIN lmbig b ON b.w1 = p.w1 AND b.w2 = p.w2
-  LEFT JOIN lmuni u1 ON u1.w = p.w1
-  LEFT JOIN lmuni u2 ON u2.w = p.w2
-  CROSS JOIN lmtot t
-),
-lma AS (
-  SELECT doc_id, count(*) AS n_pairs, sum(lp) AS ll FROM lms GROUP BY doc_id
-)
-SELECT d.doc_id,
-  cast(coalesce(a.n_pairs, 0) AS bigint) AS n_pairs,
-  round(a.ll, 6) AS logprob_sum,
-  {ppl} AS perplexity,
-  {ppl_bucket_sql(ppl)} AS ppl_bucket
-FROM documents d LEFT JOIN lma a ON a.doc_id = d.doc_id"""
-
-    # quality_nb oracle: the same smoothed multinomial NB trained and
-    # scored in DuckDB (operators/quality.py builds the SQL so constants
-    # and formula stay single-sourced).
-    from amazon_textract_transformer_pipeline_spark.driver_queries import (
-        NB_LABEL_SQL,
-    )
-    from amazon_textract_transformer_pipeline_spark.operators.quality import (
-        nb_oracle_sql,
-    )
-
-    sqls["quality_nb"] = nb_oracle_sql(
-        labeled_cte=(f"SELECT doc_id, text, {NB_LABEL_SQL} AS is_hq "
-                     f"FROM documents WHERE doc_id % 2 = 0"),
-        score_cte="SELECT doc_id, text FROM documents",
-    )
-
-    # tfidf_top_terms oracle: same tf/df aggregates, same deterministic
-    # (score desc, term asc) rank (single-sourced builder).
-    from amazon_textract_transformer_pipeline_spark.operators.quality import (
-        tfidf_oracle_sql,
-    )
-
-    sqls["tfidf_top_terms"] = tfidf_oracle_sql(
-        "SELECT doc_id, text FROM documents")
-
     # doc_line_dedup oracle: same builder + same deterministic line-laden
     # text (indexed-lambda keep-first filter in both dialects).
     from amazon_textract_transformer_pipeline_spark.driver_queries import (
@@ -947,33 +857,6 @@ FROM docw d
 LEFT JOIN agg a ON a.doc_id = d.doc_id
 LEFT JOIN sp s ON s.doc_id = d.doc_id"""
 
-    # export_shards oracle: identical hash-order running-sum chunking
-    # (single-sourced builder).
-    from amazon_textract_transformer_pipeline_spark.driver_queries import (
-        EXPORT_SHARD_BYTES,
-    )
-    from amazon_textract_transformer_pipeline_spark.operators.export import (
-        export_oracle_sql,
-    )
-
-    sqls["export_shards"] = export_oracle_sql(
-        "SELECT doc_id, text FROM documents", EXPORT_SHARD_BYTES)
-
-    # pagerank oracle: unrolled-round replay from the single-sourced
-    # builder; final 6-dp round on top of the per-round 9-dp pinning.
-    from amazon_textract_transformer_pipeline_spark.driver_queries import (
-        PAGERANK_EDGES_SQL,
-        PAGERANK_ITERS,
-    )
-    from amazon_textract_transformer_pipeline_spark.operators.graph import (
-        pagerank_oracle_sql,
-    )
-
-    sqls["pagerank"] = (
-        "SELECT node, round(rank, 6) AS rank FROM ("
-        + pagerank_oracle_sql(PAGERANK_EDGES_SQL, n_iter=PAGERANK_ITERS)
-        + ")")
-
     # winnow_fingerprints oracle: single-sourced builder (same selection
     # rule, same struct-min window) from operators/dedup.py.
     from amazon_textract_transformer_pipeline_spark.operators.dedup import (
@@ -982,23 +865,6 @@ LEFT JOIN sp s ON s.doc_id = d.doc_id"""
 
     sqls["winnow_fingerprints"] = winnow_oracle_sql(
         "SELECT doc_id, text FROM documents", k=5, w=4)
-
-    # BPE oracles: the unrolled-round replay is generated by the same
-    # module that defines the Spark semantics (single-sourced greedy
-    # fold / winner rule).
-    from amazon_textract_transformer_pipeline_spark.driver_queries import (
-        BPE_APPLY_MERGES,
-        BPE_GATE_MERGES,
-    )
-    from amazon_textract_transformer_pipeline_spark.operators.bpe import (
-        bpe_apply_oracle_sql,
-        bpe_oracle_sql,
-    )
-
-    sqls["bpe_merges"] = bpe_oracle_sql(
-        "SELECT doc_id, text FROM documents", BPE_GATE_MERGES)
-    sqls["bpe_tokenize"] = bpe_apply_oracle_sql(
-        "SELECT doc_id, text FROM documents", BPE_APPLY_MERGES)
 
     # vocab_top_k oracle: same token aggregate + deterministic
     # (count desc, token asc) rank in DuckDB.

@@ -452,28 +452,6 @@ def q_domain_blocklist(spark, sf_dir) -> DataFrame:
         "doc_id", "host", "blocked", "blocked_domain")
 
 
-LM_REF_MOD = 4  # LM reference corpus = docs with doc_id % LM_REF_MOD == 0
-
-
-def q_lm_perplexity(spark, sf_dir) -> DataFrame:
-    """CCNet-style LM quality scoring: stupid-backoff bigram LM trained
-    on the quarter of the corpus with doc_id % 4 == 0, perplexity scored
-    for every document, head/middle/tail bucketed on fixed thresholds.
-    Training = two count shuffles; scoring = three shuffle hash joins on
-    uniform token keys; oracle replays the identical model in DuckDB."""
-    from .operators.lm import (
-        perplexity_score,
-        train_bigram_lm,
-        with_ppl_bucket,
-    )
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    ref = docs.filter(f"doc_id % {LM_REF_MOD} = 0")
-    uni, big, tot = train_bigram_lm(ref)
-    return with_ppl_bucket(perplexity_score(docs, uni, big, tot)).select(
-        "doc_id", "n_pairs", "logprob_sum", "perplexity", "ppl_bucket")
-
-
 #: exact_substring_dedup gate window (13 words keeps the planted blocks
 #: short; the operator default is the paper's 50).
 EXSUB_NGRAM = 13
@@ -507,46 +485,6 @@ def q_exact_substring_dedup(spark, sf_dir) -> DataFrame:
     return dedup.exact_substring_dedup(docs, n=EXSUB_NGRAM)
 
 
-#: pagerank gate edges: deterministic sparse host graph with dangling
-#: nodes (dst residues 23-28 never appear as src) and self-loops.
-PAGERANK_EDGES_SQL = ("SELECT doc_id % 23 AS src, "
-                      "(doc_id * doc_id + 1) % 29 AS dst FROM documents")
-PAGERANK_ITERS = 8
-
-
-def q_pagerank(spark, sf_dir) -> DataFrame:
-    """Host-graph PageRank over a deterministic synthetic edge set:
-    8 relational rounds, dangling mass redistributed uniformly, ranks
-    pinned to 9 dp per round in BOTH engines so float wobble cannot
-    compound. Output rounded to 6 dp."""
-    from .operators.graph import pagerank
-
-    edges = _docs(spark, sf_dir).select(
-        F.expr("doc_id % 23").alias("src"),
-        F.expr("(doc_id * doc_id + 1) % 29").alias("dst"))
-    return pagerank(edges, n_iter=PAGERANK_ITERS).select(
-        "node", F.round("rank", 6).alias("rank"))
-
-
-#: export gate shard budget: small enough that sf0.01 yields many
-#: shards with the overflow-by-at-most-one-doc edge exercised.
-EXPORT_SHARD_BYTES = 65536
-
-
-def q_export_shards(spark, sf_dir) -> DataFrame:
-    """Deterministic size-bounded shard assignment for corpus release:
-    hash-ordered running byte sum chunked by the shard budget, manifest
-    stats per shard. The running sum is the bucketed two-pass scheme
-    (export.assign_shards: per-bucket partial sums + a bucket-offset
-    broadcast — NO global-order window) + one map-side-partial
-    aggregate; DuckDB replays the identical arithmetic."""
-    from .operators.export import assign_shards, shard_manifest
-
-    return shard_manifest(assign_shards(
-        _docs(spark, sf_dir).select("doc_id", "text"),
-        shard_bytes=EXPORT_SHARD_BYTES))
-
-
 def q_winnow_fingerprints(spark, sf_dir) -> DataFrame:
     """Winnowing (MOSS) fingerprints over the documents corpus: char
     5-grams, window 4, rightmost-minimal selection per full window —
@@ -554,72 +492,6 @@ def q_winnow_fingerprints(spark, sf_dir) -> DataFrame:
     replays the identical struct-min selection."""
     return dedup.winnow_fingerprints(
         _docs(spark, sf_dir).select("doc_id", "text"), k=5, w=4)
-
-
-#: bpe_merges gate depth (operator takes any k; 6 keeps the unrolled
-#: DuckDB oracle readable) and the pinned literal merge list for the
-#: apply gate (chained merges: th -> the -> the</w>).
-BPE_GATE_MERGES = 6
-BPE_APPLY_MERGES = [("t", "h"), ("th", "e"), ("the", "</w>"), ("e", "s")]
-
-
-def q_bpe_merges(spark, sf_dir) -> DataFrame:
-    """Distributed BPE tokenizer fitting: learn the first 6 merges over
-    the documents corpus — one corpus-scale word-count shuffle, then 6
-    relational rounds over the vocabulary relation (pair-count agg +
-    broadcast 1-row winner + greedy merge fold). Winner rule (count
-    desc, left asc, right asc) is fully deterministic; DuckDB replays
-    the identical unrolled rounds."""
-    from .operators.bpe import learn_bpe_merges
-
-    return learn_bpe_merges(_docs(spark, sf_dir), BPE_GATE_MERGES)
-
-
-def q_bpe_tokenize(spark, sf_dir) -> DataFrame:
-    """BPE tokenization with a pinned literal merge list (the LSH-planes
-    pattern: the fitted model is plan-time constants), map-only. The
-    chained merges exercise rank-order application — 'the</w>' can only
-    form after 'th' and 'the'."""
-    from .operators.bpe import apply_bpe_merges
-
-    toks = apply_bpe_merges(
-        _docs(spark, sf_dir).select("doc_id", "text"), BPE_APPLY_MERGES)
-    return toks.select(
-        "doc_id",
-        F.expr("concat_ws(' ', tokens)").alias("tokenized"),
-        F.expr("cast(size(tokens) as bigint)").alias("n_tokens"))
-
-
-def q_tfidf_top_terms(spark, sf_dir) -> DataFrame:
-    """Per-doc top-5 tf-idf terms: two count aggregates on uniform keys
-    + one term join + one per-doc window; (score desc, term asc) rank is
-    fully deterministic. DuckDB replays the identical model."""
-    from .operators.quality import tfidf_top_terms
-
-    return tfidf_top_terms(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-#: quality_nb gate: training set = docs with doc_id % 2 == 0, labeled
-#: high-quality when the LOWERCASED text contains ' the ' — a real
-#: lexical signal (not a statistically-identical split), expressible
-#: verbatim in both engines.
-NB_LABEL_SQL = "contains(lower(text), ' the ')"
-
-
-def q_quality_nb(spark, sf_dir) -> DataFrame:
-    """GPT-3-style corpus-selection classifier: multinomial Naive Bayes
-    trained on the even-id half (labeled by a lexical property), log-odds
-    scored for EVERY document. Training = one token-count shuffle;
-    scoring = one shuffle join on the uniform token key + a per-doc agg;
-    the scalar stats row rides a broadcast cross join. Oracle replays
-    the identical smoothed model in DuckDB."""
-    from .operators.quality import nb_quality_score, train_nb
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    labeled = docs.filter("doc_id % 2 = 0").withColumn(
-        "is_hq", F.expr(NB_LABEL_SQL))
-    wc, stats = train_nb(labeled)
-    return nb_quality_score(docs, wc, stats)
 
 
 def c4_span_text_sql() -> str:

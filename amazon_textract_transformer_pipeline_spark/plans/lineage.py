@@ -170,7 +170,13 @@ class LineageStore:
         Raises ``ValueError`` if the log holds records of another bucket
         count: planning with this one would write pages a second time under
         new bucket ids. Records without ``n_buckets`` are not checked."""
-        recs = self._records()
+        return self._plan(pages, self._records())[1]
+
+    def _plan(self, pages: DataFrame,
+              recs: list[dict]) -> tuple[set[int], DataFrame]:
+        """(completed buckets, bucketed pages without them) from the
+        lineage records ``recs``, after the bucket-count check of
+        :meth:`remaining`."""
         other = sorted({r["n_buckets"] for r in recs if "n_buckets" in r}
                        - {self.n_buckets})
         if other:
@@ -181,8 +187,8 @@ class LineageStore:
         done = _completed(recs)
         bucketed = self.with_buckets(pages)
         if not done:
-            return bucketed
-        return bucketed.filter(~F.col("bucket").isin(sorted(done)))
+            return done, bucketed
+        return done, bucketed.filter(~F.col("bucket").isin(sorted(done)))
 
     # -- execution ---------------------------------------------------------
     def run(self, spark: SparkSession, pages: DataFrame, stage_fn,
@@ -198,8 +204,8 @@ class LineageStore:
         retry).
         """
         run_id = run_id or time.strftime("%Y%m%d-%H%M%S")
-        done_before = self.completed_buckets()
-        result = stage_fn(self.remaining(pages))
+        done_before, todo = self._plan(pages, self._records())
+        result = stage_fn(todo)
         assert "bucket" in result.columns, "stage_fn must propagate 'bucket'"
 
         t0 = time.time()

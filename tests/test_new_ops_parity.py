@@ -1,7 +1,7 @@
-"""Adversarial cross-engine parity for the round-6 operator family:
-the Spark OPERATOR output must equal its DuckDB oracle builder on
-hostile strings the synthetic gate corpora never produce (emoji /
-astral plane, quotes, backslashes, CRLF, empties, ties)."""
+"""Adversarial cross-engine parity for winnowing fingerprints: the
+Spark OPERATOR output must equal its DuckDB oracle builder on hostile
+strings the synthetic gate corpora never produce (emoji / astral plane,
+quotes, backslashes, CRLF, empties, ties)."""
 
 from __future__ import annotations
 
@@ -9,11 +9,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-from amazon_textract_transformer_pipeline_spark.operators import bpe, dedup
-from amazon_textract_transformer_pipeline_spark.operators.quality import (
-    tfidf_oracle_sql,
-    tfidf_top_terms,
-)
+from amazon_textract_transformer_pipeline_spark.operators import dedup
 
 CRAFTED = [
     "",
@@ -49,23 +45,3 @@ def test_winnow_parity_adversarial(adv):
                                 k=3, w=3)).fetchall()}
     assert got == want and want  # non-empty and identical
 
-
-def test_tfidf_parity_adversarial(adv):
-    sdf, con = adv
-    got = {(r.doc_id, r.rank, r.term, r.tf, r.df, r.score)
-           for r in tfidf_top_terms(sdf, topk=3).collect()}
-    want = {tuple(r) for r in con.sql(
-        tfidf_oracle_sql("SELECT doc_id, text FROM adv_docs",
-                         topk=3)).fetchall()}
-    assert got == want and want
-
-
-def test_bpe_parity_adversarial(adv):
-    sdf, con = adv
-    got = [(r.rank, r.left, r.right, r.pair_count)
-           for r in sorted(bpe.learn_bpe_merges(sdf, 4).collect(),
-                           key=lambda r: r.rank)]
-    want = sorted(con.sql(
-        bpe.bpe_oracle_sql("SELECT doc_id, text FROM adv_docs",
-                           4)).fetchall())
-    assert got == [tuple(r) for r in want] and got

@@ -324,3 +324,19 @@ def test_resume_with_other_bucket_count_raises(spark, pages_df, tmp_path):
     urls = [r.url for r in
             spark.read.parquet(root + "/results").select("url").collect()]
     assert len(urls) == len(set(urls)) == 300
+
+
+def test_run_reads_lineage_log_once(spark, pages_df, tmp_path, monkeypatch):
+    """The log only grows, so a pass reads and parses it once: the done set,
+    the bucket-count check and the filtered frame all come from that read."""
+    calls = []
+    records = LineageStore._records
+
+    def counted(self):
+        calls.append(1)
+        return records(self)
+
+    monkeypatch.setattr(LineageStore, "_records", counted)
+    store = LineageStore(str(tmp_path / "reads"), n_buckets=8)
+    store.run(spark, pages_df, extraction_stage_for_lineage())
+    assert len(calls) == 1
