@@ -39,9 +39,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pdf_extract": Q.q_pdf_extract,
         "gopher_filters": Q.q_gopher_filters,
         "c4_filters": Q.q_c4_filters,
-        "winnow_fingerprints": Q.q_winnow_fingerprints,
-        "decontaminate_mask": Q.q_decontaminate_mask,
-        "exact_substring_dedup": Q.q_exact_substring_dedup,
         "pack_sequences": Q.q_pack_sequences,
         "url_dedup_latest": Q.q_url_dedup_latest,
         "vocab_top_k": Q.q_vocab_top_k,
@@ -62,22 +59,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "main_content_text": Q.q_main_content_text,
         # --- composed filter
         "corpus_filter": Q.q_corpus_filter,
-        # --- decontamination / PII / n-gram overlap
-        "decontaminate": Q.q_decontaminate,
+        # --- PII scrub
         "pii_scrub": Q.q_pii_scrub,
-        "ngram_jaccard_consecutive": Q.q_ngram_jaccard_consecutive,
         # --- text stats
         "text_stats": Q.q_text_stats,
         "langid_scores": Q.q_langid_scores,
         # --- Gopher repetition signals
         "gopher_repetition": Q.q_gopher_repetition,
-        # --- reference aggregation shapes
-        "o1_group_minmax": Q.q_o1_group_minmax,
-        "top1_per_group": Q.q_top1_per_group,
-        "noisy_or_events": Q.q_noisy_or_events,
-        "tumbling_windows": Q.q_tumbling_windows,
-        "session_windows": Q.q_session_windows,
-        "s4_pagination_merge": Q.q_s4_pagination_merge,
         # --- URL and line cleaning, sampling, charsets
         "canonical_urls": Q.q_canonical_urls,
         "boilerplate_lines": Q.q_boilerplate_lines,
@@ -91,7 +79,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    wpl, lpp, wpp = O.WORDS_PER_LINE, O.LINES_PER_PAGE, O.WPP
     dw = X.words("text", "duck")
     sqls: dict[str, str] = {
         "extract_text": O.extract_text_oracle(),
@@ -101,97 +88,7 @@ def oracle_sql() -> dict[str, str]:
         "fields": O.fields_oracle(),
         "doc_confidence": O.doc_confidence_oracle(),
         "apply_review": O.apply_review_oracle(),
-        # benchmark decontamination: planted eval-set blocklist (words 6-26
-        # of every 17th doc), distinct 13-gram hash semi-join, per-doc hit
-        # counts — the dedup.decontamination_flags replay.
-        "decontaminate": f"""
-WITH bl AS MATERIALIZED (
-  SELECT doc_id, array_to_string(list_slice({dw}, 6, 26), ' ') AS text
-  FROM documents WHERE doc_id % 17 = 3
-),
-bsh AS MATERIALIZED (
-  SELECT DISTINCT {X.h64('s', 'duck')} AS gh FROM (
-    SELECT unnest({X.shingles(X.words('text', 'duck'), 13, 'duck')}) AS s
-    FROM bl)
-),
-csh AS MATERIALIZED (
-  SELECT DISTINCT doc_id, {X.h64('s', 'duck')} AS gh FROM (
-    SELECT doc_id, unnest({X.shingles(dw, 13, 'duck')}) AS s
-    FROM documents)
-),
-hits AS (
-  SELECT c.doc_id, count(*) AS n
-  FROM csh c JOIN bsh b ON b.gh = c.gh GROUP BY c.doc_id
-)
-SELECT d.doc_id, CAST(coalesce(h.n, 0) AS BIGINT) AS n_contaminated_grams,
-       coalesce(h.n, 0) >= 1 AS contaminated
-FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id""",
-        # MATERIALIZED: DuckDB inlines CTEs textually; without it the
-        # shingle expression recomputes 4x inside intersect/union (measured
-        # ~20 s at sf0.01; ~4x faster materialized)
-        "ngram_jaccard_consecutive": f"""
-WITH w AS MATERIALIZED (
-  SELECT doc_id, {X.shingles(X.words('text', 'duck'), 3, 'duck')} AS sh
-  FROM documents
-)
-SELECT d1.doc_id AS a, d2.doc_id AS b,
-  round(len(list_intersect(d1.sh, d2.sh))::DOUBLE /
-        len(list_distinct(list_concat(d1.sh, d2.sh))), 6) AS jaccard
-FROM w d1 JOIN w d2 ON d2.doc_id = d1.doc_id + 1""",
         "text_stats": None,  # built below
-        "o1_group_minmax": """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 6) AS sum_qty,
-       round(min(l_extendedprice), 6) AS min_price,
-       round(max(l_extendedprice), 6) AS max_price,
-       count(*) AS n
-FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-        "top1_per_group": """
-SELECT o_custkey, o_orderkey, round(o_totalprice, 6) AS o_totalprice
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY o_custkey
-            ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-  FROM orders
-) WHERE rn = 1""",
-        "noisy_or_events": """
-WITH c AS (
-  SELECT user_id, event_type,
-         least(1 / (1 + exp(-value)), 0.999999::DOUBLE) AS conf
-  FROM events
-)
-SELECT user_id, event_type,
-       round(1 - exp(sum(ln(1 - conf))), 6) AS noisy_or,
-       count(*) AS n
-FROM c GROUP BY user_id, event_type""",
-        "tumbling_windows": """
-SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us, event_type,
-       count(*) AS n_events,
-       round(sum(value), 6) AS sum_value,
-       count(DISTINCT user_id) AS n_users
-FROM events GROUP BY 1, 2""",
-        "session_windows": """
-WITH o AS (
-  SELECT user_id, ts, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), s AS (
-  SELECT user_id, ts, value,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                          ROWS UNBOUNDED PRECEDING) AS sid
-  FROM o
-)
-SELECT user_id, epoch_us(min(ts)) AS session_start_us,
-       epoch_us(max(ts)) AS session_last_us,
-       count(*) AS n_events, round(sum(value), 6) AS sum_value
-FROM s GROUP BY user_id, sid""",
-        "s4_pagination_merge": """
-SELECT user_id, count(*) AS n_events,
-       string_agg(cast(event_id AS varchar), ','
-                  ORDER BY ts, event_id) AS event_ids_csv
-FROM events GROUP BY user_id""",
     }
 
     # text_stats assembled from the same expression builders
@@ -738,133 +635,6 @@ WITH toks AS MATERIALIZED (
   FROM documents
 )
 {packing_oracle_sql(512, 8, docs_cte='toks')}"""
-
-    # decontaminate_mask oracle: positional 13-gram probe against the
-    # same planted blocklist, covered-position union, ordered reassembly.
-    sqls["decontaminate_mask"] = f"""
-WITH docw AS MATERIALIZED (
-  SELECT doc_id, {dw} AS ws FROM documents
-),
-bl AS MATERIALIZED (
-  SELECT doc_id, array_to_string(list_slice({dw}, 6, 26), ' ') AS text
-  FROM documents WHERE doc_id % 17 = 3
-),
-bsh AS MATERIALIZED (
-  SELECT DISTINCT {X.h64('s', 'duck')} AS gh FROM (
-    SELECT unnest({X.shingles(X.words('text', 'duck'), 13, 'duck')}) AS s
-    FROM bl)
-),
-pg AS MATERIALIZED (
-  SELECT doc_id, u.pos AS pos, {X.h64('u.gram', 'duck')} AS gh FROM (
-    SELECT doc_id, unnest(list_transform(range(0, len(ws) - 12),
-      i -> {{'pos': i,
-             'gram': array_to_string(list_slice(ws, i + 1, i + 13), ' ')}}))
-      AS u
-    FROM docw WHERE len(ws) >= 13)
-),
-m AS MATERIALIZED (
-  SELECT doc_id, pos FROM pg JOIN bsh USING (gh)
-),
-cov AS (
-  SELECT DISTINCT doc_id, wpos FROM (
-    SELECT doc_id, unnest(range(pos, pos + 13)) AS wpos FROM m)
-),
-w AS (
-  SELECT doc_id, u.wpos AS wpos, u.word AS word FROM (
-    SELECT doc_id, unnest(list_transform(range(0, len(ws)),
-      i -> {{'wpos': i, 'word': ws[i + 1]}})) AS u
-    FROM docw)
-),
-kept AS (
-  SELECT w.doc_id, w.wpos, w.word
-  FROM w LEFT JOIN cov ON cov.doc_id = w.doc_id AND cov.wpos = w.wpos
-  WHERE cov.wpos IS NULL
-),
-agg AS (
-  SELECT doc_id, string_agg(word, ' ' ORDER BY wpos) AS kept_text,
-         CAST(count(*) AS BIGINT) AS nk
-  FROM kept GROUP BY doc_id
-),
-sp AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matched_spans
-  FROM m GROUP BY doc_id
-)
-SELECT d.doc_id, coalesce(a.kept_text, '') AS kept_text,
-       CAST(len(d.ws) AS BIGINT) AS n_words,
-       CAST(len(d.ws) - coalesce(a.nk, 0) AS BIGINT) AS n_words_removed,
-       coalesce(s.n_matched_spans, CAST(0 AS BIGINT)) AS n_matched_spans
-FROM docw d
-LEFT JOIN agg a ON a.doc_id = d.doc_id
-LEFT JOIN sp s ON s.doc_id = d.doc_id"""
-
-    # exact_substring_dedup oracle: same planted corpus, same positional
-    # 13-grams; first occurrence per gram hash by (doc_id, pos) survives,
-    # later ones feed the identical covered-union masking tail.
-    from amazon_textract_transformer_pipeline_spark.driver_queries import (
-        EXSUB_NGRAM,
-        exsub_text_sql,
-    )
-
-    _xn = EXSUB_NGRAM
-    sqls["exact_substring_dedup"] = f"""
-WITH docw AS MATERIALIZED (
-  SELECT doc_id, {X.words(exsub_text_sql(), 'duck')} AS ws FROM documents
-),
-pg AS MATERIALIZED (
-  SELECT doc_id, u.pos AS pos, {X.h64('u.gram', 'duck')} AS gh FROM (
-    SELECT doc_id, unnest(list_transform(range(0, len(ws) - {_xn - 1}),
-      i -> {{'pos': i,
-             'gram': array_to_string(list_slice(ws, i + 1, i + {_xn}), ' ')}}))
-      AS u
-    FROM docw WHERE len(ws) >= {_xn})
-),
-m AS MATERIALIZED (
-  SELECT doc_id, pos FROM (
-    SELECT doc_id, pos,
-           row_number() OVER (PARTITION BY gh ORDER BY doc_id, pos) AS rn
-    FROM pg)
-  WHERE rn >= 2
-),
-cov AS (
-  SELECT DISTINCT doc_id, wpos FROM (
-    SELECT doc_id, unnest(range(pos, pos + {_xn})) AS wpos FROM m)
-),
-w AS (
-  SELECT doc_id, u.wpos AS wpos, u.word AS word FROM (
-    SELECT doc_id, unnest(list_transform(range(0, len(ws)),
-      i -> {{'wpos': i, 'word': ws[i + 1]}})) AS u
-    FROM docw)
-),
-kept AS (
-  SELECT w.doc_id, w.wpos, w.word
-  FROM w LEFT JOIN cov ON cov.doc_id = w.doc_id AND cov.wpos = w.wpos
-  WHERE cov.wpos IS NULL
-),
-agg AS (
-  SELECT doc_id, string_agg(word, ' ' ORDER BY wpos) AS kept_text,
-         CAST(count(*) AS BIGINT) AS nk
-  FROM kept GROUP BY doc_id
-),
-sp AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matched_spans
-  FROM m GROUP BY doc_id
-)
-SELECT d.doc_id, coalesce(a.kept_text, '') AS kept_text,
-       CAST(len(d.ws) AS BIGINT) AS n_words,
-       CAST(len(d.ws) - coalesce(a.nk, 0) AS BIGINT) AS n_words_removed,
-       coalesce(s.n_matched_spans, CAST(0 AS BIGINT)) AS n_matched_spans
-FROM docw d
-LEFT JOIN agg a ON a.doc_id = d.doc_id
-LEFT JOIN sp s ON s.doc_id = d.doc_id"""
-
-    # winnow_fingerprints oracle: single-sourced builder (same selection
-    # rule, same struct-min window) from operators/dedup.py.
-    from amazon_textract_transformer_pipeline_spark.operators.dedup import (
-        winnow_oracle_sql,
-    )
-
-    sqls["winnow_fingerprints"] = winnow_oracle_sql(
-        "SELECT doc_id, text FROM documents", k=5, w=4)
 
     # vocab_top_k oracle: same token aggregate + deterministic
     # (count desc, token asc) rank in DuckDB.

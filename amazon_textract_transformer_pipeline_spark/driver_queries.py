@@ -8,12 +8,11 @@ value-hashing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DEMO_CONFIG
 from .functions import textsql as X
-from .operators import dedup
 from .operators.assembly import assemble_text, pages_view, words_view
 from .operators.consolidate import value_consolidation
 from .operators.enrich import stub_predictions
@@ -120,20 +119,8 @@ def q_doc_confidence(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Decontamination / PII / n-gram overlap (documents)
+# PII scrub (documents)
 # ---------------------------------------------------------------------------
-def q_decontaminate(spark, sf_dir) -> DataFrame:
-    """Benchmark decontamination over a planted eval set: blocklist =
-    every 17th doc's words 6-26 (contiguous → its 13-grams all appear in
-    the source doc), flags computed by the bucketed gram-hash semi-join.
-    Exact against the same shingle/hash construction in DuckDB."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    ws = X.words("text", "spark")
-    bl = docs.filter("doc_id % 17 = 3").select(
-        "doc_id", F.expr(f"concat_ws(' ', slice({ws}, 6, 21))").alias("text"))
-    return dedup.decontamination_flags(docs, bl)
-
-
 def pii_text_sql(engine: str) -> str:
     """Deterministic PII-laden text from doc_id (both engines): email,
     IPv4, IPv6, phone (every 3rd doc), 9+-digit account id, then the
@@ -167,19 +154,6 @@ def q_pii_scrub(spark, sf_dir) -> DataFrame:
     return out.drop("text")
 
 
-def q_ngram_jaccard_consecutive(spark, sf_dir) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    a = d.select(F.col("doc_id").alias("a"), F.col("text").alias("ta"))
-    b = d.select((F.col("doc_id") - 1).alias("a"),
-                 F.col("doc_id").alias("b"), F.col("text").alias("tb"))
-    wa, wb = X.words("ta", "spark"), X.words("tb", "spark")
-    return (
-        a.join(b, "a")
-        .withColumn("jaccard", F.round(F.expr(X.jaccard(wa, wb, 3, "spark")), 6))
-        .select("a", "b", "jaccard")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Text stats
 # ---------------------------------------------------------------------------
@@ -200,60 +174,8 @@ def q_langid_scores(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Reference aggregation shapes on TPC-H-ish tables (§2.9/§2.10 analogs)
+# URL and line cleaning (documents)
 # ---------------------------------------------------------------------------
-def q_o1_group_minmax(spark, sf_dir) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(F.round(F.sum("l_quantity"), 6).alias("sum_qty"),
-             F.round(F.min("l_extendedprice"), 6).alias("min_price"),
-             F.round(F.max("l_extendedprice"), 6).alias("max_price"),
-             F.count("*").alias("n"))
-    )
-
-
-def q_top1_per_group(spark, sf_dir) -> DataFrame:
-    """E10 selector shape on orders: top order per customer."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
-    return (
-        o.withColumn("rn", F.row_number().over(w)).filter("rn = 1")
-        .select("o_custkey", "o_orderkey",
-                F.round("o_totalprice", 6).alias("o_totalprice"))
-    )
-
-
-def q_noisy_or_events(spark, sf_dir) -> DataFrame:
-    """E8 noisy-OR shape on events: conf = clamp(sigmoid(value))."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    conf = "least(1 / (1 + exp(-value)), cast(0.999999 as double))"
-    return (
-        e.withColumn("conf", F.expr(conf))
-        .groupBy("user_id", "event_type")
-        .agg(F.round(1 - F.exp(F.sum(F.log1p(-F.col("conf")))), 6)
-             .alias("noisy_or"),
-             F.count("*").alias("n"))
-    )
-
-
-def q_s4_pagination_merge(spark, sf_dir) -> DataFrame:
-    """S4 paginated-response merge shape: per user, events concatenated in
-    (ts, event_id) order."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        e.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.expr(
-                "concat_ws(',', transform(array_sort(collect_list("
-                "struct(ts, event_id))), x -> cast(x.event_id as string)))"
-            ).alias("event_ids_csv"),
-        )
-    )
-
-
 def messy_url_sql(engine: str) -> str:
     """Deterministic messy-URL construction from doc_id (both engines):
     mixed-case scheme/host, www + default port, tracking params, fragment."""
@@ -289,7 +211,7 @@ def q_boilerplate_lines(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Rows-only checks (non-SQL-expressible ops: splitter, PDF)
+# Splitter and PDF front-end
 # ---------------------------------------------------------------------------
 def q_split_windows(spark, sf_dir) -> DataFrame:
     pages = pages_view(_doc_words(spark, sf_dir))
@@ -452,48 +374,6 @@ def q_domain_blocklist(spark, sf_dir) -> DataFrame:
         "doc_id", "host", "blocked", "blocked_domain")
 
 
-#: exact_substring_dedup gate window (13 words keeps the planted blocks
-#: short; the operator default is the paper's 50).
-EXSUB_NGRAM = 13
-
-
-def exsub_text_sql() -> str:
-    """Gate corpus for ExactSubstr: documents text with planted verbatim
-    duplication — every fourth-mod-1 doc appends the same 14-word block
-    (cross-doc dup: the lowest doc_id keeps it, every later one is cut)
-    and every tenth-mod-2 doc appends a 13-word block TWICE (within-doc
-    dup: the second copy is cut even in the corpus-wide first doc).
-    Valid verbatim in both Spark SQL and DuckDB."""
-    alpha = ("exact dup block alpha one two three four five six "
-             "seven eight nine ten")
-    beta = ("twice beta gamma one two three four five six seven "
-            "eight nine ten")
-    return (f"concat(text, "
-            f"CASE WHEN doc_id % 4 = 1 THEN ' {alpha}' ELSE '' END, "
-            f"CASE WHEN doc_id % 10 = 2 THEN ' {beta} {beta}' "
-            f"ELSE '' END)")
-
-
-def q_exact_substring_dedup(spark, sf_dir) -> DataFrame:
-    """ExactSubstr dedup over the planted corpus: corpus-wide first
-    occurrence of every duplicated 13-gram survives, later occurrences
-    (cross-doc AND within-doc) lose exactly the covered words. Exact
-    against the identical first-occurrence + covered-union replay in
-    DuckDB."""
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(exsub_text_sql()).alias("text"))
-    return dedup.exact_substring_dedup(docs, n=EXSUB_NGRAM)
-
-
-def q_winnow_fingerprints(spark, sf_dir) -> DataFrame:
-    """Winnowing (MOSS) fingerprints over the documents corpus: char
-    5-grams, window 4, rightmost-minimal selection per full window —
-    one map-only gram explode + one per-doc window shuffle. DuckDB
-    replays the identical struct-min selection."""
-    return dedup.winnow_fingerprints(
-        _docs(spark, sf_dir).select("doc_id", "text"), k=5, w=4)
-
-
 def c4_span_text_sql() -> str:
     """Gate corpus for span dedup: documents text with planted duplicate
     three-sentence blocks — every third doc shares one block (cross-doc
@@ -596,47 +476,6 @@ def q_main_content_text(spark, sf_dir) -> DataFrame:
     return main_content_text(_mc_classified(spark, sf_dir),
                              id_col="doc_id").select(
         "doc_id", "n_blocks", "n_content_blocks", "main_text")
-
-
-def q_tumbling_windows(spark, sf_dir) -> DataFrame:
-    """Tumbling-window rollup (1-hour bucket × event_type): the batch twin
-    of streaming/arrivals.arrival_metrics_stream and the hypertable-rollup
-    shape. One shuffle on (bucket, type); partial aggregation map-side."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 6).alias("sum_value"),
-             F.countDistinct("user_id").alias("n_users"))
-        .select(F.expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', w.start)")
-                .alias("window_start_us"),
-                "event_type", "n_events", "sum_value", "n_users")
-    )
-
-
-def q_session_windows(spark, sf_dir) -> DataFrame:
-    """Gap-based sessionization (30-min inactivity gap per user) via
-    ``session_window`` — Spark's native merging-session aggregate; one
-    shuffle on user_id. ``session_window.end`` is last_event + gap, so the
-    last-event timestamp is recovered by subtracting the gap (keeps the
-    DuckDB oracle a pure min/max over lag-derived session ids).
-    Timestamps cross the gate as epoch-microsecond BIGINTs via
-    timestampdiff on the NTZ value — raw timestamp columns hash
-    engine-dependently (ns vs us) and unix_micros/casts would drag the
-    driver session's timezone into the result."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 6).alias("sum_value"))
-        .select("user_id",
-                F.expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', w.start)")
-                .alias("session_start_us"),
-                F.expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', "
-                       "w.end - INTERVAL 30 MINUTES)")
-                .alias("session_last_us"),
-                "n_events", "sum_value")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -880,14 +719,3 @@ def q_vocab_top_k(spark, sf_dir) -> DataFrame:
 
     return vocab_top_k(_docs(spark, sf_dir), k=200)
 
-
-def q_decontaminate_mask(spark, sf_dir) -> DataFrame:
-    """Surgical decontamination over the same planted eval set as
-    q_decontaminate: matched 13-gram spans are cut out word-exactly
-    (overlap union, original order preserved) instead of dropping the
-    document. Exact against the positional replay in DuckDB."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    ws = X.words("text", "spark")
-    bl = docs.filter("doc_id % 17 = 3").select(
-        "doc_id", F.expr(f"concat_ws(' ', slice({ws}, 6, 21))").alias("text"))
-    return dedup.decontaminate_mask(docs, bl)

@@ -22,21 +22,3 @@ def spark_hash64(expr: str) -> str:
 def duck_hash64(expr: str) -> str:
     """DuckDB SQL snippet computing the identical value."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
-def spark_hash32(expr: str, off: int = 1) -> str:
-    """32-bit hash from an 8-hex-char md5 slice at 1-based ``off`` — two
-    disjoint slices (off=1, off=9) give two independent 32-bit hashes from
-    ONE digest (the 64-bit SimHash halves)."""
-    return f"cast(conv(substr(md5({expr}), {off}, 8), 16, 10) as bigint)"
-
-
-def duck_hash32(expr: str, off: int = 1) -> str:
-    """DuckDB twin of :func:`spark_hash32` (identical values)."""
-    return f"(('0x' || substr(md5({expr}), {off}, 8))::BIGINT)"
-
-
-# Long.MIN_VALUE literal that parses on BOTH engines (the bare literal
-# overflows before unary negation applies): the bit-63 weight of a 64-bit
-# sketch packed into a signed BIGINT.
-INT64_MIN_SQL = "(-9223372036854775807 - 1)"

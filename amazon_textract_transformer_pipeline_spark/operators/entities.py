@@ -192,8 +192,7 @@ def normalize_mentions(mentions: DataFrame, config_df: DataFrame,
     # No broadcast hint: `results` has one row per *distinct* (endpoint,
     # prompt+text) across the whole corpus — its cardinality is
     # input-dependent and unbounded (fine for dates, huge for free-text
-    # fields). Let AQE pick the build side from measured sizes, same
-    # stance as dedup.py's verification joins.
+    # fields). Let AQE pick the build side from measured sizes.
     normed = (
         to_norm.join(
             results,

@@ -14,8 +14,9 @@ Per document, in reading order:
 
 * **Words and text.** ``frontend.document_words`` (HTML main-content
   parser or native PDF parse, the same words ``frontend.html_to_words``
-  maps) gives geometry-only word tuples; :func:`text_of`, the Python twin
-  of ``assembly.doc_text_col``, gives ``extracted_text``. A word's conf and
+  maps) gives each page's geometry-only word tuples, which do not depend
+  on the url; :func:`text_of`, the Python twin of
+  ``assembly.doc_text_col``, gives ``extracted_text``. A word's conf and
   block id (and the md5 stub's pcc) are hashed only when a mention reads
   the word (:func:`_scorer`).
 * **Predictions.** ``sql-stub``: the md5 stub (``enrich.stub_cls_py`` /
@@ -279,14 +280,6 @@ def doc_confidence_of(fields: list[dict]) -> float | None:
 # ---------------------------------------------------------------------------
 # The Arrow kernel
 # ---------------------------------------------------------------------------
-def doc_pages(url: str, payload) -> list[tuple[int, list[tuple]]]:
-    """One document through the shared front-end
-    (``frontend.document_words``): its pages as (page_num, word tuples
-    without the two prediction slots). The words do not depend on ``url``;
-    :func:`_scorer` joins it into their keys when a mention reads them."""
-    return document_words(payload)
-
-
 def text_of(pages: list[tuple[int, list[tuple]]]) -> str:
     """Python twin of ``assembly.doc_text_col``, byte for byte: words of a
     line joined by " ", consecutive lines and non-empty pages by "\\n"."""
@@ -328,7 +321,7 @@ def extract_documents(pages: DataFrame, config: list[dict],
             n_pages, texts, mentions, fields, confs = [], [], [], [], []
             for url, html in zip(col["url"].to_pylist(),
                                  col["html"].to_pylist()):
-                pages = doc_pages(url, html)
+                pages = document_words(html)
                 words: list[tuple] = []
                 for page_num, page in pages:
                     cls, pcc = predict(url, page_num, page)

@@ -447,8 +447,7 @@ def _top_ngram_frac(docs: DataFrame, n: int, text_col: str,
     materialized ONCE per row behind a repartition barrier — without it
     Catalyst's CollapseProject inlines the regex split into the shingle
     lambda and re-tokenizes the document per gram index (O(words²)
-    chars), the expensive-lambda-body trap documented in
-    operators/dedup.shingle_rows. After the barrier the lambda only
+    chars), the expensive-lambda-body trap. After the barrier the lambda only
     slices an in-memory array. The (id, gram) hash agg runs with
     map-side partials; both n=2 and n=3 reuse the same exchange."""
     ws = X.words(text_col, "spark")

@@ -446,49 +446,15 @@ def remove_boilerplate_lines(docs: DataFrame, min_docs: int = 2,
     )
 
 
-def blocked_flag_stream_safe(docs: DataFrame, blocklist: DataFrame,
-                             url_col: str = "url") -> DataFrame:
-    """Aggregation-free twin of :func:`filter_blocked_domains` (same
-    ``blocked`` semantics, no most-specific-match column): the per-doc
-    suffix set rides as an ARRAY column and the blocklist is probed by
-    a stream-static LEFT SEMI / LEFT ANTI join pair whose union keeps
-    exactly one row per doc. No groupBy → legal in an append-mode
-    stream without a watermark (a streaming aggregation would demand
-    one). Cost note: the non-equi ``array_contains`` condition makes
-    both joins BroadcastNestedLoop against the static blocklist — right
-    for a stream (the list broadcasts once); the batch path keeps the
-    suffix-explode equality join that scales to UT1-size lists.
-    """
-    hosts = docs.withColumn("host", F.expr(host_sql(url_col, "spark")))
-    withsfx = hosts.withColumn("_sfx", F.expr(
-        "transform(sequence(0, greatest(size(split(host, '\\\\.')) - 2, 0)), "
-        "i -> concat_ws('.', slice(split(host, '\\\\.'), i + 1, "
-        "size(split(host, '\\\\.')) - i)))"))
-    bl = blocklist.select("domain")
-    cond = F.expr("array_contains(_sfx, domain)")
-    blocked = withsfx.join(bl, cond, "left_semi") \
-        .withColumn("blocked", F.lit(True))
-    clean = withsfx.join(bl, cond, "left_anti") \
-        .withColumn("blocked", F.lit(False))
-    return blocked.unionByName(clean).drop("_sfx")
-
-
 def composed_quality_verdicts(docs: DataFrame, blocklist: DataFrame,
                               id_col: str = "doc_id",
                               text_col: str = "text",
-                              url_col: str = "url",
-                              stream_safe: bool = False) -> DataFrame:
+                              url_col: str = "url") -> DataFrame:
     """The composed pre-training corpus filter as ONE builder — UT1
     domain blocklist (suffix semi-join) → scored language ID → Gopher
     quality verdict → C4 cleaning verdict → DSIR importance sampling,
-    with the FIRST failing stage recorded per document. Single-sourced:
-    the batch gate query (`driver_queries.q_corpus_filter`) and the
-    Structured Streaming path (`streaming/quality_stream.py`) both call
-    this; every stage after the blocklist probe is a stateless map-side
-    projection. ``stream_safe=True`` swaps the blocklist stage for the
-    aggregation-free :func:`blocked_flag_stream_safe` (append-mode
-    streams may not aggregate without a watermark); verdicts are
-    bit-identical either way (tested).
+    with the FIRST failing stage recorded per document. Every stage
+    after the blocklist probe is a stateless map-side projection.
 
     Returns (id, host, blocked, lang_pred, gopher_pass, c4_pass,
     dsir_sampled, drop_reason, kept).
@@ -496,11 +462,7 @@ def composed_quality_verdicts(docs: DataFrame, blocklist: DataFrame,
     from .sampling import importance_exprs
     from .textstats import c4_exprs, gopher_exprs, with_langid
 
-    flagged = (
-        blocked_flag_stream_safe(docs, blocklist, url_col=url_col)
-        if stream_safe
-        else filter_blocked_domains(docs, blocklist, url_col=url_col)
-    )
+    flagged = filter_blocked_domains(docs, blocklist, url_col=url_col)
     out = (
         with_langid(flagged, text_col=text_col)
         .withColumn("gopher_pass",

@@ -1,7 +1,7 @@
 """DuckDB oracle-SQL builders for the driver correctness gate.
 
 Each string here recomputes, in pure DuckDB SQL over the driver's
-pre-registered views (documents/embeddings/lineitem/...), exactly what the
+pre-registered ``documents`` view, exactly what the
 corresponding Spark query in __spark_entry__.py computes — same layout
 constants (sources/bridge.py), same portable hash stubs (operators/enrich),
 same reference semantics (SURVEY §2.8). A hash-equal result from two

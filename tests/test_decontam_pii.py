@@ -1,67 +1,11 @@
-"""Benchmark decontamination (dedup.py) and PII scrubbing (webclean.py):
-planted-overlap semantics, category precedence, and the acted-on forms."""
+"""PII scrubbing (webclean.py): category precedence and the
+sequential-scrub semantics of the counts."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from amazon_textract_transformer_pipeline_spark.operators import dedup
 from amazon_textract_transformer_pipeline_spark.operators.webclean import (
     with_pii_scrub,
 )
-
-EVAL_SNIPPET = ("which of the following best describes the relationship "
-                "between supply and demand in a market economy")
-
-
-def _corpus(spark):
-    clean = ("a perfectly ordinary page about gardening with tomatoes "
-             "basil rosemary and thyme growing in raised beds all summer")
-    contaminated = ("intro words here " + EVAL_SNIPPET
-                    + " trailing words afterwards")
-    partial = EVAL_SNIPPET.split()  # only 12 of the eval words → no 13-gram
-    return spark.createDataFrame(
-        [(0, clean), (1, contaminated),
-         (2, " ".join(partial[:12]) + " divergent tail of words")],
-        "doc_id long, text string")
-
-
-def test_decontamination_flags_planted_overlap(spark):
-    docs = _corpus(spark)
-    bl = spark.createDataFrame([(100, EVAL_SNIPPET)], "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           dedup.decontamination_flags(docs, bl, n=13).collect()}
-    assert len(out) == 3
-    assert not out[0].contaminated and out[0].n_contaminated_grams == 0
-    # eval snippet has 16 words → 4 13-grams, all inside doc 1
-    assert out[1].contaminated and out[1].n_contaminated_grams == 4
-    assert not out[2].contaminated  # 12 shared words < one 13-gram
-
-
-def test_decontamination_min_hits_and_short_blocklist(spark):
-    docs = _corpus(spark)
-    bl = spark.createDataFrame([(100, EVAL_SNIPPET)], "doc_id long, text string")
-    strict = {r.doc_id: r.contaminated for r in
-              dedup.decontamination_flags(docs, bl, n=13, min_hits=5).collect()}
-    assert not strict[1]  # 4 hits < 5
-    # blocklist doc shorter than n falls back to whole-text shingle:
-    # a verbatim copy still matches
-    short = spark.createDataFrame(
-        [(7, "exact short prompt")], "doc_id long, text string")
-    docs2 = spark.createDataFrame(
-        [(0, "exact short prompt"), (1, "different text entirely")],
-        "doc_id long, text string")
-    out = {r.doc_id: r.contaminated for r in
-           dedup.decontamination_flags(docs2, short, n=13).collect()}
-    assert out[0] and not out[1]
-
-
-def test_decontaminate_removes_and_preserves_schema(spark):
-    docs = _corpus(spark).withColumn("extra", F.lit("x"))
-    bl = spark.createDataFrame([(100, EVAL_SNIPPET)], "doc_id long, text string")
-    kept = dedup.decontaminate(docs, bl, n=13)
-    assert kept.columns == docs.columns
-    assert sorted(r.doc_id for r in kept.collect()) == [0, 2]
 
 
 def test_pii_scrub_categories_and_precedence(spark):
@@ -98,26 +42,3 @@ def test_pii_scrub_sequential_semantics(spark):
     assert r.n_email == 1 and r.n_id_number == 0 and r.n_phone == 0
     assert r.text_scrubbed == "mail <EMAIL> end"
     assert r.pii_total == 1
-
-
-def test_decontaminate_mask_overlap_and_passthrough(spark):
-    from amazon_textract_transformer_pipeline_spark.operators.dedup import (
-        decontaminate_mask,
-    )
-
-    # 3-gram masking: doc 1 contains 'b c d' AND 'c d e' (overlapping
-    # matches) -> covered union is b..e, never double-counted; doc 2 is
-    # clean; doc 3 is shorter than n and passes through intact.
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f"), (2, "x y z w v u"), (3, "b c")],
-        "doc_id long, text string")
-    bl = spark.createDataFrame(
-        [(100, "b c d"), (101, "c d e")], "doc_id long, text string")
-    out = {r["doc_id"]: r for r in decontaminate_mask(docs, bl, n=3).collect()}
-    assert out[1]["kept_text"] == "a f"
-    assert out[1]["n_words_removed"] == 4
-    assert out[1]["n_matched_spans"] == 2
-    assert out[2]["kept_text"] == "x y z w v u"
-    assert out[2]["n_words_removed"] == 0
-    assert out[3]["kept_text"] == "b c"   # < n words: no grams, intact
-    assert out[3]["n_matched_spans"] == 0

@@ -16,8 +16,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as entrymod  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+#: the only view the oracles read (the PDF and charset oracles are
+#: closed-form and read none)
+TABLES = ["documents"]
 
 
 @pytest.fixture(scope="module")
@@ -58,13 +59,10 @@ ORACLES = entrymod.oracle_sql()
 
 @pytest.mark.parametrize("name", QUERIES)
 def test_query_matches_oracle(spark, duck, name):
+    assert name in ORACLES, f"{name}: no oracle_sql() entry"
     fn = entrymod.queries()[name]
     sdf = fn(spark, SF)
     spdf = sdf.toPandas()
-    if name not in ORACLES:
-        # rows-only contract: runs, non-empty, stable schema
-        assert len(spdf) > 0, f"{name}: rows-only query returned 0 rows"
-        return
     dpdf = duck.sql(ORACLES[name]).df()
     assert sorted(spdf.columns) == sorted(dpdf.columns), name
     assert len(spdf) == len(dpdf), f"{name}: rows {len(spdf)} vs {len(dpdf)}"

@@ -197,11 +197,11 @@ def test_kernel_word_scores_match_struct_view(pages_df):
 
     from amazon_textract_transformer_pipeline_spark.functions import pdf
     from amazon_textract_transformer_pipeline_spark.operators.frontend import (
+        document_words,
         pdf_pages_to_struct,
     )
     from amazon_textract_transformer_pipeline_spark.operators.fused import (
         _scorer,
-        doc_pages,
     )
 
     docs = [(r.url, r.html, pages_to_struct(r.url, parse_html(r.html)))
@@ -212,7 +212,7 @@ def test_kernel_word_scores_match_struct_view(pages_df):
             url, pdf.pdf_extract_words(blob))))
     n_words = 0
     for url, payload, struct in docs:
-        pages = doc_pages(url, payload)
+        pages = document_words(payload)
         assert [p for p, _ in pages] == [pg["page_num"] for pg in struct]
         stub, window = _scorer(url, "sql-stub"), _scorer(url, "window-stub")
         for (page_num, words), pg in zip(pages, struct):

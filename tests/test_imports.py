@@ -90,18 +90,10 @@ def test_nested_dangling_import_is_reported():
 KNOWN_UNREACHED = {
     "functions.codecs": "still-image codecs, to be deleted (ROADMAP 4(c))",
     "functions.jpeg": "still-image codecs, to be deleted (ROADMAP 4(c))",
-    "functions.naming": "case-convention bridge, reached only by "
-                        "test_misc_ops; next in ROADMAP 4(b)",
-    "sources.readers": "input connectors, reached only by test_misc_ops; "
-                       "next in ROADMAP 4(b)",
     "sources.iceberg": "Iceberg sink seam with no runtime jar on the test "
                        "host; kept or deleted after ROADMAP direction 2",
     "operators.seq2seq": "the reference's value normalization "
                          "(util/normalize.py), not yet wired into the kernel",
-    "streaming.arrivals": "event-time arrival metrics and first-seen url "
-                          "dedup, corpus curation (ROADMAP 4(b))",
-    "streaming.quality_stream": "corpus-quality filter on a stream, corpus "
-                                "curation (ROADMAP 4(b))",
 }
 ENTRY_POINTS = [
     ROOT / PKG / "plans" / "pipeline.py",

@@ -25,9 +25,11 @@ from amazon_textract_transformer_pipeline_spark.operators.consolidate import (
 from amazon_textract_transformer_pipeline_spark.operators.entities import (
     extract_mentions,
 )
+from amazon_textract_transformer_pipeline_spark.operators.frontend import (
+    document_words,
+)
 from amazon_textract_transformer_pipeline_spark.operators.fused import (
     _window_page_fn,
-    doc_pages,
     document_fields,
     document_mentions,
     extract_documents,
@@ -123,7 +125,7 @@ def test_word_predictions_match_python(spark, pages_df, doc_words):
     kernel = {}
     for r in pages_df.filter(F.col("url").isin(
             sorted({u for u, _ in targets}))).select("url", "html").collect():
-        for pnum, words in doc_pages(r.url, r.html):
+        for pnum, words in document_words(r.html):
             kernel[(r.url, pnum)] = predict(r.url, pnum, words)
     assert len(page_words) == len(targets)
     n_checked = 0

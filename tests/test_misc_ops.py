@@ -1,16 +1,11 @@
-"""P4-P6 naming/URI ops, E5-E6+I6 normalization, S1/S2 sources."""
+"""E5-E6+I6 value normalization: the date rules, per-distinct-input
+normalizer calls and the import-gated seq2seq path."""
 
 from __future__ import annotations
 
 import pytest
 
 from amazon_textract_transformer_pipeline_spark.config import field_config_df
-from amazon_textract_transformer_pipeline_spark.functions.naming import (
-    df_to_snake,
-    pascal_to_snake,
-    remap_uri_prefix,
-    snake_to_pascal,
-)
 from amazon_textract_transformer_pipeline_spark.operators.entities import (
     extract_mentions,
     normalize_mentions,
@@ -20,28 +15,6 @@ from amazon_textract_transformer_pipeline_spark.operators.seq2seq import (
     normalize_date_text,
     rule_based_date_normalizer,
 )
-
-
-def test_pascal_snake_roundtrip():
-    assert pascal_to_snake("NumDetections") == "num_detections"
-    assert pascal_to_snake("ClassId") == "class_id"
-    assert pascal_to_snake("S3Uri") == "s3_uri"
-    assert pascal_to_snake("IxFirstDetection") == "ix_first_detection"
-    assert snake_to_pascal("num_detections") == "NumDetections"
-    assert snake_to_pascal("class_id") == "ClassId"
-
-
-def test_df_rename_and_uri_remap(spark):
-    df = spark.createDataFrame([(1, "s3://old-bucket/path/doc.json")],
-                               "ClassId int, TextractRef string")
-    s = df_to_snake(df)
-    assert s.columns == ["class_id", "textract_ref"]
-    r = remap_uri_prefix(s, "textract_ref", "s3://old-bucket/", "s3://new/")
-    assert r.collect()[0].textract_ref == "s3://new/path/doc.json"
-    # only prefix matches move
-    df2 = spark.createDataFrame([("x/s3://old-bucket/y",)], "u string")
-    assert remap_uri_prefix(df2, "u", "s3://old-bucket/", "Z").collect()[0].u \
-        == "x/s3://old-bucket/y"
 
 
 def test_date_normalizer_rules():
@@ -113,27 +86,6 @@ def test_normalize_mentions_dedup_and_rawtext(spark):
     # E5 dedup: 3 date-class mentions but only 2 DISTINCT inputs reached the
     # normalizer ("...31/12/2001" deduped, "...garbage" once)
     assert acc.value == 2
-
-
-def test_binary_and_manifest_sources(spark, tmp_path):
-    from amazon_textract_transformer_pipeline_spark.sources.readers import (
-        read_document_corpus,
-        read_manifest_jsonl,
-    )
-
-    d = tmp_path / "corpus" / "sub"
-    d.mkdir(parents=True)
-    (d / "a.html").write_bytes(b"<p>hi</p>")
-    (d / ".hidden").write_bytes(b"nope")
-    df = read_document_corpus(spark, str(tmp_path / "corpus"))
-    rows = df.collect()
-    assert len(rows) == 1 and bytes(rows[0].html) == b"<p>hi</p>"
-
-    mf = tmp_path / "manifest.jsonl"
-    mf.write_text('{"source-ref": "s3://x/a.png", "page-num": 1}\n'
-                  '{"source-ref": "s3://x/b.png", "page-num": 2}\n')
-    m = read_manifest_jsonl(spark, str(mf))
-    assert m.count() == 2 and "source-ref" in m.columns
 
 
 def test_hf_generate_fn_gated():
