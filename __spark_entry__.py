@@ -40,10 +40,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gopher_filters": Q.q_gopher_filters,
         "c4_filters": Q.q_c4_filters,
         "pack_sequences": Q.q_pack_sequences,
-        "url_dedup_latest": Q.q_url_dedup_latest,
         "vocab_top_k": Q.q_vocab_top_k,
         "html_meta": Q.q_html_meta,
-        "corpus_report": Q.q_corpus_report,
         # --- extraction path
         "extract_text": Q.q_extract_text,
         "word_enrichment": Q.q_word_enrichment,
@@ -57,21 +55,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- densitometric main content (spread parse)
         "main_content_blocks": Q.q_main_content_blocks,
         "main_content_text": Q.q_main_content_text,
-        # --- composed filter
-        "corpus_filter": Q.q_corpus_filter,
-        # --- PII scrub
-        "pii_scrub": Q.q_pii_scrub,
         # --- text stats
         "text_stats": Q.q_text_stats,
         "langid_scores": Q.q_langid_scores,
         # --- Gopher repetition signals
         "gopher_repetition": Q.q_gopher_repetition,
-        # --- URL and line cleaning, sampling, charsets
-        "canonical_urls": Q.q_canonical_urls,
-        "boilerplate_lines": Q.q_boilerplate_lines,
-        "c4_span_dedup": Q.q_c4_span_dedup,
-        "domain_blocklist": Q.q_domain_blocklist,
-        "doc_line_dedup": Q.q_doc_line_dedup,
+        # --- sampling, charsets
         "mixture_sample": Q.q_mixture_sample,
         "dsir_importance": Q.q_dsir_importance,
         "charset_extract": Q.q_charset_extract,
@@ -128,60 +117,6 @@ SELECT doc_id, {score_cols},
        {langid_argmax_case()} AS lang_pred
 FROM s"""
 
-    # webclean oracles: same messy-url construction + the dual-engine
-    # canonicalizer; boilerplate removal replayed relationally.
-    from amazon_textract_transformer_pipeline_spark.driver_queries import (
-        messy_url_sql,
-    )
-    from amazon_textract_transformer_pipeline_spark.operators.webclean import (
-        canonical_url_sql,
-    )
-
-    sqls["canonical_urls"] = f"""
-WITH u AS (SELECT doc_id, {messy_url_sql('duck')} AS url FROM documents)
-SELECT doc_id, url, {canonical_url_sql('url', 'duck')} AS url_canon FROM u"""
-
-    sqls["boilerplate_lines"] = f"""
-WITH base AS (SELECT doc_id, {dw} AS ws FROM documents),
-ll AS (
-  SELECT doc_id,
-         list_transform(range(0, ((len(ws) - 1) // 12) + 1),
-                        i -> array_to_string(list_slice(ws,
-                               CAST(i * 12 + 1 AS INT),
-                               CAST(i * 12 + 12 AS INT)), ' ')) AS lines
-  FROM base WHERE len(ws) > 0
-),
-l0 AS (
-  SELECT doc_id, unnest(lines) AS line,
-         generate_subscripts(lines, 1) - 1 AS line_ix
-  FROM ll
-),
-lh AS (
-  SELECT doc_id, line_ix, line, {X.h64('line', 'duck')} AS h
-  FROM l0 WHERE line != ''
-),
-common AS (
-  SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS nd FROM lh GROUP BY h)
-  WHERE nd >= 3
-),
-flag AS (
-  SELECT l.doc_id, l.line_ix, l.line, (c.h IS NOT NULL) AS rm
-  FROM lh l LEFT JOIN common c ON c.h = l.h
-),
-agg AS (
-  SELECT doc_id,
-         coalesce(string_agg(CASE WHEN NOT rm THEN line END, ' '
-                             ORDER BY line_ix), '') AS kept_text,
-         CAST(sum(CASE WHEN NOT rm THEN 1 ELSE 0 END) AS BIGINT) AS n_lines_kept,
-         CAST(sum(CASE WHEN rm THEN 1 ELSE 0 END) AS BIGINT) AS n_lines_removed
-  FROM flag GROUP BY doc_id
-)
-SELECT d.doc_id,
-       coalesce(a.kept_text, '') AS kept_text,
-       CAST(coalesce(a.n_lines_kept, 0) AS BIGINT) AS n_lines_kept,
-       CAST(coalesce(a.n_lines_removed, 0) AS BIGINT) AS n_lines_removed
-FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id"""
-
     # pdf oracles: the synthetic PDF corpus (synthetic.synth_pdf_df) is a
     # closed-form function of media_id — dims 300+(i%5)*60 × 400+(i%4)*80,
     # 1+i%4 pages, 1+(i+p)%3 lines of 'doc i page p line j tokK' — so the
@@ -218,20 +153,6 @@ FROM lines GROUP BY i"""
     )
     gsel = ", ".join(f"{x} AS {k}" for k, x in gopher_exprs("text", "duck").items())
     sqls["gopher_filters"] = f"SELECT doc_id, {gsel} FROM documents"
-
-    # pii_scrub oracle: same builder + same deterministic pii-laden text
-    from amazon_textract_transformer_pipeline_spark.driver_queries import (
-        pii_text_sql,
-    )
-    from amazon_textract_transformer_pipeline_spark.operators.webclean import (
-        pii_exprs,
-    )
-    psel = ", ".join(f"{x} AS {k}" for k, x in pii_exprs("text", "duck").items())
-    sqls["pii_scrub"] = f"""
-WITH p AS MATERIALIZED (
-  SELECT doc_id, {pii_text_sql('duck')} AS text FROM documents
-)
-SELECT doc_id, {psel} FROM p"""
 
     # c4_filters oracle: same one-builder-both-dialects pattern
     from amazon_textract_transformer_pipeline_spark.operators.textstats import (
@@ -424,71 +345,11 @@ SELECT doc_id,
       END, ' ' ORDER BY block_ix), '') AS main_text
 FROM mcc GROUP BY doc_id"""
 
-    # c4_span_dedup oracle: the identical span-dedup algorithm replayed
-    # as staged DuckDB CTEs over the same planted corpus.
-    from amazon_textract_transformer_pipeline_spark.driver_queries import (
-        c4_span_text_sql,
-    )
-
-    span_sent = X.sentences("text", "duck")
-    sqls["c4_span_dedup"] = f"""
-WITH gsd AS MATERIALIZED (
-  SELECT doc_id, {c4_span_text_sql()} AS text FROM documents
-),
-sdsa AS MATERIALIZED (
-  SELECT doc_id, {span_sent} AS ss FROM gsd
-),
-sdsent AS (
-  SELECT doc_id, cast(generate_subscripts(ss, 1) - 1 AS int) AS sent_ix,
-         unnest(ss) AS sentence
-  FROM sdsa
-),
-sdspans AS (
-  SELECT doc_id, u.span_ix AS span_ix,
-         {X.h64("u.span", "duck")} AS sh
-  FROM (
-    SELECT doc_id, unnest(list_transform(range(0, len(ss) - 2),
-      i -> {{'span_ix': i,
-             'span': array_to_string(list_slice(ss, i + 1, i + 3),
-                                     chr(1))}})) AS u
-    FROM sdsa WHERE len(ss) >= 3)
-),
-sdocc AS (
-  SELECT doc_id, span_ix,
-    row_number() OVER (PARTITION BY sh ORDER BY doc_id, span_ix) AS rn,
-    count(*) OVER (PARTITION BY sh) AS cnt
-  FROM sdspans
-),
-sdrem AS (
-  SELECT DISTINCT doc_id, cast(span_ix + j AS int) AS sent_ix
-  FROM (SELECT doc_id, span_ix FROM sdocc WHERE cnt >= 2 AND rn > 1),
-       (SELECT unnest([0, 1, 2]) AS j) jj
-),
-sdkept AS (
-  SELECT s.doc_id, s.sent_ix, s.sentence
-  FROM sdsent s LEFT JOIN sdrem r
-    ON r.doc_id = s.doc_id AND r.sent_ix = s.sent_ix
-  WHERE r.doc_id IS NULL
-),
-sdagg AS (
-  SELECT doc_id, string_agg(sentence, ' ' ORDER BY sent_ix) AS kept_text,
-         count(*) AS n_sent_kept
-  FROM sdkept GROUP BY doc_id
-),
-sdn AS (SELECT doc_id, cast(len(ss) AS bigint) AS n_sent FROM sdsa)
-SELECT n.doc_id,
-  coalesce(a.kept_text, '') AS kept_text,
-  cast(coalesce(a.n_sent_kept, 0) AS bigint) AS n_sent_kept,
-  cast(n.n_sent - coalesce(a.n_sent_kept, 0) AS bigint) AS n_sent_removed
-FROM sdn n LEFT JOIN sdagg a ON a.doc_id = n.doc_id"""
-
-    # doc_line_dedup oracle: same builder + same deterministic line-laden
-    # text (indexed-lambda keep-first filter in both dialects).
+    # mixture_sample oracle: identical integer ppm arithmetic (DIV↔//,
+    # salted portable hash) over the same literal rate catalog.
     from amazon_textract_transformer_pipeline_spark.driver_queries import (
         MIXTURE_RATES,
-        corpus_text_sql,
         dsir_text_sql,
-        line_text_sql,
     )
     from amazon_textract_transformer_pipeline_spark.operators.sampling import (
         PPM,
@@ -496,19 +357,6 @@ FROM sdn n LEFT JOIN sdagg a ON a.doc_id = n.doc_id"""
         importance_exprs,
         n_copies_sql,
     )
-    from amazon_textract_transformer_pipeline_spark.operators.webclean import (
-        line_dedup_exprs,
-    )
-    lsel = ", ".join(f"{x} AS {k}"
-                     for k, x in line_dedup_exprs("text", "duck").items())
-    sqls["doc_line_dedup"] = f"""
-WITH p AS MATERIALIZED (
-  SELECT doc_id, {line_text_sql('duck')} AS text FROM documents
-)
-SELECT doc_id, {lsel} FROM p"""
-
-    # mixture_sample oracle: identical integer ppm arithmetic (DIV↔//,
-    # salted portable hash) over the same literal rate catalog.
     rates_values = ", ".join(f"('{s}', {r})" for s, r in MIXTURE_RATES)
     sqls["mixture_sample"] = f"""
 WITH d AS (
@@ -539,86 +387,6 @@ WITH p AS MATERIALIZED (
   SELECT doc_id, {dsir_text_sql('duck')} AS text FROM documents
 )
 SELECT doc_id, {isel} FROM p"""
-
-    # corpus_filter oracle: the composed pipeline — closed-form blocklist
-    # verdict (the domain_blocklist construction), langid scores projected
-    # once, then every stage verdict from the same dual-dialect builders.
-    from amazon_textract_transformer_pipeline_spark.operators.textstats import (
-        langid_argmax_case,
-        langid_score_exprs,
-    )
-    ssel = ", ".join(f"{x} AS {k}"
-                     for k, x in langid_score_exprs("text", "duck").items())
-    gp = gopher_exprs("text", "duck")["gopher_pass"]
-    cp = c4_exprs("text", "duck")["c4_pass"]
-    ds = importance_exprs("text", "duck")["dsir_sampled"]
-    sqls["corpus_filter"] = f"""
-WITH base AS MATERIALIZED (
-  SELECT doc_id, {corpus_text_sql()} AS text,
-    concat(CASE WHEN doc_id % 5 = 0 THEN 'sub.' ELSE '' END,
-           'host', cast(doc_id % 7 AS varchar), '.example.com') AS host,
-    (doc_id % 7) IN (1, 4) AS blocked
-  FROM documents
-),
-sc AS MATERIALIZED (
-  SELECT doc_id, host, blocked, text, {ssel} FROM base
-),
-v AS (
-  SELECT doc_id, host, blocked, {langid_argmax_case()} AS lang_pred,
-         {gp} AS gopher_pass, {cp} AS c4_pass, {ds} AS dsir_sampled
-  FROM sc
-),
-w AS (
-  SELECT *, CASE WHEN blocked THEN 'blocked_domain'
-       WHEN lang_pred <> 'en' THEN 'language'
-       WHEN NOT gopher_pass THEN 'gopher_quality'
-       WHEN NOT c4_pass THEN 'c4_cleaning'
-       WHEN NOT dsir_sampled THEN 'dsir_sampled_out' END AS drop_reason
-  FROM v
-)
-SELECT doc_id, host, blocked, lang_pred, gopher_pass, c4_pass,
-       dsir_sampled, drop_reason, (drop_reason IS NULL) AS kept
-FROM w"""
-
-    # corpus_report oracle: the release-metrics rollup over the full
-    # corpus_filter oracle (nested as a subquery).
-    sqls["corpus_report"] = f"""
-SELECT lang_pred, drop_reason,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(count(DISTINCT host) AS BIGINT) AS n_hosts,
-       CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-FROM ({sqls['corpus_filter']}) cf
-GROUP BY lang_pred, drop_reason"""
-
-    # url_dedup_latest oracle: canonicalization + a keep-newest window
-    # (row_number replays max_by's (ts, id) struct ordering).
-    from amazon_textract_transformer_pipeline_spark.driver_queries import (
-        snapshot_url_sql,
-    )
-    from amazon_textract_transformer_pipeline_spark.operators.webclean import (
-        canonical_url_sql,
-    )
-    sqls["url_dedup_latest"] = f"""
-WITH d AS MATERIALIZED (
-  SELECT doc_id, {snapshot_url_sql('duck')} AS url,
-         CAST(1700000000000000 + (doc_id % 97) * 3600000000 AS BIGINT)
-           AS ts_us
-  FROM documents
-),
-c AS MATERIALIZED (
-  SELECT doc_id, ts_us, {canonical_url_sql('url', 'duck')} AS url_canon
-  FROM d
-),
-rk AS (
-  SELECT *,
-    row_number() OVER (PARTITION BY url_canon
-                       ORDER BY ts_us DESC, doc_id DESC) AS rn,
-    count(*) OVER (PARTITION BY url_canon) AS nv
-  FROM c
-)
-SELECT url_canon, doc_id AS keeper_id, ts_us AS keeper_ts_us,
-       CAST(nv AS BIGINT) AS n_versions
-FROM rk WHERE rn = 1"""
 
     # pack_sequences oracle: identical salted-hash bucketing + window
     # running-sum arithmetic from the shared builder.
@@ -670,18 +438,6 @@ SELECT doc_id,
   END AS refresh_url,
   CAST(CASE WHEN doc_id % 4 = 0 THEN 0 ELSE 1 END +
        CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END AS INT) AS n_meta_tags
-FROM documents"""
-
-    # domain_blocklist oracle: fully closed-form — the generated host and
-    # the blocked verdict are both predictable from doc_id.
-    sqls["domain_blocklist"] = """
-SELECT doc_id,
-  concat(CASE WHEN doc_id % 5 = 0 THEN 'sub.' ELSE '' END,
-         'host', cast(doc_id % 7 AS varchar), '.example.com') AS host,
-  (doc_id % 7) IN (1, 4) AS blocked,
-  CASE WHEN (doc_id % 7) IN (1, 4)
-       THEN concat('host', cast(doc_id % 7 AS varchar), '.example.com')
-  END AS blocked_domain
 FROM documents"""
 
     return {k: v for k, v in sqls.items() if v is not None}

@@ -22,7 +22,6 @@ from .operators.fused import (
     document_mentions,
     extract_documents,
 )
-from .operators.webclean import canonical_url_sql, remove_boilerplate_lines
 from .operators.splitting import split_pages_to_window_bounds
 from .operators.textstats import with_text_stats
 from .sources.bridge import pages_from_documents
@@ -119,42 +118,6 @@ def q_doc_confidence(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PII scrub (documents)
-# ---------------------------------------------------------------------------
-def pii_text_sql(engine: str) -> str:
-    """Deterministic PII-laden text from doc_id (both engines): email,
-    IPv4, IPv6, phone (every 3rd doc), 9+-digit account id, then the
-    real document text as a tail so arbitrary content is exercised."""
-    s = "string" if engine == "spark" else "varchar"
-    did = f"cast(doc_id as {s})"
-    return (
-        f"concat('Contact user', {did}, '@mail',"
-        f" cast(doc_id % 7 as {s}), '.example.com or 10.',"
-        f" cast(doc_id % 200 as {s}), '.0.', cast(doc_id % 250 as {s}),"
-        f" ' ping fe80:a:b:', cast(doc_id % 9 as {s}),"
-        f" CASE WHEN doc_id % 3 = 0 THEN concat(' call +1 (555) ',"
-        f" cast(100 + doc_id % 900 as {s}), '-',"
-        f" cast(1000 + doc_id % 9000 as {s})) ELSE ' no phone' END,"
-        f" ' acct ', cast(100000000 + doc_id * 37 as {s}), ' :: ', text)"
-    )
-
-
-def q_pii_scrub(spark, sf_dir) -> DataFrame:
-    """PII redaction signals + scrubbed text over the deterministically
-    PII-laden corpus — per-category counts under the sequential-scrub
-    semantics, exact against the same expression builder in DuckDB.
-    Map-side projection, zero shuffle."""
-    from .operators.webclean import pii_exprs
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(pii_text_sql("spark")).alias("text"))
-    out = d
-    for name, e in pii_exprs("text", "spark").items():
-        out = out.withColumn(name, F.expr(e))
-    return out.drop("text")
-
-
-# ---------------------------------------------------------------------------
 # Text stats
 # ---------------------------------------------------------------------------
 def q_text_stats(spark, sf_dir) -> DataFrame:
@@ -171,43 +134,6 @@ def q_langid_scores(spark, sf_dir) -> DataFrame:
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     return with_langid(docs).drop("text")
-
-
-# ---------------------------------------------------------------------------
-# URL and line cleaning (documents)
-# ---------------------------------------------------------------------------
-def messy_url_sql(engine: str) -> str:
-    """Deterministic messy-URL construction from doc_id (both engines):
-    mixed-case scheme/host, www + default port, tracking params, fragment."""
-    s = "string" if engine == "spark" else "varchar"
-    did = f"cast(doc_id as {s})"
-    return (
-        f"concat(CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://WWW.Host' "
-        f"ELSE 'hTTp://Host' END, cast(doc_id % 7 as {s}), "
-        f"'.Example.COM', CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE ':80' END, "
-        f"CASE WHEN doc_id % 5 = 4 THEN '' ELSE concat('/Path/', {did}) END, "
-        f"CASE WHEN doc_id % 3 = 0 THEN concat('?b=2&utm_source=x&a=', {did}, '#frag') "
-        f"WHEN doc_id % 3 = 1 THEN '?fbclid=zz&gclid=q' "
-        f"ELSE '#only-fragment' END)"
-    )
-
-
-def q_canonical_urls(spark, sf_dir) -> DataFrame:
-    """URL canonicalization over deterministically-messy urls: lowercase
-    scheme/host, strip www + default ports + tracking params + fragment,
-    sort surviving params, default path to '/'."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(messy_url_sql("spark")).alias("url"))
-    return d.select(
-        "doc_id", "url",
-        F.expr(canonical_url_sql("url", "spark")).alias("url_canon"))
-
-
-def q_boilerplate_lines(spark, sf_dir) -> DataFrame:
-    """CCNet-style boilerplate removal at the engine's line grain: lines
-    repeated across ≥ 3 distinct docs vanish from every doc."""
-    out = remove_boilerplate_lines(_docs(spark, sf_dir), min_docs=3)
-    return out.select("doc_id", "kept_text", "n_lines_kept", "n_lines_removed")
 
 
 # ---------------------------------------------------------------------------
@@ -353,58 +279,6 @@ def q_pdf_extract(spark, sf_dir) -> DataFrame:
         "url", "n_pages", "extracted_text")
 
 
-def q_domain_blocklist(spark, sf_dir) -> DataFrame:
-    """UT1-style domain blocklist filter over deterministically-messy
-    urls (mixed case, www repeats, default port, a sub. prefix every
-    fifth doc so the parent-domain suffix match is exercised): blocked
-    iff host's registrable domain is host1/host4.example.com. Oracle is
-    closed-form — host extraction, suffix explosion, and the shuffle
-    semi-join must all agree to hit it."""
-    from .operators.webclean import filter_blocked_domains
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr("concat('HTTP://', CASE WHEN doc_id % 5 = 0 THEN 'Sub.' "
-               "ELSE 'WWW.' END, 'Host', cast(doc_id % 7 as string), "
-               "'.Example.COM:80/p/', cast(doc_id as string))").alias("url"))
-    bl = spark.createDataFrame(
-        [("host1.example.com",), ("host4.example.com",), ("evil.org",)],
-        "domain string")
-    return filter_blocked_domains(docs, bl).select(
-        "doc_id", "host", "blocked", "blocked_domain")
-
-
-def c4_span_text_sql() -> str:
-    """Gate corpus for span dedup: documents text with planted duplicate
-    three-sentence blocks — every third doc shares one block (cross-doc
-    dup) and every seventh-mod-2 doc carries a different block TWICE
-    (within-doc dup). 'Endcap.' absorbs unpunctuated doc tails so the
-    planted sentences stay byte-identical across docs. Valid verbatim in
-    both Spark SQL and DuckDB."""
-    shared = (" Endcap. Shared alpha one. Shared alpha two. "
-              "Shared alpha three.")
-    beta = " Rare beta one. Rare beta two. Rare beta three."
-    return (f"concat(text, "
-            f"CASE WHEN doc_id % 3 = 0 THEN '{shared}' ELSE '' END, "
-            f"CASE WHEN doc_id % 7 = 2 THEN ' Endcap.{beta}{beta}' "
-            f"ELSE '' END)")
-
-
-def q_c4_span_dedup(spark, sf_dir) -> DataFrame:
-    """C4 §2.2 three-sentence-span global dedup over the planted corpus:
-    first occurrence (min doc_id, span_ix) keeps its sentences, every
-    other occurrence — cross-doc or within-doc — loses them; text
-    reassembled from survivors. One shuffle on the 64-bit span hash +
-    doc-grain reassembly; oracle replays the identical algorithm as
-    staged DuckDB CTEs."""
-    from .operators.webclean import dedup_text_spans
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(c4_span_text_sql()).alias("text"))
-    return dedup_text_spans(docs).select(
-        "doc_id", "kept_text", "n_sent_kept", "n_sent_removed")
-
-
 MC_N_BLOCKS = 5  # blocks planted per doc in the main-content gate corpus
 
 
@@ -479,41 +353,8 @@ def q_main_content_text(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Corpus-composition gates: intra-doc line dedup, mixture sampling, DSIR
-# importance, and the composed corpus filter (round 6)
+# Corpus-composition gates: mixture sampling and DSIR importance
 # ---------------------------------------------------------------------------
-
-def line_text_sql(engine: str) -> str:
-    """Deterministic line-laden text from doc_id (both engines): a nav
-    line duplicated verbatim, two blank lines (must BOTH survive), the
-    document body, and a tail that duplicates the second line for even
-    doc_ids only — so removal counts vary across the corpus."""
-    s = "string" if engine == "spark" else "varchar"
-    return (
-        f"concat('Nav ', cast(doc_id % 3 as {s}), chr(10),"
-        f" 'Body ', cast(doc_id as {s}), chr(10),"
-        f" chr(10),"
-        f" 'Nav ', cast(doc_id % 3 as {s}), chr(10),"
-        f" text, chr(10),"
-        f" chr(10),"
-        f" CASE WHEN doc_id % 2 = 0 THEN concat('Body ', cast(doc_id as {s}))"
-        f" ELSE concat('Tail ', cast(doc_id as {s})) END)"
-    )
-
-
-def q_doc_line_dedup(spark, sf_dir) -> DataFrame:
-    """Within-document repeated-line removal over deterministically
-    line-laden text: the duplicated nav line and (for even ids) the
-    duplicated body line vanish, blank lines and first occurrences
-    survive in order. Map-side indexed-lambda filter — zero shuffle;
-    exact against the same expression builder in DuckDB."""
-    from .operators.webclean import with_line_dedup
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(line_text_sql("spark")).alias("text"))
-    return with_line_dedup(d).drop("text")
-
-
 MIXTURE_RATES: list[tuple[str, int]] = [
     ("src0", 2_300_000),   # 2.3 epochs: upsampled source
     ("src1", 500_000),     # downsampled by half
@@ -564,87 +405,6 @@ def q_dsir_importance(spark, sf_dir) -> DataFrame:
     return with_importance(d).drop("text")
 
 
-#: a paragraph that passes every Gopher/C4 rule (3 terminal-punctuated
-#: ≥5-word lines, ≥50 mostly-alphabetic words, stopword hits, no braces)
-_GOOD_LINE = ("The history of the university and the town that have "
-              "grown with it was written during the long century by "
-              "many careful scholars.")
-#: a C4-surviving line loaded with raw-web DSIR evidence — docs carrying
-#: it stay clean but score low enough that most get sampled out
-_SPAM_LINE = ("Click the free offer and buy now to subscribe with "
-              "one more click today.")
-
-
-def corpus_text_sql() -> str:
-    """Gate corpus for the composed filter (engine-neutral SQL): even
-    doc_ids carry the clean paragraph (every fourth-mod-2 doc with the
-    spammy-but-clean DSIR line appended) so documents reach — and split
-    at — every stage; odd doc_ids keep the raw table text and die at
-    language/quality/cleaning stages as before."""
-    good3 = f"concat('{_GOOD_LINE}', chr(10), '{_GOOD_LINE}', chr(10), '{_GOOD_LINE}')"
-    spam3 = f"concat(chr(10), '{_SPAM_LINE}', chr(10), '{_SPAM_LINE}', chr(10), '{_SPAM_LINE}')"
-    return (
-        f"CASE WHEN doc_id % 2 = 0 THEN concat({good3}, "
-        f"CASE WHEN doc_id % 4 = 2 THEN {spam3} "
-        f"ELSE '' END) ELSE text END"
-    )
-
-
-def q_corpus_filter(spark, sf_dir) -> DataFrame:
-    """The composed pre-training corpus filter — the pipeline a corpus
-    release actually runs, as ONE query: UT1 domain blocklist (suffix
-    semi-join) → scored language ID → Gopher quality verdict → C4
-    cleaning verdict → DSIR importance sampling, with the first failing
-    stage recorded per document. The blocklist output passes its input
-    columns through, so every verdict is ONE map-side codegen stage on
-    top of the suffix-join — no re-join against the scan, no second
-    corpus-wide shuffle. Single-sourced with the Structured Streaming
-    path via `webclean.composed_quality_verdicts`."""
-    from .operators.webclean import composed_quality_verdicts
-
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(corpus_text_sql()).alias("text"),
-        F.expr("concat('HTTP://', CASE WHEN doc_id % 5 = 0 THEN 'Sub.' "
-               "ELSE 'WWW.' END, 'Host', cast(doc_id % 7 as string), "
-               "'.Example.COM:80/p/', cast(doc_id as string))").alias("url"))
-    bl = spark.createDataFrame(
-        [("host1.example.com",), ("host4.example.com",), ("evil.org",)],
-        "domain string")
-    return composed_quality_verdicts(docs, bl)
-
-
-def snapshot_url_sql(engine: str) -> str:
-    """Deterministic colliding-snapshot urls: ~100 distinct canonical
-    pages captured by many docs in messy spellings (case, www, default
-    port, tracking params) — canon collisions are the point."""
-    s = "string" if engine == "spark" else "varchar"
-    page = f"cast(doc_id % 100 as {s})"
-    return (
-        f"concat(CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://WWW.Site' "
-        f"ELSE 'https://site' END, cast(doc_id % 4 as {s}), "
-        f"'.Example.ORG', CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE '' END, "
-        f"'/page/', {page}, "
-        f"CASE WHEN doc_id % 3 = 0 THEN '?utm_source=x' ELSE '' END)"
-    )
-
-
-def q_url_dedup_latest(spark, sf_dir) -> DataFrame:
-    """Cross-snapshot URL dedup: canonicalize colliding messy urls, keep
-    the newest capture per canonical url (ties to highest doc_id). One
-    shuffle with map-side max_by partials; oracle replays via a DuckDB
-    window."""
-    from .operators.webclean import latest_per_canonical_url
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr(snapshot_url_sql("spark")).alias("url"),
-        # epoch-us capture time: wraps every 97 docs so max-ts keepers
-        # are not simply the max doc_id of the group
-        F.expr("cast(1700000000000000 + (doc_id % 97) * 3600000000 "
-               "as bigint)").alias("ts_us"))
-    return latest_per_canonical_url(d)
-
-
 def q_pack_sequences(spark, sf_dir) -> DataFrame:
     """GPT-2-style concat-and-chunk sequence packing: whitespace token
     counts, 8 salted packing streams, 512-token budget. One window
@@ -658,21 +418,6 @@ def q_pack_sequences(spark, sf_dir) -> DataFrame:
         F.expr(token_count_sql("text", "spark"))
         .cast("bigint").alias("n_tokens"))
     return pack_sequences(d, budget=512, n_buckets=8)
-
-
-def q_corpus_report(spark, sf_dir) -> DataFrame:
-    """Corpus-composition report over the composed filter: documents and
-    distinct hosts per (language, drop reason) — the release-metrics
-    rollup a corpus publisher ships with the data. One tiny-key agg on
-    top of the corpus_filter plan."""
-    return (
-        q_corpus_filter(spark, sf_dir)
-        .groupBy("lang_pred", "drop_reason")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-             F.countDistinct("host").cast("bigint").alias("n_hosts"),
-             F.sum(F.when(F.col("kept"), 1).otherwise(0)).cast("bigint")
-             .alias("n_kept"))
-    )
 
 
 def q_html_meta(spark, sf_dir) -> DataFrame:

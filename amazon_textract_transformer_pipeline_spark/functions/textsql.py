@@ -6,6 +6,11 @@ hand-writing two divergent implementations, every text-pipeline primitive is
 generated here for both dialects from one template — so the oracle *is* the
 same computation, modulo engine.
 
+The builders: ``h64`` (portable hash), ``words`` (whitespace tokens),
+``norm_text`` (lowercased, whitespace-collapsed) and ``shingles`` (word
+n-grams), which the operators, driver queries and oracles use; ``jaccard``
+and ``cosine``, which only their parity tests use.
+
 Dialect differences handled: size/len, concat_ws/array_to_string,
 sequence(inclusive)/range(exclusive), slice(pos,len)/list_slice(begin,end),
 filter/list_filter, array_intersect/list_intersect, aggregate/list_sum forms.
@@ -34,28 +39,6 @@ def norm_text(text_expr: str, engine: str) -> str:
     """Whitespace-collapsed lowercase — the exact-dedup normal form."""
     join = "concat_ws(' ', {})" if engine == "spark" else "array_to_string({}, ' ')"
     return join.format(words(f"lower({text_expr})", engine))
-
-
-def sentences(text_expr: str, engine: str) -> str:
-    """Sentence array, portable across engines: whitespace-normalized text
-    split after ``.``/``!``/``?`` + space. Implemented as literal
-    replaces to a control-char separator + a split — RE2 (DuckDB) has no
-    lookbehind, so the C4-style boundary rule is expressed without regex.
-    Empties are dropped (empty doc → empty array)."""
-    t = norm_join(words(text_expr, engine), engine)
-    m = t
-    for p in (".", "!", "?"):
-        m = f"replace({m}, '{p} ', concat('{p}', chr(1)))"
-    if engine == "spark":
-        return f"filter(split({m}, chr(1)), s -> s <> '')"
-    return f"list_filter(string_split({m}, chr(1)), s -> s != '')"
-
-
-def norm_join(arr_expr: str, engine: str) -> str:
-    """Join a string array with single spaces (engine-dialect)."""
-    if engine == "spark":
-        return f"concat_ws(' ', {arr_expr})"
-    return f"array_to_string({arr_expr}, ' ')"
 
 
 def shingles(ws_expr: str, n: int, engine: str) -> str:

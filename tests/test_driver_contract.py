@@ -87,6 +87,12 @@ def test_query_matches_oracle(spark, duck, name):
     assert not mism, f"{name}: first mismatches {mism}"
 
 
+def test_every_oracle_has_a_query():
+    # the parametrized gate looks only from query to oracle, so a leftover
+    # oracle of a deleted query would pass unseen
+    assert set(ORACLES) == set(entrymod.queries())
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

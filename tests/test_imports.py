@@ -88,12 +88,11 @@ def test_nested_dangling_import_is_reported():
 #: that falls out of reach fails it, and so does a deleted one until its
 #: entry goes, so the set only shrinks.
 KNOWN_UNREACHED = {
-    "functions.codecs": "still-image codecs, to be deleted (ROADMAP 4(c))",
-    "functions.jpeg": "still-image codecs, to be deleted (ROADMAP 4(c))",
-    "sources.iceberg": "Iceberg sink seam with no runtime jar on the test "
-                       "host; kept or deleted after ROADMAP direction 2",
+    "functions.codecs": "still-image codecs, to be deleted (ROADMAP 4(b))",
+    "functions.jpeg": "still-image codecs, to be deleted (ROADMAP 4(b))",
     "operators.seq2seq": "the reference's value normalization "
-                         "(util/normalize.py), not yet wired into the kernel",
+                         "(util/normalize.py), not yet wired into the kernel "
+                         "(ROADMAP 2(c), 4(e))",
 }
 ENTRY_POINTS = [
     ROOT / PKG / "plans" / "pipeline.py",

@@ -1,5 +1,5 @@
 """Corpus-composition operators: mixture/temperature sampling, DSIR
-importance scoring, intra-doc line dedup, and the composed corpus filter."""
+importance scoring and sequence packing."""
 
 from __future__ import annotations
 
@@ -18,10 +18,6 @@ from amazon_textract_transformer_pipeline_spark.operators.sampling import (
     mixture_sample,
     temperature_rates,
     with_importance,
-)
-from amazon_textract_transformer_pipeline_spark.operators.webclean import (
-    line_dedup_exprs,
-    with_line_dedup,
 )
 
 
@@ -145,34 +141,6 @@ def test_dsir_gram_counting_is_word_boundary_aware(spark):
 
 
 # ---------------------------------------------------------------------------
-# intra-document line dedup
-# ---------------------------------------------------------------------------
-
-def test_line_dedup_pinned_example(spark):
-    text = "\n".join([
-        "Home | About",    # 0 kept
-        "Body text here.",  # 1 kept
-        "",                 # 2 blank kept
-        "Home | About",     # 3 dup -> removed
-        "",                 # 4 blank kept (blanks never dedup)
-        "Body text here. ",  # 5 trailing space -> DIFFERENT line, kept
-        "Body text here.",  # 6 dup -> removed
-    ])
-    df = spark.createDataFrame([(0, text)], "doc_id long, text string")
-    row = with_line_dedup(df).collect()[0]
-    assert row["n_lines"] == 7
-    assert row["n_lines_removed"] == 2
-    assert row["kept_text"].split("\n") == [
-        "Home | About", "Body text here.", "", "", "Body text here. "]
-
-
-def test_line_dedup_zero_shuffle(spark):
-    df = spark.createDataFrame([(0, "a\nb\na")], "doc_id long, text string")
-    plan = with_line_dedup(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-# ---------------------------------------------------------------------------
 # cross-engine parity fuzz (the trim/NBSP lessons applied)
 # ---------------------------------------------------------------------------
 
@@ -190,7 +158,7 @@ def test_sampling_exprs_parity_adversarial(spark):
     spark.createDataFrame(pdf_in).createOrReplaceTempView("adv_samp")
     con = duckdb.connect()
     con.register("adv_samp", pdf_in)
-    for builder in (line_dedup_exprs, importance_exprs):
+    for builder in (importance_exprs,):
         se = builder("text", "spark")
         de = builder("text", "duck")
         ssel = ", ".join(f"{x} AS {k}" for k, x in se.items())
@@ -202,26 +170,6 @@ def test_sampling_exprs_parity_adversarial(spark):
         for c in sp.columns:
             assert sp[c].astype(object).equals(du[c].astype(object)), \
                 (builder.__name__, c)
-
-
-# ---------------------------------------------------------------------------
-# composed corpus filter: stage precedence
-# ---------------------------------------------------------------------------
-
-def test_corpus_filter_reason_precedence(spark):
-    """A blocked doc that would also fail quality reports
-    'blocked_domain'; stages are checked in pipeline order."""
-    from amazon_textract_transformer_pipeline_spark.driver_queries import (
-        q_corpus_filter,
-    )
-
-    out = q_corpus_filter(spark, "/root/testdata/sf0.001").toPandas()
-    blocked = out[out.blocked]
-    assert (blocked.drop_reason == "blocked_domain").all()
-    assert (out[out.kept].drop_reason.isna()).all()
-    # every stage fires somewhere in the gate corpus
-    assert {"blocked_domain", "language", "gopher_quality", "c4_cleaning",
-            "dsir_sampled_out"} <= set(out.drop_reason.dropna())
 
 
 # ---------------------------------------------------------------------------
@@ -277,29 +225,3 @@ def test_pack_sequences_deterministic(spark):
     b = pack_sequences(docs.repartition(7), budget=32, n_buckets=2) \
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     assert a.equals(b)  # layout independent of input partitioning
-
-
-# ---------------------------------------------------------------------------
-# cross-snapshot URL dedup
-# ---------------------------------------------------------------------------
-
-def test_latest_per_canonical_url(spark):
-    from amazon_textract_transformer_pipeline_spark.operators.webclean import (
-        latest_per_canonical_url,
-    )
-
-    rows = [
-        (1, "HTTP://WWW.A.com/x", 100),
-        (2, "http://a.com/x", 300),      # same canon, newest -> keeper
-        (3, "http://a.com/x?utm_source=z", 200),
-        (4, "http://b.com/y", 50),
-        (5, "http://B.com/y", 50),       # tie ts -> higher id wins
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, url string, ts_us long")
-    out = {r["url_canon"]: r
-           for r in latest_per_canonical_url(df).collect()}
-    assert set(out) == {"http://a.com/x", "http://b.com/y"}
-    a = out["http://a.com/x"]
-    assert (a["keeper_id"], a["keeper_ts_us"], a["n_versions"]) == (2, 300, 3)
-    b = out["http://b.com/y"]
-    assert (b["keeper_id"], b["keeper_ts_us"], b["n_versions"]) == (5, 50, 2)

@@ -1,5 +1,5 @@
 """Cross-engine parity: the textsql word/shingle/similarity builders and the
-quality, repetition, C4 and PII expression builders must produce identical
+quality, repetition and C4 expression builders must produce identical
 values on Spark and DuckDB, over the real driver documents and embeddings
 tables and adversarial strings."""
 
@@ -99,9 +99,6 @@ def test_quality_filter_exprs_parity_adversarial(spark):
         gopher_exprs,
         repetition_exprs,
     )
-    from amazon_textract_transformer_pipeline_spark.operators.webclean import (
-        pii_exprs,
-    )
 
     rng = random.Random(7)
     crafted = [
@@ -140,7 +137,7 @@ def test_quality_filter_exprs_parity_adversarial(spark):
     con = duckdb.connect()
     con.register("adv_docs", pdf_in)
 
-    for builder in (gopher_exprs, repetition_exprs, c4_exprs, pii_exprs):
+    for builder in (gopher_exprs, repetition_exprs, c4_exprs):
         se = builder("text", "spark")
         de = builder("text", "duck")
         for col in se:
