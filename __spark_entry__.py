@@ -41,7 +41,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "c4_filters": Q.q_c4_filters,
         "pack_sequences": Q.q_pack_sequences,
         "vocab_top_k": Q.q_vocab_top_k,
-        "html_meta": Q.q_html_meta,
         # --- extraction path
         "extract_text": Q.q_extract_text,
         "word_enrichment": Q.q_word_enrichment,
@@ -52,9 +51,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "apply_review": Q.q_apply_review,
         # --- splitter over the spread bridge
         "split_windows": Q.q_split_windows,
-        # --- densitometric main content (spread parse)
-        "main_content_blocks": Q.q_main_content_blocks,
-        "main_content_text": Q.q_main_content_text,
         # --- text stats
         "text_stats": Q.q_text_stats,
         "langid_scores": Q.q_langid_scores,
@@ -68,7 +64,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    dw = X.words("text", "duck")
     sqls: dict[str, str] = {
         "extract_text": O.extract_text_oracle(),
         "word_enrichment": O.word_enrichment_oracle(),
@@ -295,56 +290,6 @@ FROM range(0, 120) t(i)"""
     # (oracle.py::split_windows_oracle) — was rows-only in round 1
     sqls["split_windows"] = O.split_windows_oracle(24)
 
-    # main_content oracles: planted block features re-derived closed-form
-    # (same mc_feature_sql string both engines), then the identical
-    # WSDM-2010 window+CASE classifier replayed in DuckDB.
-    from amazon_textract_transformer_pipeline_spark.driver_queries import (
-        MC_N_BLOCKS,
-        mc_feature_sql,
-    )
-    from amazon_textract_transformer_pipeline_spark.operators.maincontent import (
-        classifier_case,
-        link_density_sql,
-    )
-
-    mc_nw, mc_lw = mc_feature_sql()
-    mc_ctes = f"""
-WITH mcf AS MATERIALIZED (
-  SELECT doc_id, {dw} AS ws, len({dw}) AS n FROM documents
-  WHERE len({dw}) >= 2 * {MC_N_BLOCKS}
-),
-mcg AS (
-  SELECT doc_id, ws, n, cast(i AS int) AS block_ix,
-         {mc_nw} AS n_words, {mc_lw} AS n_link_words
-  FROM mcf, (SELECT unnest(range(0, {MC_N_BLOCKS})) AS i) ii
-),
-mcd AS (
-  SELECT *, {link_density_sql()} AS link_density FROM mcg
-),
-mcw AS (
-  SELECT *,
-    coalesce(lag(n_words) OVER w, 0) AS prev_words,
-    coalesce(lag(link_density) OVER w, 0.0) AS prev_link_density,
-    coalesce(lead(n_words) OVER w, 0) AS next_words
-  FROM mcd WINDOW w AS (PARTITION BY doc_id ORDER BY block_ix)
-),
-mcc AS (
-  SELECT *, {classifier_case()} AS is_content FROM mcw
-)"""
-    sqls["main_content_blocks"] = f"""{mc_ctes}
-SELECT doc_id, block_ix, n_words, n_link_words, link_density, is_content
-FROM mcc"""
-    sqls["main_content_text"] = f"""{mc_ctes}
-SELECT doc_id,
-  count(*) AS n_blocks,
-  cast(sum(CASE WHEN is_content THEN 1 ELSE 0 END) AS int)
-    AS n_content_blocks,
-  coalesce(string_agg(CASE WHEN is_content THEN array_to_string(
-      list_slice(ws, cast(floor(block_ix * n / {MC_N_BLOCKS}) AS int) + 1,
-                 cast(floor((block_ix + 1) * n / {MC_N_BLOCKS}) AS int)), ' ')
-      END, ' ' ORDER BY block_ix), '') AS main_text
-FROM mcc GROUP BY doc_id"""
-
     # mixture_sample oracle: identical integer ppm arithmetic (DIV↔//,
     # salted portable hash) over the same literal rate catalog.
     from amazon_textract_transformer_pipeline_spark.driver_queries import (
@@ -420,24 +365,5 @@ SELECT CAST(row_number() OVER (ORDER BY n_occurrences DESC, token ASC)
             AS BIGINT) AS vocab_rank,
        token, n_occurrences, n_docs
 FROM c ORDER BY n_occurrences DESC, token ASC LIMIT 200"""
-
-    # html_meta oracle: fully closed-form — every planted head signal is
-    # predictable from doc_id; the gate passes only if the real parser
-    # (attr casing/quoting, token trimming, 'none' implication, rel token
-    # lists, url= slicing, entity-decoded titles) recovers it exactly.
-    sqls["html_meta"] = """
-SELECT doc_id,
-  concat('Doc ', cast(doc_id AS varchar), ' & friends') AS title,
-  (doc_id % 4) IN (1, 2, 3) AS robots_noindex,
-  (doc_id % 4) IN (1, 3) AS robots_nofollow,
-  CASE WHEN doc_id % 5 = 0
-       THEN 'https://canon.example/p/' || cast(doc_id % 50 AS varchar)
-  END AS canonical_href,
-  CASE WHEN doc_id % 7 = 0
-       THEN 'https://next.example/' || cast(doc_id AS varchar)
-  END AS refresh_url,
-  CAST(CASE WHEN doc_id % 4 = 0 THEN 0 ELSE 1 END +
-       CASE WHEN doc_id % 7 = 0 THEN 1 ELSE 0 END AS INT) AS n_meta_tags
-FROM documents"""
 
     return {k: v for k, v in sqls.items() if v is not None}

@@ -279,79 +279,6 @@ def q_pdf_extract(spark, sf_dir) -> DataFrame:
         "url", "n_pages", "extracted_text")
 
 
-MC_N_BLOCKS = 5  # blocks planted per doc in the main-content gate corpus
-
-
-def mc_feature_sql() -> tuple[str, str]:
-    """Closed-form planted block features in terms of columns (i, n) —
-    the SAME string is valid Spark SQL and DuckDB SQL. Block i of a doc
-    with n words holds words [floor(i*n/5), floor((i+1)*n/5)); block 1 is
-    fully linked (a nav strip), block 3 half-linked (a related-articles
-    strip), the rest unlinked."""
-    k = MC_N_BLOCKS
-    nw = (f"(cast(floor((i + 1) * n / {k}) as int) - "
-          f"cast(floor(i * n / {k}) as int))")
-    lw = (f"CASE WHEN i = 1 THEN {nw} "
-          f"WHEN i = 3 THEN cast(floor(({nw} + 1) / 2) as int) "
-          f"ELSE 0 END")
-    return nw, lw
-
-
-def _mc_classified(spark, sf_dir) -> DataFrame:
-    """Synthesize deterministic HTML from the documents table (5 blocks
-    per doc, link-wrapping per mc_feature_sql), parse it with the REAL
-    block parser, classify with the WSDM-2010 window+CASE plan."""
-    from .operators.maincontent import classify_blocks, html_to_blocks
-
-    nw, _ = mc_feature_sql()
-    lo = f"cast(floor(i * n / {MC_N_BLOCKS}) as int)"
-    half = f"cast(floor(({nw} + 1) / 2) as int)"
-    block = (
-        f"concat('<p>', concat_ws(' ', transform(slice(esc, {lo} + 1, {nw}), "
-        f"(w, j) -> CASE WHEN i = 1 OR (i = 3 AND j < {half}) "
-        f"THEN concat('<a href=\"#\">', w, '</a>') ELSE w END)), '</p>')")
-    html = (f"concat('<html><body>', concat_ws('', "
-            f"transform(sequence(0, {MC_N_BLOCKS - 1}), i -> {block})), "
-            f"'</body></html>')")
-    pages = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.expr(X.words("text", "spark")).alias("ws"))
-        .withColumn("n", F.expr("size(ws)"))
-        .filter(f"n >= 2 * {MC_N_BLOCKS}")
-        .withColumn("esc", F.expr(
-            "transform(ws, w -> replace(replace(replace(w, '&', '&amp;'), "
-            "'<', '&lt;'), '>', '&gt;'))"))
-        .select("doc_id", F.encode(F.expr(html), "UTF-8").alias("html"))
-    )
-    from .plans.partitioning import spread_if_narrow
-
-    pages = spread_if_narrow(pages, "doc_id")  # python parse: parallelize
-    return classify_blocks(html_to_blocks(pages, id_col="doc_id"),
-                           id_col="doc_id")
-
-
-def q_main_content_blocks(spark, sf_dir) -> DataFrame:
-    """Densitometric boilerplate classification (Kohlschuetter et al.,
-    WSDM 2010 NumWordsRules) over HTML synthesized from the documents
-    table: the REAL block parser must recover exactly the planted
-    (n_words, n_link_words) per block, and the lag/lead+CASE classifier
-    must agree with the identical expressions in DuckDB. Parse is
-    map-only; classification adds one per-doc window shuffle."""
-    return _mc_classified(spark, sf_dir).select(
-        "doc_id", "block_ix", "n_words", "n_link_words",
-        "link_density", "is_content")
-
-
-def q_main_content_text(spark, sf_dir) -> DataFrame:
-    """Per-doc main text reassembly: content blocks joined in document
-    order — oracle rebuilds it from the planted word slices."""
-    from .operators.maincontent import main_content_text
-
-    return main_content_text(_mc_classified(spark, sf_dir),
-                             id_col="doc_id").select(
-        "doc_id", "n_blocks", "n_content_blocks", "main_text")
-
-
 # ---------------------------------------------------------------------------
 # Corpus-composition gates: mixture sampling and DSIR importance
 # ---------------------------------------------------------------------------
@@ -418,41 +345,6 @@ def q_pack_sequences(spark, sf_dir) -> DataFrame:
         F.expr(token_count_sql("text", "spark"))
         .cast("bigint").alias("n_tokens"))
     return pack_sequences(d, budget=512, n_buckets=8)
-
-
-def q_html_meta(spark, sf_dir) -> DataFrame:
-    """Crawl-policy metadata over deterministically-planted HTML heads:
-    robots directives (quoted/unquoted/cased/padded, 'none' implication),
-    rel-token canonical links, meta-refresh targets, entity-bearing
-    titles. The REAL head parser must recover the closed-form plant.
-    Map-only Arrow stage, zero shuffle."""
-    from .operators.maincontent import html_meta_flags
-
-    s = "cast(doc_id as string)"
-    robots = (
-        "CASE WHEN doc_id % 4 = 1 THEN "
-        "'<meta name=\"robots\" content=\"noindex, nofollow\">' "
-        "WHEN doc_id % 4 = 2 THEN "
-        "'<META NAME=\"ROBOTS\" CONTENT=\" NOINDEX \">' "
-        "WHEN doc_id % 4 = 3 THEN '<meta name=robots content=none>' "
-        "ELSE '' END")
-    canonical = (
-        f"CASE WHEN doc_id % 5 = 0 THEN concat("
-        f"'<link rel=\"Canonical alternate\" "
-        f"href=\"https://canon.example/p/', cast(doc_id % 50 as string), "
-        f"'\">') ELSE '' END")
-    refresh = (
-        f"CASE WHEN doc_id % 7 = 0 THEN concat("
-        f"'<meta http-equiv=\"Refresh\" content=\"5; "
-        f"URL=https://next.example/', {s}, '\">') ELSE '' END")
-    title = f"concat('<title> Doc ', {s}, ' &amp;  friends </title>')"
-    html = (f"concat('<html><head>', {robots}, {canonical}, {refresh}, "
-            f"{title}, '</head><body><p>x</p></body></html>')")
-    from .plans.partitioning import spread_if_narrow
-
-    pages = spread_if_narrow(_docs(spark, sf_dir).select(
-        "doc_id", F.encode(F.expr(html), "UTF-8").alias("html")), "doc_id")
-    return html_meta_flags(pages, id_col="doc_id")
 
 
 def q_vocab_top_k(spark, sf_dir) -> DataFrame:

@@ -1595,10 +1595,6 @@ def pdf_extract_text(blob: bytes) -> str:
 # fixture writer
 # --------------------------------------------------------------------------
 
-def _esc_pdf_string(s: str) -> str:
-    return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
-
-
 def _esc_pdf_bytes(b: bytes) -> bytes:
     return b.replace(b"\\", rb"\\").replace(b"(", rb"\(") \
         .replace(b")", rb"\)")

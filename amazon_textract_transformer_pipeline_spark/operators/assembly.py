@@ -31,10 +31,6 @@ aggregate(
 """
 
 
-def page_text_col(words_col: str = "words") -> Column:
-    return F.expr(_PAGE_TEXT_EXPR.format(words=words_col))
-
-
 def doc_text_col(pages_col: str = "pages") -> Column:
     inner = _PAGE_TEXT_EXPR.format(words="pg.words")
     return F.expr(

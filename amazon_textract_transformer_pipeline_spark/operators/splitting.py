@@ -34,9 +34,6 @@ from ..schemas import WORD_SCHEMA
 
 #: max_position_embeddings=512 minus CLS+SEP (config.py:325-331; ner.py:439)
 DEFAULT_MAX_CONTENT_SEQ_LEN = 510
-#: tensor-core padding quantum (inference.py:69-70, config.py:332-335) —
-#: carried for parity; only affects real-model batch padding.
-PAD_TO_MULTIPLE_OF = 8
 
 _PIECE_RE = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9]")
 _CHUNK = 4
@@ -321,16 +318,3 @@ def tokenize_windows(windows: DataFrame, tokenize=stub_tokenize) -> DataFrame:
 
     return windows.select("url", "page_num", "window_ix", "words") \
         .mapInPandas(run, schema=TOKENIZED_SCHEMA)
-
-
-def windows_with_length_bucket(windows: DataFrame, n_buckets: int = 8,
-                               max_len: int = DEFAULT_MAX_CONTENT_SEQ_LEN) -> DataFrame:
-    """Straggler lever (SURVEY §4): tag windows with a token-length bucket so
-    the inference stage can sortWithinPartitions — batches of similar length
-    minimize pad waste (the reference pads to longest-in-batch,
-    ner.py:193-198)."""
-    return windows.withColumn(
-        "len_bucket",
-        F.least(F.lit(n_buckets - 1),
-                (F.col("n_tokens") * n_buckets / F.lit(max_len)).cast("int")),
-    )

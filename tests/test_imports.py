@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import ast
 import importlib
+from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -141,3 +142,72 @@ def test_unreached_modules_are_the_known_ones():
     unreached = {m.removeprefix(PKG + ".")
                  for m in every - _reached(ENTRY_POINTS)}
     assert unreached == set(KNOWN_UNREACHED)
+
+
+#: Top-level package names nothing references, each kept for a stated
+#: reason. Like ``KNOWN_UNREACHED``, the ratchet below holds the uncalled
+#: set equal to these keys, so it only shrinks.
+KNOWN_UNCALLED = {
+    "operators.enrich.model_predictions": "the real-model path (needs "
+                                          "transformers); it moves into the "
+                                          "kernel's forward path "
+                                          "(ROADMAP 5(a))",
+}
+
+
+def _identifiers(tree: ast.AST):
+    """Every identifier ``tree`` mentions: names, attributes, import
+    aliases and identifier-shaped string constants (``__all__``,
+    ``getattr`` keys, registries keyed by name)."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, ast.alias):
+            yield from node.name.split(".")
+            if node.asname:
+                yield node.asname
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and node.value.isidentifier()):
+            yield node.value
+
+
+def _top_level_defs(module: ast.Module):
+    """(name, node) per top-level ``def``, ``class`` and assigned name."""
+    for node in module.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            yield node.name, node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) \
+                else [node.target]
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
+                        yield n.id, node
+
+
+def _uncalled(files: list[Path]) -> set[str]:
+    """``module.name`` per top-level package name that no file mentions
+    outside the name's own definition. Dunder names (``__version__``) are
+    read by tools, not by code, and are left out."""
+    trees = {f: ast.parse(f.read_text(), str(f)) for f in files}
+    seen = Counter(i for t in trees.values() for i in _identifiers(t))
+    out = set()
+    for f, tree in trees.items():
+        if f.relative_to(ROOT).parts[0] != PKG:
+            continue
+        module = ".".join(f.relative_to(ROOT / PKG).with_suffix("").parts)
+        for name, node in _top_level_defs(tree):
+            if name.startswith("__"):
+                continue
+            if seen[name] == sum(1 for i in _identifiers(node) if i == name):
+                out.add(f"{module}.{name}")
+    return out
+
+
+def test_uncalled_names_are_the_known_ones():
+    """A top-level name nothing references is dead code; deleting a
+    caller must take its helpers with it."""
+    assert _uncalled(FILES) == set(KNOWN_UNCALLED)
