@@ -4,9 +4,11 @@ Plays the role of the reference's pluggable OCR engine: any engine that emits
 the §1.1/§1.2 schema plugs into the downstream transforms
 (``notebooks/preproc/textract_transformers/ocr_engines/base.py:18-39``; the
 Tesseract adapter ``eng_tesseract.py`` is the reference instance, SURVEY.md
-§2.3). Here the "engine" is a boilerplate-stripping HTML main-content parser
-(stdlib html.parser — no native deps), emitting ordered word sequences with
-synthetic page-relative geometry.
+§2.3). Here the "engine" is a boilerplate-stripping HTML main-content parser,
+emitting ordered word sequences with synthetic page-relative geometry. A
+compiled-regex tokenizer covers the markup the main-content rules read;
+a document with any other markup goes through the stdlib ``HTMLParser``,
+which gives the same words (no native deps either way).
 
 Both engines emit geometry-only word tuples (:func:`document_words`).
 The extraction pipeline parses inside its per-document kernel
@@ -26,14 +28,22 @@ makes resume-by-anti-join (plans/lineage.py) exactly-once.
 
 from __future__ import annotations
 
-import hashlib
+import re
+import struct
 from collections.abc import Iterator
+from hashlib import sha1 as _sha1
+from html import unescape
 from html.parser import HTMLParser
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..schemas import DOC_WORDS_SCHEMA
+
+try:  # CPython's own sha256: faster than OpenSSL 3's on short keys
+    from _sha256 import sha256 as _sha256
+except ImportError:  # pragma: no cover - a build without it
+    from hashlib import sha256 as _sha256
 
 _BLOCK_TAGS = frozenset(
     ["p", "h1", "h2", "h3", "h4", "h5", "h6", "div", "li", "blockquote",
@@ -47,14 +57,45 @@ _SKIP_TAGS = frozenset(
 )
 _VOID_BREAK = frozenset(["br", "hr"])
 
+# The subset of HTML whose events HTMLParser (convert_charrefs=True)
+# reports the same way, one alternative per construct. findall's groups:
+# text, start tag, "/" of <x/>, end tag, script, style, raw text, rest.
+# Attributes are matched but not parsed: the rules read tag names only.
+_WS = r"[\t\n\r\f ]"
+_NAME = r"[a-zA-Z][-a-zA-Z0-9]*+"
+_ATTRS = (rf"(?:{_WS}++[a-zA-Z_:][-a-zA-Z0-9_:.]*+(?:{_WS}*+={_WS}*+"
+          rf"(?:'[^']*+'|\"[^\"]*+\"|[^\s'\"=<>`]++))?)*+{_WS}*+")
+_RAW = r"(?ai:script|style)(?![-a-zA-Z0-9])"
+_LT = r"<(?![a-zA-Z/!?])"  # a "<" that opens no construct: text
+_TOKENS = re.compile(
+    # text
+    rf"((?:[^<]|{_LT})[^<]*+(?:{_LT}[^<]*+)*+)"
+    # start tag; <x/> is a start and an end event
+    rf"|<(?!{_RAW})({_NAME}){_ATTRS}(/?)>"
+    rf"|</({_NAME}){_WS}*+>"
+    # script and style: raw text up to the first </script> (</style>);
+    # the ASCII-only names pass a non-ASCII case variant over as raw text,
+    # as HTMLParser does after its case-folding search
+    rf"|<(?:((?ai:script))|((?ai:style))){_ATTRS}(?:/>|>((?s:.*?))"
+    r"(?(5)</\s*(?ai:script)|</\s*(?ai:style))\s*>)"
+    # comment, declaration, processing instruction: no event
+    r"|<!--(?s:.*?)--\s*>|<!(?!--|\[)[^>]*+>|<\?[^>]*+>"
+    # anything else ends the match: the document goes to HTMLParser
+    r"|(<[\s\S]*)")
+
 
 class _MainContentParser(HTMLParser):
     """Collect pages→lines→words per EXTRACTION_SPEC (sources/synthetic.py).
 
     <article> delimits pages; block tags delimit lines; skip tags drop whole
-    subtrees; inline tags are transparent; entities are unescaped by
-    convert_charrefs. If a document has no <article>, the whole <body> is
-    page 1 (robustness for non-synthetic HTML).
+    subtrees; inline tags are transparent; entities are unescaped per text
+    chunk. If a document has no <article>, the whole <body> is page 1
+    (robustness for non-synthetic HTML).
+
+    :meth:`feed_subset` tokenizes a document with one compiled regex
+    (``_TOKENS``) and dispatches to the handlers below; a document with
+    any markup outside that grammar goes through ``HTMLParser.feed``
+    instead, so both paths share the rules and give the same pages.
     """
 
     def __init__(self) -> None:
@@ -123,6 +164,40 @@ class _MainContentParser(HTMLParser):
             self._ensure_default_page()
         self._buf.append(data)
 
+    def feed_subset(self, text: str) -> bool:
+        """Tokenize the whole of ``text`` with ``_TOKENS`` and dispatch its
+        events, as ``feed`` would; False, with nothing dispatched, when
+        ``text`` holds markup outside the grammar."""
+        tokens = _TOKENS.findall(text)
+        if not tokens:
+            return True
+        if tokens[-1][7]:
+            return False
+        tail = tokens.pop()[0] if tokens[-1][0] else ""
+        start, end, data = self.handle_starttag, self.handle_endtag, \
+            self.handle_data
+        for txt, tag, slash, etag, script, style, raw, _ in tokens:
+            if txt:
+                data(unescape(txt))
+            elif tag:
+                tag = tag.lower()
+                start(tag, [])
+                if slash:
+                    end(tag)
+            elif etag:
+                end(etag.lower())
+            elif script or style:
+                tag = "script" if script else "style"
+                start(tag, [])
+                if raw:
+                    data(raw)
+                end(tag)
+        # text after the last tag: HTMLParser may hold it back until
+        # close() (a trailing "<", an "&" that may start a reference)
+        if tail:
+            self.feed(tail)
+        return True
+
     def close(self) -> None:  # flush trailing text
         self._flush()
         super().close()
@@ -140,9 +215,14 @@ def parse_html(html_bytes: bytes | bytearray | memoryview | None) -> list[list[l
     from ..functions.charset import decode_html
 
     p = _MainContentParser()
-    p.feed(decode_html(html_bytes))
+    text = decode_html(html_bytes)
+    if not p.feed_subset(text):
+        p.feed(text)
     p.close()
     return [pg for pg in p.pages if pg]
+
+
+_U32 = struct.Struct(">I").unpack_from
 
 
 def word_conf_id(url: str, w: tuple) -> tuple[float, str]:
@@ -150,8 +230,9 @@ def word_conf_id(url: str, w: tuple) -> tuple[float, str]:
     Textract's 0-100 scale and a sha256 block id, both from the key
     ``{url}|p{page}|l{line}|w{position in line}``."""
     key = f"{url}|p{w[0]}|l{w[1]}|w{w[3]}".encode("utf-8")
-    h = int(hashlib.sha1(key).hexdigest()[:8], 16)
-    return 50.0 + (h % 5000) / 100.0, hashlib.sha256(key).hexdigest()[:32]
+    # int(sha1 hexdigest[:8], 16), read from the digest's first 4 bytes
+    h = _U32(_sha1(key).digest())[0]
+    return 50.0 + (h % 5000) / 100.0, _sha256(key).hexdigest()[:32]
 
 
 def _html_words(pages: list[list[list[str]]]) -> list[tuple[int, list[tuple]]]:
@@ -246,18 +327,6 @@ def _struct(url: str, pages: list[tuple[int, list[tuple]]]) -> list[dict]:
             })
         out.append({"page_num": page_num, "words": structs})
     return out
-
-
-def pages_to_struct(url: str, pages: list[list[list[str]]]) -> list[dict]:
-    """§1.2 word structs of a parsed HTML document (:func:`_html_words`)."""
-    return _struct(url, _html_words(pages))
-
-
-def pdf_pages_to_struct(url: str, pdf_pages: list[dict]) -> list[dict]:
-    """§1.2 word structs of a parsed PDF (:func:`_pdf_words`), with the same
-    key scheme as the HTML front-end, so every downstream operator (reading
-    order, labels, entities, resume) treats both sources identically."""
-    return _struct(url, _pdf_words(pdf_pages))
 
 
 def parse_document_struct(url: str, payload) -> list[dict]:

@@ -164,29 +164,48 @@ def _scorer(url: str, model: str):
 
 def _mention(run: list[tuple], cls: int, name: str, run_id: int,
              flush_page: int, ixe: int, score) -> dict:
-    lines: list[str] = []
-    key, line = None, []
+    """One mention from its run of words, in one pass: the text (words of
+    a line joined by " ", lines by "\\n"), the box, the minimum confidence
+    and the block ids."""
+    first = run[0]
+    page, line = first[0], first[1]
+    left, top = first[5], first[6]
+    right, bottom = left + first[7], top + first[8]
+    parts: list[str] = []
+    blocks: list[str] = []
+    conf = math.inf
     for w in run:
-        if (w[0], w[1]) != key:
-            if line:
-                lines.append(" ".join(line))
-            key, line = (w[0], w[1]), []
-        line.append(w[2])
-    lines.append(" ".join(line))
-    left = min(w[5] for w in run)
-    top = min(w[6] for w in run)
-    right = max(w[5] + w[7] for w in run)
-    bottom = max(w[6] + w[8] for w in run)
-    scored = [score(w) for w in run]
+        if w[1] != line or w[0] != page:
+            page, line = w[0], w[1]
+            parts.append("\n")
+        else:
+            parts.append(" ")
+        parts.append(w[2])
+        x, y = w[5], w[6]
+        if x < left:
+            left = x
+        if y < top:
+            top = y
+        x, y = x + w[7], y + w[8]
+        if x > right:
+            right = x
+        if y > bottom:
+            bottom = y
+        c, wid, p = score(w)
+        blocks.append(wid)
+        # the reference mixes the 0-1 and 0-100 scales (extract.py:46-54)
+        if p is None:
+            p = 1.0
+        if p <= c:
+            c = p
+        if c < conf:
+            conf = c
     return {
         "run_id": run_id, "ClassId": cls, "ClassName": name,
-        # the reference mixes the 0-1 and 0-100 scales (extract.py:46-54)
-        "Confidence": min(min(1.0 if p is None else p, c)
-                          for c, _, p in scored),
-        "Blocks": [i for _, i, _ in scored],
+        "Confidence": conf, "Blocks": blocks,
         "BoundingBox": {"left": left, "top": top, "width": right - left,
                         "height": bottom - top},
-        "PageNum": flush_page, "Text": "\n".join(lines), "RawText": None,
+        "PageNum": flush_page, "Text": "".join(parts[1:]), "RawText": None,
         "ixe": ixe,
     }
 

@@ -40,12 +40,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .enrich import RUN_LEN as _RUN_LEN
+from .enrich import _hash64_py
 from .enrich import stub_cls_py as _stub_cls_py
 
 #: reference endpoint batch size (inference.py:68)
 INFERENCE_BATCH_SIZE = 8
-
-_H64_MASK = (1 << 63) - 1
 
 
 class StubModel:
@@ -72,10 +71,7 @@ class StubModel:
         ``(n_words, k, C)`` block sums each word's k rows in the same
         order as ``mean(axis=0)`` of one word's ``(k, C)`` rows, so the
         result is bit-identical to that loop."""
-        import hashlib
-
-        key = f"{url}|{page_num}|{window_ix}".encode()
-        seed = int(hashlib.md5(key).hexdigest()[:15], 16) & _H64_MASK
+        seed = _hash64_py(f"{url}|{page_num}|{window_ix}")
         rng = np.random.Generator(np.random.PCG64(seed))
         counts = np.asarray(token_counts, dtype=np.intp)
         n_tok = int(counts.sum())

@@ -23,10 +23,7 @@ from amazon_textract_transformer_pipeline_spark.operators.consolidate import (
 )
 from amazon_textract_transformer_pipeline_spark.operators.enrich import stub_predictions
 from amazon_textract_transformer_pipeline_spark.operators.entities import extract_mentions
-from amazon_textract_transformer_pipeline_spark.operators.frontend import (
-    pages_to_struct,
-    parse_html,
-)
+from amazon_textract_transformer_pipeline_spark.operators.frontend import parse_html
 from amazon_textract_transformer_pipeline_spark.operators.fused import (
     document_fields,
     document_mentions,
@@ -35,6 +32,7 @@ from amazon_textract_transformer_pipeline_spark.operators.fused import (
     mentions_of,
 )
 from amazon_textract_transformer_pipeline_spark.sources.synthetic import make_page_row
+from test_frontend import pages_to_struct
 
 N_DOCS = 300
 CFG_ROWS = field_config_rows(DEMO_CONFIG)

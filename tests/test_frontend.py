@@ -2,18 +2,36 @@
 
 from __future__ import annotations
 
+import timeit
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from amazon_textract_transformer_pipeline_spark.operators.assembly import (
     assemble_text,
     words_view,
 )
+from amazon_textract_transformer_pipeline_spark.operators import frontend
 from amazon_textract_transformer_pipeline_spark.operators.frontend import (
-    pages_to_struct,
     parse_html,
 )
 from amazon_textract_transformer_pipeline_spark.sources.synthetic import (
     expected_text,
     make_page_row,
 )
+
+
+def pages_to_struct(url: str, pages: list[list[list[str]]]) -> list[dict]:
+    """§1.2 word structs of a parsed HTML document, built from the parse
+    (``frontend._html_words``) rather than from the payload dispatch."""
+    return frontend._struct(url, frontend._html_words(pages))
+
+
+def pdf_pages_to_struct(url: str, pdf_pages: list[dict]) -> list[dict]:
+    """§1.2 word structs of a parsed PDF (``frontend._pdf_words``), with
+    the same key scheme as the HTML front-end."""
+    return frontend._struct(url, frontend._pdf_words(pdf_pages))
 
 
 def test_parse_html_pure_roundtrip():
@@ -114,14 +132,34 @@ def test_skewed_corpus_extracts_byte_identical(spark):
     assert hot == 18  # hot_frac 0.3
 
 
-def _twin_pages(spark, pages_df):
-    """(url, html) rows for the text-twin test: the fixture's pages, the
-    PDF fixtures of test_pdf, hostile HTML and degenerate payloads."""
+#: hostile HTML and degenerate payloads, (url, bytes or None)
+HOSTILE = [
+    ("bad://garbage", bytes(range(256)) * 40),
+    ("bad://latin1", "<p>caf\xe9 na\xefve \xff\xfe</p>".encode("latin-1")),
+    ("bad://utf16", "<article><p>wide text</p></article>".encode("utf-16")),
+    ("bad://unclosed", b"<html><body><article><p>open <b>bold <i>it"
+                       b"<div>more <p>words"),
+    ("bad://nested-nav", b"<body><nav><nav><p>menu</p></nav><p>still"
+                         b"</p></nav><p>kept text</p><article><p>art"
+                         b"</p><nav><article><p>x</p></article></nav>"
+                         b"</article></body>"),
+    ("bad://big-attr", b'<p data-x="' + b"a" * 100_000 + b'">after '
+                       b"attr</p>"),
+    ("bad://pdf-garbage", b"%PDF-1.4\ngarbage"),
+    ("bad://null", None),
+    ("bad://empty-body", b"<html><body></body></html>"),
+    ("bad://empty", b""),
+]
+
+
+def twin_rows() -> list[tuple[str, bytes | None]]:
+    """(url, payload) rows beyond the generators: the PDF fixtures of
+    test_pdf (every structural and font dialect, AES, a corrupt PDF) and
+    :data:`HOSTILE`."""
     from amazon_textract_transformer_pipeline_spark.functions import pdf
 
     from test_pdf import ACCENT_PAGES, DIALECTS, PAGES
 
-    blob = pdf.write_pdf(PAGES)
     rows = [(f"pdf://pages/{i}", pdf.write_pdf(PAGES, **kw))
             for i, kw in enumerate(DIALECTS)]
     rows += [(f"pdf://accent/{f}", pdf.write_pdf(ACCENT_PAGES, font=f))
@@ -129,25 +167,14 @@ def _twin_pages(spark, pages_df):
     rows += [(f"pdf://aes/{i}", pdf.write_pdf(ACCENT_PAGES, font="winansi",
                                               encrypt="aes", **kw))
              for i, kw in enumerate([{}, {"objstm": True}])]
-    rows += [
-        ("bad://garbage", bytes(range(256)) * 40),
-        ("bad://latin1", "<p>caf\xe9 na\xefve \xff\xfe</p>".encode("latin-1")),
-        ("bad://utf16", "<article><p>wide text</p></article>"
-         .encode("utf-16")),
-        ("bad://unclosed", b"<html><body><article><p>open <b>bold <i>it"
-                           b"<div>more <p>words"),
-        ("bad://nested-nav", b"<body><nav><nav><p>menu</p></nav><p>still"
-                             b"</p></nav><p>kept text</p><article><p>art"
-                             b"</p><nav><article><p>x</p></article></nav>"
-                             b"</article></body>"),
-        ("bad://big-attr", b'<p data-x="' + b"a" * 100_000 + b'">after '
-                           b"attr</p>"),
-        ("bad://corrupt-pdf", blob[:200]),
-        ("bad://pdf-garbage", b"%PDF-1.4\ngarbage"),
-        ("bad://null", None),
-        ("bad://empty-body", b"<html><body></body></html>"),
-        ("bad://empty", b""),
-    ]
+    rows.append(("bad://corrupt-pdf", pdf.write_pdf(PAGES)[:200]))
+    return rows + HOSTILE
+
+
+def _twin_pages(spark, pages_df):
+    """(url, html) rows for the text-twin test: the fixture's pages and
+    :func:`twin_rows`."""
+    rows = twin_rows()
     odd = spark.createDataFrame(
         [(u, None if h is None else bytearray(h)) for u, h in rows],
         "url string, html binary")
@@ -198,7 +225,6 @@ def test_kernel_word_scores_match_struct_view(pages_df):
     from amazon_textract_transformer_pipeline_spark.functions import pdf
     from amazon_textract_transformer_pipeline_spark.operators.frontend import (
         document_words,
-        pdf_pages_to_struct,
     )
     from amazon_textract_transformer_pipeline_spark.operators.fused import (
         _scorer,
@@ -231,3 +257,128 @@ def test_kernel_word_scores_match_struct_view(pages_df):
                 assert window(w + (None, 0.25)) == (conf, wid, 0.25)
                 n_words += 1
     assert n_words > 10_000
+
+
+# ---------------------------------------------------------------------------
+# The regex tokenizer (``_MainContentParser.feed_subset``) against
+# ``HTMLParser.feed``: same pages whenever the fast path accepts a document.
+# ---------------------------------------------------------------------------
+def _fast_and_stdlib(text: str):
+    """(accepted, fast-path pages, HTMLParser pages), empty pages kept."""
+    fast = frontend._MainContentParser()
+    accepted = fast.feed_subset(text)
+    fast.close()
+    ref = frontend._MainContentParser()
+    ref.feed(text)
+    ref.close()
+    return accepted, fast.pages, ref.pages
+
+
+_TAG_NAMES = sorted(frontend._SKIP_TAGS | frontend._BLOCK_TAGS
+                    | {"article", "head", "body", "br", "b", "x"})
+_ATTRS = ["", " id=a", " class='c d'", ' title="x>y"', " a=b/", " x",
+          " x = 'v' ", " data-q='<p>'", " a=&amp;"]
+
+
+@st.composite
+def _tag(draw) -> str:
+    name = "".join(c.upper() if draw(st.booleans()) else c
+                   for c in draw(st.sampled_from(_TAG_NAMES)))
+    ws = draw(st.sampled_from(["", " ", "\n"]))
+    kind = draw(st.sampled_from(["start", "end", "self"]))
+    if kind == "end":
+        return f"</{name}{ws}>"
+    attrs = draw(st.sampled_from(_ATTRS))
+    return f"<{name}{attrs}{ws}{'/' if kind == 'self' else ''}>"
+
+
+_PIECES = st.sampled_from([
+    "word ", "two words", " ", "\n", "&amp;", "&#39;", "&", "&lt", "&copy;",
+    "AT&T", "<", "<3", "< p", ">", "/", "=", "'", '"', "<!-- c -->",
+    "<!-- -- >", "<!--", "--", "-->", "<!DOCTYPE html>", "<?pi?>", "</x >",
+    "<x/>", "</ p>", "<!x>", "<![CDATA[x]]>", "</>", "café", "\xa0", "\x0b",
+])
+_SOUP = st.lists(
+    st.one_of(_tag(), _tag(), _PIECES,
+              st.text(alphabet="<>/!-=&;#'\" apPA\n", max_size=6)),
+    max_size=40).map("".join)
+
+
+@given(_SOUP)
+@settings(max_examples=1500, deadline=None)
+def test_subset_tokenizer_matches_htmlparser(text):
+    """Whenever the fast path accepts a document, its pages equal
+    HTMLParser's: self-closing tags, raw script/style text, comments,
+    stray "<", entities and mixed case included."""
+    accepted, fast, ref = _fast_and_stdlib(text)
+    if accepted:
+        assert fast == ref, text
+
+
+@pytest.mark.parametrize("text, pages", [
+    ("<p>a</p><nav/><p>b</p>", [[["a"], ["b"]]]),
+    ("<article/><article><p>x</p></article>", [[], [["x"]]]),
+    ("<p>a</p><script>x</p><p>y</SCRIPT >z</p>", [[["a"], ["z"]]]),
+    ("<p>a<!-- </p> -- >b</p>", [[["ab"]]]),
+    ("<p>a < b &amp; c&lt;d</p>", [[["a", "<", "b", "&", "c<d"]]]),
+    ("<p>x&am</p>p;", [[["x&am"], ["p;"]]]),
+    # trailing text HTMLParser holds back until close(), after the flush
+    ("<p>a</p>b &x", [[["a"]]]),
+    ("<p>a</p>b <", [[["a"], ["b"]]]),
+])
+def test_subset_tokenizer_quirks(text, pages):
+    """HTMLParser's quirks that the fast path copies, each accepted."""
+    assert _fast_and_stdlib(text) == (True, pages, pages)
+
+
+def test_subset_tokenizer_on_hostile_rows():
+    from amazon_textract_transformer_pipeline_spark.functions.charset import (
+        decode_html,
+    )
+
+    for url, payload in HOSTILE:
+        accepted, fast, ref = _fast_and_stdlib(decode_html(payload))
+        if accepted:
+            assert fast == ref, url
+
+
+@pytest.mark.parametrize("head, unit", [
+    ("<p", " x"), ('<p data-x="', "a"), ("<!--", "-- -"), ("", "<!--"),
+    ("<script>", "</scrip"), ("", "<script>"), ("", "<a x='"),
+    ("", "<p x=a"), ("", "<!DOCTYPE"), ("", "</p"),
+])
+def test_subset_tokenizer_time_is_linear(head, unit):
+    """Unterminated tags, attributes, comments and raw text are rejected
+    in time linear in the document: no regex backtracks."""
+    def seconds(n_bytes: int) -> float:
+        text = "<p>" + head + unit * (n_bytes // len(unit))
+        assert not frontend._MainContentParser().feed_subset(text)
+        return min(timeit.repeat(
+            lambda: frontend._MainContentParser().feed_subset(text),
+            number=1, repeat=5))
+
+    small, big = seconds(100_000), seconds(400_000)
+    assert big < 8 * small + 0.002, (head, unit, small, big)
+
+
+def test_subset_tokenizer_accepts_every_generator_page(spark, pages_df):
+    """The generators' pages all take the fast path, so the speed-up
+    cannot vanish silently."""
+    from amazon_textract_transformer_pipeline_spark.functions.charset import (
+        decode_html,
+    )
+    from amazon_textract_transformer_pipeline_spark.sources import (
+        skewed_pages_df,
+    )
+    from amazon_textract_transformer_pipeline_spark.sources.bridge import (
+        render_doc_html,
+    )
+
+    htmls = [r.html for r in pages_df.select("html").collect()]
+    htmls += [r.html for r in skewed_pages_df(spark, 32, heavy_lines=30)
+              .select("html").collect()]
+    htmls += [render_doc_html(i, make_page_row(i)["text"])[1]
+              for i in range(200)]
+    for html in htmls:
+        accepted, fast, ref = _fast_and_stdlib(decode_html(html))
+        assert accepted and fast == ref
