@@ -28,7 +28,7 @@ MODELS = ("sql-stub", "window-stub")
 _STAGE = """
 import sys
 root, out = sys.argv[1:3]
-sys.path[:0] = [root, root + "/tests"]
+sys.path.append(root + "/tests")
 from pyspark.sql import functions as F
 from amazon_textract_transformer_pipeline_spark.session import get_spark
 from amazon_textract_transformer_pipeline_spark.sources import (
@@ -48,8 +48,7 @@ spark.stop()
 
 _RUN = """
 import sys
-tree, pages, out = sys.argv[1:4]
-sys.path.insert(0, tree)
+pages, out = sys.argv[2:4]
 from amazon_textract_transformer_pipeline_spark.config import DEMO_CONFIG
 from amazon_textract_transformer_pipeline_spark.operators.fused import (
     extract_documents)
