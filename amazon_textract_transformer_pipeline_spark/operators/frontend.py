@@ -57,10 +57,12 @@ _SKIP_TAGS = frozenset(
 )
 _VOID_BREAK = frozenset(["br", "hr"])
 
-# The subset of HTML whose events HTMLParser (convert_charrefs=True)
-# reports the same way, one alternative per construct. findall's groups:
-# text, start tag, "/" of <x/>, end tag, script, style, raw text, rest.
-# Attributes are matched but not parsed: the rules read tag names only.
+# The subset of HTML whose events HTMLParser (convert_charrefs=True, as of
+# CPython 3.11; the differential test in tests/test_frontend.py holds the
+# two equal) reports the same way, one alternative per construct.
+# findall's groups: text, start tag, "/" of <x/>, end tag, script, style,
+# raw text, rest. Attributes are matched but not parsed: the rules read
+# tag names only.
 _WS = r"[\t\n\r\f ]"
 _NAME = r"[a-zA-Z][-a-zA-Z0-9]*+"
 _ATTRS = (rf"(?:{_WS}++[a-zA-Z_:][-a-zA-Z0-9_:.]*+(?:{_WS}*+={_WS}*+"

@@ -8,10 +8,11 @@ The inputs are generated once, by the tree this script belongs to: 20,000
 ``heavy_lines=300``, and ``tests/test_frontend.twin_rows`` (every PDF
 dialect, hostile HTML, degenerate payloads). Each tree then runs
 ``fused.extract_documents`` under both models in its own interpreter and
-local Spark session, with the tree as the working directory and
-``PYTHONPATH`` of the driver and of the Python workers. Every output column is compared per url, nested
-mentions (``Blocks``, ``BoundingBox``, ``Confidence``) and fields
-(``Values``) included; any difference exits non-zero.
+local Spark session, with the tree as the working directory and as the
+``PYTHONPATH`` of the driver and of the Python workers. Every output
+column is compared per url, nested mentions (``Blocks``, ``BoundingBox``,
+``Confidence``) and fields (``Values``) included; any difference exits
+non-zero.
 """
 
 from __future__ import annotations

@@ -23,7 +23,9 @@ from amazon_textract_transformer_pipeline_spark.operators.consolidate import (
 )
 from amazon_textract_transformer_pipeline_spark.operators.enrich import stub_predictions
 from amazon_textract_transformer_pipeline_spark.operators.entities import extract_mentions
-from amazon_textract_transformer_pipeline_spark.operators.frontend import parse_html
+from amazon_textract_transformer_pipeline_spark.operators.frontend import (
+    parse_html,
+)
 from amazon_textract_transformer_pipeline_spark.operators.fused import (
     document_fields,
     document_mentions,
