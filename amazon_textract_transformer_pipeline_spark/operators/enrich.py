@@ -20,11 +20,7 @@ interface:
 from __future__ import annotations
 
 import struct
-
-try:  # CPython's own md5: about twice as fast as OpenSSL 3's on short keys
-    from _md5 import md5 as _md5
-except ImportError:  # pragma: no cover - a build without it
-    from hashlib import md5 as _md5
+from hashlib import md5 as _md5
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

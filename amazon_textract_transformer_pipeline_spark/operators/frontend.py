@@ -7,8 +7,9 @@ Tesseract adapter ``eng_tesseract.py`` is the reference instance, SURVEY.md
 §2.3). Here the "engine" is a boilerplate-stripping HTML main-content parser,
 emitting ordered word sequences with synthetic page-relative geometry. A
 compiled-regex tokenizer covers the markup the main-content rules read;
-a document with any other markup goes through the stdlib ``HTMLParser``,
-which gives the same words (no native deps either way).
+from the first construct outside it, the rest of a document goes through
+the stdlib ``HTMLParser``, which gives the same words (no native deps
+either way).
 
 Both engines emit geometry-only word tuples (:func:`document_words`).
 The extraction pipeline parses inside its per-document kernel
@@ -32,6 +33,7 @@ import re
 import struct
 from collections.abc import Iterator
 from hashlib import sha1 as _sha1
+from hashlib import sha256 as _sha256
 from html import unescape
 from html.parser import HTMLParser
 
@@ -39,11 +41,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..schemas import DOC_WORDS_SCHEMA
-
-try:  # CPython's own sha256: faster than OpenSSL 3's on short keys
-    from _sha256 import sha256 as _sha256
-except ImportError:  # pragma: no cover - a build without it
-    from hashlib import sha256 as _sha256
 
 _BLOCK_TAGS = frozenset(
     ["p", "h1", "h2", "h3", "h4", "h5", "h6", "div", "li", "blockquote",
@@ -57,9 +54,14 @@ _SKIP_TAGS = frozenset(
 )
 _VOID_BREAK = frozenset(["br", "hr"])
 
-# The subset of HTML whose events HTMLParser (convert_charrefs=True, as of
-# CPython 3.11; the differential test in tests/test_frontend.py holds the
-# two equal) reports the same way, one alternative per construct.
+# The subset of HTML whose events HTMLParser (convert_charrefs=True)
+# reports the same way, one alternative per construct. It is pinned to
+# CPython 3.11's html.parser: a comment closes at "--\s*>" (so "--!>"
+# does not close it), and script/style raw text ends at the first
+# "</\s*script\s*>" in any case (so "</script/>" does not end it, and
+# "</ script>" does). Later releases changed both; the deterministic
+# cases of tests/test_frontend.py::test_subset_tokenizer_quirks fail on an
+# interpreter whose HTMLParser differs, as does the differential test.
 # findall's groups: text, start tag, "/" of <x/>, end tag, script, style,
 # raw text, rest. Attributes are matched but not parsed: the rules read
 # tag names only.
@@ -82,7 +84,7 @@ _TOKENS = re.compile(
     r"(?(5)</\s*(?ai:script)|</\s*(?ai:style))\s*>)"
     # comment, declaration, processing instruction: no event
     r"|<!--(?s:.*?)--\s*>|<!(?!--|\[)[^>]*+>|<\?[^>]*+>"
-    # anything else ends the match: the document goes to HTMLParser
+    # anything else: from here on the document goes to HTMLParser
     r"|(<[\s\S]*)")
 
 
@@ -95,9 +97,10 @@ class _MainContentParser(HTMLParser):
     (robustness for non-synthetic HTML).
 
     :meth:`feed_subset` tokenizes a document with one compiled regex
-    (``_TOKENS``) and dispatches to the handlers below; a document with
-    any markup outside that grammar goes through ``HTMLParser.feed``
-    instead, so both paths share the rules and give the same pages.
+    (``_TOKENS``) and dispatches to the handlers below; from the first
+    construct outside that grammar, the rest goes through
+    ``HTMLParser.feed``, so both paths share the rules and give the same
+    pages.
     """
 
     def __init__(self) -> None:
@@ -166,16 +169,19 @@ class _MainContentParser(HTMLParser):
             self._ensure_default_page()
         self._buf.append(data)
 
-    def feed_subset(self, text: str) -> bool:
-        """Tokenize the whole of ``text`` with ``_TOKENS`` and dispatch its
-        events, as ``feed`` would; False, with nothing dispatched, when
-        ``text`` holds markup outside the grammar."""
+    def feed_subset(self, text: str) -> int:
+        """Feed ``text``, as ``feed`` would: tokens of ``_TOKENS`` are
+        dispatched straight to the handlers, and the rest of ``text``, from
+        the first construct outside the grammar, goes through ``feed``.
+        Every token before it is a complete construct, so HTMLParser
+        starts on the rest as it would after parsing them. Returns the
+        length of that rest: 0 when the grammar covers all the markup."""
         tokens = _TOKENS.findall(text)
-        if not tokens:
-            return True
-        if tokens[-1][7]:
-            return False
-        tail = tokens.pop()[0] if tokens[-1][0] else ""
+        # the rest, and text after the last tag, which HTMLParser may hold
+        # back until close() (a trailing "<", an "&" that may start a
+        # reference): both go through feed
+        last = tokens.pop() if tokens and (tokens[-1][0] or tokens[-1][7]) \
+            else None
         start, end, data = self.handle_starttag, self.handle_endtag, \
             self.handle_data
         for txt, tag, slash, etag, script, style, raw, _ in tokens:
@@ -194,11 +200,10 @@ class _MainContentParser(HTMLParser):
                 if raw:
                     data(raw)
                 end(tag)
-        # text after the last tag: HTMLParser may hold it back until
-        # close() (a trailing "<", an "&" that may start a reference)
-        if tail:
-            self.feed(tail)
-        return True
+        if last is None:
+            return 0
+        self.feed(last[0] or last[7])
+        return len(last[7])
 
     def close(self) -> None:  # flush trailing text
         self._flush()
@@ -217,9 +222,7 @@ def parse_html(html_bytes: bytes | bytearray | memoryview | None) -> list[list[l
     from ..functions.charset import decode_html
 
     p = _MainContentParser()
-    text = decode_html(html_bytes)
-    if not p.feed_subset(text):
-        p.feed(text)
+    p.feed_subset(decode_html(html_bytes))
     p.close()
     return [pg for pg in p.pages if pg]
 

@@ -261,17 +261,19 @@ def test_kernel_word_scores_match_struct_view(pages_df):
 
 # ---------------------------------------------------------------------------
 # The regex tokenizer (``_MainContentParser.feed_subset``) against
-# ``HTMLParser.feed``: same pages whenever the fast path accepts a document.
+# ``HTMLParser.feed``: the same pages for every document, whether the
+# grammar covers all of its markup or the rest goes through ``feed``.
 # ---------------------------------------------------------------------------
 def _fast_and_stdlib(text: str):
-    """(accepted, fast-path pages, HTMLParser pages), empty pages kept."""
+    """(characters fed to HTMLParser from the first construct outside the
+    grammar, fast-path pages, HTMLParser pages), empty pages kept."""
     fast = frontend._MainContentParser()
-    accepted = fast.feed_subset(text)
+    rest = fast.feed_subset(text)
     fast.close()
     ref = frontend._MainContentParser()
     ref.feed(text)
     ref.close()
-    return accepted, fast.pages, ref.pages
+    return rest, fast.pages, ref.pages
 
 
 _TAG_NAMES = sorted(frontend._SKIP_TAGS | frontend._BLOCK_TAGS
@@ -307,12 +309,11 @@ _SOUP = st.lists(
 @given(_SOUP)
 @settings(max_examples=1500, deadline=None)
 def test_subset_tokenizer_matches_htmlparser(text):
-    """Whenever the fast path accepts a document, its pages equal
-    HTMLParser's: self-closing tags, raw script/style text, comments,
-    stray "<", entities and mixed case included."""
-    accepted, fast, ref = _fast_and_stdlib(text)
-    if accepted:
-        assert fast == ref, text
+    """The fast path's pages equal HTMLParser's: self-closing tags, raw
+    script/style text, comments, stray "<", entities, mixed case and
+    markup outside the grammar included."""
+    _, fast, ref = _fast_and_stdlib(text)
+    assert fast == ref, text
 
 
 @pytest.mark.parametrize("text, pages", [
@@ -325,10 +326,37 @@ def test_subset_tokenizer_matches_htmlparser(text):
     # trailing text HTMLParser holds back until close(), after the flush
     ("<p>a</p>b &x", [[["a"]]]),
     ("<p>a</p>b <", [[["a"], ["b"]]]),
+    # CPython 3.11's html.parser, which later releases changed: "--!>"
+    # closes no comment, "</script/>" ends no raw text, "</ script>" and
+    # "</script" + whitespace + ">" do
+    ("<p>a<!-- x --!> b --> c</p>", [[["a", "c"]]]),
+    ("<p>a</p><script>x</script/>y</script>z", [[["a"], ["z"]]]),
+    ("<p>a</p><style>x</style/>y</style>z", [[["a"], ["z"]]]),
+    ("<p>a</p><script>x</ script>z", [[["a"], ["z"]]]),
+    ("<p>a</p><script>x</script\n>z", [[["a"], ["z"]]]),
+    ("<p>a</p><script>x</script\t/>y</script>z", [[["a"], ["z"]]]),
 ])
 def test_subset_tokenizer_quirks(text, pages):
-    """HTMLParser's quirks that the fast path copies, each accepted."""
-    assert _fast_and_stdlib(text) == (True, pages, pages)
+    """HTMLParser's quirks that the fast path copies, each inside the
+    grammar. The pinned pages fail at once on an interpreter whose
+    HTMLParser parses them otherwise."""
+    assert _fast_and_stdlib(text) == (0, pages, pages)
+
+
+@pytest.mark.parametrize("odd", [
+    "<![CDATA[x]]>", '<a href=a?b=c>', "<a href=/x?a=b>", "</ p>",
+    "<svg:rect/>", '<b @click="f">', "<p x=`y`>",
+])
+def test_subset_tokenizer_hands_the_rest_to_htmlparser(odd):
+    """Markup outside the grammar, at the start, middle or end of a
+    generator page: the tokens before it are dispatched, only the rest
+    goes through HTMLParser, and the pages are HTMLParser's."""
+    html = make_page_row(7)["html"].decode()
+    cut = html.index("<p", len(html) // 2)
+    for text in (odd + html, html[:cut] + odd + html[cut:], html + odd):
+        rest, fast, ref = _fast_and_stdlib(text)
+        assert fast == ref, text
+        assert 0 < rest <= len(text) - text.index(odd)
 
 
 def test_subset_tokenizer_on_hostile_rows():
@@ -337,9 +365,8 @@ def test_subset_tokenizer_on_hostile_rows():
     )
 
     for url, payload in HOSTILE:
-        accepted, fast, ref = _fast_and_stdlib(decode_html(payload))
-        if accepted:
-            assert fast == ref, url
+        _, fast, ref = _fast_and_stdlib(decode_html(payload))
+        assert fast == ref, url
 
 
 @pytest.mark.parametrize("head, unit", [
@@ -348,17 +375,18 @@ def test_subset_tokenizer_on_hostile_rows():
     ("", "<p x=a"), ("", "<!DOCTYPE"), ("", "</p"),
 ])
 def test_subset_tokenizer_time_is_linear(head, unit):
-    """Unterminated tags, attributes, comments and raw text are rejected
-    in time linear in the document: no regex backtracks."""
+    """The tokenizer ends at unterminated tags, attributes, comments and
+    raw text in time linear in the document: no regex backtracks. A 16x
+    larger document must take under 32x as long; backtracking would take
+    some 256x."""
     def seconds(n_bytes: int) -> float:
         text = "<p>" + head + unit * (n_bytes // len(unit))
-        assert not frontend._MainContentParser().feed_subset(text)
-        return min(timeit.repeat(
-            lambda: frontend._MainContentParser().feed_subset(text),
-            number=1, repeat=5))
+        assert frontend._TOKENS.findall(text)[-1][7]
+        return min(timeit.repeat(lambda: frontend._TOKENS.findall(text),
+                                 number=1, repeat=5))
 
-    small, big = seconds(100_000), seconds(400_000)
-    assert big < 8 * small + 0.002, (head, unit, small, big)
+    small, big = seconds(100_000), seconds(1_600_000)
+    assert big < 32 * small, (head, unit, small, big)
 
 
 def test_subset_tokenizer_accepts_every_generator_page(spark, pages_df):
@@ -380,5 +408,5 @@ def test_subset_tokenizer_accepts_every_generator_page(spark, pages_df):
     htmls += [render_doc_html(i, make_page_row(i)["text"])[1]
               for i in range(200)]
     for html in htmls:
-        accepted, fast, ref = _fast_and_stdlib(decode_html(html))
-        assert accepted and fast == ref
+        rest, fast, ref = _fast_and_stdlib(decode_html(html))
+        assert rest == 0 and fast == ref
