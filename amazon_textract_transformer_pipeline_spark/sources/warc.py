@@ -31,15 +31,13 @@ which is the correctness-preserving worst case. Output rows are flushed
 to Arrow in fixed-size chunks so the pandas staging buffer is bounded
 too.
 
-Everything is stdlib (``zlib``/``gzip``) — no third-party deps. A
-fixture writer (:func:`write_warc_gz`) emits spec-shaped
-member-per-record archives for tests and synthetic corpora.
+Everything is stdlib (``zlib``) — no third-party deps. The tests'
+fixture writer (``tests/test_warc_source.py::write_warc_gz``) emits
+spec-shaped member-per-record archives.
 """
 
 from __future__ import annotations
 
-import gzip
-import io
 import zlib
 from collections.abc import Iterator
 from datetime import datetime, timezone
@@ -47,6 +45,7 @@ from datetime import datetime, timezone
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.fused import skip_unchanged_zip_rereads
 from ..schemas import PAGES_INPUT_SCHEMA
 
 _CRLF = b"\r\n"
@@ -197,6 +196,7 @@ def read_warc(spark: SparkSession, path: str,
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         cols = [f.name for f in PAGES_INPUT_SCHEMA]
         flush_rows = 512  # bound the pandas staging buffer, not just zlib
         for b in batches:
@@ -213,40 +213,3 @@ def read_warc(spark: SparkSession, path: str,
                     yield pd.DataFrame(rows, columns=cols)
 
     return files.mapInPandas(run, schema=PAGES_INPUT_SCHEMA)
-
-
-def write_warc_gz(path: str, pages: list[dict],
-                  with_request_records: bool = True) -> None:
-    """Fixture/synthetic-corpus writer: member-per-record ``.warc.gz``
-    exactly like the Common Crawl layout (each record its own gzip
-    member). ``pages`` rows: {url, date: datetime, html: bytes}. Also
-    emits the non-page record types a real crawl interleaves (warcinfo,
-    request) so readers must actually filter."""
-
-    def record(rtype: str, headers: dict[str, str], body: bytes) -> bytes:
-        head = [b"WARC/1.0",
-                f"WARC-Type: {rtype}".encode()]
-        head += [f"{k}: {v}".encode() for k, v in headers.items()]
-        head.append(f"Content-Length: {len(body)}".encode())
-        return _CRLF.join(head) + _CRLF + _CRLF + body + _CRLF + _CRLF
-
-    out = io.BytesIO()
-    info = b"software: attp-spark-fixture\r\n"
-    out.write(gzip.compress(record("warcinfo", {
-        "Content-Type": "application/warc-fields"}, info)))
-    for i, p in enumerate(pages):
-        date = p["date"].strftime("%Y-%m-%dT%H:%M:%SZ")
-        common = {"WARC-Target-URI": p["url"], "WARC-Date": date,
-                  "WARC-Record-ID": f"<urn:uuid:fixture-{i}>"}
-        if with_request_records:
-            req = (b"GET / HTTP/1.1\r\nHost: fixture\r\n\r\n")
-            out.write(gzip.compress(record("request", {
-                **common, "Content-Type":
-                    "application/http; msgtype=request"}, req)))
-        http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html; "
-                b"charset=utf-8\r\n\r\n" + p["html"])
-        out.write(gzip.compress(record("response", {
-            **common, "Content-Type":
-                "application/http; msgtype=response"}, http)))
-    with open(path, "wb") as f:
-        f.write(out.getvalue())

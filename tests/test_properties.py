@@ -204,13 +204,14 @@ def test_warc_roundtrip_property(pages, with_requests):
     from datetime import datetime, timedelta
 
     from amazon_textract_transformer_pipeline_spark.sources import warc
+    from test_warc_source import write_warc_gz
 
     recs = [{"url": f"http://h/{i}/{u}", "date":
              datetime(2026, 1, 1) + timedelta(seconds=i), "html": body}
             for i, (u, body) in enumerate(pages)]
     import tempfile
     with tempfile.NamedTemporaryFile(suffix=".warc.gz") as f:
-        warc.write_warc_gz(f.name, recs, with_request_records=with_requests)
+        write_warc_gz(f.name, recs, with_request_records=with_requests)
         raw = gzip.decompress(open(f.name, "rb").read())
     rows = list(warc.records_to_page_rows(raw))
     assert [r["url"] for r in rows] == [r["url"] for r in recs]

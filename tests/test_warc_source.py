@@ -4,6 +4,8 @@ date parsing, and the end-to-end Common-Crawl-shaped path — fixture
 
 from __future__ import annotations
 
+import gzip
+import io
 from datetime import datetime
 
 from amazon_textract_transformer_pipeline_spark.sources import synthetic_pages_df
@@ -13,8 +15,46 @@ from amazon_textract_transformer_pipeline_spark.sources.warc import (
     read_warc,
     records_to_page_rows,
     strip_http_envelope,
-    write_warc_gz,
 )
+
+_CRLF = b"\r\n"
+
+
+def write_warc_gz(path: str, pages: list[dict],
+                  with_request_records: bool = True) -> None:
+    """Fixture writer: member-per-record ``.warc.gz`` exactly like the
+    Common Crawl layout (each record its own gzip member). ``pages`` rows:
+    {url, date: datetime, html: bytes}. Also emits the non-page record
+    types a real crawl interleaves (warcinfo, request) so readers must
+    actually filter."""
+
+    def record(rtype: str, headers: dict[str, str], body: bytes) -> bytes:
+        head = [b"WARC/1.0",
+                f"WARC-Type: {rtype}".encode()]
+        head += [f"{k}: {v}".encode() for k, v in headers.items()]
+        head.append(f"Content-Length: {len(body)}".encode())
+        return _CRLF.join(head) + _CRLF + _CRLF + body + _CRLF + _CRLF
+
+    out = io.BytesIO()
+    info = b"software: attp-spark-fixture\r\n"
+    out.write(gzip.compress(record("warcinfo", {
+        "Content-Type": "application/warc-fields"}, info)))
+    for i, p in enumerate(pages):
+        date = p["date"].strftime("%Y-%m-%dT%H:%M:%SZ")
+        common = {"WARC-Target-URI": p["url"], "WARC-Date": date,
+                  "WARC-Record-ID": f"<urn:uuid:fixture-{i}>"}
+        if with_request_records:
+            req = (b"GET / HTTP/1.1\r\nHost: fixture\r\n\r\n")
+            out.write(gzip.compress(record("request", {
+                **common, "Content-Type":
+                    "application/http; msgtype=request"}, req)))
+        http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html; "
+                b"charset=utf-8\r\n\r\n" + p["html"])
+        out.write(gzip.compress(record("response", {
+            **common, "Content-Type":
+                "application/http; msgtype=response"}, http)))
+    with open(path, "wb") as f:
+        f.write(out.getvalue())
 
 
 def test_warc_record_walk_and_resync():
