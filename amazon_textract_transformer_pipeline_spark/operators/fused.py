@@ -311,12 +311,13 @@ def skip_unchanged_zip_rereads() -> None:
     pyspark's worker calls ``importlib.invalidate_caches()`` at the start
     of every task (``worker_util.setup_spark_files``). On CPython 3.11 and
     3.12 each ``zipimporter`` then re-reads its archive's whole central
-    directory; 3.13 only drops the cached entry and reads lazily, which
-    this backports. A reused local-mode worker holds 16 such importers:
+    directory (3.13 only drops the cached entry and reads lazily). A
+    reused local-mode worker holds 16 such importers:
     12 on ``pyspark.zip`` (1,328 entries, 11 ms a read), 2 on the Spark
     core jar (5,359 entries, 46 ms) and 2 on py4j, about 0.2 s of every
-    task on a 4-vCPU host (0.14-0.21 s of the 0.22-0.28 s from task
-    launch to the kernel). A ``--py-files`` package zip adds its own.
+    task on a 4-vCPU host: from task launch to the kernel's ``run``, a
+    warm task took 0.14-0.32 s with the re-reads and 0.01-0.07 s without.
+    A ``--py-files`` package zip adds its own.
 
     The stat-checked version re-reads when the archive's
     ``(st_ino, st_size, st_mtime_ns)`` differs from the stamp taken before
