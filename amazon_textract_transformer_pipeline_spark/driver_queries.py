@@ -23,7 +23,6 @@ from .operators.fused import (
     extract_documents,
 )
 from .operators.splitting import split_pages_to_window_bounds
-from .operators.textstats import with_text_stats
 from .sources.bridge import pages_from_documents
 from .sources.synthetic import synth_pdf_df
 
@@ -118,26 +117,7 @@ def q_doc_confidence(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Text stats
-# ---------------------------------------------------------------------------
-def q_text_stats(spark, sf_dir) -> DataFrame:
-    return with_text_stats(_docs(spark, sf_dir)).select(
-        "doc_id", "n_words", "n_chars_actual", "mean_word_len",
-        "stopword_ratio", "n_tokens_est", "lang_guess")
-
-
-def q_langid_scores(spark, sf_dir) -> DataFrame:
-    """Scored language ID: per-language literal-gram linear scores +
-    the argmax prediction, exact against the same plan-time-literal
-    profile table in DuckDB. Map-side projection, zero shuffle."""
-    from .operators.textstats import with_langid
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    return with_langid(docs).drop("text")
-
-
-# ---------------------------------------------------------------------------
-# Splitter and PDF front-end
+# Splitter, PDF and charset front-ends
 # ---------------------------------------------------------------------------
 def q_split_windows(spark, sf_dir) -> DataFrame:
     pages = pages_view(_doc_words(spark, sf_dir))
@@ -187,41 +167,6 @@ def q_pdf_metadata(spark, sf_dir) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols)
 
     return synth_pdf_df(spark, 120).mapInPandas(run, schema=schema)
-
-
-def q_gopher_filters(spark, sf_dir) -> DataFrame:
-    """Gopher/C4 pre-training quality filters over the documents table:
-    per-doc rule signals + the combined verdict, exact-value checked
-    against the same expressions in DuckDB. Pure map-side projection —
-    at corpus scale this is the filter applied BEFORE any shuffle-bearing
-    stage (dedup, similarity) so downstream volumes shrink first."""
-    from .operators.textstats import with_gopher_filters
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return with_gopher_filters(docs.select("doc_id", "text")).drop("text")
-
-
-def q_c4_filters(spark, sf_dir) -> DataFrame:
-    """C4 line-level cleaning (Raffel et al. 2020 §2.2) over the
-    documents table: per-line retention (terminal punctuation, ≥5 words,
-    no 'javascript'), the retained text, sentence count, and the page
-    verdict — exact against the same expression builder's DuckDB
-    dialect. Map-side projection, zero shuffle."""
-    from .operators.textstats import with_c4_filters
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return with_c4_filters(docs.select("doc_id", "text")).drop("text")
-
-
-def q_gopher_repetition(spark, sf_dir) -> DataFrame:
-    """Gopher repetition-removal signals: duplicate-line fractions
-    (map-side HOFs) + top-2/3-gram character fractions (one (doc, gram)
-    shuffle each with map-side partials) + combined verdict — exact
-    against the same definitions replayed as staged DuckDB CTEs."""
-    from .operators.textstats import with_repetition_filters
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return with_repetition_filters(docs.select("doc_id", "text")).drop("text")
 
 
 def q_charset_extract(spark, sf_dir) -> DataFrame:
@@ -277,82 +222,3 @@ def q_pdf_extract(spark, sf_dir) -> DataFrame:
         F.col("blob").alias("html"))
     return assemble_text(html_to_words(pdfs)).select(
         "url", "n_pages", "extracted_text")
-
-
-# ---------------------------------------------------------------------------
-# Corpus-composition gates: mixture sampling and DSIR importance
-# ---------------------------------------------------------------------------
-MIXTURE_RATES: list[tuple[str, int]] = [
-    ("src0", 2_300_000),   # 2.3 epochs: upsampled source
-    ("src1", 500_000),     # downsampled by half
-    ("src2", 0),           # excluded source
-    ("src3", 1_000_000),   # exactly one epoch
-    # src4 deliberately absent → default rate applies
-]
-
-
-def q_mixture_sample(spark, sf_dir) -> DataFrame:
-    """Deterministic mixture/temperature sampling: per-source integer
-    ppm rates (upsampling >1e6, exclusion 0, catalog miss → default),
-    copies decided by the salted portable hash. One explicit broadcast
-    of the rate dim; zero corpus shuffles. Exact against the identical
-    integer arithmetic in DuckDB."""
-    from .operators.sampling import mixture_sample
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr("concat('src', cast(doc_id % 5 as string))").alias("source"))
-    rates = spark.createDataFrame(MIXTURE_RATES, "source string, rate_ppm long")
-    out = mixture_sample(d, rates)
-    return out.select("doc_id", "source", "rate_ppm", "n_copies",
-                      F.col("copy_ix").cast("int").alias("copy_ix"))
-
-
-def dsir_text_sql(engine: str) -> str:
-    """Deterministic gram-planted text: every third doc leads with
-    target-profile prose, every third-plus-one with raw-web boilerplate,
-    the rest with nothing — then the real document text as a tail."""
-    lead = ("CASE WHEN doc_id % 3 = 0 THEN "
-            "'The university was founded during the century however it was ' "
-            "WHEN doc_id % 3 = 1 THEN "
-            "'Click here buy now free subscribe login cookie !!! $9 deal ' "
-            "ELSE '' END")
-    return f"concat({lead}, text)"
-
-
-def q_dsir_importance(spark, sf_dir) -> DataFrame:
-    """DSIR-style importance scoring + deterministic resampling over
-    gram-planted text: exact-integer milli-log-ratio scores, calibrated
-    ppm acceptance, hash-thresholded verdict. Pure map-side projection,
-    zero shuffle; exact against the same builder in DuckDB."""
-    from .operators.sampling import with_importance
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(dsir_text_sql("spark")).alias("text"))
-    return with_importance(d).drop("text")
-
-
-def q_pack_sequences(spark, sf_dir) -> DataFrame:
-    """GPT-2-style concat-and-chunk sequence packing: whitespace token
-    counts, 8 salted packing streams, 512-token budget. One window
-    shuffle; pack assignment/offsets/boundary flags exact against the
-    identical DuckDB window arithmetic."""
-    from .operators.sampling import pack_sequences
-    from .operators.textstats import token_count_sql
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr(token_count_sql("text", "spark"))
-        .cast("bigint").alias("n_tokens"))
-    return pack_sequences(d, budget=512, n_buckets=8)
-
-
-def q_vocab_top_k(spark, sf_dir) -> DataFrame:
-    """Corpus vocabulary head: top-200 whitespace tokens by occurrence
-    count with document frequency and a deterministic (count desc,
-    token asc) rank. One map-side-partial token aggregate + a k-row
-    top-k — exact against the identical window in DuckDB."""
-    from .operators.textstats import vocab_top_k
-
-    return vocab_top_k(_docs(spark, sf_dir), k=200)
-

@@ -6,10 +6,14 @@ hand-writing two divergent implementations, every text-pipeline primitive is
 generated here for both dialects from one template — so the oracle *is* the
 same computation, modulo engine.
 
-The builders: ``h64`` (portable hash), ``words`` (whitespace tokens),
-``norm_text`` (lowercased, whitespace-collapsed) and ``shingles`` (word
-n-grams), which the operators, driver queries and oracles use; ``jaccard``
-and ``cosine``, which only their parity tests use.
+The builders and their users:
+
+- ``h64`` (portable hash): the stub-prediction oracles in oracle.py and
+  the synthetic review set of ``driver_queries.q_apply_review``;
+- ``words`` (whitespace tokens): the word oracles in oracle.py;
+- ``shingles`` (word n-grams): ``jaccard``;
+- ``jaccard`` and ``cosine``: only their parity tests
+  (tests/test_textsql_parity.py).
 
 Dialect differences handled: size/len, concat_ws/array_to_string,
 sequence(inclusive)/range(exclusive), slice(pos,len)/list_slice(begin,end),
@@ -33,12 +37,6 @@ def words(text_expr: str, engine: str) -> str:
     if engine == "spark":
         return f"filter(split({text_expr}, '\\\\s+'), w -> w <> '')"
     return f"list_filter(string_split_regex({text_expr}, '\\s+'), w -> w != '')"
-
-
-def norm_text(text_expr: str, engine: str) -> str:
-    """Whitespace-collapsed lowercase — the exact-dedup normal form."""
-    join = "concat_ws(' ', {})" if engine == "spark" else "array_to_string({}, ' ')"
-    return join.format(words(f"lower({text_expr})", engine))
 
 
 def shingles(ws_expr: str, n: int, engine: str) -> str:

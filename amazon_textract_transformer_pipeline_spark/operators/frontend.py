@@ -205,9 +205,11 @@ class _MainContentParser(HTMLParser):
         self.feed(last[0] or last[7])
         return len(last[7])
 
-    def close(self) -> None:  # flush trailing text
-        self._flush()
+    def close(self) -> None:
+        # HTMLParser.close() hands over the text it held back (after a
+        # trailing "<" or bare "&"), so flush only after it
         super().close()
+        self._flush()
 
 
 def parse_html(html_bytes: bytes | bytearray | memoryview | None) -> list[list[list[str]]]:

@@ -323,9 +323,9 @@ def test_subset_tokenizer_matches_htmlparser(text):
     ("<p>a<!-- </p> -- >b</p>", [[["ab"]]]),
     ("<p>a < b &amp; c&lt;d</p>", [[["a", "<", "b", "&", "c<d"]]]),
     ("<p>x&am</p>p;", [[["x&am"], ["p;"]]]),
-    # trailing text HTMLParser holds back until close(), after the flush
-    ("<p>a</p>b &x", [[["a"]]]),
-    ("<p>a</p>b <", [[["a"], ["b"]]]),
+    # trailing text HTMLParser holds back until close() reaches the page
+    ("<p>a</p>b &x", [[["a"], ["b", "&x"]]]),
+    ("<p>a</p>b <", [[["a"], ["b", "<"]]]),
     # CPython 3.11's html.parser, which later releases changed: "--!>"
     # closes no comment, "</script/>" ends no raw text, "</ script>" and
     # "</script" + whitespace + ">" do
@@ -335,6 +335,8 @@ def test_subset_tokenizer_matches_htmlparser(text):
     ("<p>a</p><script>x</ script>z", [[["a"], ["z"]]]),
     ("<p>a</p><script>x</script\n>z", [[["a"], ["z"]]]),
     ("<p>a</p><script>x</script\t/>y</script>z", [[["a"], ["z"]]]),
+    # a truncated page's last line, held back until close()
+    ("<article><p>a</p><p>AT&T", [[["a"], ["AT&T"]]]),
 ])
 def test_subset_tokenizer_quirks(text, pages):
     """HTMLParser's quirks that the fast path copies, each inside the

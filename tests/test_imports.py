@@ -211,3 +211,48 @@ def test_uncalled_names_are_the_known_ones():
     """A top-level name nothing references is dead code; deleting a
     caller must take its helpers with it."""
     assert _uncalled(FILES) == set(KNOWN_UNCALLED)
+
+
+#: Top-level package names that only ``tests/`` references, each kept for
+#: a stated reason. The ratchet below holds the test-only set equal to
+#: these keys, so it only shrinks: a new package name that only a test
+#: calls fails it, and so does deleting a listed name until its entry
+#: goes.
+KNOWN_TEST_ONLY = {
+    "functions.charset.sniff_charset": "the codec name alone, which "
+                                       "tests/test_charset.py asserts per "
+                                       "ladder step; the kernel calls "
+                                       "decode_html",
+    "functions.pdf.pdf_extract_text": "flat text of one PDF, a test "
+                                      "helper over pdf_parse_pages",
+    "functions.pdf.render_plan": "raster geometry for the still-image "
+                                 "codecs, which are to be deleted "
+                                 "(ROADMAP 4(b))",
+    "functions.textsql.cosine": "kept with its parity test (052a541)",
+    "functions.textsql.jaccard": "kept with its parity test (052a541)",
+    "operators.entities.normalize_mentions": "E5-E6 value normalization, "
+                                             "not yet in the kernel "
+                                             "(ROADMAP 2(c))",
+    "operators.review.review_doc_confidence": "post-review document "
+                                              "confidence, which no query "
+                                              "or pipeline reads yet",
+    "operators.splitting.n_examples": "the reference's window-count "
+                                      "formula, pinned by its own test",
+    "operators.splitting.tokenize_windows": "the real-model collation; it "
+                                            "moves into the kernel's forward "
+                                            "path (ROADMAP 5(a))",
+    "plans.partitioning.salted_repartition_by_url": "a host-skew spread "
+                                                    "that no plan uses",
+}
+
+
+def test_test_only_names_are_the_known_ones():
+    """Package code that only tests call is dead in production; names in
+    modules already listed in ``KNOWN_UNREACHED`` and names nothing calls
+    are held by the two ratchets above."""
+    outside_tests = [f for f in FILES
+                     if f.relative_to(ROOT).parts[0] != "tests"]
+    test_only = _uncalled(outside_tests) - _uncalled(FILES)
+    test_only = {n for n in test_only
+                 if not any(n.startswith(m + ".") for m in KNOWN_UNREACHED)}
+    assert test_only == set(KNOWN_TEST_ONLY)
