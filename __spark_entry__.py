@@ -47,6 +47,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "apply_review": Q.q_apply_review,
         # --- splitter over the spread bridge
         "split_windows": Q.q_split_windows,
+        # --- per-page language ID
+        "langid_scores": Q.q_langid_scores,
         # --- charset front-end
         "charset_extract": Q.q_charset_extract,
     }
@@ -62,6 +64,25 @@ def oracle_sql() -> dict[str, str]:
         "doc_confidence": O.doc_confidence_oracle(),
         "apply_review": O.apply_review_oracle(),
     }
+
+    # langid_scores oracle: score columns projected once in a CTE, argmax
+    # CASE over the column names (inlining scores into the CASE would
+    # recompute each k× textually on DuckDB)
+    from amazon_textract_transformer_pipeline_spark.operators.langid import (
+        LANGID2_ORDER,
+        langid_argmax_case,
+        langid_score_exprs,
+    )
+    lsel = ", ".join(f"{x} AS {k}"
+                     for k, x in langid_score_exprs("text", "duck").items())
+    score_cols = ", ".join(f"score_{lg}" for lg in LANGID2_ORDER)
+    sqls["langid_scores"] = f"""
+WITH s AS MATERIALIZED (
+  SELECT doc_id, {lsel} FROM documents
+)
+SELECT doc_id, {score_cols},
+       {langid_argmax_case()} AS lang_pred
+FROM s"""
 
     # pdf oracles: the synthetic PDF corpus (synthetic.synth_pdf_df) is a
     # closed-form function of media_id — dims 300+(i%5)*60 × 400+(i%4)*80,

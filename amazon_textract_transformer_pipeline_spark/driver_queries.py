@@ -117,6 +117,19 @@ def q_doc_confidence(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Per-page language ID
+# ---------------------------------------------------------------------------
+def q_langid_scores(spark, sf_dir) -> DataFrame:
+    """Scored language ID: per-language literal-gram linear scores +
+    the argmax prediction, exact against the same plan-time-literal
+    profile table in DuckDB. Map-side projection, zero shuffle."""
+    from .operators.langid import with_langid
+
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    return with_langid(docs).drop("text")
+
+
+# ---------------------------------------------------------------------------
 # Splitter, PDF and charset front-ends
 # ---------------------------------------------------------------------------
 def q_split_windows(spark, sf_dir) -> DataFrame:

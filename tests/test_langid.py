@@ -1,16 +1,46 @@
-"""Scored language ID (textstats.with_langid): accuracy on a small
-multilingual fixture must beat the round-1 stopword-CASE baseline, and the
-scorer must stay a zero-shuffle map-side projection."""
+"""Scored language ID (langid.with_langid): accuracy on a small
+multilingual fixture must beat a stopword-CASE baseline, and the scorer
+must stay a zero-shuffle map-side projection."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from amazon_textract_transformer_pipeline_spark.operators.textstats import (
+from amazon_textract_transformer_pipeline_spark.functions.textsql import words
+from amazon_textract_transformer_pipeline_spark.operators.langid import (
     LANGID2_ORDER,
-    langid_sql,
     with_langid,
 )
+
+#: the baseline: per-language stopword hits, argmax with ties broken by
+#: list order, zero hits everywhere → 'und'. It only knows en/de/fr/es.
+LANG_STOPWORDS: dict[str, list[str]] = {
+    "en": ["the", "and", "of", "to", "in", "is", "it", "that", "for", "with"],
+    "de": ["der", "die", "das", "und", "ist", "nicht", "ein", "mit", "für", "auf"],
+    "fr": ["le", "la", "les", "et", "est", "une", "pour", "dans", "que", "des"],
+    "es": ["el", "la", "los", "y", "es", "una", "por", "para", "con", "del"],
+}
+
+
+def langid_sql(text: str, engine: str) -> str:
+    assert engine == "spark"
+    ws = words(f"lower({text})", engine)
+    scores = {}
+    for lg, stops in LANG_STOPWORDS.items():
+        lst = "array(" + ", ".join(f"'{w}'" for w in stops) + ")"
+        scores[lg] = f"size(filter({ws}, w -> array_contains({lst}, lower(w))))"
+    order = list(LANG_STOPWORDS)
+    clauses = []
+    for i, lg in enumerate(order):
+        conds = [f"({scores[lg]}) > 0"]
+        for j, other in enumerate(order):
+            if j < i:
+                conds.append(f"({scores[lg]}) > ({scores[other]})")
+            elif j > i:
+                conds.append(f"({scores[lg]}) >= ({scores[other]})")
+        clauses.append("WHEN " + " AND ".join(conds) + f" THEN '{lg}'")
+    return "CASE " + " ".join(clauses) + " ELSE 'und' END"
+
 
 # five sentences per language, ordinary web-prose register
 FIXTURE = {
